@@ -61,7 +61,8 @@ def host_env(cpus: int) -> dict[str, str]:
             "spark.ui.showConsoleProgress=false"
         ),
         "TMPDIR": tmp,
-        "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={tmp}",
+        # no hsperfdata file: the JVM would write it under /tmp
+        "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
     }
 
 
