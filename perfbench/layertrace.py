@@ -264,22 +264,32 @@ class Tracer:
         self._next_job = end
 
 
-def tree_bytes(roots) -> int:
-    total = 0
+def tree_files(roots) -> dict[str, tuple[int, int, int]]:
+    """(inode, size, mtime ns) of every file under ``roots``, by path."""
+    out = {}
     for root in roots:
         for dirpath, _, files in os.walk(root):
             for f in files:
+                path = os.path.join(dirpath, f)
                 try:
-                    total += os.path.getsize(os.path.join(dirpath, f))
+                    st = os.stat(path)
                 except OSError:
-                    pass
-    return total
+                    continue
+                out[path] = (st.st_ino, st.st_size, st.st_mtime_ns)
+    return out
+
+
+def written_bytes(before: dict, after: dict) -> int:
+    """Size of the files in snapshot ``after`` that are new or rewritten
+    since snapshot ``before`` (both from ``tree_files``)."""
+    return sum(sig[1] for path, sig in after.items() if before.get(path) != sig)
 
 
 @dataclass
 class QueryRecord:
     """Bookkeeping of one traced query, taken after its span closed."""
 
+    name: str
     spans: range
     wall: float
     exchanges: int = 0
@@ -304,6 +314,9 @@ class QueryTracer:
         self._gc_beans = list(mf.getGarbageCollectorMXBeans())
         self._memory = mf.getMemoryMXBean()
 
+    def _scratch_files(self) -> dict:
+        return tree_files(glob.glob(os.path.join(self.scratch, "spark_graft_*")))
+
     def _gc_s(self) -> float:
         return sum(b.getCollectionTime() for b in self._gc_beans) / 1000.0
 
@@ -311,6 +324,7 @@ class QueryTracer:
         """One traced execution of a query; returns its wall time."""
         tr = self.tracer
         gc0 = self._gc_s()
+        files0 = self._scratch_files()
         tr.skip_jobs()
         self.capture.attach(self.spark)
         tr.install()
@@ -336,10 +350,10 @@ class QueryTracer:
             tr.collect_jobs(idxs)
             self.capture.detach(self.spark)
         s = tr.spans[root]
-        rec = QueryRecord(idxs, s.end - s.start)
+        rec = QueryRecord(name, idxs, s.end - s.start)
         if plan is not None:
             rec.exchanges, rec.scans = count_plan_nodes(plan.toString())
-        rec.write_bytes = tree_bytes(glob.glob(os.path.join(self.scratch, "spark_graft_*")))
+        rec.write_bytes = written_bytes(files0, self._scratch_files())
         rec.gc_s = self._gc_s() - gc0
         rec.heap_mb = self._memory.getHeapMemoryUsage().getUsed() / 2**20
         self.records.append(rec)
@@ -420,7 +434,7 @@ class QueryTracer:
         out["spark.parallel_eff"] = m["spark.executor_run_s"] / (wall * cores) if wall else 0.0
         u = sum(statistics.median(v) for v in untraced.values() if v)
         t = sum(statistics.median(v) for v in traced.values() if v)
-        out["trace.overhead_frac"] = (t - u) / u
+        out["trace.overhead_frac"] = (t - u) / u if u else 0.0
         out["session.get_spark_s"] = get_spark_s
         return out
 

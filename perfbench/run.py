@@ -7,19 +7,20 @@ One process, one client: each query is sent only after the previous one has
 finished. A run
 
 1. starts the engine (``session.get_spark`` on ``local[nproc]``) and runs
-   every workload query once on sf0.01 as a warm-up, collecting each result
-   and comparing it with the query's DuckDB oracle;
-2. runs as many whole passes over the workload's queries on sf0.1, through
-   the noop sink, as fit ``--seconds`` at the workload's nominal pass
-   time, each pass in an order shuffled by ``--seed``;
-3. prints a report line and, as its last stdout line, one JSON object with
+   every workload query once on sf0.01, collecting each result and
+   comparing it with the query's DuckDB oracle;
+2. runs one untimed warm-up pass over the workload's queries on sf0.1;
+3. runs as many whole passes over the workload's queries on sf0.1, through
+   the noop sink, as fit ``--seconds`` at ``PASS_S`` seconds a pass, each
+   pass in an order shuffled by ``--seed``;
+4. prints a report line and, as its last stdout line, one JSON object with
    ``correct``, ``attempted``, ``failed`` and ``metrics``.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` runs every query
 of a pass both untraced and traced and reports the per-layer metrics of the
-traced executions (see ``perfbench/README.md``). Inputs are generated once
-per checkout under ``.bench_build/perfbench``, which also holds every file a
-run writes.
+traced executions (see ``perfbench/README.md``). The inputs are the
+engine's seed-42 test data, copied under ``perfbench/data``; every file a
+run writes stays under ``.bench_build/perfbench``.
 """
 
 from __future__ import annotations
@@ -41,8 +42,13 @@ import tempfile  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+DATA = os.path.join(HERE, "data")
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
-SF_VERIFY, SF_TIMED = 0.01, 0.1
+SF_VERIFY, SF_TIMED = "sf0.01", "sf0.1"
+#: Nominal seconds of one untraced pass of either workload on 4 cores. A run
+#: makes ``round(seconds / PASS_S)`` passes, so the pass count (and with it
+#: how far into JIT warm-up the medians sit) is the same in every run.
+PASS_S = 6.5
 
 
 def host_env(cpus: int) -> dict[str, str]:
@@ -98,6 +104,8 @@ def pass_metrics(latencies: dict[str, list[float]]) -> dict[str, float]:
     """End-to-end timings from each query's median latency: a query slowed
     in one pass by a host hiccup moves none of them."""
     med = medians(latencies).values()
+    if not med:  # every query failed
+        return {}
     return {
         "wall_s": sum(med),
         "query_p50_s": statistics.median(med),
@@ -211,12 +219,19 @@ class Runner:
                 self.run_query(name, tracer if traced else None)
         self.passes += 1
 
-    def timed_passes(self, seconds: float, pass_s: float, tracer=None) -> None:
-        """As many whole passes as fit ``seconds`` at ``pass_s`` each (a
+    def warm_pass(self) -> None:
+        """One untimed pass on the timed scale: the JIT compiles the sf0.1
+        code paths here, not in the first timed pass."""
+        for name in self.order():
+            self.run_query(name)
+        self.latencies = {name: [] for name in self.members}
+
+    def timed_passes(self, seconds: float, tracer=None) -> None:
+        """As many whole passes as fit ``seconds`` at ``PASS_S`` each (a
         traced pass runs every query twice); at least one. A fixed count,
         not a clock check, keeps the passes that the medians span the same
-        from run to run while the JIT is still warming."""
-        cost = pass_s * (2 if tracer else 1)
+        from run to run."""
+        cost = PASS_S * (2 if tracer else 1)
         for _ in range(max(1, round(seconds / cost))):
             self.run_pass(tracer)
 
@@ -266,25 +281,18 @@ def main(argv: list[str] | None = None) -> int:
     from tmdb_spark_data_pipeline_spark.session import get_spark
     from tmdb_spark_data_pipeline_spark.sources.io import TPCH_TABLES
 
-    import datagen
     from workloads import WORKLOADS, benchmark_spec
 
     import_s = time.perf_counter() - T_START
     if args.workload not in WORKLOADS:
         ap.error(f"unknown workload {args.workload!r}; choose from {sorted(WORKLOADS)}")
-    workload = WORKLOADS[args.workload]
     declared = benchmark_spec(ROOT)["per_layer" if args.trace else "end_to_end"]
-
-    data = os.path.join(WORK, "data")
-    for sf in (SF_VERIFY, SF_TIMED):
-        if not os.path.isdir(os.path.join(data, f"sf{sf:g}")):
-            datagen.write(data, sf)
 
     import duckdb
 
     duck = duckdb.connect()
     for t in TPCH_TABLES:
-        path = os.path.join(data, f"sf{SF_VERIFY:g}", f"{t}.parquet")
+        path = os.path.join(DATA, SF_VERIFY, f"{t}.parquet")
         duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     j0, canary0 = _cpu_jiffies(), _speed_canary()
@@ -297,23 +305,26 @@ def main(argv: list[str] | None = None) -> int:
         runner = Runner(
             spark,
             REGISTRY,
-            workload.members,
+            WORKLOADS[args.workload],
             args.seed,
-            os.path.join(data, f"sf{SF_VERIFY:g}"),
-            os.path.join(data, f"sf{SF_TIMED:g}"),
+            os.path.join(DATA, SF_VERIFY),
+            os.path.join(DATA, SF_TIMED),
         )
         verify_s = runner.verify(duck, _canon)
-        setup_s = import_s + get_spark_s + verify_s
+        t0 = time.perf_counter()
+        runner.warm_pass()
+        warm_s = time.perf_counter() - t0
+        setup_s = import_s + get_spark_s + verify_s + warm_s
 
         if args.trace:
             from layertrace import QueryTracer
 
             qt = QueryTracer(spark, env["TMPDIR"])
-            runner.timed_passes(args.seconds, workload.pass_s, qt)
+            runner.timed_passes(args.seconds, qt)
             metrics = qt.metrics(runner.latencies, runner.traced, runner.passes, get_spark_s)
             spans_path = qt.dump(os.path.join(WORK, "results"), args.workload, args.seed)
         else:
-            runner.timed_passes(args.seconds, workload.pass_s)
+            runner.timed_passes(args.seconds)
             metrics = pass_metrics(runner.latencies)
             metrics["setup_s"] = setup_s
         jvm_pid = spark.sparkContext._gateway.proc.pid
@@ -340,6 +351,7 @@ def main(argv: list[str] | None = None) -> int:
         "get_spark_s": get_spark_s,
         "verify_s": verify_s,
         "verify_query_s": runner.verify_s,
+        "warm_s": warm_s,
         "latencies": runner.latencies,
         "measured": metrics,
         "spans": spans_path,

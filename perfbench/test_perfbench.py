@@ -3,7 +3,7 @@
     python3 -m pytest perfbench -q
 
 The last test starts a 2-core Spark session and runs a tiny verified,
-timed and traced pass on generated sf0.001 data.
+timed and traced pass on the sf0.001 test data.
 """
 
 from __future__ import annotations
@@ -45,14 +45,14 @@ def test_metric_names_and_units_are_well_formed():
 def test_workload_members_exist_and_do_not_overlap():
     assert [w["name"] for w in SPEC["workloads"]] == list(WORKLOADS)
     seen: set[str] = set()
-    for w in WORKLOADS.values():
-        assert w.members, w.name
-        missing = [q for q in w.members if q not in REGISTRY]
-        assert not missing, f"{w.name}: not in REGISTRY: {missing}"
-        overlap = seen.intersection(w.members)
-        assert not overlap, f"{w.name} shares {overlap}"
-        assert len(set(w.members)) == len(w.members)
-        seen.update(w.members)
+    for name, members in WORKLOADS.items():
+        assert members, name
+        missing = [q for q in members if q not in REGISTRY]
+        assert not missing, f"{name}: not in REGISTRY: {missing}"
+        overlap = seen.intersection(members)
+        assert not overlap, f"{name} shares {overlap}"
+        assert len(set(members)) == len(members)
+        seen.update(members)
 
 
 def test_tail_percentile_needs_ten_samples_above_it():
@@ -66,6 +66,7 @@ def test_pass_metrics_use_each_querys_median():
     assert m["wall_s"] == 7.0
     assert m["query_p50_s"] == 2.0
     assert m["query_geomean_s"] == pytest.approx(8.0 ** (1 / 3))
+    assert run.pass_metrics({"a": [], "b": []}) == {}  # every query failed
 
 
 def _span(name, layer, parent, start, end, main=True):
@@ -100,6 +101,19 @@ def test_plan_node_counts():
          +- BroadcastExchange HashedRelationBroadcastMode(List(b#3)), [plan_id=20]
             +- Scan ExistingRDD[b#3]"""
     assert layertrace.count_plan_nodes(plan) == (2, 2)
+
+
+def test_written_bytes_counts_only_new_or_rewritten_files(tmp_path):
+    tree = tmp_path / "spark_graft_app_tag_sf0.1"
+    tree.mkdir()
+    (tree / "old.parquet").write_bytes(b"x" * 100)
+    (tree / "same.parquet").write_bytes(b"y" * 10)
+    s0 = layertrace.tree_files([str(tree)])
+    assert layertrace.written_bytes(s0, layertrace.tree_files([str(tree)])) == 0
+    (tree / "new.parquet").write_bytes(b"z" * 7)
+    (tree / "old.parquet").unlink()
+    (tree / "old.parquet").write_bytes(b"w" * 30)  # rewritten: a new inode
+    assert layertrace.written_bytes(s0, layertrace.tree_files([str(tree)])) == 37
 
 
 def test_layer_of():
@@ -146,14 +160,14 @@ def test_seed_shuffles_the_order_reproducibly():
 
 @pytest.fixture(scope="module")
 def tiny(tmp_path_factory):
-    import datagen
-
     base = tmp_path_factory.mktemp("perfbench")
-    data = datagen.write(str(base / "data"), 0.001)
+    data = os.path.join(run.DATA, "sf0.001")
     mp = pytest.MonkeyPatch()
     mp.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
     mp.setenv("SPARK_LOCAL_DIRS", str(base / "local"))
     mp.setenv("SPARK_GRAFT_EXTRA_CONF", "spark.ui.showConsoleProgress=false")
+    mp.setenv("TMPDIR", str(base))  # the engine's _run_tmp scratch trees
+    mp.setattr("tempfile.tempdir", None)
     from tmdb_spark_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="perfbench-test", master="local[2]", shuffle_partitions=2)
@@ -179,7 +193,7 @@ def test_a_full_tiny_pass(tiny):
     assert runner.failures == []
 
     qt = layertrace.QueryTracer(spark, scratch)
-    runner.timed_passes(0.0, 1.0, qt)
+    runner.timed_passes(0.0, qt)
     assert runner.failures == [] and runner.passes == 1
     assert all(len(runner.latencies[q]) == len(runner.traced[q]) == 1 for q in members)
 
@@ -193,3 +207,9 @@ def test_a_full_tiny_pass(tiny):
     for rec in qt.records:
         st = self_times(spans, rec.spans)
         assert sum(st.values()) == pytest.approx(rec.wall, abs=1e-6)
+    # only the stream writes; the read-only queries are charged nothing even
+    # when traced after it, with its scratch tree still on disk
+    written = {rec.name: rec.write_bytes for rec in qt.records}
+    assert written["stream_exactly_once_totals"] > 0
+    assert written["scan_filter_project"] == written["simhash_neardups"] == 0
+    assert qt.metrics({}, runner.traced, 1, 1.0)["trace.overhead_frac"] == 0.0

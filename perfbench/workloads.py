@@ -2,27 +2,15 @@
 
 Each workload stresses a different layer (see ``perfbench/README.md``); the
 reason for each is its ``why`` in ``BENCHMARK.json``. The lists are sized so
-that one pass on sf0.1 takes about 6 s on 4 cores, which lets a 20 s run
-repeat it three times; a query joins a list only if it matches its DuckDB
-oracle on the benchmark's generated data.
+that one pass on sf0.1 takes about 6 s on 4 cores, which lets a 26 s run
+repeat it four times; a query joins a list only if it matches its DuckDB
+oracle on the sf0.01 test data.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
-
-
-@dataclass(frozen=True)
-class Workload:
-    name: str
-    members: tuple[str, ...]
-    #: Nominal seconds of one untraced pass on 4 cores. A run makes
-    #: ``round(seconds / pass_s)`` passes, so the pass count (and with it
-    #: how far into JIT warm-up the medians sit) is the same in every run.
-    pass_s: float
-
 
 # The reference's Medallion ETL surface plus light TPC-H-like joins and
 # aggregates, a window, sessionization, a test statistic and a sketch:
@@ -56,13 +44,8 @@ CURATION_WRITE = (
     "incremental_rollup_merge",
 )
 
-WORKLOADS = {
-    w.name: w
-    for w in (
-        Workload("olap-mix", OLAP_MIX, pass_s=6.5),
-        Workload("curation-write", CURATION_WRITE, pass_s=6.5),
-    )
-}
+#: workload name -> member queries
+WORKLOADS = {"olap-mix": OLAP_MIX, "curation-write": CURATION_WRITE}
 
 
 def benchmark_spec(root: str) -> dict:
