@@ -9,7 +9,8 @@ finished. A run
 1. starts the engine (``session.get_spark`` on ``local[nproc]``) and runs
    every workload query once on sf0.01, collecting each result and
    comparing it with the query's DuckDB oracle;
-2. runs one untimed warm-up pass over the workload's queries on sf0.1;
+2. runs ``WARM_PASSES`` untimed warm-up passes over the workload's queries
+   on sf0.1;
 3. runs as many whole passes over the workload's queries on sf0.1, through
    the noop sink, as fit ``--seconds`` at ``PASS_S`` seconds a pass, each
    pass in an order shuffled by ``--seed``;
@@ -36,7 +37,9 @@ import math  # noqa: E402
 import os  # noqa: E402
 import random  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
 import statistics  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
 import tempfile  # noqa: E402
 
@@ -46,9 +49,16 @@ DATA = os.path.join(HERE, "data")
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
 SF_VERIFY, SF_TIMED = "sf0.01", "sf0.1"
 #: Nominal seconds of one untraced pass of either workload on 4 cores. A run
-#: makes ``round(seconds / PASS_S)`` passes, so the pass count (and with it
-#: how far into JIT warm-up the medians sit) is the same in every run.
+#: makes ``round(seconds / PASS_S)`` passes, so the pass count is the same in
+#: every run.
 PASS_S = 6.5
+#: Untimed sf0.1 passes after the verify pass. The JIT compiles hardest in
+#: the first passes: on 4 cores an olap-mix pass spent 6.3 s of compiler-thread
+#: time in the first pass after two warm-up passes and about 3 s from the
+#: seventh on, and how fast a busy host lets those threads run shows in the
+#: timed queries. Over 10 runs with two warm-up passes, the first timed pass
+#: spread 25% (interquartile range over median), the two after it 6%.
+WARM_PASSES = 3
 
 
 def host_env(cpus: int) -> dict[str, str]:
@@ -101,14 +111,16 @@ def medians(latencies: dict[str, list[float]]) -> dict[str, float]:
 
 
 def pass_metrics(latencies: dict[str, list[float]]) -> dict[str, float]:
-    """End-to-end timings from each query's median latency: a query slowed
-    in one pass by a host hiccup moves none of them."""
+    """End-to-end timings of one pass. ``wall_s`` and ``query_geomean_s``
+    come from each query's median latency over the run's passes;
+    ``query_p50_s`` is the median of every timed execution, which does not
+    hang on the single query that happens to sit in the middle."""
     med = medians(latencies).values()
     if not med:  # every query failed
         return {}
     return {
         "wall_s": sum(med),
-        "query_p50_s": statistics.median(med),
+        "query_p50_s": statistics.median([x for v in latencies.values() for x in v]),
         "query_geomean_s": geomean(med),
     }
 
@@ -123,6 +135,85 @@ def vm_hwm_mb(pid: int | str) -> float:
     except OSError:
         pass
     return 0.0
+
+
+def proc_stat(pid: int) -> tuple[str, int, str] | None:
+    """(state, parent pid, start time) of a process, None if it is gone."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rpartition(")")[2].split()
+    except OSError:
+        return None
+    return fields[0], int(fields[1]), fields[19]
+
+
+def descendants(pid: int) -> list[tuple[int, str]]:
+    """Every live descendant of ``pid`` as (pid, start time) pairs."""
+    children: dict[int, list[tuple[int, str]]] = {}
+    for entry in os.listdir("/proc"):
+        st = proc_stat(int(entry)) if entry.isdigit() else None
+        if st and st[0] != "Z":
+            children.setdefault(st[1], []).append((int(entry), st[2]))
+    found, todo = [], [pid]
+    while todo:
+        for child in children.get(todo.pop(), ()):
+            found.append(child)
+            todo.append(child[0])
+    return found
+
+
+def alive(proc: tuple[int, str]) -> bool:
+    st = proc_stat(proc[0])
+    return st is not None and st[0] != "Z" and st[2] == proc[1]
+
+
+def await_ended(procs: list[tuple[int, str]], timeout: float) -> None:
+    """Wait until every process in ``procs`` has ended; kill what is left
+    after ``timeout`` seconds and wait for that too."""
+    deadline, killed = time.monotonic() + timeout, False
+    while True:
+        procs = [p for p in procs if alive(p)]
+        if not procs:
+            return
+        if time.monotonic() > deadline:
+            if killed:
+                raise RuntimeError(f"processes {procs} outlived SIGKILL")
+            for pid, _ in procs:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except OSError:
+                    pass
+            deadline, killed = time.monotonic() + 10.0, True
+        time.sleep(0.05)
+
+
+def stop_engine(spark, timeout: float = 30.0) -> None:
+    """Stop the session, then its JVM (which exits when its stdin closes),
+    and wait until every process started by this one has ended: the JVM
+    otherwise outlives the Python process while its shutdown hooks run."""
+    from pyspark import SparkContext
+
+    started = descendants(os.getpid())
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        gateway = SparkContext._gateway
+        proc = getattr(gateway, "proc", None)
+        if gateway is not None:
+            try:
+                gateway.shutdown()
+            except Exception:  # the JVM may be gone already
+                pass
+            SparkContext._gateway = SparkContext._jvm = None
+        if proc is not None:
+            proc.stdin.close()
+            try:
+                proc.wait(timeout)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        await_ended(started + descendants(os.getpid()), timeout)
 
 
 class Runner:
@@ -219,11 +310,12 @@ class Runner:
                 self.run_query(name, tracer if traced else None)
         self.passes += 1
 
-    def warm_pass(self) -> None:
-        """One untimed pass on the timed scale: the JIT compiles the sf0.1
-        code paths here, not in the first timed pass."""
-        for name in self.order():
-            self.run_query(name)
+    def warm_passes(self) -> None:
+        """Untimed passes on the timed scale, so that the timed passes run
+        code the JIT has already compiled."""
+        for _ in range(WARM_PASSES):
+            for name in self.order():
+                self.run_query(name)
         self.latencies = {name: [] for name in self.members}
 
     def timed_passes(self, seconds: float, tracer=None) -> None:
@@ -271,6 +363,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
+    # a terminated run still stops the JVM it started (see stop_engine)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
 
     env = pin_host_env()
     sys.path.insert(0, ROOT)
@@ -296,12 +390,12 @@ def main(argv: list[str] | None = None) -> int:
         duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     j0, canary0 = _cpu_jiffies(), _speed_canary()
-    t0 = time.perf_counter()
-    spark = get_spark(app_name=f"perfbench-{args.workload}")
-    spark.range(1).count()
-    get_spark_s = time.perf_counter() - t0
-    spans_path = None
+    spark, spans_path = None, None
     try:
+        t0 = time.perf_counter()
+        spark = get_spark(app_name=f"perfbench-{args.workload}")
+        spark.range(1).count()
+        get_spark_s = time.perf_counter() - t0
         runner = Runner(
             spark,
             REGISTRY,
@@ -312,7 +406,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         verify_s = runner.verify(duck, _canon)
         t0 = time.perf_counter()
-        runner.warm_pass()
+        runner.warm_passes()
         warm_s = time.perf_counter() - t0
         setup_s = import_s + get_spark_s + verify_s + warm_s
 
@@ -333,7 +427,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, env, [canary0, _speed_canary()], steal_pct(j0, _cpu_jiffies())
         )
     finally:
-        spark.stop()
+        stop_engine(spark)
         duck.close()
 
     lat = [x for v in runner.latencies.values() for x in v]

@@ -64,7 +64,7 @@ def test_tail_percentile_needs_ten_samples_above_it():
 def test_pass_metrics_use_each_querys_median():
     m = run.pass_metrics({"a": [1.0, 9.0, 1.0], "b": [4.0, 4.0, 5.0], "c": [], "d": [2.0]})
     assert m["wall_s"] == 7.0
-    assert m["query_p50_s"] == 2.0
+    assert m["query_p50_s"] == 4.0  # the median of all seven executions
     assert m["query_geomean_s"] == pytest.approx(8.0 ** (1 / 3))
     assert run.pass_metrics({"a": [], "b": []}) == {}  # every query failed
 
@@ -156,6 +156,20 @@ def test_seed_shuffles_the_order_reproducibly():
     first = a.order()
     assert first == b.order() and first != c.order() and sorted(first) == sorted(names)
     assert a.order() != first  # each pass draws a new order
+
+
+def test_await_ended_waits_for_children_and_kills_stragglers():
+    import subprocess
+
+    quick = subprocess.Popen(["sleep", "0.2"])
+    stuck = subprocess.Popen(["sleep", "60"])
+    tree = run.descendants(os.getpid())
+    assert {quick.pid, stuck.pid} <= {pid for pid, _ in tree}
+    run.await_ended([p for p in tree if p[0] == quick.pid], timeout=30.0)
+    assert quick.wait(timeout=1) == 0  # ended by itself, not killed
+    run.await_ended([p for p in tree if p[0] == stuck.pid], timeout=0.1)
+    assert stuck.wait(timeout=1) == -9
+    assert not any(run.alive(p) for p in tree)
 
 
 @pytest.fixture(scope="module")

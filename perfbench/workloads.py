@@ -2,9 +2,9 @@
 
 Each workload stresses a different layer (see ``perfbench/README.md``); the
 reason for each is its ``why`` in ``BENCHMARK.json``. The lists are sized so
-that one pass on sf0.1 takes about 6 s on 4 cores, which lets a 26 s run
-repeat it four times; a query joins a list only if it matches its DuckDB
-oracle on the sf0.01 test data.
+that one warm pass on sf0.1 takes 4-6 s on 4 cores, which lets a run set up
+and make its three timed passes in about a minute; a query joins a list only
+if it matches its DuckDB oracle on the sf0.01 test data.
 """
 
 from __future__ import annotations
