@@ -11,31 +11,13 @@ comma-separated subset to iterate on specific queries — subset runs write
 their per-query JSON to BENCH_SUBSET.json, never the canonical
 BENCH_FULL.json (see _output_path).
 
-Isolation policy (VERDICT_r05 #6). Two levels, both ON by default where they
-matter:
-
-- per-query (always): clearCache + Python GC + targeted JVM GC between
-  queries (see _reclaim) — removes CacheManager/broadcast/checkpoint residue,
-  the dominant in-suite distortion (measured 2-3x on the near-dup family).
-- per-shard JVM recycle (BENCH_SHARDS=K, default 0=off): the suite is split
-  into K contiguous chunks, each run in a FRESH PROCESS (hence a fresh JVM —
-  stopping a SparkSession in-process keeps the py4j gateway JVM and all its
-  JIT/code-cache/metaspace state, so only a new process actually resets it).
-  This bounds suite-level accumulation (JIT deopt, code-cache pressure,
-  generated-class metaspace) that per-query reclaim cannot touch.
-
-Measured both ways at sf0.1 (round 6, back-to-back quiet windows, steal
-0.02% both, canaries 25.0/27.6 vs 32.0/25.3 ms): on the 228 queries common
-to both runs, single-JVM 258.6 s vs BENCH_SHARDS=6 276.3 s — the sharded
-run is ~7% SLOWER, with the slowdown spread across each shard's early
-queries (fresh-JVM JIT ramp that one shared warmup amortizes but six
-per-shard warmups do not fully re-buy). So with the 1 GiB reserved code
-cache + UseCodeCacheFlushing the session factory pins, suite-level JIT/
-code-cache accumulation is NOT a measurable distortion at 233 queries, and
-the r4->r5 ~10-15% smear was host noise, not suite state. The honest
-number is therefore the DEFAULT single-JVM run; BENCH_SHARDS stays
-available as the control to re-verify that conclusion if the suite grows
-or the numbers drift again.
+Isolation policy (VERDICT_r05 #6): clearCache + Python GC + targeted JVM GC
+between queries (see _reclaim) removes CacheManager/broadcast/checkpoint
+residue, the dominant in-suite distortion (measured 2-3x on the near-dup
+family). The whole suite runs in one JVM: a round-6 A/B against per-shard
+fresh processes measured the sharded run ~7% slower (fresh-JVM JIT ramp per
+shard), so suite-level JIT/code-cache accumulation is not a measurable
+distortion with the code cache the session factory reserves.
 """
 
 from __future__ import annotations
@@ -58,8 +40,8 @@ def _output_path(subset: bool) -> str:
     round-over-round; a ``BENCH_QUERIES=<subset>`` iteration run must never
     overwrite it (it did in round 7 and the file had to be reconstructed
     from stderr logs). Subset runs therefore default to BENCH_SUBSET.json;
-    an explicit BENCH_FULL_PATH always wins (the sharded parent uses it to
-    collect per-shard chunks).
+    an explicit BENCH_FULL_PATH always wins (``tools/floor_bench.py`` uses it
+    to keep its runs out of the canonical file).
     """
     explicit = os.environ.get("BENCH_FULL_PATH")
     if explicit:
@@ -98,62 +80,6 @@ def _cpu_jiffies() -> tuple[int, int] | None:
         return None
 
 
-def _run_sharded(names: list[str], shards: int, sf_val, subset: bool) -> None:
-    """Parent mode for BENCH_SHARDS: run the suite as K contiguous chunks,
-    each in a fresh process (fresh JVM), and merge the per-shard
-    BENCH_FULL outputs into the standard artifacts."""
-    import subprocess
-    import tempfile
-
-    timings: dict[str, float] = {}
-    query_steal: dict[str, float] = {}
-    canaries: list[list[float]] = []
-    steals: list[float] = []
-    per = (len(names) + shards - 1) // shards
-    for i in range(shards):
-        chunk = names[i * per : (i + 1) * per]
-        if not chunk:
-            continue
-        with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-            part_path = tf.name
-        env = dict(
-            os.environ,
-            BENCH_QUERIES=",".join(chunk),
-            BENCH_SHARD_CHILD="1",
-            BENCH_FULL_PATH=part_path,
-        )
-        print(f"# shard {i + 1}/{shards}: {len(chunk)} queries", file=sys.stderr)
-        subprocess.run([sys.executable, os.path.abspath(__file__)], env=env, check=True)
-        with open(part_path) as f:
-            part = json.load(f)
-        os.unlink(part_path)
-        timings.update(part["queries"])
-        query_steal.update(part.get("query_steal_pct", {}))
-        canaries.append(part.get("canary_ms") or [])
-        if part.get("host_steal_pct") is not None:
-            steals.append(part["host_steal_pct"])
-
-    total = round(sum(timings.values()), 3)
-    full = {
-        "metric": "declared_query_surface_wall_clock",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf_val,
-        "host_steal_pct": round(sum(steals) / len(steals), 2) if steals else None,
-        "canary_ms": [canaries[0][0], canaries[-1][-1]] if canaries else None,
-        "query_steal_pct": query_steal,
-        "isolation": {"mode": "process-shards", "n_shards": shards},
-    }
-    full_path = _output_path(subset)
-    with open(full_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    print(f"# merged shard timings -> {full_path}", file=sys.stderr)
-    _print_headline(
-        timings, total, sf_val, full["host_steal_pct"], full["canary_ms"], full_path
-    )
-
-
 def _print_headline(timings, total, sf_val, steal_pct, canary_ms, full_path=None) -> None:
     """The ONE stdout JSON line, byte-budgeted to survive the driver's
     ~2000-char stdout tail: heaviest queries first, as many as fit."""
@@ -185,12 +111,6 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     only = os.environ.get("BENCH_QUERIES")
     names = only.split(",") if only else list(REGISTRY)
-
-    shards = int(os.environ.get("BENCH_SHARDS", "0"))
-    if shards > 1 and not os.environ.get("BENCH_SHARD_CHILD"):
-        sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-        _run_sharded(names, shards, sf_val, subset=bool(only))
-        return
 
     spark = get_spark(app_name="bench")
 
@@ -315,9 +235,6 @@ def main() -> None:
     with open(full_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
     print(f"# full per-query timings -> {full_path}", file=sys.stderr)
-
-    if os.environ.get("BENCH_SHARD_CHILD"):
-        return  # parent merges and prints the headline line
 
     _print_headline(timings, total, sf_val, steal_pct, [canary0, canary1], full_path)
 

@@ -2,8 +2,9 @@
 
 VERDICT_r07 "What's wrong" #2: in round 7 a subset iteration run overwrote
 the canonical per-round artifact and it had to be reconstructed from stderr
-logs. bench._output_path is the single chokepoint both the sharded parent
-and the in-process runner write through; these tests pin its routing.
+logs. bench._output_path is the single chokepoint the runner writes through
+(``tools/floor_bench.py`` redirects it with BENCH_FULL_PATH); these tests pin
+its routing.
 """
 
 import importlib.util

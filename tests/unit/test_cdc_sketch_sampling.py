@@ -188,7 +188,7 @@ def test_cluster_blocked_pairs_subset_of_exact(spark, sf_smoke):
         (r.id_a, r.id_b)
         for r in similarity.embedding_neardup_pairs(emb, min_cos=0.4).collect()
     }
-    assigned = similarity.kmeans_lloyd(emb, k=8, iters=1)
+    assigned = similarity.kmeans_lloyd(emb, k=8, iters=1, dim=64)
     blocked_df = emb.join(assigned.select("vec_id", "cid"), "vec_id")
     blocked = {
         (r.id_a, r.id_b)

@@ -173,9 +173,19 @@ def test_kmeans_lloyd_separated_clusters(spark):
         (1, [10.0, 10.0]), (3, [10.2, 10.0]), (5, [10.0, 10.2]),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {r.vec_id: r.cid for r in similarity.kmeans_lloyd(df, k=2, iters=1).collect()}
+    out = {r.vec_id: r.cid for r in similarity.kmeans_lloyd(df, k=2, iters=1, dim=2).collect()}
     assert out[0] == out[2] == out[4] == 0
     assert out[1] == out[3] == out[5] == 1
+
+
+@pytest.mark.parametrize("odd", [[0.1], None], ids=["short", "null"])
+def test_kmeans_rejects_vector_of_other_width(spark, odd):
+    # the element-wise means read positions 1..dim: a short vector would
+    # silently add NULLs with ANSI off, so the width contract raises instead
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, odd)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="width != 2 at vec_id=2"):
+        similarity.kmeans_centroids(df, k=2, iters=1, dim=2).collect()
 
 
 def test_assign_nearest_tie_breaks_lowest_cid(spark):
@@ -617,7 +627,7 @@ def test_ivf_trained_centroids_recall_certificate(spark):
         .select("vec_id", "embedding")
     )
     q = emb.filter(F.col("vec_id") < 20)
-    cents = similarity.kmeans_centroids(emb, k=25, iters=2).select(
+    cents = similarity.kmeans_centroids(emb, k=25, iters=2, dim=64).select(
         F.col("cid").alias("vec_id"), F.col("cvec").alias("embedding")
     )
     trained = {

@@ -12,10 +12,39 @@ nondeterministic) in the reference:
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ColumnOrName = Column | str
+
+
+def gateway_memo(build):
+    """Memoize a builder of Py4J-backed Columns per JVM gateway.
+
+    Building wide expression lists (128 MinHash aggregates, 63 SimHash bit
+    sums, 64 mean aggregates) costs hundreds of ms of Py4J round-trips per
+    call, and the query families rebuild them per query (the stream
+    protocols once per epoch). Columns are immutable unresolved expression
+    trees, safe to reuse across DataFrames and sessions of one gateway — but
+    they are ``JavaObject`` handles into that gateway's JVM, so the cache is
+    dropped whenever ``SparkContext._gateway`` changes (a restarted gateway
+    rebuilds instead of returning dead handles). At most 16 keys are kept
+    per builder (LRU).
+    """
+    cached = functools.lru_cache(maxsize=16)(build)
+    owner = [SparkContext._gateway]
+
+    @functools.wraps(build)
+    def memo(*args):
+        if SparkContext._gateway is not owner[0]:
+            cached.cache_clear()
+            owner[0] = SparkContext._gateway
+        return cached(*args)
+
+    return memo
 
 
 def _col(c: ColumnOrName) -> Column:

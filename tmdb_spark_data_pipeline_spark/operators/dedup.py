@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import ColumnOrName, _col
+from ..functions import ColumnOrName, _col, gateway_memo
 from .cleaning import dedup_by_key
 
 
@@ -302,47 +302,32 @@ def _permutation_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
 #: round-trips PER CALL (measured; ~6 JVM calls per Column) and the minhash
 #: family rebuilds the list for every query — and the streaming maintenance
 #: protocols once per EPOCH. A single-parse ``F.expr`` string is ~20× cheaper
-#: to build, and the memo makes repeat construction free. Columns are
-#: immutable unresolved expression trees, safe to reuse across DataFrames
-#: and sessions within one JVM gateway. The ``L`` suffixes pin long literals
-#: (the old ``F.lit(int)`` literals were int32 and promoted to long inside
-#: the arithmetic — same values, same result type).
-_SIG_AGG_EXPRS: dict[tuple[int, int], list[Column]] = {}
-
-
+#: to build, and the memo (``gateway_memo``) makes repeat construction free.
+#: The ``L`` suffixes pin long literals (the old ``F.lit(int)`` literals were
+#: int32 and promoted to long inside the arithmetic — same values, same
+#: result type).
+@gateway_memo
 def _sig_agg_exprs(num_hashes: int, seed: int) -> list[Column]:
-    key = (num_hashes, seed)
-    cols = _SIG_AGG_EXPRS.get(key)
-    if cols is None:
-        cols = [
-            F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE31}L)) AS mh_{i}")
-            for i, (a, b) in enumerate(_permutation_params(num_hashes, seed))
-        ]
-        _SIG_AGG_EXPRS[key] = cols
-    return cols
+    return [
+        F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE31}L)) AS mh_{i}")
+        for i, (a, b) in enumerate(_permutation_params(num_hashes, seed))
+    ]
 
 
 #: Memoized LSH band arrays, keyed (bands, rows-per-band, fold): the
 #: ``array(struct(band, fold(mh_...)))`` expression over a signature row
-#: (same Py4J-construction argument as ``_SIG_AGG_EXPRS``).
-_BAND_ARRAYS: dict[tuple[int, int, str], Column] = {}
-
-
+#: (same Py4J-construction argument as ``_sig_agg_exprs``).
+@gateway_memo
 def _band_bucket_array(bands: int, r: int, fold: str = "xxhash64") -> Column:
-    key = (bands, r, fold)
-    col = _BAND_ARRAYS.get(key)
-    if col is None:
-        def _one(band: int) -> str:
-            cols = ", ".join(f"mh_{band * r + j}" for j in range(r))
-            if fold == "xxhash64":
-                sig = f"xxhash64({cols})"
-            else:  # concat_ws string fold (the portable oracle-replayable form)
-                sig = f"concat_ws('_', {cols})"
-            return f"struct({band} AS band, {sig} AS sig)"
+    def _one(band: int) -> str:
+        cols = ", ".join(f"mh_{band * r + j}" for j in range(r))
+        if fold == "xxhash64":
+            sig = f"xxhash64({cols})"
+        else:  # concat_ws string fold (the portable oracle-replayable form)
+            sig = f"concat_ws('_', {cols})"
+        return f"struct({band} AS band, {sig} AS sig)"
 
-        col = F.expr(f"array({', '.join(_one(b) for b in range(bands))})")
-        _BAND_ARRAYS[key] = col
-    return col
+    return F.expr(f"array({', '.join(_one(b) for b in range(bands))})")
 
 
 def minhash_signatures_agg(
@@ -804,34 +789,22 @@ def simhash_fingerprints(
 
 
 #: Memoized SimHash expression lists (same Py4J-construction argument as
-#: _SIG_AGG_EXPRS: the 63 bit-sum aggregates + the 63-term sign pack cost
+#: _sig_agg_exprs: the 63 bit-sum aggregates + the 63-term sign pack cost
 #: ~950 ms to build naively, per call). Values identical: sum(if(bit, 1,
 #: -1)) == sum(when(bit == 1, 1).otherwise(-1)); the pack is the same
 #: long-literal conditional sum.
-_SIMHASH_AGGS: dict[int, list[Column]] = {}
-_SIMHASH_PACK: dict[int, Column] = {}
-
-
+@gateway_memo
 def _simhash_agg_exprs(use_bits: int) -> list[Column]:
-    cols = _SIMHASH_AGGS.get(use_bits)
-    if cols is None:
-        cols = [
-            F.expr(f"sum(if((shiftright(__h, {b}) & 1) = 1, 1, -1)) AS __b{b}")
-            for b in range(use_bits)
-        ]
-        _SIMHASH_AGGS[use_bits] = cols
-    return cols
+    return [
+        F.expr(f"sum(if((shiftright(__h, {b}) & 1) = 1, 1, -1)) AS __b{b}")
+        for b in range(use_bits)
+    ]
 
 
+@gateway_memo
 def _simhash_pack_expr(use_bits: int) -> Column:
-    col = _SIMHASH_PACK.get(use_bits)
-    if col is None:
-        terms = " + ".join(
-            f"if(__b{b} > 0, {2 ** b}L, 0L)" for b in range(use_bits)
-        )
-        col = F.expr(f"cast(0 as bigint) + {terms}")
-        _SIMHASH_PACK[use_bits] = col
-    return col
+    terms = " + ".join(f"if(__b{b} > 0, {2 ** b}L, 0L)" for b in range(use_bits))
+    return F.expr(f"cast(0 as bigint) + {terms}")
 
 
 def simhash_neardup_pairs(

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import ColumnOrName, _col
+from ..functions import ColumnOrName, _col, gateway_memo
 
 
 def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -586,7 +586,9 @@ def _parallel_writes(*thunks) -> None:
     tasks. Each thunk must be an independent write whose expensive inputs
     are already materialized (checkpoint-backed trained tables / cell
     assignments here), so completion order cannot matter. Errors propagate:
-    the first failing thunk's exception is re-raised after all complete."""
+    ``f.result()`` raises at the first failed future in submission order
+    (not necessarily the first to fail in time), and the pool's exit then
+    waits for the remaining thunks before the exception leaves."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
@@ -735,7 +737,7 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 1,
-    dim: int | None = None,
+    dim: int,
 ) -> DataFrame:
     """Distributed Lloyd k-means over an embedding column — the semantic-dedup
     / corpus-clustering primitive, expressed entirely in DataFrame ops.
@@ -747,9 +749,10 @@ def kmeans_lloyd(
     centroid id.
 
     Scale shape per iteration: one broadcast-assign pass (no corpus shuffle),
-    then a (cid, position) groupBy whose input is |corpus|×dim exploded
-    elements — partial agg reduces each partition to ≤ k×dim rows before the
-    shuffle, so the exchange is tiny regardless of corpus size. The corpus is
+    then one cid groupBy of ``dim`` element-wise mean aggregates — partial
+    agg reduces each partition to ≤ k rows before the shuffle, so the
+    exchange is tiny regardless of corpus size. Every vector must have
+    exactly ``dim`` elements (see ``kmeans_centroids``). The corpus is
     re-read per iteration rather than cached: at 100 TB the scan is cheaper
     than evicting half the block cache; on a hot path an explicit
     ``.persist()`` upstream composes fine.
@@ -763,23 +766,16 @@ def kmeans_lloyd(
 
 #: Memoized element-wise decimal-mean aggregate lists, keyed (dim, col):
 #: one sum/count pair per vector position (same Py4J-construction argument
-#: as _SUBVEC_ARRAYS — 64 aggregate Columns cost ~0.4 s to build naively).
-_MEAN_AGG_EXPRS: dict[tuple[int, str], list[Column]] = {}
-
-
+#: as _subvector_array — 64 aggregate Columns cost ~0.4 s to build naively).
+@gateway_memo
 def _mean_agg_exprs(dim: int, col: str) -> list[Column]:
-    key = (dim, col)
-    cols = _MEAN_AGG_EXPRS.get(key)
-    if cols is None:
-        cols = [
-            F.expr(
-                f"cast(sum(cast(element_at({col}, {j + 1}) as decimal(30,12)))"
-                f" as double) / count(*) AS __m{j}"
-            )
-            for j in range(dim)
-        ]
-        _MEAN_AGG_EXPRS[key] = cols
-    return cols
+    return [
+        F.expr(
+            f"cast(sum(cast(element_at({col}, {j + 1}) as decimal(30,12)))"
+            f" as double) / count(*) AS __m{j}"
+        )
+        for j in range(dim)
+    ]
 
 
 def kmeans_centroids(
@@ -789,7 +785,7 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 1,
-    dim: int | None = None,
+    dim: int,
 ) -> DataFrame:
     """The centroid-training half of ``kmeans_lloyd``, exposed on its own so
     trained centroids can feed the IVF serving path (``cosine_topk_ivf`` /
@@ -801,6 +797,11 @@ def kmeans_centroids(
     Cells that end an iteration empty are dropped (their cid disappears),
     matching what any engine computing a join-based group mean produces.
 
+    Every vector must have exactly ``dim`` elements: the mean aggregates
+    read positions 1..dim, so a shorter vector would add NULLs (ANSI off)
+    or throw (ANSI on) and a longer one would lose its tail. Any vector of
+    another width, NULL included, raises under either ANSI setting.
+
     The returned frame is ``localCheckpoint``-backed (k·dim doubles — tiny
     by construction): trained centroids feed ≥2 consumers in every serving
     path (cell assignment + probe ranking, or multiple artifact sinks), and
@@ -808,7 +809,15 @@ def kmeans_centroids(
     iteration training chain (measured: the IVF-PQ audit plans carried the
     training subtree 2-4×).
     """
-    emb = df.select(F.col(id_col), F.col(vec_col))
+    v = F.col(vec_col)
+    bad = F.concat(
+        F.lit(f"kmeans_centroids: {vec_col} width != {dim} at {id_col}="),
+        F.col(id_col).cast("string"),
+    )
+    emb = df.select(
+        F.col(id_col),
+        F.when(F.size(v) == dim, v).otherwise(F.raise_error(bad)).alias(vec_col),
+    )
     cents = (
         emb.orderBy(F.col(id_col).asc())
         .limit(k)
@@ -817,32 +826,12 @@ def kmeans_centroids(
     for _ in range(iters):
         assigned = assign_nearest(emb, cents, id_col=id_col, vec_col=vec_col)
         joined = emb.join(assigned.select(id_col, "cid"), id_col)
-        if dim is not None:
-            # one grouped pass (guide §2.4): dim element-wise decimal-mean
-            # aggregates per cid — the posexplode + (cid, pos) groupBy +
-            # (cid) re-group below pays a second exchange per iteration to
-            # reassemble the array. Same decimal(30,12) accumulation per
-            # position, same division, same array order — bit-identical
-            # centroids. Callers that know the embedding width pass dim.
-            cents = (
-                joined.groupBy("cid")
-                .agg(*_mean_agg_exprs(dim, vec_col))
-                .select(
-                    "cid", F.array(*[f"__m{j}" for j in range(dim)]).alias("cvec")
-                )
-            )
-            continue
-        ex = joined.select("cid", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-        means = ex.groupBy("cid", "pos").agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,12)")).cast("double")
-                / F.count("*")
-            ).alias("m")
-        )
-        cents = means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-            ).alias("cvec")
+        # one grouped pass (guide §2.4): dim element-wise decimal-mean
+        # aggregates per cid, decimal(30,12) accumulation per position
+        cents = (
+            joined.groupBy("cid")
+            .agg(*_mean_agg_exprs(dim, vec_col))
+            .select("cid", F.array(*[f"__m{j}" for j in range(dim)]).alias("cvec"))
         )
     return cents.localCheckpoint()
 
@@ -1585,28 +1574,21 @@ def pq_subvectors(
 #: Memoized subspace-slice arrays, keyed (m, dim, vec_col): building the
 #: m-struct slice array costs ~300 ms of Py4J round-trips per call at m=32
 #: (measured), and the PQ family builds it for every train/encode/serve —
-#: same construction-cost class as dedup._SIG_AGG_EXPRS. A single-parse
+#: same construction-cost class as dedup._sig_agg_exprs. A single-parse
 #: F.expr is ~20× cheaper cold and the memo makes repeats free; values and
 #: schema are identical (slice bounds stay compile-time literals).
-_SUBVEC_ARRAYS: dict[tuple[int, int, str], Column] = {}
-
-
+@gateway_memo
 def _subvector_array(m: int, dim: int, vec_col: str) -> Column:
-    key = (m, dim, vec_col)
-    col = _SUBVEC_ARRAYS.get(key)
-    if col is None:
-        dsub = dim // m
-        col = F.expr(
-            "array({})".format(
-                ", ".join(
-                    f"struct({s} AS sub, slice({vec_col}, {s * dsub + 1}, {dsub})"
-                    f" AS subvec)"
-                    for s in range(m)
-                )
+    dsub = dim // m
+    return F.expr(
+        "array({})".format(
+            ", ".join(
+                f"struct({s} AS sub, slice({vec_col}, {s * dsub + 1}, {dsub})"
+                f" AS subvec)"
+                for s in range(m)
             )
         )
-        _SUBVEC_ARRAYS[key] = col
-    return col
+    )
 
 
 def pq_train_codebooks(

@@ -17238,7 +17238,8 @@ def stream_batch_twins() -> dict[str, QueryFn]:
 # green driver row yet come first, then the rest of the oracle-bearing
 # surface, then rows-only queries (their check is weaker, so they cost the
 # least when they fall past the cap). Every query is additionally verified
-# locally — all SFs — by tests/oracle/test_duckdb_oracle.py.
+# locally, in a driver-config session (ANSI on) at any SF (ORACLE_SF_DIR),
+# by tests/oracle/test_duckdb_oracle.py.
 _SWEEP_FRONT = (
     # --- new in round 12 (no driver row yet — names are PREPENDED to this
     # block as they land) ---
@@ -17248,8 +17249,8 @@ _SWEEP_FRONT = (
     # in the three streaming maintenance queries, IVF-PQ append geometry
     # derivation; the shared _minhash_cluster_stream refactor; and the
     # connected_components deterministic checkpoint-free pass, which
-    # touches every CC-dependent query — each re-verified by the local
-    # driver mimic at sf0.01 before its commit; VERDICT_r11 item #1:
+    # touches every CC-dependent query — each re-verified by the oracle
+    # suite at sf0.01 before its commit; VERDICT_r11 item #1:
     # changed-code names outrank stale time-tiers) ---
     "stream_minhash_cluster_maintenance",
     "stream_cc_maintenance",

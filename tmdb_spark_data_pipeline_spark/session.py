@@ -21,6 +21,7 @@ correctness parity with a DuckDB oracle:
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -28,6 +29,23 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "tmdb-spark-data-pipeline-spark"
+
+_log = logging.getLogger(__name__)
+
+
+def _env_conf_pairs(raw: str) -> list[tuple[str, str]]:
+    """Parse ``SPARK_GRAFT_EXTRA_CONF`` (``k=v;k=v``). An entry without
+    ``=`` or with an empty key raises rather than silently setting a key
+    to ``""``."""
+    pairs = []
+    for entry in filter(None, (e.strip() for e in raw.split(";"))):
+        k, eq, v = entry.partition("=")
+        if not eq or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF: malformed entry {entry!r}, want key=value"
+            )
+        pairs.append((k.strip(), v.strip()))
+    return pairs
 
 
 def get_spark(
@@ -86,13 +104,12 @@ def get_spark(
     # semicolon-separated k=v list applied to every engine session — used
     # for cluster-posture settings and isolated config A/Bs without
     # touching the bench harness.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in filter(None, (p.strip() for p in env_conf.split(";"))):
-        k, _, v = pair.partition("=")
-        builder = builder.config(k.strip(), v.strip())
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    applied = _env_conf_pairs(os.environ.get("SPARK_GRAFT_EXTRA_CONF", ""))
+    applied += list((extra_conf or {}).items())
+    for k, v in applied:
+        builder = builder.config(k, v)
+    if applied:
+        _log.info("get_spark(%s) config overrides: %s", app_name, applied)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
