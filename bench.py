@@ -144,7 +144,8 @@ def main() -> None:
         # CacheManager, not reference-tracked. 127 warmup + timed queries of
         # accumulation measured the round-3 near-dup family 2-3× slower than
         # the same queries in a clean session (cosine_neardups 6.99 s in-suite
-        # vs 1.6-2.4 s steady-state; verified with tools/probe_suite.py).
+        # vs 1.6-2.4 s steady-state; verified by timing the family alone
+        # with BENCH_QUERIES=<names>).
         spark.catalog.clearCache()
         import gc
 

@@ -105,8 +105,7 @@ def test_registry_integrity():
     assert len(queries.REGISTRY) >= 50
     for name, spec in queries.REGISTRY.items():
         assert callable(spec.fn), name
-        if spec.oracle is not None:
-            assert spec.oracle.strip().upper().startswith(("SELECT", "WITH", "--")), name
+        assert spec.oracle.strip().upper().startswith(("SELECT", "WITH", "--")), name
 
 
 def test_salted_join_shuffles_on_key_plus_salt(spark):

@@ -590,6 +590,39 @@ def test_ivf_artifact_roundtrip_and_incremental_append(spark, tmp_path):
         )
 
 
+def test_ivf_artifact_writes_the_centroids_it_assigned_with(spark, tmp_path):
+    """The sampled centroid table is computed once: the one landed at
+    ``{path}/centroids`` is the one every cell was assigned against, even
+    for a nondeterministic sample that would differ if each of the two
+    concurrent sinks recomputed it."""
+    import math
+    import random as rnd
+
+    from pyspark.sql.types import BooleanType
+
+    rng = rnd.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(60)]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    coin = F.udf(lambda _: rnd.random() < 0.5, BooleanType()).asNondeterministic()
+    path = str(tmp_path / "ivf_idx")
+    similarity.write_ivf_artifact(df, path, centroid_filter=coin("vec_id"))
+    cents = {
+        r.vec_id: r.embedding for r in spark.read.parquet(f"{path}/centroids").collect()
+    }
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+
+    def nearest(v):  # max cosine, ties to the lowest centroid id
+        return max(cents, key=lambda c: (cos(v, cents[c]), -c))
+
+    cells = {
+        r.vec_id: r.cell_id for r in spark.read.parquet(f"{path}/cells").collect()
+    }
+    assert cells == {i: nearest(v) for i, v in rows}
+
+
 def test_mutual_reach_hierarchy_ann_audit_full_coverage(spark):
     """When the IVF candidate feed covers every pair (nprobe = number of
     cells), the ANN hierarchy is IDENTICAL to the exact one, so the audit
@@ -727,6 +760,15 @@ def test_pq_train_codebooks_matches_numpy_model(spark, vectors):
     assert set(got) == set(expect)
     for key, cv in expect.items():
         assert got[key] == pytest.approx(cv, abs=1e-9), key
+
+
+def test_pq_train_codebooks_rejects_vector_of_other_width(spark):
+    # the subspace slices read positions 1..dim: a short vector would train
+    # on short slices, so the width contract raises instead
+    rows = [(0, [0.0, 0.0, 0.0, 0.0]), (1, [1.0, 1.0, 1.0, 1.0]), (2, [0.5, 0.5])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="pq_train_codebooks: embedding width != 4 at vec_id=2"):
+        similarity.pq_train_codebooks(df, m=2, dim=4, ksub=2, iters=1).collect()
 
 
 def test_pq_encode_distortion_shrinks_with_more_codewords(spark, vectors):

@@ -296,3 +296,36 @@ def test_stage_stream_batches_one_pass_layout(spark, tmp_path):
             for r in spark.read.parquet(os.path.join(src, f"batch_{i}.parquet")).collect()
         }
         assert ids == {x for x in range(30) if x % 3 == i}
+
+
+def test_stage_stream_batches_empty_slice_replays_every_batch(spark, tmp_path):
+    # no row carries key 1: batch_1 is staged schema-only, and the stream
+    # still replays three batches in index order (the middle one empty)
+    import os
+
+    from pyspark.sql import types as T
+
+    from tmdb_spark_data_pipeline_spark.plans.queries import _stage_stream_batches
+
+    df = spark.range(30).filter(F.col("id") % 3 != 1).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("t"), F.col("id")).alias("text")
+    )
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _stage_stream_batches(df, F.col("doc_id") % 3, src)
+    assert sorted(os.listdir(src)) == [f"batch_{i}.parquet" for i in range(3)]
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    epochs: list[list[int]] = []
+    q = (
+        streaming.stream_from_parquet_dir(spark, src, schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(
+            lambda bdf, _: epochs.append(sorted(r.doc_id for r in bdf.collect()))
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert epochs == [list(range(0, 30, 3)), [], list(range(2, 30, 3))]

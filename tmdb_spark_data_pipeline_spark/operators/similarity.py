@@ -637,7 +637,11 @@ def write_ivf_artifact(
     else:
         if centroid_filter is None:
             centroid_filter = F.col(id_col) % 25 == 0
-        cents = corpus.filter(centroid_filter).select(id_col, vec_col)
+        # checkpointed: the cell assignment and the centroid sink below
+        # both read it, concurrently, and would each recompute it
+        cents = (
+            corpus.filter(centroid_filter).select(id_col, vec_col).localCheckpoint()
+        )
     assigned = assign_ivf_cells(corpus, cents, id_col=id_col, vec_col=vec_col)
     _parallel_writes(
         lambda: assigned.write.mode(mode)
@@ -778,6 +782,23 @@ def _mean_agg_exprs(dim: int, col: str) -> list[Column]:
     ]
 
 
+def _width_checked(
+    df: DataFrame, caller: str, id_col: str, vec_col: str, dim: int
+) -> DataFrame:
+    """``(id_col, vec_col)`` of ``df`` with every vector checked to hold
+    exactly ``dim`` elements: any other width, NULL included, raises under
+    either ANSI setting, naming ``caller`` and the offending id."""
+    v = F.col(vec_col)
+    bad = F.concat(
+        F.lit(f"{caller}: {vec_col} width != {dim} at {id_col}="),
+        F.col(id_col).cast("string"),
+    )
+    return df.select(
+        F.col(id_col),
+        F.when(F.size(v) == dim, v).otherwise(F.raise_error(bad)).alias(vec_col),
+    )
+
+
 def kmeans_centroids(
     df: DataFrame,
     *,
@@ -809,15 +830,7 @@ def kmeans_centroids(
     iteration training chain (measured: the IVF-PQ audit plans carried the
     training subtree 2-4×).
     """
-    v = F.col(vec_col)
-    bad = F.concat(
-        F.lit(f"kmeans_centroids: {vec_col} width != {dim} at {id_col}="),
-        F.col(id_col).cast("string"),
-    )
-    emb = df.select(
-        F.col(id_col),
-        F.when(F.size(v) == dim, v).otherwise(F.raise_error(bad)).alias(vec_col),
-    )
+    emb = _width_checked(df, "kmeans_centroids", id_col, vec_col, dim)
     cents = (
         emb.orderBy(F.col(id_col).asc())
         .limit(k)
@@ -1597,7 +1610,7 @@ def pq_train_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 8,
-    dim: int = 64,
+    dim: int,
     ksub: int = 16,
     iters: int = 2,
 ) -> DataFrame:
@@ -1614,9 +1627,14 @@ def pq_train_codebooks(
     (sub, cid, pos) groupBy whose exchange is ≤ m·ksub·dsub rows after
     partial agg, regardless of corpus size.
 
+    Every vector must have exactly ``dim`` elements, checked as in
+    ``kmeans_centroids``: the subspace slices read positions 1..dim, so a
+    vector of another width would train on short or NULL slices.
+
     Returns ``(sub, cid, cvec)`` — ``cvec`` is ``array<double>`` of length
     dim/m.
     """
+    df = _width_checked(df, "pq_train_codebooks", id_col, vec_col, dim)
     sv = pq_subvectors(df, id_col=id_col, vec_col=vec_col, m=m, dim=dim)
     init_ids = df.select(id_col).orderBy(F.col(id_col).asc()).limit(ksub)
     cents = pq_subvectors(

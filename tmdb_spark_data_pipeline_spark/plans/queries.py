@@ -1,7 +1,8 @@
 """The declared query surface (SURVEY.md §2.11): every operator the engine
 claims, written once in PySpark (via the operator library) and once in ANSI
-SQL for the DuckDB oracle. The driver runs both at sf=0.01 and compares
-row-count + schema + order-insensitive value-hash.
+SQL for the DuckDB oracle; every query carries both. The driver runs both at
+sf=0.01 and compares row-count + schema + order-insensitive value-hash, in the
+order ``__spark_entry__.queries()`` derives from its recorded windows.
 
 Determinism rules (SURVEY.md §7 "hard parts") applied throughout:
 
@@ -47,13 +48,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # None → non-SQL-expressible; driver does rows-only
+    oracle: str  # DuckDB SQL over the same tables
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(name: str, oracle: str):
     def deco(fn: QueryFn) -> QueryFn:
         REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
@@ -207,7 +208,9 @@ def _stage_stream_batches(df: DataFrame, key, src: str, *, n: int = 3) -> None:
     column expression in ``[0, n)``; each value's lone output file is moved
     to ``src/batch_<i>.parquet`` with strictly increasing mtimes so the
     file-source stream (which orders by timestamp) replays batches in
-    index order, exactly as the old per-batch write loop did."""
+    index order, exactly as the old per-batch write loop did. A value no row
+    carries gets a schema-only empty batch file, so the stream still
+    replays ``n`` batches."""
     import os
     import shutil
     import time
@@ -225,6 +228,10 @@ def _stage_stream_batches(df: DataFrame, key, src: str, *, n: int = 3) -> None:
     now = time.time()
     for i in range(n):
         files = _glob(f"{staged}/__b={i}/part-*.parquet")
+        if not files:
+            empty = f"{staged}/__empty={i}"
+            df.sparkSession.createDataFrame([], df.schema).write.parquet(empty)
+            files = _glob(f"{empty}/part-*.parquet")
         if len(files) != 1:  # pragma: no cover - staging invariant
             raise RuntimeError(f"expected 1 file for batch {i}, got {files}")
         dst = os.path.join(src, f"batch_{i}.parquet")
@@ -6205,11 +6212,11 @@ def fuzzy_customer_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BM25_TERMS = ("window", "sort", "column")
 
-
-@query(
-    "bm25_search_top20",
-    oracle=r"""
-    WITH tk AS (
+#: The BM25 scored-docs CTE chunk (yields ``bm25s(doc_id, bm25)``) — shared
+#: between the plain top-20 oracle and the hybrid-RRF oracle so the scoring
+#: SQL cannot drift between them.
+_BM25_SCORES_SQL = r"""
+    tk AS (
       SELECT doc_id, w FROM (
         SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
         FROM documents)
@@ -6221,20 +6228,28 @@ _BM25_TERMS = ("window", "sort", "column")
       SELECT doc_id, w, count(*) AS tf FROM tk
       WHERE w IN ('window', 'sort', 'column') GROUP BY doc_id, w
     ),
-    df AS (SELECT w, count(*) AS df FROM tf GROUP BY w),
+    dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY w),
     scored AS (
       SELECT tf.doc_id,
              CAST(round(
-               ln((sc.n - df.df + 0.5) / (df.df + 0.5) + 1.0)
+               ln((sc.n - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
                * (tf.tf * (1.2 + 1.0))
                  / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.len / sc.avglen)), 12)
              AS DECIMAL(30,12)) AS term_score
-      FROM tf JOIN df ON tf.w = df.w JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN sc
+      FROM tf JOIN dfq ON tf.w = dfq.w JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN sc
+    ),
+    bm25s AS (
+      SELECT doc_id, round(CAST(sum(term_score) AS DOUBLE), 6) AS bm25
+      FROM scored GROUP BY doc_id
     )
-    SELECT doc_id, round(CAST(sum(term_score) AS DOUBLE), 6) AS bm25
-    FROM scored GROUP BY doc_id
-    ORDER BY bm25 DESC, doc_id ASC LIMIT 20
-    """,
+"""
+
+
+@query(
+    "bm25_search_top20",
+    oracle="WITH "
+    + _BM25_SCORES_SQL
+    + "SELECT doc_id, bm25 FROM bm25s ORDER BY bm25 DESC, doc_id ASC LIMIT 20",
 )
 def bm25_search_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (k1=1.2, b=0.75) for a fixed 3-term query —
@@ -9535,7 +9550,11 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "language_id_confusion",
-    oracle=None,  # replaced below — needs the generated language-id SQL
+    oracle=(
+        "WITH preds AS (" + _language_id_oracle() + ") "
+        "SELECT lang AS actual, lang_pred AS predicted, count(*) AS n "
+        "FROM preds GROUP BY 1, 2"
+    ),
 )
 def language_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier evaluation as a query: the stopword-voting language ID
@@ -9549,13 +9568,6 @@ def language_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return preds.groupBy(
         F.col("lang").alias("actual"), F.col("lang_pred").alias("predicted")
     ).agg(F.count("*").alias("n"))
-
-
-REGISTRY["language_id_confusion"].oracle = (
-    "WITH preds AS (" + _language_id_oracle() + ") "
-    "SELECT lang AS actual, lang_pred AS predicted, count(*) AS n "
-    "FROM preds GROUP BY 1, 2"
-)
 
 
 @query(
@@ -10895,7 +10907,24 @@ def winnowed_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "classifier_agreement_kappa",
-    oracle=None,  # replaced below — needs the generated language-id SQL
+    oracle=(
+        "WITH preds AS (" + _language_id_oracle() + "), "
+        """
+    tot AS (SELECT count(*) AS n,
+                   CAST(sum(CASE WHEN lang = lang_pred THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
+            FROM preds),
+    na AS (SELECT lang AS cls, count(*) AS na FROM preds GROUP BY 1),
+    np AS (SELECT lang_pred AS cls, count(*) AS np FROM preds GROUP BY 1),
+    pe AS (SELECT CAST(sum(coalesce(na.na, 0) * coalesce(np.np, 0)) AS BIGINT) AS pe_num
+           FROM na FULL JOIN np ON na.cls = np.cls)
+    SELECT CAST(tot.n AS BIGINT) AS n, tot.n_agree,
+           round(tot.n_agree * 1.0 / tot.n, 6) AS po,
+           round(pe.pe_num * 1.0 / (tot.n * tot.n), 6) AS pe,
+           round((tot.n_agree * tot.n - pe.pe_num) * 1.0
+                 / (tot.n * tot.n - pe.pe_num), 6) AS kappa
+    FROM tot CROSS JOIN pe
+    """
+    ),
 )
 def classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between the stopword-voting language ID and the
@@ -10935,26 +10964,6 @@ def classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("kappa"),
     )
-
-
-REGISTRY["classifier_agreement_kappa"].oracle = (
-    "WITH preds AS (" + _language_id_oracle() + "), "
-    """
-    tot AS (SELECT count(*) AS n,
-                   CAST(sum(CASE WHEN lang = lang_pred THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
-            FROM preds),
-    na AS (SELECT lang AS cls, count(*) AS na FROM preds GROUP BY 1),
-    np AS (SELECT lang_pred AS cls, count(*) AS np FROM preds GROUP BY 1),
-    pe AS (SELECT CAST(sum(coalesce(na.na, 0) * coalesce(np.np, 0)) AS BIGINT) AS pe_num
-           FROM na FULL JOIN np ON na.cls = np.cls)
-    SELECT CAST(tot.n AS BIGINT) AS n, tot.n_agree,
-           round(tot.n_agree * 1.0 / tot.n, 6) AS po,
-           round(pe.pe_num * 1.0 / (tot.n * tot.n), 6) AS pe,
-           round((tot.n_agree * tot.n - pe.pe_num) * 1.0
-                 / (tot.n * tot.n - pe.pe_num), 6) AS kappa
-    FROM tot CROSS JOIN pe
-    """
-)
 
 
 @query(
@@ -13862,39 +13871,6 @@ def corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: The BM25 scored-docs CTE chunk (yields ``bm25s(doc_id, bm25)``) — shared
-#: between the plain top-20 oracle and the hybrid-RRF oracle so the scoring
-#: SQL cannot drift between them.
-_BM25_SCORES_SQL = r"""
-    tk AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        FROM documents)
-      WHERE w <> ''
-    ),
-    dl AS (SELECT doc_id, count(*) AS len FROM tk GROUP BY doc_id),
-    sc AS (SELECT count(*) AS n, CAST(sum(len) AS DOUBLE) / count(*) AS avglen FROM dl),
-    tf AS (
-      SELECT doc_id, w, count(*) AS tf FROM tk
-      WHERE w IN ('window', 'sort', 'column') GROUP BY doc_id, w
-    ),
-    dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY w),
-    scored AS (
-      SELECT tf.doc_id,
-             CAST(round(
-               ln((sc.n - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
-               * (tf.tf * (1.2 + 1.0))
-                 / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.len / sc.avglen)), 12)
-             AS DECIMAL(30,12)) AS term_score
-      FROM tf JOIN dfq ON tf.w = dfq.w JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN sc
-    ),
-    bm25s AS (
-      SELECT doc_id, round(CAST(sum(term_score) AS DOUBLE), 6) AS bm25
-      FROM scored GROUP BY doc_id
-    )
-"""
-
-
 def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of ``_BM25_SCORES_SQL``: (doc_id, bm25) for every doc
     matching any query term (same machinery as ``bm25_search_top20``)."""
@@ -16692,15 +16668,6 @@ def geo_customer_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# retro-wire the plain BM25 oracle onto the shared scored-docs chunk (its
-# inline twin predated the hybrid query; one source of truth now)
-REGISTRY["bm25_search_top20"].oracle = (
-    "WITH "
-    + _BM25_SCORES_SQL
-    + "SELECT doc_id, bm25 FROM bm25s ORDER BY bm25 DESC, doc_id ASC LIMIT 20"
-)
-
-
 @query(
     "benford_price_audit",
     oracle="""
@@ -17229,315 +17196,4 @@ def stream_batch_twins() -> dict[str, QueryFn]:
         ),
         "stream_hourly_users": lambda s, d: _build_hourly_users(_ev(s, d)),
         "stream_psi_drift": lambda s, d: _build_stream_psi_current(_ev(s, d)),
-    }
-
-
-# The driver's CORRECTNESS sweep checks a bounded prefix of ``queries()``
-# (round 1 recorded rows for exactly the first 50 of 57 declared queries), so
-# emission order is part of the contract. Priority order: queries with no
-# green driver row yet come first, then the rest of the oracle-bearing
-# surface, then rows-only queries (their check is weaker, so they cost the
-# least when they fall past the cap). Every query is additionally verified
-# locally, in a driver-config session (ANSI on) at any SF (ORACLE_SF_DIR),
-# by tests/oracle/test_duckdb_oracle.py.
-_SWEEP_FRONT = (
-    # --- new in round 12 (no driver row yet — names are PREPENDED to this
-    # block as they land) ---
-    "stream_keepone_maintenance",
-    # --- changed in round 12 since last green (the ADVICE_r11 closures:
-    # epoch-keyed idempotent artifact writes + per-epoch checkpoint frees
-    # in the three streaming maintenance queries, IVF-PQ append geometry
-    # derivation; the shared _minhash_cluster_stream refactor; and the
-    # connected_components deterministic checkpoint-free pass, which
-    # touches every CC-dependent query — each re-verified by the oracle
-    # suite at sf0.01 before its commit; VERDICT_r11 item #1:
-    # changed-code names outrank stale time-tiers) ---
-    "stream_minhash_cluster_maintenance",
-    "stream_cc_maintenance",
-    "stream_minhash_index_maintenance",
-    "ivfpq_artifact_incremental",
-    "ivfpq_artifact_roundtrip",
-    "neardup_components",
-    "neardup_dedup_apply",
-    "neardup_keep_best_quality",
-    "winnow_match_clusters",
-    "neardup_cluster_delta",
-    "embedding_dbscan_clusters",
-    "embedding_mutual_reach_clusters",
-    "embedding_mutual_reach_ann",
-    "embedding_mutual_reach_hierarchy",
-    "embedding_mutual_reach_hierarchy_ann",
-    "corpus_curation_e2e",
-    "customer_golden_records",
-    # --- changed in round 12: oracle type-skew closures (ntile/row_number
-    # int -> long casts, xml nationkey BIGINT — the heatmap r11 precedent;
-    # all 4 re-mimicked green, typecheck now 0 skews on them) ---
-    "rfm_segments",
-    "revenue_pareto_deciles",
-    "hybrid_search_rrf",
-    "xml_roundtrip",
-    # --- changed in round 11 since last green (VERDICT_r11 item #1 list:
-    # the kcore/s_core/ktruss + CC unpersist fixes, the heatmap hour cast,
-    # the minhash-artifact path; all mimic-green at sf0.01) ---
-    "event_seasonality_heatmap",
-    "copurchase_kcore",
-    "copurchase_score",
-    "copurchase_ktruss",
-    "kcore_incremental_maintenance",
-    "neardup_components",
-    "minhash_artifact_roundtrip",
-    # --- round-12 rotation: the 8 r5-tier names the r11 50-row cap
-    # dropped ---
-    "time_to_purchase_km",
-    "peak_concurrent_sessions",
-    "truncation_rank_rbo",
-    "xml_roundtrip",
-    "doc_chunks_udtf",
-    "recursive_custkey_rollup",
-    "containment_neardups",
-    "neardup_dedup_apply",
-    # --- last verified r6 (the stalest time tier — green since round 6;
-    # the 50-row cap reaches ~29 of these, the rest rotate in round 13) ---
-    "embedding_knn_label_spread",
-    "k_anonymity_audit",
-    "l_diversity_audit",
-    "embedding_dbscan_clusters",
-    "cm_sketch_token_counts",
-    "bloom_prejoin_audit",
-    "token_zipf_fit",
-    "event_value_anomalies",
-    "key_skew_profile",
-    "source_mixture_weights",
-    "stream_stream_left_join",
-    "scan_filter_project",
-    "derived_metrics",
-    "cleaning_normalize",
-    "dedup_by_key",
-    "top_orders_by_price",
-    "bottom_orders_by_price",
-    "grouped_topn",
-    "pricing_summary",
-    "orders_priority_agg",
-    "orders_by_year",
-    "franchise_style_agg",
-    "rollup_lineitem",
-    "cube_lineitem",
-    "distinct_parts_per_flag",
-    "having_big_customers",
-    "revenue_by_region",
-    "shipping_priority",
-    "supplier_revenue_by_nation",
-    "promo_revenue_pct",
-    "customers_without_orders",
-    "customer_order_counts",
-    "left_join_nation_counts",
-    "setop_union",
-    "setop_intersect",
-    "setop_except",
-    "word_counts_top20",
-    "search_documents",
-    "nested_hof_orders",
-    "json_extract_props",
-    "dedup_exact_by_source",
-    "ngram_jaccard_neardups",
-    "minhash_neardups",
-    "cosine_neardups",
-    "text_stats",
-    "doc_fingerprints",
-    "lang_stopword_stats",
-    # --- last verified r7 ---
-    "er_blocking_quality",
-    "copurchase_weighted_pagerank",
-    "kcore_incremental_maintenance",
-    "winnow_match_clusters",
-    "embedding_mutual_reach_clusters",
-    "dsir_importance_selection",
-    "hard_negative_mining",
-    "embedding_source_calibration",
-    "tokenizer_fertility_by_lang",
-    "distinct_ngram_diversity",
-    "copurchase_score",
-    "pyds_jsonl_roundtrip",
-    "stream_pyds_jsonl_totals",
-    "hll_mergeable_rollup",
-    "doc_quality_scores",
-    "similarity_topk_multiprobe",
-    "cosine_neardups_blocked",
-    "embedding_stats",
-    "multimodal_payload_stats",
-    "multimodal_features",
-    "json_roundtrip",
-    "partitioned_roundtrip",
-    "hash_split_counts",
-    "stratified_sample_docs",
-    "source_quota_rebalance",
-    "sequence_packing",
-    "pii_redaction",
-    "neardup_components",
-    "profile_documents",
-    "salted_fact_join",
-    "small_quantity_revenue",
-    "repetition_scores",
-    "boilerplate_exposure",
-    "benchmark_contamination",
-    "csv_roundtrip",
-    "quality_deciles",
-    "disjunctive_part_revenue",
-    "idle_customer_balances",
-    "asia_market_share_by_year",
-    "tfidf_top_terms",
-    "order_price_histogram",
-    "chunk_sliding_windows",
-    "bigram_merge_candidates",
-    "order_priority_exists",
-    "volume_shipping",
-    "product_type_profit",
-    "returned_items_report",
-    "large_volume_customers",
-    "waiting_supplier_orders",
-    "similarity_topk_ivf",
-    # --- r10-green tiers below (next-stalest after r6/r7): the round-10
-    # additions, the r4 tier re-verified in r10, the changed-in-r10 batch
-    # ---
-    "cross_doc_substring_dedup",
-    "cross_doc_substring_apply",
-    "stream_cc_maintenance",
-    "ivfpq_artifact_incremental",
-    "order_price_jackknife_se",
-    "stream_minhash_index_maintenance",
-    "minhash_artifact_roundtrip",
-    "schema_evolution_roundtrip",
-    "corrupt_record_quarantine",
-    "stream_exactly_once_totals",
-    "stream_late_data_accounting",
-    "approx_distinct_parts",
-    "approx_percentile_gate",
-    "asof_cogroup_last_click",
-    "basket_item_lift",
-    "bigram_heldout_logprob",
-    "bucketed_join_revenue",
-    "cdc_last_state",
-    "chunk_dedup_stats",
-    "daily_new_users_cume",
-    "daily_revenue_decomposition",
-    "dq_expectations_orders",
-    "embedding_centroid_drift",
-    "embedding_label_dispersion",
-    "embedding_truncation_fidelity",
-    "event_type_hour_mutual_info",
-    "event_value_mad_outliers",
-    "ewma_daily_revenue",
-    "heavy_hitter_tokens",
-    "incremental_rollup_merge",
-    "language_id_confusion",
-    "last_touch_attribution",
-    "pit_join_event_state",
-    "pmi_collocations_top20",
-    "quality_isotonic_calibration",
-    "revenue_pareto_deciles",
-    "rfm_segments",
-    "ridge_value_model",
-    "seasonal_hour_outliers",
-    "semantic_dedup_pairs",
-    "session_overlap_pairs",
-    "session_path_trigrams",
-    "simhash_fingerprints",
-    "simhash_neardups",
-    "similarity_topk_pandas",
-    "snapshot_diff_counts",
-    "split_leakage_audit",
-    "sql_interface_market_share",
-    "stream_cdc_last_state",
-    "stream_hourly_users",
-    "copurchase_ktruss",
-    "conformal_value_intervals",
-    "similarity_topk_ivfpq",
-    "ivfpq_artifact_roundtrip",
-    "similarity_topk_ivfpq_residual",
-    "unigram_viterbi_stats",
-    "unigram_em_round",
-    "ivf_artifact_roundtrip",
-    "ivf_artifact_incremental",
-    "similarity_topk_lsh_pruned",
-    "json_roundtrip",
-    "partitioned_roundtrip",
-    "csv_roundtrip",
-    "xml_roundtrip",
-    "orc_roundtrip",
-    "pyds_jsonl_roundtrip",
-    "stream_pyds_jsonl_totals",
-    # --- r11-green tier (freshest rows — round-11 sweep window):
-    # the 2 round-11 additions, the 6 r4 leftovers, the first 42 r5-tier
-    # names (duplicates with the blocks above collapse via dict.fromkeys)
-    # ---
-    "cross_doc_substring_keep_one",
-    "stream_minhash_cluster_maintenance",
-    "stream_python_source_totals",
-    "stream_rest_ingest_audit",
-    "trimmed_mean_event_values",
-    "unpivot_lineitem_measures",
-    "weighted_median_price",
-    "weighted_sample_docs",
-    "variant_events_profile",
-    "winnowed_doc_fingerprints",
-    "classifier_agreement_kappa",
-    "token_budget_waterfill",
-    "order_price_psi",
-    "above_customer_avg_orders",
-    "lateral_top2_orders",
-    "customer_order_distribution",
-    "gini_customer_spend",
-    "stream_stream_full_join",
-    "stream_stream_semi_join",
-    "knn_label_disagreement",
-    "temporal_split_embargo",
-    "kfold_balance_audit",
-    "quality_quantile_normalized",
-    "jl_projection_fidelity",
-    "video_frame_samples",
-    "neardup_keep_best_quality",
-    "winnowed_match_candidates",
-    "copurchase_triangle_stats",
-    "brand_label_propagation",
-    "corpus_curation_e2e",
-    "hybrid_search_rrf",
-    "benford_price_audit",
-    "lang_source_chisq",
-    "order_price_moments",
-    "incremental_join_maintenance",
-    "customer_golden_records",
-    "time_weighted_avg_value",
-    "hourly_ohlc_bars",
-    "unpivot_udtf_twin",
-    "copurchase_degree_assortativity",
-    "bm25_ndcg_eval",
-    "truncation_rank_stability",
-    "geo_customer_neighbor_pairs",
-    "hll_overlap_users",
-    "theta_segment_algebra",
-    "kll_quantile_sketch_gate",
-    "user_trend_robust",
-    "ab_test_welch",
-    "ab_conversion_ztest",
-    "daily_revenue_changepoint",
-)
-
-
-def _ordered_names() -> list[str]:
-    front = list(dict.fromkeys(n for n in _SWEEP_FRONT if n in REGISTRY))
-    rest = [n for n in REGISTRY if n not in _SWEEP_FRONT]
-    with_oracle = [n for n in rest if REGISTRY[n].oracle is not None]
-    rows_only = [n for n in rest if REGISTRY[n].oracle is None]
-    return front + with_oracle + rows_only
-
-
-def all_queries() -> dict[str, QueryFn]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
-
-
-def all_oracles() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
     }
