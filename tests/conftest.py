@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -28,3 +29,22 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correctness() -> str:
     return SF_CORRECTNESS
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)``: ``fn()``'s result and the number of Spark jobs it
+    launched, counted under a job group of its own."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"jobs_run_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -7,8 +7,10 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
+from perfbench.workloads import OLAP_MIX
 from tmdb_spark_data_pipeline_spark.plans import queries
 
 
@@ -772,3 +774,12 @@ def test_run_tmp_cleanup_registration_and_stale_sweep(spark, tmp_path, monkeypat
     assert (tmp_path / f"spark_graft_{app_id}_heartbeat").exists()
     # idempotent: second call doesn't re-register or error
     assert queries._run_tmp(spark, "t", "/root/testdata/sf0.001") == p
+
+
+@pytest.mark.parametrize("name", OLAP_MIX)
+def test_plan_construction_runs_no_job(spark, sf_smoke, jobs_run, name):
+    # building a query's DataFrame must stay lazy once its inputs' footers
+    # are known: an eager action here is paid on every call
+    fn = queries.REGISTRY[name].fn
+    fn(spark, sf_smoke)
+    assert jobs_run(lambda: fn(spark, sf_smoke))[1] == 0

@@ -38,7 +38,7 @@ from ..operators import (
     text,
     timeseries,
 )
-from ..sources.io import load_table
+from ..sources.io import load_table, parquet_schema
 from ..streaming import replay_events_tumbling
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -8774,7 +8774,7 @@ def stream_exactly_once_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     out = _run_tmp(spark, "eos_out", sf_dir)
     ckpt = _run_tmp(spark, "eos_ckpt", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
@@ -8929,7 +8929,7 @@ def stream_pyds_jsonl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_jsonl_writer(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     out = _run_tmp(spark, "pyds_stream", sf_dir)
     ckpt = _run_tmp(spark, "pyds_sckpt", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
@@ -10401,7 +10401,8 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         3,
     )
 
-    schema = spark.read.parquet(src).schema
+    # every staged file is written from ``ev``: no need to infer its schema
+    schema = ev.schema
     stream = _as_event_time(
         stream_from_parquet_dir(
             spark, src, schema, glob_filter="*.parquet", max_files_per_trigger=1

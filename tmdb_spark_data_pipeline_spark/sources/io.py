@@ -6,6 +6,9 @@ files" with manual partition-path construction (``analytics/kpis.py:198``,
 (``clean_transform.py:27-64``). Here:
 
 - reads always take an explicit schema when the format can't carry one (JSON),
+- a Parquet file's schema is inferred once per file and session confs
+  (``parquet_schema``): inference runs a Spark job over the footer, so later
+  reads of the unchanged file pass the remembered schema instead,
 - partition pruning is expressed as a filter on the partition column over the
   partitioned root (Catalyst's ``PruneFileSourcePartitions`` does the rest),
 - the marker protocol is kept (simple, idempotent, object-store friendly) and
@@ -15,7 +18,9 @@ files" with manual partition-path construction (``analytics/kpis.py:198``,
 
 from __future__ import annotations
 
+import functools
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,6 +108,51 @@ def write_xml(
     df.write.mode(mode).format("xml").option("rowTag", row_tag).save(path)
 
 
+#: Session confs that change the schema Spark infers from a Parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+class _Footer(NamedTuple):
+    schema: StructType  # what ``spark.read.parquet`` infers
+    ns_columns: tuple[str, ...]  # ``timestamp[ns]`` columns, per pyarrow
+
+
+@functools.lru_cache(maxsize=64)
+def _footer_slot(key: tuple) -> list[_Footer]:
+    """An empty slot per (file version, inference confs) that ``_footer``
+    fills: filling needs the session, which is not part of the key. The
+    values are plain Python, so they outlive a JVM gateway restart."""
+    return []
+
+
+def _footer(spark: SparkSession, path: str) -> _Footer:
+    """The memoized footer of the local Parquet file ``path``: keyed by its
+    absolute path, mtime and size, and the session's inference confs."""
+    st = os.stat(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    slot = _footer_slot((os.path.abspath(path), st.st_mtime_ns, st.st_size, confs))
+    if not slot:
+        import pyarrow.parquet as pq
+
+        ns = tuple(f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]")
+        slot.append(_Footer(spark.read.parquet(path).schema, ns))
+    return slot[0]
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, without its inference
+    job after the first call for an unchanged local file. Directories and
+    non-local paths are inferred on every call."""
+    if os.path.isfile(path):
+        return _footer(spark, path).schema
+    return spark.read.parquet(path).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table from an sf directory.
 
@@ -111,19 +161,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``spark.sql.legacy.parquet.nanosAsLong``) and rebuild proper timestamps
     with µs truncation — the same truncation DuckDB applies, so oracle
     comparisons see identical instants. The footer tells us which columns
-    need it.
+    need it; a local file's footer is read once (see ``parquet_schema``) and its
+    inferred schema passed to later reads.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    try:
-        import pyarrow.parquet as pq
-
-        for field in pq.read_schema(path):
-            if str(field.type) == "timestamp[ns]":
-                df = df.withColumn(field.name, F.timestamp_micros(F.expr(f"`{field.name}` div 1000")))
-    except Exception:
-        pass  # directory inputs / non-local paths: no ns-timestamp fixup
+    reader, ns_columns = spark.read, ()
+    if os.path.isfile(path):  # directory inputs / non-local paths: no ns-timestamp fixup
+        footer = _footer(spark, path)
+        reader, ns_columns = reader.schema(footer.schema), footer.ns_columns
+    df = reader.parquet(path)
+    for c in ns_columns:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 

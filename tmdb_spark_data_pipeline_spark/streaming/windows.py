@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..sources.io import parquet_schema
+
 
 def tumbling_agg(
     df: DataFrame,
@@ -184,7 +186,7 @@ def replay_events(
     # ns-timestamp columns stream as raw longs (see sources/io.load_table);
     # rebuild the event-time column before the watermark.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(parquet_path).schema
+    schema = parquet_schema(spark, parquet_path)
     if os.path.isfile(parquet_path):
         stream = stream_from_parquet_dir(
             spark, os.path.dirname(parquet_path), schema, glob_filter=os.path.basename(parquet_path)
@@ -229,7 +231,7 @@ def replay_events_pair(
     sources (not a self-referencing branch) so each side tracks its own
     watermark, exactly as two real topics would."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(parquet_path).schema
+    schema = parquet_schema(spark, parquet_path)
     s1 = _event_stream(spark, parquet_path, schema, ts_col=ts_col, watermark=watermark)
     s2 = _event_stream(spark, parquet_path, schema, ts_col=ts_col, watermark=watermark)
     out = build(s1, s2)
