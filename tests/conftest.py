@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
 
 import pytest
 
@@ -33,18 +32,13 @@ def sf_correctness() -> str:
 
 @pytest.fixture
 def jobs_run(spark):
-    """``jobs_run(fn)``: ``fn()``'s result and the number of Spark jobs it
-    launched, counted under a job group of its own."""
+    """``jobs_run(fn)``: ``fn()``'s result and the number of Spark jobs
+    submitted while it ran, on any thread (the job IDs it used up)."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
 
     def run(fn):
-        sc = spark.sparkContext
-        group = f"jobs_run_{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "counted")
-        try:
-            out = fn()
-        finally:
-            sc._jsc.clearJobGroup()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        first = scheduler.nextJobId()
+        out = fn()
+        return out, scheduler.nextJobId() - first
 
     return run

@@ -783,3 +783,15 @@ def test_plan_construction_runs_no_job(spark, sf_smoke, jobs_run, name):
     fn = queries.REGISTRY[name].fn
     fn(spark, sf_smoke)
     assert jobs_run(lambda: fn(spark, sf_smoke))[1] == 0
+
+
+def test_jobs_run_counts_jobs_started_on_other_threads(spark, jobs_run):
+    # the laziness pin must see an eager action on an engine worker thread
+    from concurrent.futures import ThreadPoolExecutor
+
+    def count_elsewhere():
+        with ThreadPoolExecutor(1) as pool:
+            return pool.submit(spark.range(3).count).result()
+
+    n, jobs = jobs_run(count_elsewhere)
+    assert n == 3 and jobs >= 1

@@ -38,7 +38,7 @@ from ..operators import (
     text,
     timeseries,
 )
-from ..sources.io import load_table, parquet_schema
+from ..sources.io import load_table, parquet_schema, read_parquet
 from ..streaming import replay_events_tumbling
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2577,7 +2577,7 @@ def partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="overwrite",
         partition_by=("o_orderpriority",),
     )
-    back = spark.read.parquet(path).filter(
+    back = read_parquet(spark, path).filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     )
     return back.groupBy("o_orderpriority").agg(
@@ -8788,7 +8788,7 @@ def stream_exactly_once_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_exactly_once_parquet(_stream(), out, ckpt, query_name="eos_totals_1")
     # second run, same checkpoint: offsets are committed -> must write nothing
     run_exactly_once_parquet(_stream(), out, ckpt, query_name="eos_totals_2")
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(_dsum(F.col("value")), 2).alias("total"),
@@ -10033,7 +10033,7 @@ def _minhash_cluster_stream(
             by="__id",
         )
         write_epoch_overwrite(dedup.minhash_band_buckets(nb_base), epoch_id, art)
-        buckets = spark.read.parquet(art)
+        buckets = read_parquet(spark, art)
         nb = buckets.filter(F.col("__epoch") == int(epoch_id))
         # the candidate pair list has TWO consumers (endpoint serve + the
         # verify semi-join) — materialize the tiny list once so the band-

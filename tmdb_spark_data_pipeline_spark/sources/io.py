@@ -6,9 +6,10 @@ files" with manual partition-path construction (``analytics/kpis.py:198``,
 (``clean_transform.py:27-64``). Here:
 
 - reads always take an explicit schema when the format can't carry one (JSON),
-- a Parquet file's schema is inferred once per file and session confs
-  (``parquet_schema``): inference runs a Spark job over the footer, so later
-  reads of the unchanged file pass the remembered schema instead,
+- a local Parquet file's schema is inferred once per process for each file
+  version and set of session inference confs (``parquet_schema``): inference
+  runs a Spark job over the footer, so later reads of the unchanged file, in
+  any session, pass the remembered schema instead,
 - partition pruning is expressed as a filter on the partition column over the
   partitioned root (Catalyst's ``PruneFileSourcePartitions`` does the rest),
 - the marker protocol is kept (simple, idempotent, object-store friendly) and
