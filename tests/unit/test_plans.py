@@ -110,6 +110,35 @@ def test_registry_integrity():
         assert spec.oracle.strip().upper().startswith(("SELECT", "WITH", "--")), name
 
 
+# Queries that replay another query's result through a second code path (a
+# stream twin, an artifact round trip, a sibling operator) are gated by the
+# same oracle, so a twin cannot drift from the query it replays.
+_ORACLE_TWINS = (
+    ("events_hourly", "stream_hourly"),
+    ("events_sliding", "stream_sliding"),
+    (
+        "ngram_jaccard_neardups",
+        "minhash_neardups",
+        "stream_minhash_index_maintenance",
+        "minhash_artifact_roundtrip",
+    ),
+    ("similarity_topk_lsh", "similarity_topk_lsh_pruned"),
+    ("similarity_topk_ivf", "ivf_artifact_roundtrip", "ivf_artifact_incremental"),
+    ("similarity_topk_ivfpq", "ivfpq_artifact_roundtrip"),
+    ("asof_purchase_last_click", "asof_cogroup_last_click"),
+    ("stream_dedup_counts", "stream_dedup_watermarked"),
+    ("neardup_components", "stream_minhash_cluster_maintenance"),
+    ("cdc_last_state", "stream_cdc_last_state"),
+    ("stream_exactly_once_totals", "stream_pyds_jsonl_totals"),
+    ("unpivot_lineitem_measures", "unpivot_udtf_twin"),
+)
+
+
+@pytest.mark.parametrize("group", _ORACLE_TWINS, ids=lambda g: g[0])
+def test_twin_queries_share_one_oracle(group):
+    assert len({queries.REGISTRY[name].oracle for name in group}) == 1, group
+
+
 def test_salted_join_shuffles_on_key_plus_salt(spark):
     from tmdb_spark_data_pipeline_spark.operators import joins
 

@@ -74,3 +74,16 @@ def test_footer_read_failure_on_local_file_raises(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pq, "read_schema", unreadable)
     with pytest.raises(OSError, match="cannot read footer"):
         load_table(spark, str(tmp_path), "t")
+
+
+def test_parquet_schema_reads_ns_timestamps_in_a_session_without_the_conf(spark, tmp_path):
+    # Spark rejects a timestamp[ns] column unless nanosAsLong is set;
+    # parquet_schema sets it itself instead of relying on its caller
+    ts = pa.array([1_704_067_200_123_456_789], type=pa.timestamp("ns"))
+    path = str(tmp_path / "ev.parquet")
+    pq.write_table(pa.table({"id": [1], "ts": ts}), path)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    other = spark.newSession()
+    other.conf.unset(conf)
+    assert other.conf.get(conf, "false") == "false"
+    assert parquet_schema(other, path)["ts"].dataType.simpleString() == "bigint"

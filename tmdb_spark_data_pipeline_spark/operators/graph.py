@@ -13,7 +13,7 @@ counts every triangle exactly once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import free_local_checkpoint
@@ -128,48 +128,29 @@ def local_clustering(
     )
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    *,
-    u_col: str = "u",
-    v_col: str = "v",
-    max_iter: int = 50,
+def _peel(
+    sym: DataFrame,
+    strength: Column,
+    floor: int,
+    name: str,
+    measure: str,
+    max_iter: int,
 ) -> DataFrame:
-    """The k-CORE of an undirected simple graph (id-canonical edges, the
-    ``triangle_stats`` contract): iteratively peel every node of degree
-    < k until none remains — the standard community-density filter (a
-    node survives iff it has ≥ k surviving neighbors; the 3-core of a
-    co-purchase graph is its "always bought together" backbone).
-
-    Returns ``(node, core_deg)`` — surviving nodes with their degree
-    INSIDE the core. Peeling is the Pregel discipline of
-    ``dedup.connected_components``: each round is one symmetric-degree
-    aggregate + two anti-joins carrying (src, dst) longs only,
-    ``localCheckpoint`` truncates the iterative lineage, and the
-    per-round convergence ``count()`` is the documented one-scalar
-    exception to the no-driver-collect rule. Rounds are bounded by the
-    peel DEPTH (≤ degeneracy ≪ n); each removes every currently-light
-    node at once, so cascades collapse into few rounds. If the cascade
-    is DEEPER than ``max_iter`` (a long chain peels one layer per round)
-    the function raises rather than silently returning a non-core with
-    degree-<k nodes still present (ADVICE r6) — callers on pathological
-    graphs raise ``max_iter``; the result is always a true k-core."""
-    sym = (
-        edges.select(F.col(u_col).alias("src"), F.col(v_col).alias("dst"))
-        .unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
-        .localCheckpoint()
-    )
+    """The peel loop of ``kcore`` and ``s_core`` over a symmetric edge list
+    ``sym`` (src, dst, ...): each round drops every node whose ``strength``
+    aggregate over its ``src`` rows is below ``floor``, until none is.
+    Raises ``RuntimeError`` naming ``name`` and ``measure`` if ``max_iter``
+    rounds leave such nodes."""
     converged = False
     prev_cached = None
     prev_sym = sym
     prev_pinned = False
     pending_dead: list[DataFrame] = []
     for i in range(max_iter):
-        deg = sym.groupBy("src").agg(F.count("*").alias("__d"))
+        deg = sym.groupBy("src").agg(strength.alias("__d"))
         # three consumers of the tiny dead list (probe + both anti-join
         # sides) — materialize once, not three degree aggregates per round
-        dead = deg.filter(F.col("__d") < k).select("src").localCheckpoint()
+        dead = deg.filter(F.col("__d") < floor).select("src").localCheckpoint()
         if dead.isEmpty():
             free_local_checkpoint(dead)  # empty probe list, consumed by nothing
             converged = True
@@ -178,7 +159,9 @@ def kcore(
         sym = sym.join(dead, "src", "left_anti").join(
             dead.select(F.col("src").alias("dst")), "dst", "left_anti"
         )
-        # every-other-round truncation — see s_core / pagerank_fixed. Every
+        # every-other-round truncation: each eager localCheckpoint
+        # materializes the whole surviving edge list, and halving them saves
+        # ~1/3 of the loop wall (the pagerank_fixed measurement). Every
         # 6th round the persist() on top launders Catalyst's size estimate:
         # localCheckpoint INHERITS it, each anti-join round multiplies it,
         # and on a deep peel cascade the BigInt size arithmetic would
@@ -214,15 +197,51 @@ def kcore(
         # test_deep_peel_leaves_no_cache_entries.
         prev_cached.unpersist()
     if not converged and not (
-        sym.groupBy("src").agg(F.count("*").alias("__d"))
-        .filter(F.col("__d") < k)
+        sym.groupBy("src").agg(strength.alias("__d"))
+        .filter(F.col("__d") < floor)
         .isEmpty()
     ):
         raise RuntimeError(
-            f"kcore did not converge within max_iter={max_iter} rounds: "
-            f"degree-<{k} nodes remain (peel depth exceeds max_iter — "
+            f"{name} did not converge within max_iter={max_iter} rounds: "
+            f"{measure}-<{floor} nodes remain (peel depth exceeds max_iter — "
             "raise max_iter)"
         )
+    return sym
+
+
+def kcore(
+    edges: DataFrame,
+    k: int,
+    *,
+    u_col: str = "u",
+    v_col: str = "v",
+    max_iter: int = 50,
+) -> DataFrame:
+    """The k-CORE of an undirected simple graph (id-canonical edges, the
+    ``triangle_stats`` contract): iteratively peel every node of degree
+    < k until none remains — the standard community-density filter (a
+    node survives iff it has ≥ k surviving neighbors; the 3-core of a
+    co-purchase graph is its "always bought together" backbone).
+
+    Returns ``(node, core_deg)`` — surviving nodes with their degree
+    INSIDE the core. Peeling is the Pregel discipline of
+    ``dedup.connected_components``: each round is one symmetric-degree
+    aggregate + two anti-joins carrying (src, dst) longs only,
+    ``localCheckpoint`` truncates the iterative lineage, and the
+    per-round convergence ``count()`` is the documented one-scalar
+    exception to the no-driver-collect rule. Rounds are bounded by the
+    peel DEPTH (≤ degeneracy ≪ n); each removes every currently-light
+    node at once, so cascades collapse into few rounds. If the cascade
+    is DEEPER than ``max_iter`` (a long chain peels one layer per round)
+    the function raises rather than silently returning a non-core with
+    degree-<k nodes still present (ADVICE r6) — callers on pathological
+    graphs raise ``max_iter``; the result is always a true k-core."""
+    sym = (
+        edges.select(F.col(u_col).alias("src"), F.col(v_col).alias("dst"))
+        .unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
+        .localCheckpoint()
+    )
+    sym = _peel(sym, F.count("*"), k, "kcore", "degree", max_iter)
     return sym.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("core_deg")
     )
@@ -264,64 +283,7 @@ def s_core(
         )
         .localCheckpoint()
     )
-    converged = False
-    prev_cached = None
-    prev_sym = sym
-    prev_pinned = False
-    pending_dead: list[DataFrame] = []
-    for i in range(max_iter):
-        wd = sym.groupBy("src").agg(F.sum("w").alias("__d"))
-        # the dead set has three consumers (the convergence probe + both
-        # anti-join sides); materialize the tiny node list once instead of
-        # re-running the full-edge-list strength aggregate three times
-        dead = wd.filter(F.col("__d") < s).select("src").localCheckpoint()
-        if dead.isEmpty():
-            free_local_checkpoint(dead)  # empty probe list, consumed by nothing
-            converged = True
-            break
-        pending_dead.append(dead)
-        sym = sym.join(dead, "src", "left_anti").join(
-            dead.select(F.col("src").alias("dst")), "dst", "left_anti"
-        )
-        # truncate every OTHER round (the pagerank_fixed measurement): two
-        # rounds of broadcast-anti-join lineage is shallow and cheap to
-        # recompute, while each eager localCheckpoint materializes the full
-        # surviving edge list — halving them saves ~1/3 of the loop wall on
-        # a million-edge graph. Every 6th round a persist() launders the
-        # inherited size estimate (the connected_components lesson,
-        # dedup.py); shallow peels never pay it.
-        if i % 2 == 1:
-            sym = sym.localCheckpoint()
-            # free the superseded edge-list checkpoint + consumed dead
-            # lists deterministically (round-12 hygiene — see kcore);
-            # laundering rounds exempt while live, freed when superseded
-            if not prev_pinned:
-                free_local_checkpoint(prev_sym)
-            for d in pending_dead:
-                free_local_checkpoint(d)
-            pending_dead.clear()
-            prev_sym = sym
-            prev_pinned = i % 6 == 5
-            if i % 6 == 5:
-                if prev_cached is not None:
-                    prev_cached.unpersist()
-                    free_local_checkpoint(prev_cached)  # 6 rounds stale
-                sym = sym.persist()
-                prev_cached = sym
-    if prev_cached is not None:
-        # drop the last laundering cache before returning (ADVICE r10) —
-        # sym stays backed by its localCheckpoint RDD.
-        prev_cached.unpersist()
-    if not converged and not (
-        sym.groupBy("src").agg(F.sum("w").alias("__d"))
-        .filter(F.col("__d") < s)
-        .isEmpty()
-    ):
-        raise RuntimeError(
-            f"s_core did not converge within max_iter={max_iter} rounds: "
-            f"strength-<{s} nodes remain (peel depth exceeds max_iter — "
-            "raise max_iter)"
-        )
+    sym = _peel(sym, F.sum("w"), s, "s_core", "strength", max_iter)
     return sym.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("core_deg"),
         F.sum("w").cast("long").alias("core_weight"),

@@ -2085,44 +2085,19 @@ def write_ivfpq_artifact(
         # sentinel default means callers never restate what the artifact
         # already knows (ADVICE r11)
         m, dim = persisted_m, persisted_dim
-        cells = assign_nearest(emb, coarse, id_col=id_col, vec_col=vec_col).select(
-            F.col(id_col), F.col("cid").alias("cell_id")
-        ).localCheckpoint()
-        packed = (
-            pq_encode(emb, cb, id_col=id_col, vec_col=vec_col, m=m, dim=dim)
-            .groupBy(id_col)
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "cid"))),
-                    lambda s: s["cid"],
-                ).alias("codes")
-            )
-            .join(cells, id_col)
+    else:
+        m = 32 if m is None else m
+        dim = 64 if dim is None else dim
+        # four write actions consume these; the trainers return
+        # localCheckpoint-backed tables (coarse_k rows / m·ksub rows) and the
+        # assignment gets its own checkpoint (two consumers) so neither
+        # training nor the assign pass re-executes per sink
+        coarse = kmeans_centroids(
+            emb, id_col=id_col, vec_col=vec_col, k=coarse_k, iters=coarse_iters, dim=dim
         )
-        _parallel_writes(
-            lambda: packed.repartition("cell_id")
-            .write.mode("append")
-            .partitionBy("cell_id")
-            .parquet(f"{path}/codes"),
-            lambda: emb.join(cells, id_col)
-            .repartition("cell_id")
-            .write.mode("append")
-            .partitionBy("cell_id")
-            .parquet(f"{path}/vectors"),
+        cb = pq_train_codebooks(
+            emb, id_col=id_col, vec_col=vec_col, m=m, dim=dim, ksub=ksub, iters=iters
         )
-        return
-    m = 32 if m is None else m
-    dim = 64 if dim is None else dim
-    # four write actions consume these; the trainers return localCheckpoint-
-    # backed tables (coarse_k rows / m·ksub rows) and the assignment gets its
-    # own checkpoint (two consumers) so neither training nor the assign pass
-    # re-executes per sink
-    coarse = kmeans_centroids(
-        emb, id_col=id_col, vec_col=vec_col, k=coarse_k, iters=coarse_iters, dim=dim
-    )
-    cb = pq_train_codebooks(
-        emb, id_col=id_col, vec_col=vec_col, m=m, dim=dim, ksub=ksub, iters=iters
-    )
     cells = assign_nearest(emb, coarse, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col), F.col("cid").alias("cell_id")
     ).localCheckpoint()
@@ -2140,20 +2115,27 @@ def write_ivfpq_artifact(
     # repartition by cell before the partitioned sinks: one writer task per
     # cell region -> one file per cell per build instead of
     # (shuffle partitions x cells) small files — the layout a 100 TB index
-    # actually wants (and ~2x faster to land here). All four sinks read
+    # actually wants (and ~2x faster to land here). All sinks read
     # checkpoint-backed inputs, so they run as overlapped jobs (guide §2.6)
-    _parallel_writes(
-        lambda: coarse.write.mode("overwrite").parquet(f"{path}/centroids"),
-        lambda: cb.write.mode("overwrite").parquet(f"{path}/codebooks"),
+    sink_mode = "append" if mode == "append" else "overwrite"
+    cell_sinks = (
         lambda: packed.repartition("cell_id")
-        .write.mode("overwrite")
+        .write.mode(sink_mode)
         .partitionBy("cell_id")
         .parquet(f"{path}/codes"),
         lambda: emb.join(cells, id_col)
         .repartition("cell_id")
-        .write.mode("overwrite")
+        .write.mode(sink_mode)
         .partitionBy("cell_id")
         .parquet(f"{path}/vectors"),
+    )
+    if mode == "append":
+        _parallel_writes(*cell_sinks)
+        return
+    _parallel_writes(
+        lambda: coarse.write.mode("overwrite").parquet(f"{path}/centroids"),
+        lambda: cb.write.mode("overwrite").parquet(f"{path}/codebooks"),
+        *cell_sinks,
     )
 
 

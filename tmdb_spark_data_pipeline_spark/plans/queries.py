@@ -920,9 +920,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return setops.except_distinct(a, b)
 
 
-@query(
-    "asof_purchase_last_click",
-    oracle="""
+_ASOF_LAST_CLICK_ORACLE = """
     SELECT p_event_id, user_id, c_event_id, c_value FROM (
       SELECT p.event_id AS p_event_id, p.user_id AS user_id,
              c.event_id AS c_event_id, c.value AS c_value,
@@ -932,8 +930,10 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
       LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         ON c.user_id = p.user_id AND c.ts <= p.ts
     ) WHERE rn = 1
-    """,
-)
+    """
+
+
+@query("asof_purchase_last_click", oracle=_ASOF_LAST_CLICK_ORACLE)
 def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (backward): for each purchase, the same user's most recent
     click at-or-before it. Spark lacks a native as-of join; composed from a
@@ -984,9 +984,10 @@ def word_counts_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rank.top_k(counts, "n", order="desc", k=20, tiebreak=("word",))
 
 
-@query(
-    "unigram_viterbi_stats",
-    oracle="""
+# The unigram tokenizer's frequency-initialized inventory: per-language
+# word counts `lcnt`, word types `wcnt`, every character + the 40 most
+# frequent 2..3-char substrings with round(-ln(p)·1e6) costs, as the map `vm`.
+_UNIGRAM_COSTS_CTES = """
     WITH RECURSIVE w0 AS (
       SELECT lang, word FROM (
         SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents)
@@ -1022,25 +1023,40 @@ def word_counts_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM vocab CROSS JOIN tot),
     vm AS MATERIALIZED (
       SELECT map(list(piece ORDER BY piece), list(c ORDER BY piece)) AS m
-      FROM costs),
-    dp AS (
+      FROM costs)"""
+
+
+def _viterbi_dp_ctes(n: str, vm: str) -> str:
+    """Min-cost Viterbi segmentation of every word type in `wcnt` under
+    the piece-cost map in CTE ``vm``: the recursive DP `dp<n>` and its final
+    cell per word, `fin<n>` (sc = path cost, np = pieces)."""
+    return f"""
+    dp{n} AS (
       SELECT word, len(word) AS wl, 0 AS i,
-             [{'c': CAST(0 AS BIGINT), 'n': 0}] AS v
+             [{{'c': CAST(0 AS BIGINT), 'n': 0}}] AS v
       FROM wcnt
       UNION ALL
       SELECT word, wl, i + 1,
              list_append(v, (
                 list_reduce(
                   list_transform(generate_series(greatest(1, i - 1), i + 1),
-                    j -> {'c': v[j].c
+                    j -> {{'c': v[j].c
                                + coalesce(map_extract(m, substr(word, j, i + 2 - j))[1],
                                           CAST(1000000000000000 AS BIGINT)),
-                          'n': v[j].n + 1}),
+                          'n': v[j].n + 1}}),
                   (a, b) -> CASE WHEN b.c < a.c THEN b ELSE a END)))
-      FROM dp CROSS JOIN vm
+      FROM dp{n} CROSS JOIN {vm}
       WHERE i < wl),
-    fin AS MATERIALIZED (
-      SELECT word, v[wl + 1].c AS sc, v[wl + 1].n AS np FROM dp WHERE i = wl)
+    fin{n} AS MATERIALIZED (
+      SELECT word, v[wl + 1].c AS sc, v[wl + 1].n AS np FROM dp{n} WHERE i = wl)"""
+
+
+@query(
+    "unigram_viterbi_stats",
+    oracle=_UNIGRAM_COSTS_CTES
+    + ","
+    + _viterbi_dp_ctes("", "vm")
+    + """
     SELECT l.lang,
            CAST(sum(l.lc) AS BIGINT) AS n_tokens,
            count(*) AS n_types,
@@ -1101,43 +1117,8 @@ def unigram_viterbi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unigram_em_round",
-    oracle="""
-    WITH RECURSIVE w0 AS (
-      SELECT lang, word FROM (
-        SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word <> ''),
-    lcnt AS MATERIALIZED (SELECT lang, word, count(*) AS lc FROM w0 GROUP BY 1, 2),
-    wcnt AS MATERIALIZED (SELECT word, sum(lc) AS cnt FROM lcnt GROUP BY 1),
-    sub AS (
-      SELECT piece, sum(cnt) AS total FROM (
-        SELECT unnest(list_transform(generate_series(1, len(word)),
-                                     i -> substr(word, i, 1))) AS piece, cnt
-        FROM wcnt
-        UNION ALL
-        SELECT unnest(list_transform(generate_series(1, len(word) - 1),
-                                     i -> substr(word, i, 2))), cnt
-        FROM wcnt
-        UNION ALL
-        SELECT unnest(list_transform(generate_series(1, len(word) - 2),
-                                     i -> substr(word, i, 3))), cnt
-        FROM wcnt)
-      GROUP BY 1),
-    vocab AS MATERIALIZED (
-      SELECT piece, total FROM sub WHERE len(piece) = 1
-      UNION ALL
-      SELECT piece, total FROM (
-        SELECT piece, total,
-               row_number() OVER (ORDER BY total DESC, piece ASC) AS rn
-        FROM sub WHERE len(piece) > 1) WHERE rn <= 40),
-    tot AS (SELECT sum(total) AS T FROM vocab),
-    costs AS MATERIALIZED (
-      SELECT piece,
-             CAST(round(-ln(CAST(total AS DOUBLE) / CAST(T AS DOUBLE))
-                        * 1000000, 0) AS BIGINT) AS c
-      FROM vocab CROSS JOIN tot),
-    vm AS MATERIALIZED (
-      SELECT map(list(piece ORDER BY piece), list(c ORDER BY piece)) AS m
-      FROM costs),
+    oracle=_UNIGRAM_COSTS_CTES
+    + """,
     dp1 AS (
       SELECT word, len(word) AS wl, 0 AS i,
              [{'c': CAST(0 AS BIGINT), 'n': 0, 'b': 0}] AS v
@@ -1180,25 +1161,9 @@ def unigram_viterbi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM u0 CROSS JOIN t2),
     vm2 AS MATERIALIZED (
       SELECT map(list(piece ORDER BY piece), list(c ORDER BY piece)) AS m
-      FROM costs2),
-    dp2 AS (
-      SELECT word, len(word) AS wl, 0 AS i,
-             [{'c': CAST(0 AS BIGINT), 'n': 0}] AS v
-      FROM wcnt
-      UNION ALL
-      SELECT word, wl, i + 1,
-             list_append(v, (
-                list_reduce(
-                  list_transform(generate_series(greatest(1, i - 1), i + 1),
-                    j -> {'c': v[j].c
-                               + coalesce(map_extract(m, substr(word, j, i + 2 - j))[1],
-                                          CAST(1000000000000000 AS BIGINT)),
-                          'n': v[j].n + 1}),
-                  (a, b) -> CASE WHEN b.c < a.c THEN b ELSE a END)))
-      FROM dp2 CROSS JOIN vm2
-      WHERE i < wl),
-    fin2 AS MATERIALIZED (
-      SELECT word, v[wl + 1].c AS sc, v[wl + 1].n AS np FROM dp2 WHERE i = wl)
+      FROM costs2),"""
+    + _viterbi_dp_ctes("2", "vm2")
+    + """
     SELECT l.lang,
            CAST(sum(l.lc) AS BIGINT) AS n_tokens,
            CAST(sum(f1.np * l.lc) AS BIGINT) AS p1_pieces,
@@ -2130,11 +2095,8 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", "lang", text.language_id("text").alias("lang_pred"))
 
 
-@query(
-    "similarity_topk",
-    oracle="""
-    -- cosine in explicit double precision (list_cosine_similarity is
-    -- float32, which would flip rounded digits vs Spark's double math)
+# Exact cosine top-10 of queries vec_id < 20 over every other vector.
+_EXACT_COSINE_TOP10_SQL = """
     SELECT query_id, neighbor_id, round(cos, 5) + 0.0 AS cos FROM (
       SELECT query_id, neighbor_id, cos,
              row_number() OVER (PARTITION BY query_id
@@ -2149,7 +2111,15 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN embeddings c ON c.vec_id <> q.vec_id
       )
     ) WHERE rn <= 10
-    """,
+    """
+
+
+@query(
+    "similarity_topk",
+    oracle="""
+    -- cosine in explicit double precision (list_cosine_similarity is
+    -- float32, which would flip rounded digits vs Spark's double math)"""
+    + _EXACT_COSINE_TOP10_SQL,
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for 20 query vectors: broadcast queries ×
@@ -2408,12 +2378,12 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.extract_features(assets).select("asset_id", "n_bytes", "digest")
 
 
-@query(
-    "stream_dedup_counts",
-    oracle="""
+_STREAM_DEDUP_ORACLE = """
     SELECT event_type, count(*) AS n FROM events GROUP BY event_type
-    """,
-)
+    """
+
+
+@query("stream_dedup_counts", oracle=_STREAM_DEDUP_ORACLE)
 def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once dedup: the source is replayed TWICE (two file
     streams unioned — every event arrives duplicated), then
@@ -2754,15 +2724,22 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "neardup_components",
-    oracle=r"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
+_SHINGLE_DOCS_CTE = r"""
+    docs AS (
+      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents)"""
+
+
+def _jaccard_reach_ctes(src: str) -> str:
+    """Exact shingle-Jaccard near-dup closure over ``src``, a (doc_id, w)
+    CTE of whitespace-split words: distinct word 3-shingles → pairs with
+    Jaccard ≥ 0.5 → undirected ``edges`` → ``reach``, their transitive
+    closure (needs WITH RECURSIVE). The pair set of
+    ``dedup.ngram_jaccard_pairs(n=3, min_jaccard=0.5)``."""
+    return f"""
     sh AS (
       SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
                                            for i in range(1, len(w) - 1)])) AS s
-      FROM docs WHERE len(w) >= 3),
+      FROM {src} WHERE len(w) >= 3),
     sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
     p0 AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
@@ -2774,10 +2751,44 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges AS (SELECT id_a AS s, id_b AS d FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
     reach AS (SELECT s, d FROM edges
-              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s)
+              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s)"""
+
+
+# Each clustered doc's canonical (minimum-id) label, from ``reach``.
+_NEARDUP_LABELS_CTE = """
+    labels AS (
+      SELECT s AS doc_id, least(s, min(d)) AS component_id
+      FROM reach GROUP BY s)"""
+
+_NEARDUP_REACH_CTES = _SHINGLE_DOCS_CTE + "," + _jaccard_reach_ctes("docs")
+_NEARDUP_LABELS_CTES = _NEARDUP_REACH_CTES + "," + _NEARDUP_LABELS_CTE
+
+_NEARDUP_COMPONENTS_ORACLE = (
+    "WITH RECURSIVE "
+    + _NEARDUP_REACH_CTES
+    + """
     SELECT s AS doc_id, CAST(least(s, min(d)) AS BIGINT) AS component_id
     FROM reach GROUP BY s
-    """,
+    """
+)
+
+# text.quality_score per doc as ``q`` (length gate × stopword/diversity mix).
+_QUALITY_CTE = r"""
+    q AS (
+      SELECT doc_id,
+             round(
+               (CASE WHEN len(tok) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.0 END) *
+               (0.5 * least(len(list_filter(tok, x -> list_contains(
+                        ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
+                      / len(tok) * 5, 1.0)
+                + 0.5 * len(list_distinct(tok)) / len(tok)),
+               6) AS quality
+      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tok FROM documents))"""
+
+
+@query(
+    "neardup_components",
+    oracle=_NEARDUP_COMPONENTS_ORACLE,
 )
 def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster assignment: exact Jaccard pairs (same blocking as
@@ -4138,15 +4149,24 @@ def important_brand_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _sql_dot(x: str, y: str) -> str:
+    """DuckDB dot product of two float lists, accumulated in DOUBLE."""
+    return (
+        f"list_sum(list_transform(list_zip({x}, {y}),"
+        " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
+    )
+
+
+def _sql_sqd(x: str, y: str) -> str:
+    """DuckDB squared L2 distance of two float lists, in DOUBLE."""
+    return (
+        f"list_sum(list_transform(list_zip({x}, {y}),"
+        " p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
+        " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
+    )
+
+
 def _ivf_oracle() -> str:
-    dot_q_c = (
-        "list_sum(list_transform(list_zip(q.embedding, cent.cvec),"
-        " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-    dot_b_c = (
-        "list_sum(list_transform(list_zip(b.embedding, cent.cvec),"
-        " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
     return f"""
     WITH b AS (
       SELECT vec_id, embedding,
@@ -4163,7 +4183,7 @@ def _ivf_oracle() -> str:
                                   ORDER BY acos DESC, cell_id ASC) AS rn
         FROM (
           SELECT b.vec_id, cent.cent_id AS cell_id,
-                 {dot_b_c} / (b.nrm * cent.cnrm) AS acos
+                 {_sql_dot('b.embedding', 'cent.cvec')} / (b.nrm * cent.cnrm) AS acos
           FROM b CROSS JOIN cent)
       ) WHERE rn = 1),
     probes AS (
@@ -4173,7 +4193,7 @@ def _ivf_oracle() -> str:
                                   ORDER BY pcos DESC, cell_id ASC) AS rn
         FROM (
           SELECT q.vec_id AS query_id, cent.cent_id AS cell_id,
-                 {dot_q_c} / (q.nrm * cent.cnrm) AS pcos
+                 {_sql_dot('q.embedding', 'cent.cvec')} / (q.nrm * cent.cnrm) AS pcos
           FROM (SELECT * FROM b WHERE vec_id < 20) q CROSS JOIN cent)
       ) WHERE rn <= 3),
     cand AS (
@@ -4210,21 +4230,17 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "neighbor_id", (F.round("cos", 5) + F.lit(0.0)).alias("cos"))
 
 
-def _ivf_recall_oracle() -> str:
-    def _dotd(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({x}, {y}),"
-            " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        )
-
+def _ivf_recall_oracle(cent: str, max_nprobe: int) -> str:
+    """Replay of ``similarity.ivf_recall_curve`` (k=10, queries vec_id < 20)
+    over the cells ``cent`` (cent_id, cvec, cnrm), a CTE chain that may read
+    the normed corpus ``b``: recall@10 and candidates per nprobe 1..max."""
     return f"""
     WITH b AS (
       SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(embedding,
                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
       FROM embeddings),
-    cent AS (SELECT vec_id AS cent_id, embedding AS cvec, nrm AS cnrm
-             FROM b WHERE vec_id % 25 = 0),
+    {cent},
     assign AS (
       SELECT vec_id, cell_id FROM (
         SELECT vec_id, cell_id,
@@ -4232,7 +4248,7 @@ def _ivf_recall_oracle() -> str:
                                   ORDER BY acos DESC, cell_id ASC) AS rn
         FROM (
           SELECT b.vec_id, cent.cent_id AS cell_id,
-                 {_dotd('b.embedding', 'cent.cvec')} / (b.nrm * cent.cnrm) AS acos
+                 {_sql_dot('b.embedding', 'cent.cvec')} / (b.nrm * cent.cnrm) AS acos
           FROM b CROSS JOIN cent)
       ) WHERE rn = 1),
     probes AS (
@@ -4242,12 +4258,12 @@ def _ivf_recall_oracle() -> str:
                                   ORDER BY pcos DESC, cell_id ASC) AS rn
         FROM (
           SELECT q.vec_id AS query_id, cent.cent_id AS cell_id,
-                 {_dotd('q.embedding', 'cent.cvec')} / (q.nrm * cent.cnrm) AS pcos
+                 {_sql_dot('q.embedding', 'cent.cvec')} / (q.nrm * cent.cnrm) AS pcos
           FROM (SELECT * FROM b WHERE vec_id < 20) q CROSS JOIN cent)
-      ) WHERE rn <= 3),
+      ) WHERE rn <= {max_nprobe}),
     sc AS (
       SELECT c.query_id, c.neighbor_id, c.pr,
-             {_dotd('qb.embedding', 'nb.embedding')} / (qb.nrm * nb.nrm) AS cos
+             {_sql_dot('qb.embedding', 'nb.embedding')} / (qb.nrm * nb.nrm) AS cos
       FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id, p.pr
         FROM probes p JOIN assign a ON a.cell_id = p.cell_id
@@ -4255,7 +4271,7 @@ def _ivf_recall_oracle() -> str:
       JOIN b qb ON qb.vec_id = c.query_id
       JOIN b nb ON nb.vec_id = c.neighbor_id),
     lev AS (SELECT query_id, neighbor_id, cos,
-                   CAST(unnest(generate_series(pr, 3)) AS INTEGER) AS nprobe
+                   CAST(unnest(generate_series(pr, {max_nprobe})) AS INTEGER) AS nprobe
             FROM sc),
     cand_per AS (SELECT nprobe, count(*) AS n_cand FROM lev GROUP BY 1),
     topk AS (SELECT nprobe, query_id, neighbor_id FROM (
@@ -4269,7 +4285,7 @@ def _ivf_recall_oracle() -> str:
                                   ORDER BY cos DESC, neighbor_id ASC) AS rn
         FROM (
           SELECT q.vec_id AS query_id, nb.vec_id AS neighbor_id,
-                 {_dotd('q.embedding', 'nb.embedding')} / (q.nrm * nb.nrm) AS cos
+                 {_sql_dot('q.embedding', 'nb.embedding')} / (q.nrm * nb.nrm) AS cos
           FROM (SELECT * FROM b WHERE vec_id < 20) q CROSS JOIN b nb
           WHERE nb.vec_id <> q.vec_id)
       ) WHERE rn <= 10),
@@ -4288,7 +4304,14 @@ def _ivf_recall_oracle() -> str:
     """
 
 
-@query("ivf_recall_audit", oracle=_ivf_recall_oracle())
+@query(
+    "ivf_recall_audit",
+    oracle=_ivf_recall_oracle(
+        """cent AS (SELECT vec_id AS cent_id, embedding AS cvec, nrm AS cnrm
+             FROM b WHERE vec_id % 25 = 0)""",
+        3,
+    ),
+)
 def ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cost-vs-recall certificate (``similarity.ivf_recall_curve``):
     recall@10 of the IVF search vs the exact brute-force twin for nprobe
@@ -4306,118 +4329,31 @@ def ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_recall_trained_oracle() -> str:
-    def _dotd(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({x}, {y}),"
-            " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        )
-
-    def _sqd(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({x}, {y}),"
-            " p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-            " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-        )
-
-    return f"""
-    WITH b AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM embeddings),
-    c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM b ORDER BY vec_id LIMIT 25),
-    a1 AS (
+    lloyd = ""
+    for i in (1, 2):
+        lloyd += f"""
+    a{i} AS (
       SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid, {_sqd('b.embedding', 'c.cvec')} AS d2
-        FROM b CROSS JOIN c0 c)
+        SELECT b.vec_id, c.cid, {_sql_sqd('b.embedding', 'c.cvec')} AS d2
+        FROM b CROSS JOIN c{i - 1} c)
       QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
-    ex1 AS (
-      SELECT a1.cid, unnest(b.embedding) AS val,
+    ex{i} AS (
+      SELECT a{i}.cid, unnest(b.embedding) AS val,
              generate_subscripts(b.embedding, 1) AS pos
-      FROM b JOIN a1 USING (vec_id)),
-    mu1 AS (SELECT cid, pos,
+      FROM b JOIN a{i} USING (vec_id)),
+    mu{i} AS (SELECT cid, pos,
                    CAST(sum(CAST(val AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-            FROM ex1 GROUP BY cid, pos),
-    c1 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM mu1 GROUP BY cid),
-    a2 AS (
-      SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid, {_sqd('b.embedding', 'c.cvec')} AS d2
-        FROM b CROSS JOIN c1 c)
-      QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
-    ex2 AS (
-      SELECT a2.cid, unnest(b.embedding) AS val,
-             generate_subscripts(b.embedding, 1) AS pos
-      FROM b JOIN a2 USING (vec_id)),
-    mu2 AS (SELECT cid, pos,
-                   CAST(sum(CAST(val AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-            FROM ex2 GROUP BY cid, pos),
-    c2 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM mu2 GROUP BY cid),
+            FROM ex{i} GROUP BY cid, pos),
+    c{i} AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM mu{i} GROUP BY cid),"""
+    return _ivf_recall_oracle(
+        f"""c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM b ORDER BY vec_id LIMIT 25),{lloyd}
     cent AS (
       SELECT cid AS cent_id, cvec,
              sqrt(list_sum(list_transform(cvec,
                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS cnrm
-      FROM c2),
-    assign AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY acos DESC, cell_id ASC) AS rn
-        FROM (
-          SELECT b.vec_id, cent.cent_id AS cell_id,
-                 {_dotd('b.embedding', 'cent.cvec')} / (b.nrm * cent.cnrm) AS acos
-          FROM b CROSS JOIN cent)
-      ) WHERE rn = 1),
-    probes AS (
-      SELECT query_id, cell_id, rn AS pr FROM (
-        SELECT query_id, cell_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY pcos DESC, cell_id ASC) AS rn
-        FROM (
-          SELECT q.vec_id AS query_id, cent.cent_id AS cell_id,
-                 {_dotd('q.embedding', 'cent.cvec')} / (q.nrm * cent.cnrm) AS pcos
-          FROM (SELECT * FROM b WHERE vec_id < 20) q CROSS JOIN cent)
-      ) WHERE rn <= 8),
-    sc AS (
-      SELECT c.query_id, c.neighbor_id, c.pr,
-             {_dotd('qb.embedding', 'nb.embedding')} / (qb.nrm * nb.nrm) AS cos
-      FROM (
-        SELECT p.query_id, a.vec_id AS neighbor_id, p.pr
-        FROM probes p JOIN assign a ON a.cell_id = p.cell_id
-        WHERE a.vec_id <> p.query_id) c
-      JOIN b qb ON qb.vec_id = c.query_id
-      JOIN b nb ON nb.vec_id = c.neighbor_id),
-    lev AS (SELECT query_id, neighbor_id, cos,
-                   CAST(unnest(generate_series(pr, 8)) AS INTEGER) AS nprobe
-            FROM sc),
-    cand_per AS (SELECT nprobe, count(*) AS n_cand FROM lev GROUP BY 1),
-    topk AS (SELECT nprobe, query_id, neighbor_id FROM (
-        SELECT nprobe, query_id, neighbor_id,
-               row_number() OVER (PARTITION BY nprobe, query_id
-                                  ORDER BY cos DESC, neighbor_id ASC) AS rn
-        FROM lev) WHERE rn <= 10),
-    exact AS (SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id ASC) AS rn
-        FROM (
-          SELECT q.vec_id AS query_id, nb.vec_id AS neighbor_id,
-                 {_dotd('q.embedding', 'nb.embedding')} / (q.nrm * nb.nrm) AS cos
-          FROM (SELECT * FROM b WHERE vec_id < 20) q CROSS JOIN b nb
-          WHERE nb.vec_id <> q.vec_id)
-      ) WHERE rn <= 10),
-    hits_per AS (SELECT t.nprobe, count(*) AS hits
-                 FROM topk t JOIN exact e
-                   ON e.query_id = t.query_id AND e.neighbor_id = t.neighbor_id
-                 GROUP BY 1),
-    nq AS (SELECT count(DISTINCT vec_id) AS n_queries FROM b WHERE vec_id < 20)
-    SELECT cp.nprobe,
-           CAST(nq.n_queries AS BIGINT) AS n_queries,
-           CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-           round(CAST(coalesce(h.hits, 0) AS DOUBLE) / (10 * nq.n_queries), 6)
-             AS recall_at_k,
-           round(CAST(cp.n_cand AS DOUBLE) / nq.n_queries, 2) AS avg_candidates
-    FROM cand_per cp LEFT JOIN hits_per h ON h.nprobe = cp.nprobe CROSS JOIN nq
-    """
+      FROM c2)""",
+        8,
+    )
 
 
 @query("ivf_recall_trained", oracle=_ivf_recall_trained_oracle())
@@ -4525,13 +4461,6 @@ def _pq_train_ctes(src: str = "b", lead: str = "", train_pred: str | None = None
     ``write_ivfpq_artifact(mode="append")``."""
     dsub = _PQ_DIM // _PQ_M
 
-    def _sqd(x: str, y: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({x}, {y}),"
-            " p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-            " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-        )
-
     tsv = "svt" if train_pred else "sv"
     svt = (
         f""",
@@ -4546,7 +4475,7 @@ def _pq_train_ctes(src: str = "b", lead: str = "", train_pred: str | None = None
         it += f"""
     a{i} AS (
       SELECT vec_id, sub, cid FROM (
-        SELECT sv.vec_id, sv.sub, c.cid, {_sqd('sv.subvec', 'c.cvec')} AS d2
+        SELECT sv.vec_id, sv.sub, c.cid, {_sql_sqd('sv.subvec', 'c.cvec')} AS d2
         FROM {tsv} sv JOIN {prev} c USING (sub))
       QUALIFY row_number() OVER (PARTITION BY vec_id, sub
                                  ORDER BY d2 ASC, cid ASC) = 1),
@@ -4574,18 +4503,10 @@ def _pq_train_ctes(src: str = "b", lead: str = "", train_pred: str | None = None
            FROM sv JOIN ids0 USING (vec_id)),{it}
     enc AS MATERIALIZED (
       SELECT vec_id, sub, cid, d2 FROM (
-        SELECT sv.vec_id, sv.sub, c.cid, {_sqd('sv.subvec', 'c.cvec')} AS d2
+        SELECT sv.vec_id, sv.sub, c.cid, {_sql_sqd('sv.subvec', 'c.cvec')} AS d2
         FROM sv JOIN c2 c USING (sub))
       QUALIFY row_number() OVER (PARTITION BY vec_id, sub
                                  ORDER BY d2 ASC, cid ASC) = 1)"""
-
-
-def _pq_sqd(x: str, y: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({x}, {y}),"
-        " p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-        " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-    )
 
 
 @query(
@@ -4640,7 +4561,7 @@ def pq_codebook_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id FROM b WHERE vec_id < 20),
     lut AS MATERIALIZED (
       SELECT sv.vec_id AS query_id, sv.sub, c.cid,
-             CAST(round({_pq_sqd('sv.subvec', 'c.cvec')}, 12)
+             CAST(round({_sql_sqd('sv.subvec', 'c.cvec')}, 12)
                   AS DECIMAL(30,12)) AS ld
       FROM sv JOIN c2 c USING (sub) WHERE sv.vec_id < 20),
     adc AS MATERIALIZED (
@@ -4657,7 +4578,7 @@ def pq_codebook_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT query_id, neighbor_id FROM (
         SELECT r.query_id, r.neighbor_id,
                row_number() OVER (PARTITION BY r.query_id
-                   ORDER BY {_pq_sqd('qb.embedding', 'nb.embedding')} ASC,
+                   ORDER BY {_sql_sqd('qb.embedding', 'nb.embedding')} ASC,
                             r.neighbor_id ASC) AS rn2
         FROM rk r
         JOIN b qb ON qb.vec_id = r.query_id
@@ -4668,7 +4589,7 @@ def pq_codebook_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT query_id, neighbor_id FROM (
         SELECT qb.vec_id AS query_id, nb.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY qb.vec_id
-                   ORDER BY {_pq_sqd('qb.embedding', 'nb.embedding')} ASC,
+                   ORDER BY {_sql_sqd('qb.embedding', 'nb.embedding')} ASC,
                             nb.vec_id ASC) AS rn
         FROM (SELECT * FROM b WHERE vec_id < 20) qb CROSS JOIN b nb
         WHERE nb.vec_id <> qb.vec_id)
@@ -4732,7 +4653,7 @@ def _ivfpq_coarse_ctes(train_pred: str | None = None) -> str:
         it += f""",
     ga{i} AS (
       SELECT vec_id, cid FROM (
-        SELECT b.vec_id, g.cid, {_pq_sqd('b.embedding', 'g.cvec')} AS d2
+        SELECT b.vec_id, g.cid, {_sql_sqd('b.embedding', 'g.cvec')} AS d2
         FROM {tb} b CROSS JOIN {prev} g)
       QUALIFY row_number() OVER (PARTITION BY vec_id
                                  ORDER BY d2 ASC, cid ASC) = 1),
@@ -4751,44 +4672,27 @@ def _ivfpq_coarse_ctes(train_pred: str | None = None) -> str:
     g0 AS (SELECT vec_id AS cid, embedding AS cvec FROM {tb} ORDER BY vec_id LIMIT 25){it}"""
 
 
-def _ivfpq_oracle(train_pred: str | None = None) -> str:
-    """Full IVF-PQ serve replay. ``train_pred`` restricts BOTH trainings
-    (coarse + PQ) to a vec_id slice while encoding, cell assignment,
-    probing, ADC, refine, and the exact leg still cover the full corpus —
-    the frozen-quantizer append lifecycle of
-    ``write_ivfpq_artifact(mode=\"append\")``."""
-    return (
-        _pq_train_ctes(train_pred=train_pred)
-        + _ivfpq_coarse_ctes(train_pred=train_pred)
-        + f""",
+# The IVF-PQ serve legs shared by the plain and residual oracles: each
+# vector's trained coarse cell, each query's 8 nearest cells, and the
+# ADC top-150 → exact re-rank → top-10 with an inline exact-hit flag.
+_IVFPQ_CELLS_CTE = f"""
     cells AS MATERIALIZED (
       SELECT vec_id AS neighbor_id, cid AS cell FROM (
-        SELECT b.vec_id, g.cid, {_pq_sqd('b.embedding', 'g.cvec')} AS d2
+        SELECT b.vec_id, g.cid, {_sql_sqd('b.embedding', 'g.cvec')} AS d2
         FROM b CROSS JOIN g2 g)
       QUALIFY row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY d2 ASC, cid ASC) = 1),
+                                 ORDER BY d2 ASC, cid ASC) = 1)"""
+
+_IVFPQ_PROBES_CTE = f"""
     probes AS (
       SELECT query_id, cell FROM (
         SELECT qb.vec_id AS query_id, g.cid AS cell,
-               {_pq_sqd('qb.embedding', 'g.cvec')} AS pd
+               {_sql_sqd('qb.embedding', 'g.cvec')} AS pd
         FROM (SELECT * FROM b WHERE vec_id < 20) qb CROSS JOIN g2 g)
       QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY pd ASC, cell ASC) <= 8),
-    cand AS MATERIALIZED (
-      SELECT p.query_id, c.neighbor_id
-      FROM probes p JOIN cells c USING (cell)
-      WHERE c.neighbor_id <> p.query_id),
-    lut AS MATERIALIZED (
-      SELECT sv.vec_id AS query_id, sv.sub, c.cid,
-             CAST(round({_pq_sqd('sv.subvec', 'c.cvec')}, 12)
-                  AS DECIMAL(30,12)) AS ld
-      FROM sv JOIN c2 c USING (sub) WHERE sv.vec_id < 20),
-    adcq AS MATERIALIZED (
-      SELECT cd.query_id, cd.neighbor_id, sum(l.ld) AS adc
-      FROM cand cd
-      JOIN enc e ON e.vec_id = cd.neighbor_id
-      JOIN lut l ON l.query_id = cd.query_id AND l.sub = e.sub AND l.cid = e.cid
-      GROUP BY 1, 2),
+                                 ORDER BY pd ASC, cell ASC) <= 8)"""
+
+_IVFPQ_REFINE_SQL = f"""
     shortlist AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, neighbor_id,
@@ -4801,7 +4705,7 @@ def _ivfpq_oracle(train_pred: str | None = None) -> str:
                                 ORDER BY td ASC, neighbor_id ASC) AS rnk
       FROM (
         SELECT s.query_id, s.neighbor_id,
-               {_pq_sqd('qb.embedding', 'nb.embedding')} AS td
+               {_sql_sqd('qb.embedding', 'nb.embedding')} AS td
         FROM shortlist s
         JOIN b qb ON qb.vec_id = s.query_id
         JOIN b nb ON nb.vec_id = s.neighbor_id)),
@@ -4809,7 +4713,7 @@ def _ivfpq_oracle(train_pred: str | None = None) -> str:
       SELECT query_id, neighbor_id FROM (
         SELECT qb.vec_id AS query_id, nb.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY qb.vec_id
-                   ORDER BY {_pq_sqd('qb.embedding', 'nb.embedding')} ASC,
+                   ORDER BY {_sql_sqd('qb.embedding', 'nb.embedding')} ASC,
                             nb.vec_id ASC) AS rn
         FROM (SELECT * FROM b WHERE vec_id < 20) qb CROSS JOIN b nb
         WHERE nb.vec_id <> qb.vec_id)
@@ -4824,6 +4728,38 @@ def _ivfpq_oracle(train_pred: str | None = None) -> str:
                      AND e.neighbor_id = r.neighbor_id
     WHERE r.rnk <= 10
     """
+
+
+def _ivfpq_oracle(train_pred: str | None = None) -> str:
+    """Full IVF-PQ serve replay. ``train_pred`` restricts BOTH trainings
+    (coarse + PQ) to a vec_id slice while encoding, cell assignment,
+    probing, ADC, refine, and the exact leg still cover the full corpus —
+    the frozen-quantizer append lifecycle of
+    ``write_ivfpq_artifact(mode=\"append\")``."""
+    return (
+        _pq_train_ctes(train_pred=train_pred)
+        + _ivfpq_coarse_ctes(train_pred=train_pred)
+        + ","
+        + _IVFPQ_CELLS_CTE
+        + ","
+        + _IVFPQ_PROBES_CTE
+        + f""",
+    cand AS MATERIALIZED (
+      SELECT p.query_id, c.neighbor_id
+      FROM probes p JOIN cells c USING (cell)
+      WHERE c.neighbor_id <> p.query_id),
+    lut AS MATERIALIZED (
+      SELECT sv.vec_id AS query_id, sv.sub, c.cid,
+             CAST(round({_sql_sqd('sv.subvec', 'c.cvec')}, 12)
+                  AS DECIMAL(30,12)) AS ld
+      FROM sv JOIN c2 c USING (sub) WHERE sv.vec_id < 20),
+    adcq AS MATERIALIZED (
+      SELECT cd.query_id, cd.neighbor_id, sum(l.ld) AS adc
+      FROM cand cd
+      JOIN enc e ON e.vec_id = cd.neighbor_id
+      JOIN lut l ON l.query_id = cd.query_id AND l.sub = e.sub AND l.cid = e.cid
+      GROUP BY 1, 2),"""
+        + _IVFPQ_REFINE_SQL
     )
 
 
@@ -4858,13 +4794,9 @@ def _ivfpq_residual_oracle() -> str:
     dsub = _PQ_DIM // _PQ_M
     lead = (
         _ivfpq_coarse_ctes()
-        + f""",
-    cells AS MATERIALIZED (
-      SELECT vec_id AS neighbor_id, cid AS cell FROM (
-        SELECT b.vec_id, g.cid, {_pq_sqd('b.embedding', 'g.cvec')} AS d2
-        FROM b CROSS JOIN g2 g)
-      QUALIFY row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY d2 ASC, cid ASC) = 1),
+        + ","
+        + _IVFPQ_CELLS_CTE
+        + """,
     rb AS MATERIALIZED (
       SELECT b.vec_id,
              list_transform(list_zip(b.embedding, g.cvec),
@@ -4875,14 +4807,9 @@ def _ivfpq_residual_oracle() -> str:
     )
     return (
         _pq_train_ctes(src="rb", lead=lead)
+        + ","
+        + _IVFPQ_PROBES_CTE
         + f""",
-    probes AS (
-      SELECT query_id, cell FROM (
-        SELECT qb.vec_id AS query_id, g.cid AS cell,
-               {_pq_sqd('qb.embedding', 'g.cvec')} AS pd
-        FROM (SELECT * FROM b WHERE vec_id < 20) qb CROSS JOIN g2 g)
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY pd ASC, cell ASC) <= 8),
     qres AS MATERIALIZED (
       SELECT p.query_id, p.cell,
              list_transform(list_zip(qb.embedding, g.cvec),
@@ -4897,7 +4824,7 @@ def _ivfpq_residual_oracle() -> str:
            (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS sub) s),
     lut AS MATERIALIZED (
       SELECT q.query_id, q.cell, q.sub, c.cid,
-             CAST(round({_pq_sqd('q.subvec', 'c.cvec')}, 12)
+             CAST(round({_sql_sqd('q.subvec', 'c.cvec')}, 12)
                   AS DECIMAL(30,12)) AS ld
       FROM qsv2 q JOIN c2 c USING (sub)),
     cand AS MATERIALIZED (
@@ -4910,42 +4837,8 @@ def _ivfpq_residual_oracle() -> str:
       JOIN enc e ON e.vec_id = cd.neighbor_id
       JOIN lut l ON l.query_id = cd.query_id AND l.cell = cd.cell
                 AND l.sub = e.sub AND l.cid = e.cid
-      GROUP BY 1, 2),
-    shortlist AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc ASC, neighbor_id ASC) AS rn
-        FROM adcq) WHERE rn <= 150),
-    refined AS MATERIALIZED (
-      SELECT query_id, neighbor_id, td,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY td ASC, neighbor_id ASC) AS rnk
-      FROM (
-        SELECT s.query_id, s.neighbor_id,
-               {_pq_sqd('qb.embedding', 'nb.embedding')} AS td
-        FROM shortlist s
-        JOIN b qb ON qb.vec_id = s.query_id
-        JOIN b nb ON nb.vec_id = s.neighbor_id)),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT qb.vec_id AS query_id, nb.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY qb.vec_id
-                   ORDER BY {_pq_sqd('qb.embedding', 'nb.embedding')} ASC,
-                            nb.vec_id ASC) AS rn
-        FROM (SELECT * FROM b WHERE vec_id < 20) qb CROSS JOIN b nb
-        WHERE nb.vec_id <> qb.vec_id)
-      WHERE rn <= 10)
-    SELECT CAST(r.query_id AS BIGINT) AS query_id,
-           CAST(r.rnk AS INTEGER) AS "rank",
-           CAST(r.neighbor_id AS BIGINT) AS neighbor_id,
-           round(r.td, 6) AS d2,
-           CASE WHEN e.neighbor_id IS NULL THEN 0 ELSE 1 END AS hit
-    FROM refined r
-    LEFT JOIN exact e ON e.query_id = r.query_id
-                     AND e.neighbor_id = r.neighbor_id
-    WHERE r.rnk <= 10
-    """
+      GROUP BY 1, 2),"""
+        + _IVFPQ_REFINE_SQL
     )
 
 
@@ -5184,9 +5077,10 @@ def char_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.char_entropy_stats(docs, "text", "doc_id")
 
 
-@query(
-    "kmeans_cluster_profile",
-    oracle="""
+# One deterministic Lloyd iteration of similarity.kmeans_lloyd (k=8,
+# lowest-id init, decimal mean accumulation): `dt` holds every vector's
+# squared-L2 distance to each updated centroid.
+_KMEANS_LLOYD1_CTES = """
     WITH e AS (SELECT vec_id, embedding FROM embeddings),
     c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM e ORDER BY vec_id LIMIT 8),
     d1 AS (
@@ -5213,7 +5107,13 @@ def char_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                  p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
                     * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) AS d2
       FROM e CROSS JOIN c1 c
-    ),
+    )"""
+
+
+@query(
+    "kmeans_cluster_profile",
+    oracle=_KMEANS_LLOYD1_CTES
+    + """,
     a2 AS (SELECT vec_id, cid, d2 FROM dt
            QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1)
     SELECT cid, count(*) AS n_vecs,
@@ -5355,9 +5255,8 @@ def asof_purchase_next_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "minhash_incremental_neardups",
-    oracle=r"""
+# Each doc's distinct word 3-shingles `sh` and their count `sizes`.
+_SHINGLE_SIZES_CTES = r"""
     WITH docs AS (
       SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents
     ),
@@ -5367,7 +5266,13 @@ def asof_purchase_next_click(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    for i in range(1, len(w) - 1)])) AS s
       FROM docs WHERE len(w) >= 3
     ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id)"""
+
+
+@query(
+    "minhash_incremental_neardups",
+    oracle=_SHINGLE_SIZES_CTES
+    + """,
     pairs AS (
       SELECT a.doc_id AS new_id, b.doc_id AS old_id, count(*) AS shared
       FROM sh a JOIN sh b ON a.s = b.s
@@ -5445,17 +5350,8 @@ def _build_static_enrich(stream: DataFrame, cust: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "stream_psi_drift",
-    oracle="""
-    WITH f AS (
-      SELECT least(CAST(floor(value / 50) AS BIGINT), 9) AS bin,
-             CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
-      FROM events),
-    c AS (SELECT bin,
-                 CAST(sum(is_ref) AS BIGINT) AS n_ref,
-                 CAST(sum(1 - is_ref) AS BIGINT) AS n_cur
-          FROM f GROUP BY 1),
+# The SQL replay of _psi_readout over the (bin, n_ref, n_cur) counts `c`.
+_PSI_READOUT_SQL = """
     b AS (SELECT unnest(range(0, 10)) AS bin),
     fl AS (SELECT b.bin, coalesce(c.n_ref, 0) AS n_ref, coalesce(c.n_cur, 0) AS n_cur
            FROM b LEFT JOIN c ON b.bin = c.bin),
@@ -5468,7 +5364,50 @@ def _build_static_enrich(stream: DataFrame, cust: DataFrame) -> DataFrame:
            round(CAST(sum(CAST(round((p - q) * ln(p / q), 12) AS DECIMAL(30,12)))
                       OVER () AS DOUBLE), 6) AS psi
     FROM x
-    """,
+    """
+
+
+def _psi_readout(fl: DataFrame) -> DataFrame:
+    """PSI over a fixed-bin histogram (bin, n_ref, n_cur): Laplace +1
+    smoothed bin shares, per-bin contributions rounded at 12 digits, and
+    their decimal sum as ``psi`` on every row."""
+    from pyspark.sql import Window
+
+    t = fl.agg(F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc"))
+    x = fl.crossJoin(F.broadcast(t)).select(
+        "bin",
+        "n_ref",
+        "n_cur",
+        ((F.col("n_ref") + 1) / (F.col("tr") + 10)).alias("p"),
+        ((F.col("n_cur") + 1) / (F.col("tc") + 10)).alias("q"),
+    )
+    contrib = F.round((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")), 12)
+    return x.select(
+        "bin",
+        "n_ref",
+        "n_cur",
+        contrib.alias("contrib"),
+        F.round(
+            F.sum(contrib.cast("decimal(30,12)"))
+            .over(Window.partitionBy())
+            .cast("double"),
+            6,
+        ).alias("psi"),
+    )
+
+
+@query(
+    "stream_psi_drift",
+    oracle="""
+    WITH f AS (
+      SELECT least(CAST(floor(value / 50) AS BIGINT), 9) AS bin,
+             CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END AS is_ref
+      FROM events),
+    c AS (SELECT bin,
+                 CAST(sum(is_ref) AS BIGINT) AS n_ref,
+                 CAST(sum(1 - is_ref) AS BIGINT) AS n_cur
+          FROM f GROUP BY 1),"""
+    + _PSI_READOUT_SQL,
 )
 def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING drift monitor: the live half of the month arrives as a
@@ -5481,8 +5420,6 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as ``order_price_psi``; green iff the replayed-stream
     current counts make the PSI bit-equal to the all-batch oracle."""
     import os
-
-    from pyspark.sql import Window
 
     from ..streaming import replay_events
 
@@ -5512,27 +5449,7 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_cur"), F.lit(0)).cast("long").alias("n_cur"),
         )
     )
-    t = fl.agg(F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc"))
-    x = fl.crossJoin(F.broadcast(t)).select(
-        "bin",
-        "n_ref",
-        "n_cur",
-        ((F.col("n_ref") + 1) / (F.col("tr") + 10)).alias("p"),
-        ((F.col("n_cur") + 1) / (F.col("tc") + 10)).alias("q"),
-    )
-    contrib = F.round((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")), 12)
-    return x.select(
-        "bin",
-        "n_ref",
-        "n_cur",
-        contrib.alias("contrib"),
-        F.round(
-            F.sum(contrib.cast("decimal(30,12)"))
-            .over(Window.partitionBy())
-            .cast("double"),
-            6,
-        ).alias("psi"),
-    )
+    return _psi_readout(fl)
 
 
 def _build_stream_psi_current(stream: DataFrame) -> DataFrame:
@@ -5661,12 +5578,7 @@ def decontaminated_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clean.groupBy("lang").agg(F.count("*").alias("n_docs"))
 
 
-@query(
-    "stream_dedup_watermarked",
-    oracle="""
-    SELECT event_type, count(*) AS n FROM events GROUP BY event_type
-    """,
-)
+@query("stream_dedup_watermarked", oracle=_STREAM_DEDUP_ORACLE)
 def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state streaming dedup (``dropDuplicatesWithinWatermark``):
     the source replayed twice (every event duplicated) and deduped with
@@ -6301,28 +6213,9 @@ def containment_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "neardup_dedup_apply",
-    oracle=r"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS s
-      FROM docs WHERE len(w) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM p0
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= 0.5),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (SELECT s, d FROM edges
-              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-    labels AS (
-      SELECT s AS doc_id, least(s, min(d)) AS component_id
-      FROM reach GROUP BY s)
+    oracle="WITH RECURSIVE "
+    + _NEARDUP_LABELS_CTES
+    + """
     SELECT d.lang, count(*) AS n_docs_kept
     FROM documents d
     WHERE d.doc_id NOT IN (SELECT doc_id FROM labels WHERE doc_id <> component_id)
@@ -6583,9 +6476,9 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "duplicated_span_extents",
-    oracle=r"""
+# Per-doc whitespace tokens `meta` (t, n) and every stride-1 10-token
+# window [s, e] whose text occurs more than once in the corpus, `dup`.
+_DUP_SPAN_WINDOWS_CTES = r"""
     WITH tok AS (
       SELECT doc_id,
              CASE WHEN trim(text)='' THEN []::VARCHAR[]
@@ -6601,7 +6494,13 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ AS (SELECT doc_id, s, s + 9 AS e,
                    count(*) OVER (PARTITION BY gram) AS n_occ
             FROM g),
-    dup AS (SELECT doc_id, s, e FROM occ WHERE n_occ > 1),
+    dup AS (SELECT doc_id, s, e FROM occ WHERE n_occ > 1)"""
+
+
+@query(
+    "duplicated_span_extents",
+    oracle=_DUP_SPAN_WINDOWS_CTES
+    + """,
     isl AS (SELECT doc_id, s, e,
                    CASE WHEN s > coalesce(max(e) OVER (
                           PARTITION BY doc_id ORDER BY s
@@ -6648,23 +6547,8 @@ def duplicated_span_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "span_dedup_apply",
-    oracle=r"""
-    WITH tok AS (
-      SELECT doc_id,
-             CASE WHEN trim(text)='' THEN []::VARCHAR[]
-                  ELSE string_split_regex(trim(text),'\s+') END AS t
-      FROM documents),
-    meta AS (SELECT doc_id, t, len(t) AS n FROM tok),
-    w AS (SELECT doc_id, t, n,
-                 CAST(unnest(generate_series(0, n - 10)) AS INTEGER) AS s
-          FROM meta WHERE n >= 10),
-    g AS (SELECT doc_id, s,
-                 array_to_string(list_slice(t, s + 1, s + 10), ' ') AS gram
-          FROM w),
-    occ AS (SELECT doc_id, s, s + 9 AS e,
-                   count(*) OVER (PARTITION BY gram) AS n_occ
-            FROM g),
-    dup AS (SELECT doc_id, s, e FROM occ WHERE n_occ > 1),
+    oracle=_DUP_SPAN_WINDOWS_CTES
+    + """,
     cov AS (SELECT DISTINCT doc_id,
                    CAST(unnest(generate_series(s, e)) AS INTEGER) AS p
             FROM dup),
@@ -7333,9 +7217,8 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stream_pair_join(spark, sf_dir, "left_semi", ("p_event_id",))
 
 
-@query(
-    "session_overlap_pairs",
-    oracle="""
+# Events with each user's 30-minute-gap session number `run`.
+_SESSION_RUNS_CTES = """
     WITH flagged AS (
       SELECT user_id, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -7346,7 +7229,34 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, ts,
              sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
                                     ROWS UNBOUNDED PRECEDING) AS run
-      FROM flagged),
+      FROM flagged)"""
+
+
+def _session_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events with ``run``, each user's session number under a
+    30-minute gap: the builder side of ``_SESSION_RUNS_CTES``."""
+    from pyspark.sql import Window
+
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
+    # fractional-second gap, matching the oracle's epoch() (ADVICE r5 —
+    # see sessionization)
+    gap = F.col("ts").cast("timestamp").cast("double") - F.lag("ts").over(w).cast(
+        "timestamp"
+    ).cast("double")
+    flagged = ev.withColumn(
+        "new_session",
+        F.when(F.lag("ts").over(w).isNull() | (gap > 1800), 1).otherwise(0),
+    )
+    return flagged.withColumn(
+        "run", F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+
+
+@query(
+    "session_overlap_pairs",
+    oracle=_SESSION_RUNS_CTES
+    + """,
     sessions AS (
       SELECT user_id, user_id * 1000000 + run AS sid, min(ts) AS s, max(ts) AS e
       FROM runs GROUP BY user_id, run),
@@ -7370,22 +7280,7 @@ def session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate on the deduped candidates; the oracle is the plain
     non-equi join. Top-50 co-occurring user pairs with a total-order
     tiebreak."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    # fractional-second gap, matching the oracle's epoch() (ADVICE r5 —
-    # see sessionization)
-    gap = F.col("ts").cast("timestamp").cast("double") - F.lag("ts").over(w).cast(
-        "timestamp"
-    ).cast("double")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(F.lag("ts").over(w).isNull() | (gap > 1800), 1).otherwise(0),
-    )
-    runs = flagged.withColumn(
-        "run", F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    runs = _session_runs(spark, sf_dir)
     sessions = runs.groupBy("user_id", "run").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     ).select(
@@ -7679,22 +7574,7 @@ def quality_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "similarity_topk_pandas",
-    oracle="""
-    SELECT query_id, neighbor_id, round(cos, 5) + 0.0 AS cos FROM (
-      SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id ASC) AS rn
-      FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-        FROM (SELECT * FROM embeddings WHERE vec_id < 20) q
-        JOIN embeddings c ON c.vec_id <> q.vec_id
-      )
-    ) WHERE rn <= 10
-    """,
+    oracle=_EXACT_COSINE_TOP10_SQL,
 )
 def similarity_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scalar ``pandas_udf`` tier of the UDF policy, oracle-gated: the
@@ -7745,9 +7625,7 @@ def embedding_label_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "cdc_last_state",
-    oracle="""
+_CDC_LAST_STATE_ORACLE = """
     WITH s AS (
       SELECT user_id, event_type, value, ts
       FROM events
@@ -7757,8 +7635,10 @@ def embedding_label_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, event_type AS last_op, value AS last_value,
            strftime(ts, '%Y-%m-%d %H:%M:%S') AS updated_at
     FROM s WHERE event_type <> 'error'
-    """,
-)
+    """
+
+
+@query("cdc_last_state", oracle=_CDC_LAST_STATE_ORACLE)
 def cdc_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog apply (``timeseries.last_state``): the event feed read
     as a change stream per user — last-write-wins on (ts, event_id), and a
@@ -7846,34 +7726,8 @@ def ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "semantic_dedup_pairs",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding FROM embeddings),
-    c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM e ORDER BY vec_id LIMIT 8),
-    d1 AS (
-      SELECT e.vec_id, c.cid,
-             list_sum(list_transform(list_zip(e.embedding, c.cvec),
-                 p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-                    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) AS d2
-      FROM e CROSS JOIN c0 c
-    ),
-    a1 AS (SELECT vec_id, cid FROM d1
-           QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
-    ex AS (
-      SELECT a1.cid, unnest(e.embedding) AS val,
-             generate_subscripts(e.embedding, 1) AS pos
-      FROM e JOIN a1 USING (vec_id)
-    ),
-    mu AS (SELECT cid, pos,
-                  CAST(sum(CAST(val AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-           FROM ex GROUP BY cid, pos),
-    c1 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM mu GROUP BY cid),
-    dt AS (
-      SELECT e.vec_id, c.cid,
-             list_sum(list_transform(list_zip(e.embedding, c.cvec),
-                 p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-                    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) AS d2
-      FROM e CROSS JOIN c1 c
-    ),
+    oracle=_KMEANS_LLOYD1_CTES
+    + """,
     a2 AS (SELECT vec_id, cid FROM dt
            QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1)
     SELECT id_a, id_b, round(cos, 5) + 0.0 AS cos FROM (
@@ -7948,20 +7802,7 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("token", "n", F.coalesce("__hit", F.lit(False)).alias("in_sketch"))
 
 
-@query(
-    "stream_cdc_last_state",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, event_type, value, ts
-      FROM events
-      QUALIFY row_number() OVER (PARTITION BY user_id
-                                 ORDER BY ts DESC, event_id DESC) = 1
-    )
-    SELECT user_id, event_type AS last_op, value AS last_value,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS updated_at
-    FROM s WHERE event_type <> 'error'
-    """,
-)
+@query("stream_cdc_last_state", oracle=_CDC_LAST_STATE_ORACLE)
 def stream_cdc_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``cdc_last_state``: the event feed replayed through
     a real streaming query into ``streaming.stateful_last_state``
@@ -8213,17 +8054,8 @@ def pit_join_event_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "split_leakage_audit",
-    oracle=r"""
-    WITH docs AS (
-      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                   for i in range(1, len(w) - 1)])) AS s
-      FROM docs WHERE len(w) >= 3
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    oracle=_SHINGLE_SIZES_CTES
+    + """,
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -8400,9 +8232,10 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "bigram_heldout_logprob",
-    oracle=r"""
+# Lowercased whitespace tokens `tk`, the 90/10 doc-hash train/test split
+# `sp` (sampling.hash_split) and every nonempty bigram (a, b) with its
+# document's split, `bg`.
+_BIGRAM_SPLIT_CTES = r"""
     WITH tk AS (
       SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
       FROM documents),
@@ -8416,35 +8249,15 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT tk.doc_id, sp.split, w[i] AS a, w[i+1] AS b
       FROM tk JOIN sp USING (doc_id),
            unnest(generate_series(1, len(w) - 1)) AS g(i)
-      WHERE len(w) >= 2 AND w[i] <> '' AND w[i+1] <> ''),
-    c12 AS (SELECT a, b, count(*) AS c FROM bg WHERE split = 'train' GROUP BY 1, 2),
-    c1 AS (SELECT a, sum(c) AS c FROM c12 GROUP BY 1),
-    v AS (
-      SELECT count(DISTINCT tok) AS vocab FROM (
-        SELECT unnest(w) AS tok FROM tk JOIN sp USING (doc_id)
-        WHERE sp.split = 'train')
-      WHERE tok <> '')
-    SELECT t.doc_id, count(*) AS n_bigrams,
-           round(CAST(sum(CAST(round(-ln((coalesce(c12.c, 0) + 1) * 1.0
-                                         / (coalesce(c1.c, 0) + v.vocab)), 12)
-                              AS DECIMAL(30,12))) AS DOUBLE) / count(*), 6)
-             AS avg_neg_logprob
-    FROM (SELECT * FROM bg WHERE split = 'test') t
-    LEFT JOIN c12 ON t.a = c12.a AND t.b = c12.b
-    LEFT JOIN c1 ON t.a = c1.a
-    CROSS JOIN v
-    GROUP BY t.doc_id
-    """,
-)
-def bigram_heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out LM evaluation — the eval loop of a data pipeline done
-    leakage-free: an add-one-smoothed bigram LM fitted ONLY on the hash-split
-    train docs (the same split documents train on, so eval never sees
-    training text), scored as mean −ln P(b|a) per test document. Bigrams are
-    pure array expressions (``arrays_zip`` of two slices — no window, no
-    extra shuffle); the model is two token-keyed grouped counts; scoring
-    joins carry (a, b) pairs, never documents. −ln p values are rounded then
-    decimal-summed so the per-doc mean is partial-agg-order independent."""
+      WHERE len(w) >= 2 AND w[i] <> '' AND w[i+1] <> '')"""
+
+
+def _bigram_train_counts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The bigram LM inputs of ``_BIGRAM_SPLIT_CTES``: every bigram with its
+    document's split, the train counts c12 per (a, b) and c1 per a, and the
+    train vocabulary size."""
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("w")
@@ -8478,6 +8291,42 @@ def bigram_heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok") != "")
         .agg(F.countDistinct("tok").alias("vocab"))
     )
+    return bg, c12, c1, vocab
+
+
+@query(
+    "bigram_heldout_logprob",
+    oracle=_BIGRAM_SPLIT_CTES
+    + """,
+    c12 AS (SELECT a, b, count(*) AS c FROM bg WHERE split = 'train' GROUP BY 1, 2),
+    c1 AS (SELECT a, sum(c) AS c FROM c12 GROUP BY 1),
+    v AS (
+      SELECT count(DISTINCT tok) AS vocab FROM (
+        SELECT unnest(w) AS tok FROM tk JOIN sp USING (doc_id)
+        WHERE sp.split = 'train')
+      WHERE tok <> '')
+    SELECT t.doc_id, count(*) AS n_bigrams,
+           round(CAST(sum(CAST(round(-ln((coalesce(c12.c, 0) + 1) * 1.0
+                                         / (coalesce(c1.c, 0) + v.vocab)), 12)
+                              AS DECIMAL(30,12))) AS DOUBLE) / count(*), 6)
+             AS avg_neg_logprob
+    FROM (SELECT * FROM bg WHERE split = 'test') t
+    LEFT JOIN c12 ON t.a = c12.a AND t.b = c12.b
+    LEFT JOIN c1 ON t.a = c1.a
+    CROSS JOIN v
+    GROUP BY t.doc_id
+    """,
+)
+def bigram_heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Held-out LM evaluation — the eval loop of a data pipeline done
+    leakage-free: an add-one-smoothed bigram LM fitted ONLY on the hash-split
+    train docs (the same split documents train on, so eval never sees
+    training text), scored as mean −ln P(b|a) per test document. Bigrams are
+    pure array expressions (``arrays_zip`` of two slices — no window, no
+    extra shuffle); the model is two token-keyed grouped counts; scoring
+    joins carry (a, b) pairs, never documents. −ln p values are rounded then
+    decimal-summed so the per-doc mean is partial-agg-order independent."""
+    bg, c12, c1, vocab = _bigram_train_counts(spark, sf_dir)
     test = bg.filter(F.col("split") == "test")
     neg_ln = -F.log(
         (F.coalesce(F.col("c12"), F.lit(0)) + 1)
@@ -8501,21 +8350,8 @@ def bigram_heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigram_kneser_ney_heldout",
-    oracle=r"""
-    WITH tk AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-      FROM documents),
-    sp AS (
-      SELECT doc_id,
-             CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                       AS BIGINT) % 10000 < 9000
-                  THEN 'train' ELSE 'test' END AS split
-      FROM documents),
-    bg AS (
-      SELECT tk.doc_id, sp.split, w[i] AS a, w[i+1] AS b
-      FROM tk JOIN sp USING (doc_id),
-           unnest(generate_series(1, len(w) - 1)) AS g(i)
-      WHERE len(w) >= 2 AND w[i] <> '' AND w[i+1] <> ''),
+    oracle=_BIGRAM_SPLIT_CTES
+    + """,
     c12 AS MATERIALIZED (
       SELECT a, b, count(*) AS c FROM bg WHERE split = 'train' GROUP BY 1, 2),
     c1 AS (SELECT a, sum(c) AS c FROM c12 GROUP BY 1),
@@ -8562,42 +8398,10 @@ def bigram_kneser_ney_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling's partial-agg-order discipline). KN beats add-one on mean
     held-out −ln p, as it should — the pair of queries is the
     smoothing-ablation table for an LM quality gate."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("w")
-    )
-    n = F.size("w")
-    bg = (
-        toks.filter(n >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("w", 1, n - 1).alias("a"),
-                    F.slice("w", 2, n - 1).alias("b"),
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .filter((F.col("a") != "") & (F.col("b") != ""))
-    )
-    split = sampling.hash_split(
-        docs.select("doc_id"), "doc_id", {"train": 0.9, "test": 0.1}
-    )
-    bg = bg.join(split, "doc_id")
-    train = bg.filter(F.col("split") == "train")
-    c12 = train.groupBy("a", "b").agg(F.count("*").alias("c12"))
-    c1 = c12.groupBy("a").agg(F.sum("c12").alias("c1"))
+    bg, c12, c1, vocab = _bigram_train_counts(spark, sf_dir)
     n1pa = c12.groupBy("a").agg(F.count("*").alias("n1pa"))
     n1pb = c12.groupBy("b").agg(F.count("*").alias("n1pb"))
     tt = c12.agg(F.count("*").alias("types"))
-    vocab = (
-        toks.join(split, "doc_id")
-        .filter(F.col("split") == "train")
-        .select(F.explode("w").alias("tok"))
-        .filter(F.col("tok") != "")
-        .agg(F.countDistinct("tok").alias("vocab"))
-    )
     test = bg.filter(F.col("split") == "test")
     pcont = (F.coalesce(F.col("n1pb"), F.lit(0)) + 1) * F.lit(1.0) / (
         F.col("types") + F.col("vocab") + 1
@@ -8748,14 +8552,14 @@ def trimmed_mean_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_exactly_once_totals",
-    oracle="""
+_EPOCH_TOTALS_ORACLE = """
     SELECT event_type, count(*) AS n,
            round(CAST(sum(CAST(value AS DECIMAL(30,4))) AS DOUBLE), 2) AS total
     FROM events GROUP BY event_type
-    """,
-)
+    """
+
+
+@query("stream_exactly_once_totals", oracle=_EPOCH_TOTALS_ORACLE)
 def stream_exactly_once_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once streaming SINK semantics, driver-gated
     (``streaming.run_exactly_once_parquet``): the event stream lands in a
@@ -8772,7 +8576,6 @@ def stream_exactly_once_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import run_exactly_once_parquet
     from ..streaming.windows import stream_from_parquet_dir
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/events.parquet"
     schema = parquet_schema(spark, src)
     out = _run_tmp(spark, "eos_out", sf_dir)
@@ -8792,6 +8595,26 @@ def stream_exactly_once_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(_dsum(F.col("value")), 2).alias("total"),
+    )
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ok, u, v): every two distinct parts u < v bought in order ok."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
+    return a.join(b, "ok").filter(F.col("u") < F.col("v"))
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase graph: part pairs (u < v) bought together in at
+    least 2 orders."""
+    return (
+        _copurchase_pairs(spark, sf_dir)
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("__n"))
+        .filter(F.col("__n") >= 2)
+        .select("u", "v")
     )
 
 
@@ -8838,21 +8661,11 @@ def stream_cc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import free_local_checkpoint
     from ..streaming.windows import stream_from_parquet_dir
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
     # the co-purchase edge table is consumed exactly once now: the single
     # partitioned staging write slices all three batch files in one pass
     # (_stage_stream_batches), so the per-batch localCheckpoint the old
     # 3-filter-write loop needed is gone with the loop
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     src = _run_tmp(spark, "cc_stream", sf_dir)
     ckpt = _run_tmp(spark, "cc_stream_ckpt", sf_dir)
     shutil.rmtree(src, ignore_errors=True)
@@ -8899,14 +8712,7 @@ def stream_cc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n_nodes"))
 
 
-@query(
-    "stream_pyds_jsonl_totals",
-    oracle="""
-    SELECT event_type, count(*) AS n,
-           round(CAST(sum(CAST(value AS DECIMAL(30,4))) AS DOUBLE), 2) AS total
-    FROM events GROUP BY event_type
-    """,
-)
+@query("stream_pyds_jsonl_totals", oracle=_EPOCH_TOTALS_ORACLE)
 def stream_pyds_jsonl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PYTHON DATASOURCE SINK, driver-gated
     (``sources.datasource.JsonLinesStreamWriter`` — the DataSource-API twin
@@ -8927,7 +8733,6 @@ def stream_pyds_jsonl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import stream_from_parquet_dir
 
     register_jsonl_writer(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/events.parquet"
     schema = parquet_schema(spark, src)
     out = _run_tmp(spark, "pyds_stream", sf_dir)
@@ -9296,20 +9101,7 @@ def daily_revenue_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "asof_cogroup_last_click",
-    oracle="""
-    SELECT p_event_id, user_id, c_event_id, c_value FROM (
-      SELECT p.event_id AS p_event_id, p.user_id AS user_id,
-             c.event_id AS c_event_id, c.value AS c_value,
-             row_number() OVER (PARTITION BY p.event_id
-                                ORDER BY c.ts DESC NULLS LAST, c.event_id DESC NULLS LAST) AS rn
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON c.user_id = p.user_id AND c.ts <= p.ts
-    ) WHERE rn = 1
-    """,
-)
+@query("asof_cogroup_last_click", oracle=_ASOF_LAST_CLICK_ORACLE)
 def asof_cogroup_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COGROUP tier of the sanctioned-Python matrix, oracle-gated:
     ``joins.asof_join_cogrouped`` (cogrouped ``applyInPandas`` +
@@ -10158,28 +9950,7 @@ def _minhash_cluster_stream(
 
 @query(
     "stream_minhash_cluster_maintenance",
-    oracle=r"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS s
-      FROM docs WHERE len(w) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM p0
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= 0.5),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (SELECT s, d FROM edges
-              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s)
-    SELECT s AS doc_id, CAST(least(s, min(d)) AS BIGINT) AS component_id
-    FROM reach GROUP BY s
-    """,
+    oracle=_NEARDUP_COMPONENTS_ORACLE,
 )
 def stream_minhash_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING dedup-CLUSTER maintenance, driver-gated (VERDICT_r10 "Next
@@ -10225,38 +9996,11 @@ def stream_minhash_cluster_maintenance(spark: SparkSession, sf_dir: str) -> Data
 
 @query(
     "stream_keepone_maintenance",
-    oracle=r"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS s
-      FROM docs WHERE len(w) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM p0
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= 0.5),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (SELECT s, d FROM edges
-              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-    labels AS (
-      SELECT s AS doc_id, least(s, min(d)) AS component_id
-      FROM reach GROUP BY s),
-    q AS (
-      SELECT doc_id,
-             round(
-               (CASE WHEN len(tok) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.0 END) *
-               (0.5 * least(len(list_filter(tok, x -> list_contains(
-                        ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
-                      / len(tok) * 5, 1.0)
-                + 0.5 * len(list_distinct(tok)) / len(tok)),
-               6) AS quality
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tok FROM documents)),
+    oracle="WITH RECURSIVE "
+    + _NEARDUP_LABELS_CTES
+    + ","
+    + _QUALITY_CTE
+    + """,
     ranked AS (
       SELECT l.doc_id, l.component_id, q.quality,
              row_number() OVER (PARTITION BY l.component_id
@@ -10424,11 +10168,11 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("late_accounting")
 
 
-@query(
-    "sql_interface_market_share",
-    oracle="""
+# One SQL text run by both engines; only the year extraction is spelled
+# per dialect.
+_MARKET_SHARE_SQL = """
     WITH yearly AS (
-      SELECT extract(year FROM o_orderdate) AS order_year,
+      SELECT {order_year} AS order_year,
              n_name,
              sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,4)))
                AS rev
@@ -10443,7 +10187,12 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(sum(rev) OVER (PARTITION BY order_year) AS DOUBLE), 6)
              AS share
     FROM yearly
-    """,
+    """
+
+
+@query(
+    "sql_interface_market_share",
+    oracle=_MARKET_SHARE_SQL.format(order_year="extract(year FROM o_orderdate)"),
 )
 def sql_interface_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PURE-SQL front end, driver-gated: tables registered as temp
@@ -10457,26 +10206,7 @@ def sql_interface_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import register_views
 
     register_views(spark, sf_dir, ("lineitem", "orders", "customer", "nation"))
-    return spark.sql(
-        """
-        WITH yearly AS (
-          SELECT year(o_orderdate) AS order_year,
-                 n_name,
-                 sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,4)))
-                   AS rev
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          GROUP BY 1, 2)
-        SELECT CAST(order_year AS BIGINT) AS order_year, n_name,
-               round(CAST(rev AS DOUBLE), 2) AS revenue,
-               round(CAST(rev AS DOUBLE)
-                     / CAST(sum(rev) OVER (PARTITION BY order_year) AS DOUBLE), 6)
-                 AS share
-        FROM yearly
-        """
-    )
+    return spark.sql(_MARKET_SHARE_SQL.format(order_year="year(o_orderdate)"))
 
 
 @query(
@@ -10539,9 +10269,7 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "unpivot_lineitem_measures",
-    oracle="""
+_UNPIVOT_ORACLE = """
     SELECT l_returnflag, measure,
            round(CAST(sum(CAST(val AS DECIMAL(30,4))) AS DOUBLE), 2) AS total
     FROM (
@@ -10551,8 +10279,10 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL
       SELECT l_returnflag, 'discount', l_discount FROM lineitem)
     GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@query("unpivot_lineitem_measures", oracle=_UNPIVOT_ORACLE)
 def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long reshaping (``unpivot``/melt — the inverse of
     ``pivot_event_types``): three measure columns melt into (measure, val)
@@ -10862,10 +10592,9 @@ def recursive_custkey_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "winnowed_doc_fingerprints",
-    oracle=r"""
-    WITH w AS (
+# Winnowed fingerprints `fp` (doc_id, mh): the minimum 16-hex md5 of each
+# window of 4 consecutive lowercased word 3-grams.
+_WINNOW_FP_CTES = r"""w AS (
       SELECT doc_id,
              [x FOR x IN string_split_regex(lower(trim(text)), '\s+') IF x <> ''] AS ws
       FROM documents),
@@ -10878,7 +10607,14 @@ def recursive_custkey_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  min(hh) OVER (PARTITION BY doc_id ORDER BY pos
                                ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mh
           FROM h),
-    fp AS (SELECT DISTINCT doc_id, mh FROM m WHERE pos >= 3),
+    fp AS (SELECT DISTINCT doc_id, mh FROM m WHERE pos >= 3)"""
+
+
+@query(
+    "winnowed_doc_fingerprints",
+    oracle="WITH "
+    + _WINNOW_FP_CTES
+    + """,
     c AS (SELECT doc_id, count(*) AS n_fingerprints FROM fp GROUP BY 1)
     SELECT c.doc_id, CAST(len(w.ws) - 2 AS BIGINT) AS n_grams, c.n_fingerprints,
            round(c.n_fingerprints * 1.0 / (len(w.ws) - 2), 6) AS density
@@ -11200,20 +10936,8 @@ def neardup_cluster_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     c AS (SELECT bin,
                  CAST(sum(CASE WHEN yr = 1995 THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
                  CAST(sum(CASE WHEN yr = 1996 THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-          FROM f GROUP BY 1),
-    b AS (SELECT unnest(range(0, 10)) AS bin),
-    fl AS (SELECT b.bin, coalesce(c.n_ref, 0) AS n_ref, coalesce(c.n_cur, 0) AS n_cur
-           FROM b LEFT JOIN c ON b.bin = c.bin),
-    t AS (SELECT CAST(sum(n_ref) AS BIGINT) AS tr, CAST(sum(n_cur) AS BIGINT) AS tc FROM fl),
-    x AS (SELECT fl.*, (n_ref + 1) * 1.0 / (tr + 10) AS p,
-                       (n_cur + 1) * 1.0 / (tc + 10) AS q
-          FROM fl CROSS JOIN t)
-    SELECT bin, n_ref, n_cur,
-           round((p - q) * ln(p / q), 12) AS contrib,
-           round(CAST(sum(CAST(round((p - q) * ln(p / q), 12) AS DECIMAL(30,12)))
-                      OVER () AS DOUBLE), 6) AS psi
-    FROM x
-    """,
+          FROM f GROUP BY 1),"""
+    + _PSI_READOUT_SQL,
 )
 def order_price_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population stability index between two periods of order prices
@@ -11225,8 +10949,6 @@ def order_price_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the scalar totals broadcast back; per-bin contributions round
     at 12 digits then decimal-sum so the headline PSI is
     accumulation-order-independent."""
-    from pyspark.sql import Window
-
     o = _t(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
     f = o.filter(yr.isin(1995, 1996)).select(
@@ -11249,27 +10971,7 @@ def order_price_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_ref"), F.lit(0)).cast("long").alias("n_ref"),
         F.coalesce(F.col("n_cur"), F.lit(0)).cast("long").alias("n_cur"),
     )
-    t = fl.agg(F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc"))
-    x = fl.crossJoin(F.broadcast(t)).select(
-        "bin",
-        "n_ref",
-        "n_cur",
-        ((F.col("n_ref") + 1) / (F.col("tr") + 10)).alias("p"),
-        ((F.col("n_cur") + 1) / (F.col("tc") + 10)).alias("q"),
-    )
-    contrib = F.round((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")), 12)
-    return x.select(
-        "bin",
-        "n_ref",
-        "n_cur",
-        contrib.alias("contrib"),
-        F.round(
-            F.sum(contrib.cast("decimal(30,12)"))
-            .over(Window.partitionBy())
-            .cast("double"),
-            6,
-        ).alias("psi"),
-    )
+    return _psi_readout(fl)
 
 
 # ---------------------------------------------------------------------------
@@ -11847,38 +11549,15 @@ def video_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "neardup_keep_best_quality",
-    oracle=r"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
-    q AS (
-      SELECT doc_id,
-             round(
-               (CASE WHEN len(tok) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.0 END) *
-               (0.5 * least(len(list_filter(tok, x -> list_contains(
-                        ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
-                      / len(tok) * 5, 1.0)
-                + 0.5 * len(list_distinct(tok)) / len(tok)),
-               6) AS quality
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tok FROM documents)),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS s
-      FROM docs WHERE len(w) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM p0
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= 0.5),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (SELECT s, d FROM edges
-              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-    labels AS (
-      SELECT s AS doc_id, least(s, min(d)) AS component_id
-      FROM reach GROUP BY s),
+    oracle="WITH RECURSIVE "
+    + _SHINGLE_DOCS_CTE
+    + ","
+    + _QUALITY_CTE
+    + ","
+    + _jaccard_reach_ctes("docs")
+    + ","
+    + _NEARDUP_LABELS_CTE
+    + """,
     ranked AS (
       SELECT l.doc_id,
              row_number() OVER (PARTITION BY l.component_id
@@ -11933,21 +11612,9 @@ def neardup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winnowed_match_candidates",
-    oracle=r"""
-    WITH w AS (
-      SELECT doc_id,
-             [x FOR x IN string_split_regex(lower(trim(text)), '\s+') IF x <> ''] AS ws
-      FROM documents),
-    g AS (SELECT doc_id, ws, unnest(range(0, len(ws) - 2)) AS pos
-          FROM w WHERE len(ws) >= 3),
-    h AS (SELECT doc_id, pos,
-                 substr(md5(ws[pos + 1] || ' ' || ws[pos + 2] || ' ' || ws[pos + 3]), 1, 16) AS hh
-          FROM g),
-    m AS (SELECT doc_id, pos,
-                 min(hh) OVER (PARTITION BY doc_id ORDER BY pos
-                               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mh
-          FROM h),
-    fp AS (SELECT DISTINCT doc_id, mh FROM m WHERE pos >= 3)
+    oracle="WITH "
+    + _WINNOW_FP_CTES
+    + """
     SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
     FROM fp a JOIN fp b ON a.mh = b.mh AND a.doc_id < b.doc_id
     GROUP BY 1, 2 HAVING count(*) >= 2
@@ -11981,21 +11648,9 @@ def winnowed_match_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winnow_match_clusters",
-    oracle=r"""
-    WITH RECURSIVE w AS (
-      SELECT doc_id,
-             [x FOR x IN string_split_regex(lower(trim(text)), '\s+') IF x <> ''] AS ws
-      FROM documents),
-    g AS (SELECT doc_id, ws, unnest(range(0, len(ws) - 2)) AS pos
-          FROM w WHERE len(ws) >= 3),
-    h AS (SELECT doc_id, pos,
-                 substr(md5(ws[pos + 1] || ' ' || ws[pos + 2] || ' ' || ws[pos + 3]), 1, 16) AS hh
-          FROM g),
-    m AS (SELECT doc_id, pos,
-                 min(hh) OVER (PARTITION BY doc_id ORDER BY pos
-                               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mh
-          FROM h),
-    fp AS (SELECT DISTINCT doc_id, mh FROM m WHERE pos >= 3),
+    oracle="WITH RECURSIVE "
+    + _WINNOW_FP_CTES
+    + """,
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM fp a JOIN fp b ON a.mh = b.mh AND a.doc_id < b.doc_id
@@ -12088,17 +11743,7 @@ def copurchase_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. All counts integer; one final double division."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return graph.triangle_stats(edges)
 
 
@@ -12114,6 +11759,56 @@ _LPA_EDGES_SQL = """
     seeds AS (SELECT p_partkey AS id, p_brand AS label FROM part
               WHERE p_partkey % 3 = 0)
 """
+
+# Two rounds of seeded label propagation over `sym` from `seeds`: each
+# unlabeled node takes its labeled neighbours' majority label (smallest on
+# ties), `p1` then `p2`.
+_LPA_ROUNDS_SQL = """
+    v1 AS (SELECT s.src, l.label, count(*) AS n
+           FROM sym s JOIN seeds l ON l.id = s.dst
+           WHERE s.src NOT IN (SELECT id FROM seeds)
+           GROUP BY 1, 2),
+    p1 AS (SELECT src AS id, label FROM (
+             SELECT src, label,
+                    row_number() OVER (PARTITION BY src
+                                       ORDER BY n DESC, label ASC) AS rn
+             FROM v1) WHERE rn = 1),
+    l1 AS (SELECT id, label FROM seeds UNION ALL SELECT id, label FROM p1),
+    v2 AS (SELECT s.src, l.label, count(*) AS n
+           FROM sym s JOIN l1 l ON l.id = s.dst
+           WHERE s.src NOT IN (SELECT id FROM l1)
+           GROUP BY 1, 2),
+    p2 AS (SELECT src AS id, label FROM (
+             SELECT src, label,
+                    row_number() OVER (PARTITION BY src
+                                       ORDER BY n DESC, label ASC) AS rn
+             FROM v2) WHERE rn = 1)"""
+
+# The 3-core peel over `sym` (needs WITH RECURSIVE): `chk` holds the last
+# round's edges with both endpoints' degrees; the core is nonempty iff
+# every row of `chk` has both >= 3.
+_KCORE_PEEL_SQL = """
+    peel AS (
+      SELECT src, dst, 0 AS it FROM sym
+      UNION ALL
+      SELECT src, dst, it + 1 FROM (
+          SELECT src, dst, it, total,
+                 sum(CASE WHEN ds >= 3 AND dd >= 3 THEN 1 ELSE 0 END)
+                   OVER () AS n_surv,
+                 ds, dd
+          FROM (
+            SELECT src, dst, it,
+                   count(*) OVER (PARTITION BY src) AS ds,
+                   count(*) OVER (PARTITION BY dst) AS dd,
+                   count(*) OVER () AS total
+            FROM peel))
+      WHERE ds >= 3 AND dd >= 3 AND n_surv < total
+    ),
+    last AS (SELECT src, dst FROM peel WHERE it = (SELECT max(it) FROM peel)),
+    chk AS (SELECT src, dst,
+                   count(*) OVER (PARTITION BY src) AS ds,
+                   count(*) OVER (PARTITION BY dst) AS dd
+            FROM last)"""
 
 
 @query(
@@ -12151,17 +11846,7 @@ def copurchase_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree exactly because the per-corner credit is orientation-invariant."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     cc = graph.local_clustering(edges)
     return cc.orderBy(
         F.col("local_cc").desc(), F.col("degree").desc(), F.col("node").asc()
@@ -12170,26 +11855,11 @@ def copurchase_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "brand_label_propagation",
-    oracle="WITH " + _LPA_EDGES_SQL + """,
-    v1 AS (SELECT s.src, l.label, count(*) AS n
-           FROM sym s JOIN seeds l ON l.id = s.dst
-           WHERE s.src NOT IN (SELECT id FROM seeds)
-           GROUP BY 1, 2),
-    p1 AS (SELECT src AS id, label FROM (
-             SELECT src, label,
-                    row_number() OVER (PARTITION BY src
-                                       ORDER BY n DESC, label ASC) AS rn
-             FROM v1) WHERE rn = 1),
-    l1 AS (SELECT id, label FROM seeds UNION ALL SELECT id, label FROM p1),
-    v2 AS (SELECT s.src, l.label, count(*) AS n
-           FROM sym s JOIN l1 l ON l.id = s.dst
-           WHERE s.src NOT IN (SELECT id FROM l1)
-           GROUP BY 1, 2),
-    p2 AS (SELECT src AS id, label FROM (
-             SELECT src, label,
-                    row_number() OVER (PARTITION BY src
-                                       ORDER BY n DESC, label ASC) AS rn
-             FROM v2) WHERE rn = 1)
+    oracle="WITH "
+    + _LPA_EDGES_SQL
+    + ","
+    + _LPA_ROUNDS_SQL
+    + """
     SELECT id AS p_partkey, label, 1 AS round FROM p1
     UNION ALL
     SELECT id, label, 2 FROM p2
@@ -12206,17 +11876,7 @@ def brand_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence loop; the oracle unrolls both rounds as CTEs."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     seeds = (
         _t(spark, sf_dir, "part")
         .filter(F.col("p_partkey") % 3 == 0)
@@ -12248,26 +11908,9 @@ def brand_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM cos) WHERE rn <= 5),
     edges AS (SELECT DISTINCT least(qa, qb) AS u, greatest(qa, qb) AS v FROM knn),
     sym AS (SELECT u AS src, v AS dst FROM edges UNION ALL SELECT v, u FROM edges),
-    seeds AS (SELECT vec_id AS id, label FROM sub WHERE vec_id % 4 = 0),
-    v1 AS (SELECT s.src, l.label, count(*) AS n
-           FROM sym s JOIN seeds l ON l.id = s.dst
-           WHERE s.src NOT IN (SELECT id FROM seeds)
-           GROUP BY 1, 2),
-    p1 AS (SELECT src AS id, label FROM (
-             SELECT src, label,
-                    row_number() OVER (PARTITION BY src
-                                       ORDER BY n DESC, label ASC) AS rn
-             FROM v1) WHERE rn = 1),
-    l1 AS (SELECT id, label FROM seeds UNION ALL SELECT id, label FROM p1),
-    v2 AS (SELECT s.src, l.label, count(*) AS n
-           FROM sym s JOIN l1 l ON l.id = s.dst
-           WHERE s.src NOT IN (SELECT id FROM l1)
-           GROUP BY 1, 2),
-    p2 AS (SELECT src AS id, label FROM (
-             SELECT src, label,
-                    row_number() OVER (PARTITION BY src
-                                       ORDER BY n DESC, label ASC) AS rn
-             FROM v2) WHERE rn = 1)
+    seeds AS (SELECT vec_id AS id, label FROM sub WHERE vec_id % 4 = 0),"""
+    + _LPA_ROUNDS_SQL
+    + """
     SELECT id AS vec_id, label, 1 AS round FROM p1
     UNION ALL
     SELECT id, label, 2 FROM p2
@@ -12309,34 +11952,17 @@ def embedding_knn_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "copurchase_kcore",
-    oracle="WITH RECURSIVE " + _LPA_EDGES_SQL + """,
+    oracle="WITH RECURSIVE "
+    + _LPA_EDGES_SQL
+    + """,
     -- iterative peel: each round keeps edges whose BOTH endpoints have
     -- symmetric degree >= 3, and recurses only while something was removed
     -- (n_surv < total). At termination the last iteration is either fully
     -- in-core or the core is empty — the final all-survive check below
     -- disambiguates (a round that removes the last edges emits nothing, so
-    -- "last emitted" alone would over-report).
-    peel AS (
-      SELECT src, dst, 0 AS it FROM sym
-      UNION ALL
-      SELECT src, dst, it + 1 FROM (
-          SELECT src, dst, it, total,
-                 sum(CASE WHEN ds >= 3 AND dd >= 3 THEN 1 ELSE 0 END)
-                   OVER () AS n_surv,
-                 ds, dd
-          FROM (
-            SELECT src, dst, it,
-                   count(*) OVER (PARTITION BY src) AS ds,
-                   count(*) OVER (PARTITION BY dst) AS dd,
-                   count(*) OVER () AS total
-            FROM peel))
-      WHERE ds >= 3 AND dd >= 3 AND n_surv < total
-    ),
-    last AS (SELECT src, dst FROM peel WHERE it = (SELECT max(it) FROM peel)),
-    chk AS (SELECT src, dst,
-                   count(*) OVER (PARTITION BY src) AS ds,
-                   count(*) OVER (PARTITION BY dst) AS dd
-            FROM last)
+    -- "last emitted" alone would over-report)."""
+    + _KCORE_PEEL_SQL
+    + """
     SELECT src AS node, count(*) AS core_deg FROM chk
     WHERE (SELECT min(CASE WHEN ds >= 3 AND dd >= 3 THEN 1 ELSE 0 END)
            FROM chk) = 1
@@ -12357,17 +11983,7 @@ def copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline. Output: (node, core_deg) for the surviving parts."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return graph.kcore(edges, 3)
 
 
@@ -12443,17 +12059,7 @@ def copurchase_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     support."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return graph.ktruss(edges, 3)
 
 
@@ -12493,17 +12099,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop class."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return graph.pagerank_fixed(edges, iters=5)
 
 
@@ -12555,12 +12151,8 @@ def copurchase_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-edge list + one grouped sum — (long, long, long) shuffles only."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
     edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
+        _copurchase_pairs(spark, sf_dir)
         .groupBy("u", "v")
         .agg(F.count("*").alias("w"))
         .filter(F.col("w") >= 2)
@@ -12623,12 +12215,8 @@ def copurchase_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     1889/2000, 18891/20000 nodes survive)."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
     edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
+        _copurchase_pairs(spark, sf_dir)
         .groupBy("u", "v")
         .agg(F.count("*").alias("w"))
     )
@@ -12637,33 +12225,16 @@ def copurchase_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kcore_incremental_maintenance",
-    oracle="WITH RECURSIVE " + _LPA_EDGES_SQL + """,
+    oracle="WITH RECURSIVE "
+    + _LPA_EDGES_SQL
+    + """,
     -- full-recompute oracle: the peel over edges built in ONE pass, plus
     -- each surviving node's total co-purchase weight from the same table.
     -- The engine builds the weighted edge table INCREMENTALLY (per-stratum
     -- pair counts merged via combine_rollups), so a green row certifies
-    -- merge == recompute for the graph-maintenance path.
-    peel AS (
-      SELECT src, dst, 0 AS it FROM sym
-      UNION ALL
-      SELECT src, dst, it + 1 FROM (
-          SELECT src, dst, it, total,
-                 sum(CASE WHEN ds >= 3 AND dd >= 3 THEN 1 ELSE 0 END)
-                   OVER () AS n_surv,
-                 ds, dd
-          FROM (
-            SELECT src, dst, it,
-                   count(*) OVER (PARTITION BY src) AS ds,
-                   count(*) OVER (PARTITION BY dst) AS dd,
-                   count(*) OVER () AS total
-            FROM peel))
-      WHERE ds >= 3 AND dd >= 3 AND n_surv < total
-    ),
-    last AS (SELECT src, dst FROM peel WHERE it = (SELECT max(it) FROM peel)),
-    chk AS (SELECT src, dst,
-                   count(*) OVER (PARTITION BY src) AS ds,
-                   count(*) OVER (PARTITION BY dst) AS dd
-            FROM last),
+    -- merge == recompute for the graph-maintenance path."""
+    + _KCORE_PEEL_SQL
+    + """,
     core AS (SELECT src AS node, count(*) AS core_deg FROM chk
              WHERE (SELECT min(CASE WHEN ds >= 3 AND dd >= 3 THEN 1 ELSE 0 END)
                     FROM chk) = 1
@@ -12699,12 +12270,8 @@ def kcore_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import agg as agg_ops
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
     partials = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
+        _copurchase_pairs(spark, sf_dir)
         # stratum = orderkey band: the SAME (u,v) pair co-occurring in
         # orders from different strata gets separate partial counts that
         # the merge must genuinely re-add (stratifying by a function of
@@ -12825,17 +12392,7 @@ def brand_parts_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-mass nodes stay present every round."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     seeds = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13").select(
         F.col("p_partkey").alias("id")
     )
@@ -12882,17 +12439,7 @@ def brand_parts_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     working set bounded by |nodes|×hops, not walks)."""
     from ..operators import graph
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     seeds = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13").select(
         F.col("p_partkey").alias("id")
     )
@@ -12901,15 +12448,95 @@ def brand_parts_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@query(
-    "embedding_dbscan_clusters",
-    oracle="""
+# The bounded embedding subset (vec_id < 300) and its L2 norms `nf`.
+_SUB300_NRM_CTES = """
     WITH RECURSIVE sub AS (
       SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
     nrm AS (SELECT vec_id, embedding,
                    sqrt(list_sum(list_transform(embedding,
                         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf
-            FROM sub),
+            FROM sub)"""
+
+# Mutual-reachability inputs of similarity.mutual_reachability_clusters
+# (k = 4): all-pairs cosine distance `dist` and 4th-NN core distance `core`.
+_MUTUAL_REACH_CORE_CTES = (
+    _SUB300_NRM_CTES
+    + ","
+    + """
+    dist AS (SELECT a.vec_id AS qa, b.vec_id AS qb,
+                    1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+                          / (a.nf * b.nf) AS d
+             FROM nrm a JOIN nrm b ON a.vec_id <> b.vec_id),
+    core AS (SELECT qa AS id, d AS cd FROM dist
+             QUALIFY row_number() OVER (PARTITION BY qa
+                                        ORDER BY d ASC, qb ASC) = 4)"""
+)
+
+# Flat eps = 0.70 mutual-reach graph and its min-id component `labels`.
+_MUTUAL_REACH_FLAT_CTES = """
+    e AS (SELECT d.qa, d.qb
+          FROM dist d JOIN core ca ON ca.id = d.qa
+                      JOIN core cb ON cb.id = d.qb
+          WHERE d.qa < d.qb AND greatest(d.d, ca.cd, cb.cd) <= 0.70),
+    edges AS (SELECT qa AS s, qb AS t FROM e UNION SELECT qb, qa FROM e),
+    reach AS (SELECT s, t FROM edges
+              UNION SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s),
+    labels AS (SELECT s AS id, least(s, min(t)) AS comp FROM reach GROUP BY s)"""
+
+# Each pair's mutual-reachability distance `mr`.
+_MUTUAL_REACH_MRE_CTE = """
+    mre AS (SELECT d.qa, d.qb, greatest(d.d, ca.cd, cb.cd) AS mr
+            FROM dist d JOIN core ca ON ca.id = d.qa
+                        JOIN core cb ON cb.id = d.qb
+            WHERE d.qa < d.qb)"""
+
+# The ANN leg: IVF candidate pairs (centroids vec_id % 25 == 0, 4 probes
+# per point) and their distances and core distances.
+_MUTUAL_REACH_ANN_CTES = """
+    cent AS (SELECT vec_id AS cent_id, embedding AS cvec, nf AS cnf
+             FROM nrm WHERE vec_id % 25 = 0),
+    probes AS (
+      SELECT vec_id, cent_id AS cell FROM (
+        SELECT vec_id, cent_id,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY pcos DESC, cent_id ASC) AS rn
+        FROM (
+          SELECT n.vec_id, cent.cent_id,
+                 list_sum(list_transform(list_zip(n.embedding, cent.cvec),
+                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+                 / (n.nf * cent.cnf) AS pcos
+          FROM nrm n CROSS JOIN cent)
+      ) WHERE rn <= 4),
+    cand AS (SELECT DISTINCT pa.vec_id AS qa, pb.vec_id AS qb
+             FROM probes pa JOIN probes pb ON pa.cell = pb.cell
+             WHERE pa.vec_id <> pb.vec_id),
+    dist_a AS (SELECT d.qa, d.qb, d.d
+               FROM dist d JOIN cand c ON c.qa = d.qa AND c.qb = d.qb),
+    core_a AS (SELECT qa AS id, d AS cd FROM dist_a
+               QUALIFY row_number() OVER (PARTITION BY qa
+                                          ORDER BY d ASC, qb ASC) = 4)"""
+
+# The hierarchy's four fixed eps levels.
+_MUTUAL_REACH_LEVELS_CTE = """
+    lv(lvl, eps) AS (VALUES (0, CAST('0.66' AS DOUBLE)),
+                            (1, CAST('0.70' AS DOUBLE)),
+                            (2, CAST('0.74' AS DOUBLE)),
+                            (3, CAST('0.78' AS DOUBLE)))"""
+
+# Min-id components of the level-composite graph `e`, keyed by node.
+_LEVEL_LABELS_CTES = """
+    edges AS (SELECT s, t FROM e UNION SELECT t, s FROM e),
+    reach AS (SELECT s, t FROM edges
+              UNION SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s),
+    labels AS (SELECT s AS node, least(s, min(t)) AS comp
+               FROM reach GROUP BY s)"""
+
+
+@query(
+    "embedding_dbscan_clusters",
+    oracle=_SUB300_NRM_CTES
+    + """,
     near AS (SELECT a.vec_id AS qa, b.vec_id AS qb
              FROM nrm a JOIN nrm b ON a.vec_id <> b.vec_id
              WHERE 1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
@@ -12963,29 +12590,10 @@ def embedding_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_mutual_reach_clusters",
-    oracle="""
-    WITH RECURSIVE sub AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-    nrm AS (SELECT vec_id, embedding,
-                   sqrt(list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf
-            FROM sub),
-    dist AS (SELECT a.vec_id AS qa, b.vec_id AS qb,
-                    1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                          / (a.nf * b.nf) AS d
-             FROM nrm a JOIN nrm b ON a.vec_id <> b.vec_id),
-    core AS (SELECT qa AS id, d AS cd FROM dist
-             QUALIFY row_number() OVER (PARTITION BY qa
-                                        ORDER BY d ASC, qb ASC) = 4),
-    e AS (SELECT d.qa, d.qb
-          FROM dist d JOIN core ca ON ca.id = d.qa
-                      JOIN core cb ON cb.id = d.qb
-          WHERE d.qa < d.qb AND greatest(d.d, ca.cd, cb.cd) <= 0.70),
-    edges AS (SELECT qa AS s, qb AS t FROM e UNION SELECT qb, qa FROM e),
-    reach AS (SELECT s, t FROM edges
-              UNION SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s),
-    labels AS (SELECT s AS id, least(s, min(t)) AS comp FROM reach GROUP BY s)
+    oracle=_MUTUAL_REACH_CORE_CTES
+    + ","
+    + _MUTUAL_REACH_FLAT_CTES
+    + """
     SELECT s.vec_id AS id,
            CAST(coalesce(l.comp, -1) AS BIGINT) AS cluster,
            round(c.cd, 6) AS core_dist
@@ -13013,51 +12621,12 @@ def embedding_mutual_reach_clusters(spark: SparkSession, sf_dir: str) -> DataFra
 
 @query(
     "embedding_mutual_reach_ann",
-    oracle="""
-    WITH RECURSIVE sub AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-    nrm AS (SELECT vec_id, embedding,
-                   sqrt(list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf
-            FROM sub),
-    dist AS (SELECT a.vec_id AS qa, b.vec_id AS qb,
-                    1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                          / (a.nf * b.nf) AS d
-             FROM nrm a JOIN nrm b ON a.vec_id <> b.vec_id),
-    core AS (SELECT qa AS id, d AS cd FROM dist
-             QUALIFY row_number() OVER (PARTITION BY qa
-                                        ORDER BY d ASC, qb ASC) = 4),
-    e AS (SELECT d.qa, d.qb
-          FROM dist d JOIN core ca ON ca.id = d.qa
-                      JOIN core cb ON cb.id = d.qb
-          WHERE d.qa < d.qb AND greatest(d.d, ca.cd, cb.cd) <= 0.70),
-    edges AS (SELECT qa AS s, qb AS t FROM e UNION SELECT qb, qa FROM e),
-    reach AS (SELECT s, t FROM edges
-              UNION SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s),
-    labels AS (SELECT s AS id, least(s, min(t)) AS comp FROM reach GROUP BY s),
-    cent AS (SELECT vec_id AS cent_id, embedding AS cvec, nf AS cnf
-             FROM nrm WHERE vec_id % 25 = 0),
-    probes AS (
-      SELECT vec_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY pcos DESC, cent_id ASC) AS rn
-        FROM (
-          SELECT n.vec_id, cent.cent_id,
-                 list_sum(list_transform(list_zip(n.embedding, cent.cvec),
-                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                 / (n.nf * cent.cnf) AS pcos
-          FROM nrm n CROSS JOIN cent)
-      ) WHERE rn <= 4),
-    cand AS (SELECT DISTINCT pa.vec_id AS qa, pb.vec_id AS qb
-             FROM probes pa JOIN probes pb ON pa.cell = pb.cell
-             WHERE pa.vec_id <> pb.vec_id),
-    dist_a AS (SELECT d.qa, d.qb, d.d
-               FROM dist d JOIN cand c ON c.qa = d.qa AND c.qb = d.qb),
-    core_a AS (SELECT qa AS id, d AS cd FROM dist_a
-               QUALIFY row_number() OVER (PARTITION BY qa
-                                          ORDER BY d ASC, qb ASC) = 4),
+    oracle=_MUTUAL_REACH_CORE_CTES
+    + ","
+    + _MUTUAL_REACH_FLAT_CTES
+    + ","
+    + _MUTUAL_REACH_ANN_CTES
+    + """,
     ea AS (SELECT d.qa, d.qb
            FROM dist_a d JOIN core_a ca ON ca.id = d.qa
                          JOIN core_a cb ON cb.id = d.qb
@@ -13166,37 +12735,17 @@ def embedding_mutual_reach_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_mutual_reach_hierarchy",
-    oracle="""
-    WITH RECURSIVE sub AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-    nrm AS (SELECT vec_id, embedding,
-                   sqrt(list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf
-            FROM sub),
-    dist AS (SELECT a.vec_id AS qa, b.vec_id AS qb,
-                    1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                          / (a.nf * b.nf) AS d
-             FROM nrm a JOIN nrm b ON a.vec_id <> b.vec_id),
-    core AS (SELECT qa AS id, d AS cd FROM dist
-             QUALIFY row_number() OVER (PARTITION BY qa
-                                        ORDER BY d ASC, qb ASC) = 4),
-    mre AS (SELECT d.qa, d.qb, greatest(d.d, ca.cd, cb.cd) AS mr
-            FROM dist d JOIN core ca ON ca.id = d.qa
-                        JOIN core cb ON cb.id = d.qb
-            WHERE d.qa < d.qb),
-    lv(lvl, eps) AS (VALUES (0, CAST('0.66' AS DOUBLE)),
-                            (1, CAST('0.70' AS DOUBLE)),
-                            (2, CAST('0.74' AS DOUBLE)),
-                            (3, CAST('0.78' AS DOUBLE))),
+    oracle=_MUTUAL_REACH_CORE_CTES
+    + ","
+    + _MUTUAL_REACH_MRE_CTE
+    + ","
+    + _MUTUAL_REACH_LEVELS_CTE
+    + """,
     e AS (SELECT l.lvl * 4294967296 + m.qa AS s,
                  l.lvl * 4294967296 + m.qb AS t
-          FROM mre m JOIN lv l ON m.mr <= l.eps),
-    edges AS (SELECT s, t FROM e UNION SELECT t, s FROM e),
-    reach AS (SELECT s, t FROM edges
-              UNION SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s),
-    labels AS (SELECT s AS node, least(s, min(t)) AS comp
-               FROM reach GROUP BY s)
+          FROM mre m JOIN lv l ON m.mr <= l.eps),"""
+    + _LEVEL_LABELS_CTES
+    + """
     SELECT s.vec_id AS id, l.eps,
            CAST(coalesce(lab.comp % 4294967296, -1) AS BIGINT) AS cluster
     FROM sub s CROSS JOIN lv l
@@ -13232,67 +12781,27 @@ def embedding_mutual_reach_hierarchy(spark: SparkSession, sf_dir: str) -> DataFr
 
 @query(
     "embedding_mutual_reach_hierarchy_ann",
-    oracle="""
-    WITH RECURSIVE sub AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-    nrm AS (SELECT vec_id, embedding,
-                   sqrt(list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf
-            FROM sub),
-    dist AS (SELECT a.vec_id AS qa, b.vec_id AS qb,
-                    1.0 - list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                          / (a.nf * b.nf) AS d
-             FROM nrm a JOIN nrm b ON a.vec_id <> b.vec_id),
-    core AS (SELECT qa AS id, d AS cd FROM dist
-             QUALIFY row_number() OVER (PARTITION BY qa
-                                        ORDER BY d ASC, qb ASC) = 4),
-    mre AS (SELECT d.qa, d.qb, greatest(d.d, ca.cd, cb.cd) AS mr
-            FROM dist d JOIN core ca ON ca.id = d.qa
-                        JOIN core cb ON cb.id = d.qb
-            WHERE d.qa < d.qb),
-    cent AS (SELECT vec_id AS cent_id, embedding AS cvec, nf AS cnf
-             FROM nrm WHERE vec_id % 25 = 0),
-    probes AS (
-      SELECT vec_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY pcos DESC, cent_id ASC) AS rn
-        FROM (
-          SELECT n.vec_id, cent.cent_id,
-                 list_sum(list_transform(list_zip(n.embedding, cent.cvec),
-                          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                 / (n.nf * cent.cnf) AS pcos
-          FROM nrm n CROSS JOIN cent)
-      ) WHERE rn <= 4),
-    cand AS (SELECT DISTINCT pa.vec_id AS qa, pb.vec_id AS qb
-             FROM probes pa JOIN probes pb ON pa.cell = pb.cell
-             WHERE pa.vec_id <> pb.vec_id),
-    dist_a AS (SELECT d.qa, d.qb, d.d
-               FROM dist d JOIN cand c ON c.qa = d.qa AND c.qb = d.qb),
-    core_a AS (SELECT qa AS id, d AS cd FROM dist_a
-               QUALIFY row_number() OVER (PARTITION BY qa
-                                          ORDER BY d ASC, qb ASC) = 4),
+    oracle=_MUTUAL_REACH_CORE_CTES
+    + ","
+    + _MUTUAL_REACH_MRE_CTE
+    + ","
+    + _MUTUAL_REACH_ANN_CTES
+    + """,
     mre_a AS (SELECT d.qa, d.qb, greatest(d.d, ca.cd, cb.cd) AS mr
               FROM dist_a d JOIN core_a ca ON ca.id = d.qa
                             JOIN core_a cb ON cb.id = d.qb
-              WHERE d.qa < d.qb),
-    lv(lvl, eps) AS (VALUES (0, CAST('0.66' AS DOUBLE)),
-                            (1, CAST('0.70' AS DOUBLE)),
-                            (2, CAST('0.74' AS DOUBLE)),
-                            (3, CAST('0.78' AS DOUBLE))),
+              WHERE d.qa < d.qb),"""
+    + _MUTUAL_REACH_LEVELS_CTE
+    + """,
     e AS (SELECT l.lvl * 4294967296 + m.qa AS s,
                  l.lvl * 4294967296 + m.qb AS t
           FROM mre m JOIN lv l ON m.mr <= l.eps
           UNION ALL
           SELECT (4 + l.lvl) * 4294967296 + m.qa,
                  (4 + l.lvl) * 4294967296 + m.qb
-          FROM mre_a m JOIN lv l ON m.mr <= l.eps),
-    edges AS (SELECT s, t FROM e UNION SELECT t, s FROM e),
-    reach AS (SELECT s, t FROM edges
-              UNION SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s),
-    labels AS (SELECT s AS node, least(s, min(t)) AS comp
-               FROM reach GROUP BY s),
+          FROM mre_a m JOIN lv l ON m.mr <= l.eps),"""
+    + _LEVEL_LABELS_CTES
+    + """,
     per AS (
       SELECT l.eps,
              CAST(coalesce(le.comp % 4294967296, -1) AS BIGINT) AS ce,
@@ -13803,26 +13312,11 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE quality >= 0.5),
     w1 AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY sha256(text)),
     d1 AS (SELECT q.* FROM q WHERE doc_id IN (SELECT doc_id FROM w1)),
-    docs2 AS (SELECT doc_id, string_split_regex(text, '\s+') AS w FROM d1),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                           for i in range(1, len(w) - 1)])) AS s
-      FROM docs2 WHERE len(w) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM p0
-      JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-      WHERE shared * 1.0 / (sa.sz + sb.sz - shared) >= 0.5),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (SELECT s, d FROM edges
-              UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-    labels AS (
-      SELECT s AS doc_id, least(s, min(d)) AS component_id
-      FROM reach GROUP BY s),
+    docs2 AS (SELECT doc_id, string_split_regex(text, '\s+') AS w FROM d1),"""
+    + _jaccard_reach_ctes("docs2")
+    + ","
+    + _NEARDUP_LABELS_CTE
+    + r""",
     d2 AS (SELECT * FROM d1
            WHERE doc_id NOT IN (SELECT doc_id FROM labels
                                 WHERE doc_id <> component_id)),
@@ -13994,6 +13488,19 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _decimal_sum(c: F.Column, scale: int) -> F.Column:
+    """sum(c) accumulated exactly as decimal(38, scale), returned as double."""
+    return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
+
+
+def _pearson_r(n, sxy, sx, sy, sxx, syy) -> F.Column:
+    """Pearson r from count and power sums, rounded to 6 places."""
+    return F.round(
+        (n * sxy - sx * sy) / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)),
+        6,
+    )
+
+
 @query(
     "discount_quantity_elasticity",
     oracle="""
@@ -14032,17 +13539,14 @@ def discount_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
 
-    def _ds(c, scale: int) -> F.Column:
-        return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
-
     x, y = F.col("x"), F.col("y")
     s = j.groupBy("p_brand").agg(
         F.count("*").alias("n"),
-        _ds(x, 2).alias("sx"),
-        _ds(y, 2).alias("sy"),
-        _ds(x * x, 4).alias("sxx"),
-        _ds(y * y, 4).alias("syy"),
-        _ds(x * y, 4).alias("sxy"),
+        _decimal_sum(x, 2).alias("sx"),
+        _decimal_sum(y, 2).alias("sy"),
+        _decimal_sum(x * x, 4).alias("sxx"),
+        _decimal_sum(y * y, 4).alias("syy"),
+        _decimal_sum(x * y, 4).alias("sxy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
@@ -14103,44 +13607,33 @@ def lineitem_metric_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     q, p, d = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
 
-    def _ds(c, scale: int = 4) -> F.Column:
-        return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
-
     s = li.agg(
         F.count("*").alias("n"),
-        _ds(q).alias("sq"),
-        _ds(p).alias("sp"),
-        _ds(d).alias("sd"),
-        _ds(q * q).alias("sqq"),
-        _ds(p * p).alias("spp"),
-        _ds(d * d, 6).alias("sdd"),
-        _ds(q * p).alias("sqp"),
-        _ds(q * d).alias("sqd"),
-        _ds(p * d).alias("spd"),
+        _decimal_sum(q, 4).alias("sq"),
+        _decimal_sum(p, 4).alias("sp"),
+        _decimal_sum(d, 4).alias("sd"),
+        _decimal_sum(q * q, 4).alias("sqq"),
+        _decimal_sum(p * p, 4).alias("spp"),
+        _decimal_sum(d * d, 6).alias("sdd"),
+        _decimal_sum(q * p, 4).alias("sqp"),
+        _decimal_sum(q * d, 4).alias("sqd"),
+        _decimal_sum(p * d, 4).alias("spd"),
     )
     n = F.col("n")
-
-    def _r(sxy, sx, sy, sxx, syy) -> F.Column:
-        return F.round(
-            (n * sxy - sx * sy)
-            / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)),
-            6,
-        )
-
     sq, sp, sd = F.col("sq"), F.col("sp"), F.col("sd")
     sqq, spp, sdd = F.col("sqq"), F.col("spp"), F.col("sdd")
     pairs = F.array(
         F.struct(
             F.lit("quantity~extendedprice").alias("pair"),
-            _r(F.col("sqp"), sq, sp, sqq, spp).alias("pearson_r"),
+            _pearson_r(n, F.col("sqp"), sq, sp, sqq, spp).alias("pearson_r"),
         ),
         F.struct(
             F.lit("quantity~discount").alias("pair"),
-            _r(F.col("sqd"), sq, sd, sqq, sdd).alias("pearson_r"),
+            _pearson_r(n, F.col("sqd"), sq, sd, sqq, sdd).alias("pearson_r"),
         ),
         F.struct(
             F.lit("extendedprice~discount").alias("pair"),
-            _r(F.col("spd"), sp, sd, spp, sdd).alias("pearson_r"),
+            _pearson_r(n, F.col("spd"), sp, sd, spp, sdd).alias("pearson_r"),
         ),
     )
     return s.select(n.cast("long").alias("n"), F.explode(pairs).alias("pr")).select(
@@ -14324,43 +13817,32 @@ def lineitem_spearman_correlations(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
 
-    def _ds(c, scale: int) -> F.Column:
-        return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
-
     x, y, z = F.col("x"), F.col("y"), F.col("z")
     s = j.agg(
         F.count("*").alias("n"),
-        _ds(x, 2).alias("sx"),
-        _ds(y, 2).alias("sy"),
-        _ds(z, 2).alias("sz"),
-        _ds(x * x, 4).alias("sxx"),
-        _ds(y * y, 4).alias("syy"),
-        _ds(z * z, 4).alias("szz"),
-        _ds(x * y, 4).alias("sxy"),
-        _ds(x * z, 4).alias("sxz"),
-        _ds(y * z, 4).alias("syz"),
+        _decimal_sum(x, 2).alias("sx"),
+        _decimal_sum(y, 2).alias("sy"),
+        _decimal_sum(z, 2).alias("sz"),
+        _decimal_sum(x * x, 4).alias("sxx"),
+        _decimal_sum(y * y, 4).alias("syy"),
+        _decimal_sum(z * z, 4).alias("szz"),
+        _decimal_sum(x * y, 4).alias("sxy"),
+        _decimal_sum(x * z, 4).alias("sxz"),
+        _decimal_sum(y * z, 4).alias("syz"),
     )
     n = F.col("n")
-
-    def _r(sxy, sx, sy, sxx, syy) -> F.Column:
-        return F.round(
-            (n * sxy - sx * sy)
-            / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)),
-            6,
-        )
-
     pairs = F.array(
         F.struct(
             F.lit("quantity~extendedprice").alias("pair"),
-            _r(F.col("sxy"), F.col("sx"), F.col("sy"), F.col("sxx"), F.col("syy")).alias("spearman_rho"),
+            _pearson_r(n, F.col("sxy"), F.col("sx"), F.col("sy"), F.col("sxx"), F.col("syy")).alias("spearman_rho"),
         ),
         F.struct(
             F.lit("quantity~discount").alias("pair"),
-            _r(F.col("sxz"), F.col("sx"), F.col("sz"), F.col("sxx"), F.col("szz")).alias("spearman_rho"),
+            _pearson_r(n, F.col("sxz"), F.col("sx"), F.col("sz"), F.col("sxx"), F.col("szz")).alias("spearman_rho"),
         ),
         F.struct(
             F.lit("extendedprice~discount").alias("pair"),
-            _r(F.col("syz"), F.col("sy"), F.col("sz"), F.col("syy"), F.col("szz")).alias("spearman_rho"),
+            _pearson_r(n, F.col("syz"), F.col("sy"), F.col("sz"), F.col("syy"), F.col("szz")).alias("spearman_rho"),
         ),
     )
     return s.select(n.cast("long").alias("n"), F.explode(pairs).alias("pr")).select(
@@ -14859,17 +14341,7 @@ def copurchase_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFra
     over the edge list — Pearson correlation of endpoint degrees from
     three exact integer sums; one final double expression both engines
     share. Reuses the triangle query's edge/degree tables."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     deg = (
         edges.select(F.col("u").alias("n"))
         .unionAll(edges.select(F.col("v").alias("n")))
@@ -14898,20 +14370,7 @@ def copurchase_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@query(
-    "unpivot_udtf_twin",
-    oracle="""
-    SELECT l_returnflag, measure,
-           round(CAST(sum(CAST(val AS DECIMAL(30,4))) AS DOUBLE), 2) AS total
-    FROM (
-      SELECT l_returnflag, 'quantity' AS measure, l_quantity AS val FROM lineitem
-      UNION ALL
-      SELECT l_returnflag, 'extendedprice', l_extendedprice FROM lineitem
-      UNION ALL
-      SELECT l_returnflag, 'discount', l_discount FROM lineitem)
-    GROUP BY 1, 2
-    """,
-)
+@query("unpivot_udtf_twin", oracle=_UNPIVOT_ORACLE)
 def unpivot_udtf_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The melt expressed through the POLYMORPHIC UDTF
     (``flatten.melt_numeric_udtf`` — output schema decided by
@@ -15029,9 +14488,8 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "truncation_rank_stability",
-    oracle="""
+# The SQL replay of _truncation_top20: full-dim (r1) and 32-dim (r2) top-20.
+_TRUNCATION_TOP20_CTES = """
     WITH b AS (
       SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf,
@@ -15048,41 +14506,13 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1 AS (SELECT doc_id, row_number() OVER (ORDER BY cf DESC, doc_id ASC) AS rank1
            FROM cos QUALIFY rank1 <= 20),
     r2 AS (SELECT doc_id, row_number() OVER (ORDER BY ch DESC, doc_id ASC) AS rank2
-           FROM cos QUALIFY rank2 <= 20),
-    common AS (
-      SELECT r1.doc_id,
-             row_number() OVER (ORDER BY r1.rank1 ASC) AS ra,
-             row_number() OVER (ORDER BY r2.rank2 ASC) AS rb
-      FROM r1 JOIN r2 ON r1.doc_id = r2.doc_id),
-    sp AS (SELECT count(*) AS m,
-                  CAST(sum((ra - rb) * (ra - rb)) AS BIGINT) AS sd2
-           FROM common),
-    kd AS (SELECT CAST(sum(CASE WHEN (a.ra - b.ra) * (a.rb - b.rb) > 0
-                               THEN 1 ELSE 0 END) AS BIGINT) AS conc,
-                  CAST(sum(CASE WHEN (a.ra - b.ra) * (a.rb - b.rb) < 0
-                               THEN 1 ELSE 0 END) AS BIGINT) AS disc
-           FROM common a JOIN common b ON a.doc_id < b.doc_id)
-    SELECT CAST(sp.m AS BIGINT) AS n_common,
-           CASE WHEN sp.m >= 2 THEN
-             round(1.0 - 6.0 * sp.sd2 / (sp.m * (sp.m * sp.m - 1.0)), 6)
-           END AS spearman_rho,
-           CASE WHEN sp.m >= 2 THEN
-             round((kd.conc - kd.disc) * 2.0 / (sp.m * (sp.m - 1.0)), 6)
-           END AS kendall_tau
-    FROM sp CROSS JOIN kd
-    """,
-)
-def truncation_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Does Matryoshka truncation PRESERVE THE ORDER, not just the values?
-    Spearman rho and Kendall tau between the full-dimension and
-    half-dimension cosine top-20 for a probe — the rank-stability
-    companion to ``embedding_truncation_fidelity``'s value-drift audit
-    (an index can tolerate value drift but not order churn). Both
-    statistics are ALL-INTEGER until one final division (Sum d-squared for
-    rho; concordant-discordant pair counts for tau over the <=190 common
-    pairs), so there is no float boundary anywhere; the pair self-join
-    runs on <=20 rows. The common subset is re-ranked 1..m so the
-    statistics stay well-defined."""
+           FROM cos QUALIFY rank2 <= 20)"""
+
+
+def _truncation_top20(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The cosine top-20 of probe vec_id 0 over the other embeddings, at full
+    dimension (doc_id, rank1) and truncated to the first 32 dims
+    (doc_id, rank2); doc_id breaks ties."""
     from pyspark.sql import Window
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -15125,6 +14555,50 @@ def truncation_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank2") <= 20)
         .select("doc_id", "rank2")
     )
+    return r1, r2
+
+
+@query(
+    "truncation_rank_stability",
+    oracle=_TRUNCATION_TOP20_CTES
+    + """,
+    common AS (
+      SELECT r1.doc_id,
+             row_number() OVER (ORDER BY r1.rank1 ASC) AS ra,
+             row_number() OVER (ORDER BY r2.rank2 ASC) AS rb
+      FROM r1 JOIN r2 ON r1.doc_id = r2.doc_id),
+    sp AS (SELECT count(*) AS m,
+                  CAST(sum((ra - rb) * (ra - rb)) AS BIGINT) AS sd2
+           FROM common),
+    kd AS (SELECT CAST(sum(CASE WHEN (a.ra - b.ra) * (a.rb - b.rb) > 0
+                               THEN 1 ELSE 0 END) AS BIGINT) AS conc,
+                  CAST(sum(CASE WHEN (a.ra - b.ra) * (a.rb - b.rb) < 0
+                               THEN 1 ELSE 0 END) AS BIGINT) AS disc
+           FROM common a JOIN common b ON a.doc_id < b.doc_id)
+    SELECT CAST(sp.m AS BIGINT) AS n_common,
+           CASE WHEN sp.m >= 2 THEN
+             round(1.0 - 6.0 * sp.sd2 / (sp.m * (sp.m * sp.m - 1.0)), 6)
+           END AS spearman_rho,
+           CASE WHEN sp.m >= 2 THEN
+             round((kd.conc - kd.disc) * 2.0 / (sp.m * (sp.m - 1.0)), 6)
+           END AS kendall_tau
+    FROM sp CROSS JOIN kd
+    """,
+)
+def truncation_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Does Matryoshka truncation PRESERVE THE ORDER, not just the values?
+    Spearman rho and Kendall tau between the full-dimension and
+    half-dimension cosine top-20 for a probe — the rank-stability
+    companion to ``embedding_truncation_fidelity``'s value-drift audit
+    (an index can tolerate value drift but not order churn). Both
+    statistics are ALL-INTEGER until one final division (Sum d-squared for
+    rho; concordant-discordant pair counts for tau over the <=190 common
+    pairs), so there is no float boundary anywhere; the pair self-join
+    runs on <=20 rows. The common subset is re-ranked 1..m so the
+    statistics stay well-defined."""
+    from pyspark.sql import Window
+
+    r1, r2 = _truncation_top20(spark, sf_dir)
     common = (
         r1.join(r2, "doc_id")
         .withColumn("ra", F.row_number().over(Window.orderBy(F.col("rank1").asc())))
@@ -15962,15 +15436,12 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "post",
     )
 
-    def _ps(col_expr) -> F.Column:
-        return F.sum(col_expr.cast("decimal(38,6)")).cast("double")
-
     g = per_user.agg(
         F.count("*").alias("n"),
-        _ps(F.col("pre")).alias("sp"),
-        _ps(F.col("post")).alias("so"),
-        _ps(F.col("pre") * F.col("pre")).alias("spp"),
-        _ps(F.col("pre") * F.col("post")).alias("spo"),
+        _decimal_sum(F.col("pre"), 6).alias("sp"),
+        _decimal_sum(F.col("post"), 6).alias("so"),
+        _decimal_sum(F.col("pre") * F.col("pre"), 6).alias("spp"),
+        _decimal_sum(F.col("pre") * F.col("post"), 6).alias("spo"),
     )
     th = g.select(
         (F.col("sp") / F.col("n")).alias("mp"),
@@ -15981,11 +15452,11 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = per_user.groupBy("arm").agg(
         F.count("*").alias("n"),
-        _ps(F.col("pre")).alias("sp"),
-        _ps(F.col("post")).alias("so"),
-        _ps(F.col("pre") * F.col("pre")).alias("spp"),
-        _ps(F.col("post") * F.col("post")).alias("soo"),
-        _ps(F.col("pre") * F.col("post")).alias("spo"),
+        _decimal_sum(F.col("pre"), 6).alias("sp"),
+        _decimal_sum(F.col("post"), 6).alias("so"),
+        _decimal_sum(F.col("pre") * F.col("pre"), 6).alias("spp"),
+        _decimal_sum(F.col("post") * F.col("post"), 6).alias("soo"),
+        _decimal_sum(F.col("pre") * F.col("post"), 6).alias("spo"),
     )
     w = s.agg(
         *[
@@ -16399,18 +15870,8 @@ def time_to_purchase_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "peak_concurrent_sessions",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-    runs AS (
-      SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                                    ROWS UNBOUNDED PRECEDING) AS run
-      FROM flagged),
+    oracle=_SESSION_RUNS_CTES
+    + """,
     sessions AS (
       SELECT user_id * 1000000 + run AS sid, min(ts) AS s, max(ts) AS e
       FROM runs GROUP BY user_id, run),
@@ -16440,21 +15901,7 @@ def peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path is per-day partitioned sweeps with carried-in offsets."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    # fractional-second gap, matching the oracle's epoch() (ADVICE r5 —
-    # see sessionization)
-    gap = F.col("ts").cast("timestamp").cast("double") - F.lag("ts").over(w).cast(
-        "timestamp"
-    ).cast("double")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(F.lag("ts").over(w).isNull() | (gap > 1800), 1).otherwise(0),
-    )
-    runs = flagged.withColumn(
-        "run",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    runs = _session_runs(spark, sf_dir)
     sessions = (
         runs.groupBy("user_id", "run")
         .agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
@@ -16480,24 +15927,8 @@ def peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "truncation_rank_rbo",
-    oracle="""
-    WITH b AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nf,
-             sqrt(list_sum(list_transform(embedding[1:32], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nh
-      FROM embeddings),
-    q AS (SELECT * FROM b WHERE vec_id = 0),
-    cos AS (
-      SELECT c.vec_id AS doc_id,
-             list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / (q.nf * c.nf) AS cf,
-             list_sum(list_transform(list_zip(q.embedding[1:32], c.embedding[1:32]),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / (q.nh * c.nh) AS ch
-      FROM q JOIN b c ON c.vec_id <> 0),
-    r1 AS (SELECT doc_id, row_number() OVER (ORDER BY cf DESC, doc_id ASC) AS rank1
-           FROM cos QUALIFY rank1 <= 20),
-    r2 AS (SELECT doc_id, row_number() OVER (ORDER BY ch DESC, doc_id ASC) AS rank2
-           FROM cos QUALIFY rank2 <= 20),
+    oracle=_TRUNCATION_TOP20_CTES
+    + """,
     common AS (SELECT greatest(r1.rank1, r2.rank2) AS m
                FROM r1 JOIN r2 ON r1.doc_id = r2.doc_id),
     depths AS (SELECT unnest(range(1, 21)) AS d),
@@ -16524,48 +15955,7 @@ def truncation_rank_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from each common doc's max(rank1, rank2) — integers
     throughout; the 20 weighted terms round into a decimal sum. All work
     after the two scoring passes runs on ≤20-row tables."""
-    from pyspark.sql import Window
-
-    emb = _t(spark, sf_dir, "embeddings")
-    half = F.slice(F.col("embedding"), 1, 32)
-    b = emb.select(
-        "vec_id",
-        "embedding",
-        half.alias("__hv"),
-        similarity.l2_norm("embedding").alias("nf"),
-        similarity.l2_norm(half).alias("nh"),
-    )
-    q = b.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("__qf"),
-        F.col("__hv").alias("__qh"),
-        F.col("nf").alias("__qnf"),
-        F.col("nh").alias("__qnh"),
-    )
-    cos = b.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q)).select(
-        F.col("vec_id").alias("doc_id"),
-        (similarity.dot("__qf", "embedding") / (F.col("__qnf") * F.col("nf"))).alias("cf"),
-        (similarity.dot("__qh", "__hv") / (F.col("__qnh") * F.col("nh"))).alias("ch"),
-    )
-    r1 = (
-        cos.withColumn(
-            "rank1",
-            F.row_number().over(
-                Window.orderBy(F.col("cf").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rank1") <= 20)
-        .select("doc_id", "rank1")
-    )
-    r2 = (
-        cos.withColumn(
-            "rank2",
-            F.row_number().over(
-                Window.orderBy(F.col("ch").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rank2") <= 20)
-        .select("doc_id", "rank2")
-    )
+    r1, r2 = _truncation_top20(spark, sf_dir)
     common = r1.join(r2, "doc_id").select(
         F.greatest(F.col("rank1"), F.col("rank2")).alias("m")
     )
@@ -16806,9 +16196,10 @@ def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "cross_doc_substring_dedup",
-    oracle=r"""
+# The ExactSubstr span chain shared by the audit, apply and keep-one
+# oracles: tokenize, winnowed k=5 anchors, context-order partners,
+# extend-and-verify, and the island merge into maximal extents `merged`.
+_EXACT_SUBSTR_MERGED = r"""
     WITH w AS MATERIALIZED (
       SELECT doc_id AS id,
              CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
@@ -16874,7 +16265,25 @@ def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  ROWS BETWEEN UNBOUNDED PRECEDING
                                  AND 1 PRECEDING) AS pe
             FROM spans)),
-    merged AS (SELECT id, grp, min(ss) AS ss, max(se) AS se FROM isl GROUP BY 1, 2),
+    merged AS (SELECT id, grp, min(ss) AS ss, max(se) AS se FROM isl GROUP BY 1, 2)"""
+
+# Every token of `w` that no extent in `cover` spans, as `kept`: the scrub
+# shared by the apply and keep-one oracles.
+_EXACT_SUBSTR_KEPT = """
+    FROM (
+      SELECT w.id, w.ws,
+             [w.ws[i+1] FOR i IN range(0, len(w.ws))
+              IF list_count(list_filter(
+                   coalesce(cover.cov, CAST([] AS STRUCT(ss INT, se INT)[])),
+                   c -> i BETWEEN c.ss AND c.se)) = 0] AS kept
+      FROM w LEFT JOIN cover ON cover.id = w.id) w
+    """
+
+
+@query(
+    "cross_doc_substring_dedup",
+    oracle=_EXACT_SUBSTR_MERGED
+    + r""",
     per AS (SELECT id, count(*) AS nsp, sum(se - ss + 1) AS dup,
                    max(se - ss + 1) AS mx
             FROM merged GROUP BY 1)
@@ -16912,88 +16321,16 @@ def cross_doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cross_doc_substring_apply",
-    oracle=r"""
-
-    WITH w AS MATERIALIZED (
-      SELECT doc_id AS id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(lower(trim(text)), '\s+') END AS ws
-      FROM documents),
-    meta AS (SELECT id, len(ws) AS n FROM w),
-    g AS (SELECT id, ws, unnest(range(0, len(ws) - 4)) AS p
-          FROM w WHERE len(ws) >= 5),
-    h AS (SELECT id, p,
-                 substr(md5(list_aggregate(ws[p+1:p+5], 'string_agg', ' ')), 1, 16)
-                   AS hh
-          FROM g),
-    a0 AS (SELECT id, p,
-                  min(struct_pack(h := hh, p := p))
-                    OVER (PARTITION BY id ORDER BY p
-                          ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS anc
-           FROM h),
-    anch AS MATERIALIZED (SELECT DISTINCT id, (anc).p AS ap FROM a0 WHERE p >= 3),
-    occ AS MATERIALIZED (SELECT anch.id, ap,
-                   list_aggregate(ws[ap+1:ap+5], 'string_agg', ' ') AS gr,
-                   list_aggregate(ws[ap+1:ap+30], 'string_agg', ' ') AS ctx
-            FROM anch JOIN w ON w.id = anch.id),
-    nb AS (SELECT id, ap, gr,
-                  lag(struct_pack(i := id, a := ap)) OVER wg AS p1,
-                  lead(struct_pack(i := id, a := ap)) OVER wg AS p2
-           FROM occ WINDOW wg AS (PARTITION BY gr ORDER BY ctx, id, ap)),
-    g1 AS MATERIALIZED (SELECT gr, min(struct_pack(i := id, a := ap)) AS o1 FROM occ GROUP BY gr),
-    g2 AS (SELECT occ.gr, min(struct_pack(i := occ.id, a := occ.ap)) AS o2
-           FROM occ JOIN g1 ON g1.gr = occ.gr
-           WHERE occ.id <> (g1.o1).i GROUP BY occ.gr),
-    cand AS MATERIALIZED (
-      SELECT DISTINCT ia, pa, ib, pb FROM (
-        SELECT id AS ia, ap AS pa, (p1).i AS ib, (p1).a AS pb
-        FROM nb WHERE p1 IS NOT NULL
-        UNION ALL
-        SELECT id, ap, (p2).i, (p2).a FROM nb WHERE p2 IS NOT NULL
-        UNION ALL
-        SELECT o.id, o.ap,
-               CASE WHEN o.id <> (g1.o1).i THEN (g1.o1).i ELSE (g2.o2).i END,
-               CASE WHEN o.id <> (g1.o1).i THEN (g1.o1).a ELSE (g2.o2).a END
-        FROM occ o JOIN g1 USING (gr) LEFT JOIN g2 USING (gr))
-      WHERE ib IS NOT NULL AND ib <> ia),
-    ex AS MATERIALIZED (
-      SELECT ia, pa,
-             coalesce(list_min([i FOR i IN
-                                range(1, least(A.n - (pa+5), B.n - (pb+5)) + 1)
-                                IF A.ws[pa+5+i] <> B.ws[pb+5+i]]) - 1,
-                      greatest(least(A.n - (pa+5), B.n - (pb+5)), 0)) AS re,
-             coalesce(list_min([i FOR i IN range(1, least(pa, pb) + 1)
-                                IF A.ws[pa-i+1] <> B.ws[pb-i+1]]) - 1,
-                      least(pa, pb)) AS le
-      FROM cand
-      JOIN (SELECT id, ws, len(ws) AS n FROM w) A ON A.id = ia
-      JOIN (SELECT id, ws, len(ws) AS n FROM w) B ON B.id = ib),
-    spans AS MATERIALIZED (SELECT DISTINCT ia AS id, pa - le AS ss, pa + 4 + re AS se
-              FROM ex WHERE 5 + le + re >= 15),
-    isl AS (
-      SELECT id, ss, se,
-             sum(CASE WHEN ss > coalesce(pe, -2) + 1 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY id ORDER BY ss, se) AS grp
-      FROM (SELECT id, ss, se,
-                   max(se) OVER (PARTITION BY id ORDER BY ss, se
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING) AS pe
-            FROM spans)),
-    merged AS (SELECT id, grp, min(ss) AS ss, max(se) AS se FROM isl GROUP BY 1, 2),
+    oracle=_EXACT_SUBSTR_MERGED
+    + r""",
     cover AS (
       SELECT id, list(struct_pack(ss := ss, se := se)) AS cov
       FROM merged GROUP BY 1)
     SELECT w.id AS doc_id, CAST(len(w.ws) AS BIGINT) AS n_tokens,
            CAST(len(kept) AS BIGINT) AS kept_tokens,
            coalesce(list_aggregate(kept, 'string_agg', ' '), '') AS cleaned_text
-    FROM (
-      SELECT w.id, w.ws,
-             [w.ws[i+1] FOR i IN range(0, len(w.ws))
-              IF list_count(list_filter(
-                   coalesce(cover.cov, CAST([] AS STRUCT(ss INT, se INT)[])),
-                   c -> i BETWEEN c.ss AND c.se)) = 0] AS kept
-      FROM w LEFT JOIN cover ON cover.id = w.id) w
-    """,
+    """
+    + _EXACT_SUBSTR_KEPT,
 )
 def cross_doc_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPLY leg of the ExactSubstr pass (``dedup.cross_doc_substring_apply``
@@ -17015,73 +16352,8 @@ def cross_doc_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cross_doc_substring_keep_one",
-    oracle=r"""
-    WITH w AS MATERIALIZED (
-      SELECT doc_id AS id,
-             CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(lower(trim(text)), '\s+') END AS ws
-      FROM documents),
-    meta AS (SELECT id, len(ws) AS n FROM w),
-    g AS (SELECT id, ws, unnest(range(0, len(ws) - 4)) AS p
-          FROM w WHERE len(ws) >= 5),
-    h AS (SELECT id, p,
-                 substr(md5(list_aggregate(ws[p+1:p+5], 'string_agg', ' ')), 1, 16)
-                   AS hh
-          FROM g),
-    a0 AS (SELECT id, p,
-                  min(struct_pack(h := hh, p := p))
-                    OVER (PARTITION BY id ORDER BY p
-                          ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS anc
-           FROM h),
-    anch AS MATERIALIZED (SELECT DISTINCT id, (anc).p AS ap FROM a0 WHERE p >= 3),
-    occ AS MATERIALIZED (SELECT anch.id, ap,
-                   list_aggregate(ws[ap+1:ap+5], 'string_agg', ' ') AS gr,
-                   list_aggregate(ws[ap+1:ap+30], 'string_agg', ' ') AS ctx
-            FROM anch JOIN w ON w.id = anch.id),
-    nb AS (SELECT id, ap, gr,
-                  lag(struct_pack(i := id, a := ap)) OVER wg AS p1,
-                  lead(struct_pack(i := id, a := ap)) OVER wg AS p2
-           FROM occ WINDOW wg AS (PARTITION BY gr ORDER BY ctx, id, ap)),
-    g1 AS MATERIALIZED (SELECT gr, min(struct_pack(i := id, a := ap)) AS o1 FROM occ GROUP BY gr),
-    g2 AS (SELECT occ.gr, min(struct_pack(i := occ.id, a := occ.ap)) AS o2
-           FROM occ JOIN g1 ON g1.gr = occ.gr
-           WHERE occ.id <> (g1.o1).i GROUP BY occ.gr),
-    cand AS MATERIALIZED (
-      SELECT DISTINCT ia, pa, ib, pb FROM (
-        SELECT id AS ia, ap AS pa, (p1).i AS ib, (p1).a AS pb
-        FROM nb WHERE p1 IS NOT NULL
-        UNION ALL
-        SELECT id, ap, (p2).i, (p2).a FROM nb WHERE p2 IS NOT NULL
-        UNION ALL
-        SELECT o.id, o.ap,
-               CASE WHEN o.id <> (g1.o1).i THEN (g1.o1).i ELSE (g2.o2).i END,
-               CASE WHEN o.id <> (g1.o1).i THEN (g1.o1).a ELSE (g2.o2).a END
-        FROM occ o JOIN g1 USING (gr) LEFT JOIN g2 USING (gr))
-      WHERE ib IS NOT NULL AND ib <> ia),
-    ex AS MATERIALIZED (
-      SELECT ia, pa,
-             coalesce(list_min([i FOR i IN
-                                range(1, least(A.n - (pa+5), B.n - (pb+5)) + 1)
-                                IF A.ws[pa+5+i] <> B.ws[pb+5+i]]) - 1,
-                      greatest(least(A.n - (pa+5), B.n - (pb+5)), 0)) AS re,
-             coalesce(list_min([i FOR i IN range(1, least(pa, pb) + 1)
-                                IF A.ws[pa-i+1] <> B.ws[pb-i+1]]) - 1,
-                      least(pa, pb)) AS le
-      FROM cand
-      JOIN (SELECT id, ws, len(ws) AS n FROM w) A ON A.id = ia
-      JOIN (SELECT id, ws, len(ws) AS n FROM w) B ON B.id = ib),
-    spans AS MATERIALIZED (SELECT DISTINCT ia AS id, pa - le AS ss, pa + 4 + re AS se
-              FROM ex WHERE 5 + le + re >= 15),
-    isl AS (
-      SELECT id, ss, se,
-             sum(CASE WHEN ss > coalesce(pe, -2) + 1 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY id ORDER BY ss, se) AS grp
-      FROM (SELECT id, ss, se,
-                   max(se) OVER (PARTITION BY id ORDER BY ss, se
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING) AS pe
-            FROM spans)),
-    merged AS (SELECT id, grp, min(ss) AS ss, max(se) AS se FROM isl GROUP BY 1, 2),
+    oracle=_EXACT_SUBSTR_MERGED
+    + r""",
     extc AS MATERIALIZED (
       SELECT m.id, m.ss, m.se,
              list_aggregate(w.ws[m.ss+1:m.se+1], 'string_agg', ' ') AS c
@@ -17099,13 +16371,9 @@ def cross_doc_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(kept) AS BIGINT) AS kept_tokens,
            CAST(coalesce(kc.kc, 0) AS BIGINT) AS kept_copies,
            coalesce(list_aggregate(kept, 'string_agg', ' '), '') AS cleaned_text
-    FROM (
-      SELECT w.id, w.ws,
-             [w.ws[i+1] FOR i IN range(0, len(w.ws))
-              IF list_count(list_filter(
-                   coalesce(cover.cov, CAST([] AS STRUCT(ss INT, se INT)[])),
-                   c -> i BETWEEN c.ss AND c.se)) = 0] AS kept
-      FROM w LEFT JOIN cover ON cover.id = w.id) w
+    """
+    + _EXACT_SUBSTR_KEPT
+    + """
     LEFT JOIN kc ON kc.id = w.id
     """,
 )

@@ -148,7 +148,13 @@ def _footer(spark: SparkSession, path: str) -> _Footer:
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers, without its inference
     job after the first call for an unchanged local file. Directories and
-    non-local paths are inferred on every call."""
+    non-local paths are inferred on every call.
+
+    Sets ``spark.sql.legacy.parquet.nanosAsLong`` on the session first, as
+    ``load_table`` does: Spark rejects a ``timestamp[ns]`` column otherwise
+    (PARQUET_TYPE_ILLEGAL), and with it the column reads, and streams, as
+    raw nanosecond longs."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if os.path.isfile(path):
         return _footer(spark, path).schema
     return spark.read.parquet(path).schema

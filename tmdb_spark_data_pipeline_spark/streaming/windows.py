@@ -183,17 +183,10 @@ def replay_events(
     ``build`` receives the watermarked stream and returns the streaming
     transformation to run.
     """
-    # ns-timestamp columns stream as raw longs (see sources/io.load_table);
-    # rebuild the event-time column before the watermark.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = parquet_schema(spark, parquet_path)
-    if os.path.isfile(parquet_path):
-        stream = stream_from_parquet_dir(
-            spark, os.path.dirname(parquet_path), schema, glob_filter=os.path.basename(parquet_path)
-        )
-    else:
-        stream = stream_from_parquet_dir(spark, parquet_path, schema)
-    agg = build(_as_event_time(stream, ts_col).withWatermark(ts_col, watermark))
+    agg = build(
+        _event_stream(spark, parquet_path, schema, ts_col=ts_col, watermark=watermark)
+    )
     run_stream_to_memory(agg, query_name, output_mode=output_mode)
     return spark.table(query_name)
 
@@ -206,7 +199,10 @@ def _event_stream(
     ts_col: str,
     watermark: str,
 ) -> DataFrame:
-    """One watermarked file-source stream over an events parquet file/dir."""
+    """One watermarked file-source stream over an events parquet file/dir:
+    ns-timestamp columns stream as raw longs (``parquet_schema`` sets
+    ``nanosAsLong``), so the event-time column is rebuilt before the
+    watermark."""
     if os.path.isfile(parquet_path):
         stream = stream_from_parquet_dir(
             spark, os.path.dirname(parquet_path), schema, glob_filter=os.path.basename(parquet_path)
@@ -230,7 +226,6 @@ def replay_events_pair(
     ``build(s1, s2)`` — the stream-stream join harness. Two separate file
     sources (not a self-referencing branch) so each side tracks its own
     watermark, exactly as two real topics would."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = parquet_schema(spark, parquet_path)
     s1 = _event_stream(spark, parquet_path, schema, ts_col=ts_col, watermark=watermark)
     s2 = _event_stream(spark, parquet_path, schema, ts_col=ts_col, watermark=watermark)
