@@ -1,14 +1,20 @@
 #!/usr/bin/env python
-"""Benchmark harness: run the declared query surface at $SPARK_GRAFT_SF_DIR
-(default sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+"""Benchmark runner for the declared query surface: time queries at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] and print
+ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>}
 
+    python bench.py                     # every query -> BENCH_FULL.json
+    python bench.py q1 q2               # a subset -> BENCH_SUBSET.json
+    python bench.py --floors q1 q2      # min of --reps runs -> BENCH_FLOORS.json
+    python bench.py --trace q1          # + "layers": perfbench's layer metrics
+    python bench.py --plans-dir DIR q1  # + DIR/q1.txt, the formatted plan
+
 Each query is materialized through the noop sink (full computation, no
-collect-to-driver serialization skewing the numbers). Set BENCH_QUERIES to a
-comma-separated subset to iterate on specific queries — subset runs write
-their per-query JSON to BENCH_SUBSET.json, never the canonical
+collect-to-driver serialization skewing the numbers). Subset and floor runs
+write their per-query JSON to BENCH_SUBSET.json, never the canonical
 BENCH_FULL.json (see _output_path).
 
 Isolation policy (VERDICT_r05 #6): clearCache + Python GC + targeted JVM GC
@@ -27,27 +33,56 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from tmdb_spark_data_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
 from tmdb_spark_data_pipeline_spark.session import get_spark  # noqa: E402
+
+FLOORS_PATH = os.path.join(HERE, "BENCH_FLOORS.json")
+#: Executions of a query, at most, whose minimum is kept: a sweep re-times
+#: only queries slower than RETIME_ABOVE_SEC, a --floors run re-times all.
+REPS_SWEEP, REPS_FLOORS = 2, 6
+RETIME_ABOVE_SEC = 3.0
+#: Byte budget of the stdout headline (see _print_headline).
+LINE_BYTES = 1800
 
 
 def _output_path(subset: bool) -> str:
     """Where the full per-query JSON goes.
 
     BENCH_FULL.json is the CANONICAL per-round artifact the judge diffs
-    round-over-round; a ``BENCH_QUERIES=<subset>`` iteration run must never
-    overwrite it (it did in round 7 and the file had to be reconstructed
-    from stderr logs). Subset runs therefore default to BENCH_SUBSET.json;
-    an explicit BENCH_FULL_PATH always wins (``tools/floor_bench.py`` uses it
-    to keep its runs out of the canonical file).
+    round-over-round; a subset run (``bench.py <names>`` or ``--floors``)
+    must never overwrite it (it did in round 7 and the file had to be
+    reconstructed from stderr logs). Subset runs therefore default to
+    BENCH_SUBSET.json; an explicit BENCH_FULL_PATH always wins.
     """
     explicit = os.environ.get("BENCH_FULL_PATH")
     if explicit:
         return explicit
     name = "BENCH_SUBSET.json" if subset else "BENCH_FULL.json"
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
+    return os.path.join(HERE, name)
+
+
+def _parse_args(argv: list[str] | None = None):
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--reps", type=int)
+    ap.add_argument("--floors", action="store_true")
+    ap.add_argument("--trace", action="store_true")
+    ap.add_argument("--plans-dir", metavar="DIR")
+    args = ap.parse_args(argv)
+    unknown = [n for n in args.names if n not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    if args.reps is None:
+        args.reps = REPS_FLOORS if args.floors else REPS_SWEEP
+    args.reps = max(1, args.reps)
+    args.retime_above = 0.0 if args.floors else RETIME_ABOVE_SEC
+    args.out = _output_path(subset=bool(args.names) or args.floors)
+    return args
 
 
 def _speed_canary() -> float:
@@ -83,7 +118,6 @@ def _cpu_jiffies() -> tuple[int, int] | None:
 def _print_headline(timings, total, sf_val, steal_pct, canary_ms, full_path=None) -> None:
     """The ONE stdout JSON line, byte-budgeted to survive the driver's
     ~2000-char stdout tail: heaviest queries first, as many as fit."""
-    budget = int(os.environ.get("BENCH_LINE_BYTES", "1800"))
     head = {
         "metric": "declared_query_surface_wall_clock",
         "value": total,
@@ -97,22 +131,62 @@ def _print_headline(timings, total, sf_val, steal_pct, canary_ms, full_path=None
     line_queries: dict[str, float] = {}
     for name in sorted(timings, key=lambda n: -timings[n]):
         line_queries[name] = timings[name]
-        candidate = json.dumps(
-            {**head, "queries": line_queries}, separators=(",", ":")
-        )
-        if len(candidate) > budget:
+        candidate = json.dumps({**head, "queries": line_queries}, separators=(",", ":"))
+        if len(candidate) > LINE_BYTES:
             del line_queries[name]
             break
     print(json.dumps({**head, "queries": line_queries}, separators=(",", ":")))
 
 
-def main() -> None:
+def _merge_floors(path: str, run: dict, reps: int) -> None:
+    """Set the floor entry of each query in ``run``, a --floors run's record,
+    with the run's steal% and canary; every other entry stays as it is."""
+    floors: dict = {}
+    if os.path.exists(path):
+        with open(path) as f:
+            floors = json.load(f)
+    stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+    for name, sec in run["queries"].items():
+        steal = run["query_steal_pct"].get(name)
+        floors[name] = {"floor_sec": sec, "reps": reps, "steal_pct": steal,
+                        "run_canary_ms": run["canary_ms"], "at": stamp}
+    with open(path, "w") as f:
+        json.dump(floors, f, indent=1, sort_keys=True)
+
+
+def _write_plan(spark, name: str, sf_dir: str, plans_dir: str) -> None:
+    qe = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution()
+    os.makedirs(plans_dir, exist_ok=True)
+    with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+        f.write(spark.sparkContext._jvm.PythonSQLUtils.explainString(qe, "formatted"))
+
+
+def _trace(spark, name: str, sf_dir: str, untraced_s: float, get_spark_s: float) -> dict:
+    """One more run of ``name`` under perfbench's layer tracer, which reads
+    jobs and stages from the status store (the Spark UI stays off): its
+    per-layer ``metrics`` and one ``stages`` row per stage that ran, [stage
+    id, tasks, executor run s, shuffle read MiB, shuffle write MiB]."""
+    import tempfile
+
+    from perfbench.layertrace import QueryTracer
+
+    qt = QueryTracer(spark, tempfile.gettempdir())
+    traced_s = qt.run(name, REGISTRY[name].fn, sf_dir)
+    return {
+        "metrics": qt.metrics({name: [untraced_s]}, {name: [traced_s]}, 1, get_spark_s),
+        "stages": [[sid, *row] for sid, row in sorted(qt.tracer.stages.items())],
+    }
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = _parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    only = os.environ.get("BENCH_QUERIES")
-    names = only.split(",") if only else list(REGISTRY)
+    names = args.names or list(REGISTRY)
 
+    t0 = time.perf_counter()
     spark = get_spark(app_name="bench")
+    get_spark_s = time.perf_counter() - t0
 
     # Warm the JVM before timing: parquet reader, shuffle, broadcast-join,
     # window and whole-stage-codegen paths all JIT on first use — and AQE
@@ -145,7 +219,7 @@ def main() -> None:
         # accumulation measured the round-3 near-dup family 2-3× slower than
         # the same queries in a clean session (cosine_neardups 6.99 s in-suite
         # vs 1.6-2.4 s steady-state; verified by timing the family alone
-        # with BENCH_QUERIES=<names>).
+        # with ``bench.py <names>``).
         spark.catalog.clearCache()
         import gc
 
@@ -178,17 +252,15 @@ def main() -> None:
     # flat), and one timing per query makes the artifact hostage to whichever
     # window it lands in. The min of k executions estimates quiet-machine
     # cost; light queries (<3 s) stay single-shot to bound total wall.
-    repeats = max(1, int(os.environ.get("BENCH_REPEATS", "2")))
-    retime_above = float(os.environ.get("BENCH_RETIME_ABOVE_SEC", "3"))
-
     timings: dict[str, float] = {}
     query_steal: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     for name in names:
         spec = REGISTRY[name]
         q0 = _cpu_jiffies()
         best = _run_once(spec)
         extra = 0
-        while best > retime_above and extra < repeats - 1:
+        while best > args.retime_above and extra < args.reps - 1:
             _reclaim.heavy = True
             _reclaim()
             best = min(best, _run_once(spec))
@@ -202,6 +274,10 @@ def main() -> None:
         q_steal = f" steal={query_steal[name]:.1f}%" if name in query_steal else ""
         rerun = f" (min of {extra + 1})" if extra else ""
         print(f"# {name}: {timings[name]:.3f}s{q_steal}{rerun}", file=sys.stderr)
+        if args.trace:
+            layers[name] = _trace(spark, name, sf_dir, best, get_spark_s)
+        if args.plans_dir:
+            _write_plan(spark, name, sf_dir, args.plans_dir)
         # full JVM GC only after queries that pin executor-side state
         # (checkpoints, streaming state stores, big broadcasts) — a System.gc
         # after every light query costs more than the residue it frees
@@ -232,12 +308,16 @@ def main() -> None:
         "canary_ms": [canary0, canary1],
         "query_steal_pct": query_steal,
     }
-    full_path = _output_path(subset=bool(only))
-    with open(full_path, "w") as f:
+    if args.trace:
+        full["layers"] = layers
+    with open(args.out, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
-    print(f"# full per-query timings -> {full_path}", file=sys.stderr)
+    print(f"# full per-query timings -> {args.out}", file=sys.stderr)
+    if args.floors:
+        _merge_floors(FLOORS_PATH, full, args.reps)
+        print(f"# {len(timings)} floors -> {FLOORS_PATH}", file=sys.stderr)
 
-    _print_headline(timings, total, sf_val, steal_pct, [canary0, canary1], full_path)
+    _print_headline(timings, total, sf_val, steal_pct, [canary0, canary1], args.out)
 
 
 if __name__ == "__main__":

@@ -1,13 +1,15 @@
-"""Guard: a BENCH_QUERIES subset run must never clobber BENCH_FULL.json.
+"""Guards on bench.py, the one measurement runner.
 
 VERDICT_r07 "What's wrong" #2: in round 7 a subset iteration run overwrote
 the canonical per-round artifact and it had to be reconstructed from stderr
 logs. bench._output_path is the single chokepoint the runner writes through
-(``tools/floor_bench.py`` redirects it with BENCH_FULL_PATH); these tests pin
-its routing.
+(``bench.py <names>`` and ``--floors`` runs go to BENCH_SUBSET.json, and
+BENCH_FULL_PATH redirects any run); these tests pin its routing, the
+``--floors`` merge into BENCH_FLOORS.json and the ``--trace`` record.
 """
 
 import importlib.util
+import json
 import os
 
 import pytest
@@ -39,3 +41,45 @@ def test_explicit_path_always_wins(bench_mod, monkeypatch):
     monkeypatch.setenv("BENCH_FULL_PATH", "/tmp/shard_part.json")
     assert bench_mod._output_path(subset=True) == "/tmp/shard_part.json"
     assert bench_mod._output_path(subset=False) == "/tmp/shard_part.json"
+
+
+def test_name_arguments_route_output_to_subset_file(bench_mod, monkeypatch):
+    monkeypatch.delenv("BENCH_FULL_PATH", raising=False)
+    out = {
+        tuple(argv): os.path.basename(bench_mod._parse_args(argv).out)
+        for argv in ([], ["scan_filter_project"], ["--floors", "scan_filter_project"])
+    }
+    assert out == {
+        (): "BENCH_FULL.json",
+        ("scan_filter_project",): "BENCH_SUBSET.json",
+        ("--floors", "scan_filter_project"): "BENCH_SUBSET.json",
+    }
+    with pytest.raises(SystemExit):
+        bench_mod._parse_args(["no_such_query"])
+
+
+def test_floors_merge_keeps_the_other_entries(bench_mod, tmp_path):
+    path = tmp_path / "BENCH_FLOORS.json"
+    kept = {"floor_sec": 1.0, "reps": 6, "steal_pct": 0.0, "run_canary_ms": [20.0, 21.0],
+            "at": "2026-01-01T00:00:00Z"}
+    path.write_text(json.dumps({"a": kept, "b": dict(kept, floor_sec=9.0)}))
+    run = {"queries": {"b": 2.5, "c": 0.3}, "query_steal_pct": {"b": 0.4},
+           "canary_ms": [30.0, 31.0]}
+    bench_mod._merge_floors(str(path), run, 3)
+    floors = json.loads(path.read_text())
+    assert floors["a"] == kept
+    assert floors["b"]["floor_sec"] == 2.5 and floors["c"]["floor_sec"] == 0.3
+    assert floors["b"]["steal_pct"] == 0.4 and floors["c"]["steal_pct"] is None
+    for name in "bc":
+        assert set(floors[name]) == set(kept)
+        assert floors[name]["reps"] == 3 and floors[name]["run_canary_ms"] == [30.0, 31.0]
+
+
+def test_trace_record_counts_jobs_and_stages_with_the_ui_off(bench_mod, spark, sf_smoke):
+    assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
+    rec = bench_mod._trace(spark, "scan_filter_project", sf_smoke, 0.1, 0.0)
+    assert rec["metrics"]["spark.jobs"] >= 1
+    assert rec["metrics"]["spark.stages"] == len(rec["stages"]) >= 1
+    for stage_id, tasks, run_s, read_mb, write_mb in rec["stages"]:
+        assert tasks >= 1 and run_s >= 0 and read_mb >= 0 and write_mb >= 0
+    json.dumps(rec)

@@ -89,6 +89,32 @@ def test_simhash_neardup_pigeonhole_guard(corpus):
         dedup.simhash_neardup_pairs(corpus, "text", "doc_id", max_hamming=4, bands=4)
 
 
+_EDGE_INPUTS = {
+    "no_rows": [],
+    "one_row": [(1, DOC_A)],
+    "all_null_text": [(1, None), (2, None)],
+}
+_EDGE_OPS = {
+    "simhash_fingerprints": dedup.simhash_fingerprints,
+    "simhash_neardup_pairs": dedup.simhash_neardup_pairs,
+    "minhash_lsh_pairs": dedup.minhash_lsh_pairs,
+    "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
+}
+
+
+@pytest.mark.parametrize("op", list(_EDGE_OPS))
+@pytest.mark.parametrize("rows", list(_EDGE_INPUTS))
+def test_edge_size_inputs_yield_no_pairs(spark, rows, op):
+    """0 rows, 1 row and all-NULL text run without raising: no pairs, and a
+    fingerprint only for a non-NULL text."""
+    df = spark.createDataFrame(_EDGE_INPUTS[rows], "doc_id long, text string")
+    out = _EDGE_OPS[op](df, "text", "doc_id").collect()
+    if op == "simhash_fingerprints":
+        assert [r.doc_id for r in out] == ([1] if rows == "one_row" else [])
+    else:
+        assert out == []
+
+
 def test_content_hash_matches_sha256(spark):
     import hashlib
 

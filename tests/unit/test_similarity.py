@@ -4,6 +4,7 @@ numpy oracle, LSH recall on its own buckets, near-dup pair threshold."""
 from __future__ import annotations
 
 import math
+import os
 import random
 
 import pytest
@@ -1002,6 +1003,36 @@ def test_ivfpq_append_derives_geometry_from_artifact(spark, sf_smoke, tmp_path):
     # still raises before any write
     with pytest.raises(ValueError, match="geometry mismatch"):
         similarity.write_ivfpq_artifact(new, path, mode="append", m=32, dim=64)
+
+
+@pytest.mark.parametrize(
+    "writer, kw",
+    [
+        ("write_ivf_artifact", {}),
+        ("write_ivfpq_artifact", {"coarse_k": 4, "coarse_iters": 1, "m": 4, "dim": 8, "ksub": 4, "iters": 1}),
+    ],
+    ids=["ivf", "ivfpq"],
+)
+def test_artifact_writer_rejects_other_modes_before_any_work(spark, emb, tmp_path, writer, kw):
+    """Both artifact writers only rebuild or append: ``mode="error"`` on an
+    existing artifact raises ValueError before training or writing, and
+    every file of the artifact keeps its mtime."""
+    write = getattr(similarity, writer)
+    path = str(tmp_path / "artifact")
+    write(emb, path, **kw)
+
+    def mtimes():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(path)
+            for f in files
+        }
+
+    before = mtimes()
+    assert before
+    with pytest.raises(ValueError, match="mode must be 'overwrite' or 'append'"):
+        write(emb, path, mode="error", **kw)
+    assert mtimes() == before
 
 
 def test_ivfpq_residual_recall_bar_and_degeneracy(spark, sf_smoke, vectors):

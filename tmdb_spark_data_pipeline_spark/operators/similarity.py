@@ -600,6 +600,14 @@ def _parallel_writes(*thunks) -> None:
             f.result()
 
 
+def _check_artifact_mode(writer: str, mode: str) -> None:
+    """An artifact is rebuilt (``"overwrite"``) or grown (``"append"``);
+    Spark's ``"error"``/``"ignore"`` guards do not apply to a multi-table
+    artifact, so any other mode raises before any training or write."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"{writer}: mode must be 'overwrite' or 'append', got {mode!r}")
+
+
 def write_ivf_artifact(
     corpus: DataFrame,
     path: str,
@@ -627,6 +635,7 @@ def write_ivf_artifact(
     requires an existing artifact and ignores ``centroid_filter`` /
     ``centroids``; only the cell files grow, the centroid table is never
     rewritten."""
+    _check_artifact_mode("write_ivf_artifact", mode)
     if mode == "append":
         cents = corpus.sparkSession.read.parquet(f"{path}/centroids")
         assigned = assign_ivf_cells(corpus, cents, id_col=id_col, vec_col=vec_col)
@@ -2055,6 +2064,7 @@ def write_ivfpq_artifact(
     always-validate contract made the library defaults themselves a
     foot-gun against non-default artifacts). On overwrite, ``None`` means
     the build defaults m=32, dim=64."""
+    _check_artifact_mode("write_ivfpq_artifact", mode)
     emb = corpus.select(F.col(id_col), F.col(vec_col))
     if mode == "append":
         spark = corpus.sparkSession
@@ -2117,15 +2127,14 @@ def write_ivfpq_artifact(
     # (shuffle partitions x cells) small files — the layout a 100 TB index
     # actually wants (and ~2x faster to land here). All sinks read
     # checkpoint-backed inputs, so they run as overlapped jobs (guide §2.6)
-    sink_mode = "append" if mode == "append" else "overwrite"
     cell_sinks = (
         lambda: packed.repartition("cell_id")
-        .write.mode(sink_mode)
+        .write.mode(mode)
         .partitionBy("cell_id")
         .parquet(f"{path}/codes"),
         lambda: emb.join(cells, id_col)
         .repartition("cell_id")
-        .write.mode(sink_mode)
+        .write.mode(mode)
         .partitionBy("cell_id")
         .parquet(f"{path}/vectors"),
     )

@@ -21,6 +21,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import money_sum
 from ..operators import (
     calibrate,
     cleaning,
@@ -241,8 +242,8 @@ def _stage_stream_batches(df: DataFrame, key, src: str, *, n: int = 3) -> None:
 
 
 # exact decimal sum of a double expression, surfaced as double (see module doc)
-def _dsum(c) -> F.Column:
-    return F.sum(c.cast("decimal(30,4)")).cast("double")
+def _dsum(c, scale: int = 4) -> F.Column:
+    return money_sum(c, scale).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -13488,11 +13489,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decimal_sum(c: F.Column, scale: int) -> F.Column:
-    """sum(c) accumulated exactly as decimal(38, scale), returned as double."""
-    return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
-
-
 def _pearson_r(n, sxy, sx, sy, sxx, syy) -> F.Column:
     """Pearson r from count and power sums, rounded to 6 places."""
     return F.round(
@@ -13542,11 +13538,11 @@ def discount_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("x"), F.col("y")
     s = j.groupBy("p_brand").agg(
         F.count("*").alias("n"),
-        _decimal_sum(x, 2).alias("sx"),
-        _decimal_sum(y, 2).alias("sy"),
-        _decimal_sum(x * x, 4).alias("sxx"),
-        _decimal_sum(y * y, 4).alias("syy"),
-        _decimal_sum(x * y, 4).alias("sxy"),
+        _dsum(x, 2).alias("sx"),
+        _dsum(y, 2).alias("sy"),
+        _dsum(x * x, 4).alias("sxx"),
+        _dsum(y * y, 4).alias("syy"),
+        _dsum(x * y, 4).alias("sxy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
@@ -13609,15 +13605,15 @@ def lineitem_metric_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = li.agg(
         F.count("*").alias("n"),
-        _decimal_sum(q, 4).alias("sq"),
-        _decimal_sum(p, 4).alias("sp"),
-        _decimal_sum(d, 4).alias("sd"),
-        _decimal_sum(q * q, 4).alias("sqq"),
-        _decimal_sum(p * p, 4).alias("spp"),
-        _decimal_sum(d * d, 6).alias("sdd"),
-        _decimal_sum(q * p, 4).alias("sqp"),
-        _decimal_sum(q * d, 4).alias("sqd"),
-        _decimal_sum(p * d, 4).alias("spd"),
+        _dsum(q, 4).alias("sq"),
+        _dsum(p, 4).alias("sp"),
+        _dsum(d, 4).alias("sd"),
+        _dsum(q * q, 4).alias("sqq"),
+        _dsum(p * p, 4).alias("spp"),
+        _dsum(d * d, 6).alias("sdd"),
+        _dsum(q * p, 4).alias("sqp"),
+        _dsum(q * d, 4).alias("sqd"),
+        _dsum(p * d, 4).alias("spd"),
     )
     n = F.col("n")
     sq, sp, sd = F.col("sq"), F.col("sp"), F.col("sd")
@@ -13820,15 +13816,15 @@ def lineitem_spearman_correlations(spark: SparkSession, sf_dir: str) -> DataFram
     x, y, z = F.col("x"), F.col("y"), F.col("z")
     s = j.agg(
         F.count("*").alias("n"),
-        _decimal_sum(x, 2).alias("sx"),
-        _decimal_sum(y, 2).alias("sy"),
-        _decimal_sum(z, 2).alias("sz"),
-        _decimal_sum(x * x, 4).alias("sxx"),
-        _decimal_sum(y * y, 4).alias("syy"),
-        _decimal_sum(z * z, 4).alias("szz"),
-        _decimal_sum(x * y, 4).alias("sxy"),
-        _decimal_sum(x * z, 4).alias("sxz"),
-        _decimal_sum(y * z, 4).alias("syz"),
+        _dsum(x, 2).alias("sx"),
+        _dsum(y, 2).alias("sy"),
+        _dsum(z, 2).alias("sz"),
+        _dsum(x * x, 4).alias("sxx"),
+        _dsum(y * y, 4).alias("syy"),
+        _dsum(z * z, 4).alias("szz"),
+        _dsum(x * y, 4).alias("sxy"),
+        _dsum(x * z, 4).alias("sxz"),
+        _dsum(y * z, 4).alias("syz"),
     )
     n = F.col("n")
     pairs = F.array(
@@ -15438,10 +15434,10 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = per_user.agg(
         F.count("*").alias("n"),
-        _decimal_sum(F.col("pre"), 6).alias("sp"),
-        _decimal_sum(F.col("post"), 6).alias("so"),
-        _decimal_sum(F.col("pre") * F.col("pre"), 6).alias("spp"),
-        _decimal_sum(F.col("pre") * F.col("post"), 6).alias("spo"),
+        _dsum(F.col("pre"), 6).alias("sp"),
+        _dsum(F.col("post"), 6).alias("so"),
+        _dsum(F.col("pre") * F.col("pre"), 6).alias("spp"),
+        _dsum(F.col("pre") * F.col("post"), 6).alias("spo"),
     )
     th = g.select(
         (F.col("sp") / F.col("n")).alias("mp"),
@@ -15452,11 +15448,11 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = per_user.groupBy("arm").agg(
         F.count("*").alias("n"),
-        _decimal_sum(F.col("pre"), 6).alias("sp"),
-        _decimal_sum(F.col("post"), 6).alias("so"),
-        _decimal_sum(F.col("pre") * F.col("pre"), 6).alias("spp"),
-        _decimal_sum(F.col("post") * F.col("post"), 6).alias("soo"),
-        _decimal_sum(F.col("pre") * F.col("post"), 6).alias("spo"),
+        _dsum(F.col("pre"), 6).alias("sp"),
+        _dsum(F.col("post"), 6).alias("so"),
+        _dsum(F.col("pre") * F.col("pre"), 6).alias("spp"),
+        _dsum(F.col("post") * F.col("post"), 6).alias("soo"),
+        _dsum(F.col("pre") * F.col("post"), 6).alias("spo"),
     )
     w = s.agg(
         *[
