@@ -10,7 +10,7 @@ ONE JSON line:
     python bench.py q1 q2               # a subset -> BENCH_SUBSET.json
     python bench.py --floors q1 q2      # min of --reps runs -> BENCH_FLOORS.json
     python bench.py --trace q1          # + "layers": perfbench's layer metrics
-    python bench.py --plans-dir DIR q1  # + DIR/q1.txt, the formatted plan
+    python bench.py --plans-dir DIR q1  # + DIR/q1.txt, the normalized plan
 
 Each query is materialized through the noop sink (full computation, no
 collect-to-driver serialization skewing the numbers). Subset and floor runs
@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -154,11 +155,36 @@ def _merge_floors(path: str, run: dict, reps: int) -> None:
         json.dump(floors, f, indent=1, sort_keys=True)
 
 
+#: Tokens of a formatted plan that differ from one build or process to the
+#: next: expression ids, HOF lambda variables (``x_9``), exchange plan ids,
+#: checkpointed RDD ids and the application id in ``spark_graft_<appId>_*``
+#: scratch paths.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#<n>"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_<n>"),
+    (re.compile(r"plan_id=\d+"), "plan_id=<n>"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[<n>]"),
+    (re.compile(r"spark_graft_[^_\s/]+_"), "spark_graft_<app>_"),
+)
+
+
+def _normalize_plan(text: str, warehouse: str) -> str:
+    """``text`` without ``_PLAN_NOISE`` and with the session's warehouse
+    directory (a path inside the checkout) as ``<warehouse>``."""
+    for pattern, repl in _PLAN_NOISE:
+        text = pattern.sub(repl, text)
+    return text.replace(warehouse, "<warehouse>")
+
+
 def _write_plan(spark, name: str, sf_dir: str, plans_dir: str) -> None:
+    """``DIR/<name>.txt``: the formatted plan, normalized so that
+    ``diff -r`` of two runs' directories, from any two processes or
+    checkouts, is a plan-identity check."""
     qe = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution()
+    text = spark.sparkContext._jvm.PythonSQLUtils.explainString(qe, "formatted")
     os.makedirs(plans_dir, exist_ok=True)
     with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
-        f.write(spark.sparkContext._jvm.PythonSQLUtils.explainString(qe, "formatted"))
+        f.write(_normalize_plan(text, spark.conf.get("spark.sql.warehouse.dir")))
 
 
 def _trace(spark, name: str, sf_dir: str, untraced_s: float, get_spark_s: float) -> dict:

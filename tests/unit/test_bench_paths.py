@@ -5,12 +5,14 @@ the canonical per-round artifact and it had to be reconstructed from stderr
 logs. bench._output_path is the single chokepoint the runner writes through
 (``bench.py <names>`` and ``--floors`` runs go to BENCH_SUBSET.json, and
 BENCH_FULL_PATH redirects any run); these tests pin its routing, the
-``--floors`` merge into BENCH_FLOORS.json and the ``--trace`` record.
+``--floors`` merge into BENCH_FLOORS.json, the ``--trace`` record and the
+normalized ``--plans-dir`` text.
 """
 
 import importlib.util
 import json
 import os
+import re
 
 import pytest
 
@@ -83,3 +85,14 @@ def test_trace_record_counts_jobs_and_stages_with_the_ui_off(bench_mod, spark, s
     for stage_id, tasks, run_s, read_mb, write_mb in rec["stages"]:
         assert tasks >= 1 and run_s >= 0 and read_mb >= 0 and write_mb >= 0
     json.dumps(rec)
+
+
+def test_plans_dir_writes_the_same_text_for_two_builds(bench_mod, spark, sf_smoke, tmp_path):
+    # expression ids, lambda variables (x_9 vs x_21) and exchange plan ids
+    # differ between two builds in one process; the written plan must not
+    for run in ("a", "b"):
+        bench_mod._write_plan(spark, "similarity_topk", sf_smoke, str(tmp_path / run))
+    first = (tmp_path / "a" / "similarity_topk.txt").read_text()
+    assert first == (tmp_path / "b" / "similarity_topk.txt").read_text()
+    assert "#<n>" in first and "x_<n>" in first
+    assert not re.search(r"#\d|\b[xyz]_\d|plan_id=\d", first)

@@ -123,16 +123,19 @@ def test_content_hash_matches_sha256(spark):
     assert got == hashlib.sha256(b"hello world").hexdigest()
 
 
-def test_spread_gated_on_partition_count(spark):
+def test_spread_repartitions_without_a_partition_probe(spark, jobs_run):
     target = spark.sparkContext.defaultParallelism
     few = spark.createDataFrame([(i,) for i in range(100)], ["x"]).coalesce(1)
     assert dedup._spread(few).rdd.getNumPartitions() == target
 
-    # already well-partitioned input passes through untouched (identity — no
-    # Exchange node added; at real scale a repartition here would shuffle
-    # every document payload)
+    # the decision is plan-only: an input that already has an exchange is
+    # repartitioned too, and deciding so runs no Spark job (a partition probe
+    # would run the exchange's stage under AQE)
     wide = spark.createDataFrame([(i,) for i in range(100)], ["x"]).repartition(target)
-    assert dedup._spread(wide) is wide
+    spread, jobs = jobs_run(lambda: dedup._spread(wide, by="x"))
+    assert jobs == 0
+    plan = spread._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith(f"RepartitionByExpression [x#") and f"], {target}" in plan
 
 
 def test_connected_components_chain_and_island(spark):

@@ -4,7 +4,7 @@ against a plain-Python model on small random inputs."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -47,6 +47,38 @@ def test_top_k_matches_python_model(spark, rows, k):
     got = [(r.k, r.t) for r in rank.top_k(df, "v", order="desc", k=k, tiebreak=("k", "t")).collect()]
     model = sorted(rows, key=lambda r: (r[2] is None, -(r[2] or 0), r[0], r[1]))[:k]
     assert got == [(m[0], m[1]) for m in model]
+
+
+@SETTINGS
+@given(
+    kv=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=2),  # group key
+            st.one_of(st.none(), st.sampled_from([-1.5, 0.0, 2.0])),  # metric: ties + NULLs
+        ),
+        max_size=25,
+    ),
+    order=st.sampled_from(["asc", "desc"]),
+    n=st.integers(min_value=1, max_value=4),
+    grouped=st.booleans(),
+)
+@example(kv=[], order="asc", n=1, grouped=True)
+@example(kv=[(0, None)], order="desc", n=1, grouped=False)
+@example(kv=[(0, None), (0, 2.0), (0, 2.0), (1, -1.5)], order="asc", n=1, grouped=True)
+def test_top_n_per_group_matches_python_model(spark, kv, order, n, grouped):
+    # t is unique and not in insertion order, so it alone settles metric ties
+    rows = [(k, (i * 7) % 31, v) for i, (k, v) in enumerate(kv)]
+    df = spark.createDataFrame(rows, "k int, t int, v double")
+    group_cols = ("k",) if grouped else ()
+    out = rank.top_n_per_group(df, group_cols, "v", order=order, n=n, tiebreak=("t",), rank_col="pos")
+    got = {(r.k, r.t, r.pos) for r in out.collect()}
+
+    sign = 1 if order == "asc" else -1
+    groups: dict = {}
+    for r in sorted(rows, key=lambda r: (r[2] is None, sign * (r[2] or 0), r[1])):  # NULLS LAST
+        groups.setdefault(r[0] if grouped else None, []).append(r)
+    expect = {(r[0], r[1], i + 1) for g in groups.values() for i, r in enumerate(g[:n])}
+    assert got == expect
 
 
 @SETTINGS

@@ -22,27 +22,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ColumnOrName, _col, gateway_memo
-from .cleaning import dedup_by_key
 
 
-def _spread(
-    df: DataFrame, gate: DataFrame | None = None, by: str | None = None
-) -> DataFrame:
+def _spread(df: DataFrame, by: str | None = None) -> DataFrame:
     """Repartition to the session's default parallelism before expensive
     per-row projections.
 
     A single small parquet file arrives as one partition; without this, a
     128-expression MinHash signature (or a 63-pass SimHash) runs on one core.
-    Gated: inputs already at/above the session's parallelism pass through
-    untouched — at real scale (thousands of input splits) repartitioning here
-    would be a gratuitous full shuffle of document payloads.
-
-    ``gate`` (optional) is the frame whose partition count decides, in place
-    of ``df`` itself. Pass the underlying SCAN when ``df`` carries joins:
-    under AQE, ``.rdd`` on a plan WITH exchanges materializes its query
-    stages eagerly (broadcast builds included) just to answer the partition
-    probe — a thrown-away execution per call (measured ~+1 s/epoch on the
-    streaming cluster maintenance). A scan-only probe is plan-only.
+    The decision is plan-only: no ``.rdd`` partition probe, which costs a
+    scan codegen per call and, under AQE, runs the query stages of a plan
+    with exchanges. Sizing the count from the data is open (ROADMAP item 2).
 
     ``by`` (optional): hash-partition on this column instead of round-robin.
     When the downstream pipeline's first aggregation is keyed on ``by``
@@ -53,10 +43,7 @@ def _spread(
     pass (guide §2.5). Results are key-grouped either way; only partition
     ASSIGNMENT changes, never values.
     """
-    probe = df if gate is None else gate
     target = df.sparkSession.sparkContext.defaultParallelism
-    if probe.rdd.getNumPartitions() >= target:
-        return df
     if by is not None:
         return df.repartition(target, F.col(by))
     return df.repartition(target)
@@ -230,24 +217,6 @@ def _jaccard_from_shingles(
     )
 
 
-def minhash_signature(shingles: ColumnOrName, num_hashes: int = 128) -> list[Column]:
-    """Array-form MinHash: for seed i, min over shingles of
-    ``xxhash64(shingle, i)`` — one array-min per seed, pure projection.
-
-    Kept for per-column use; the LSH pipeline uses
-    ``minhash_signature_affine`` (hash each shingle string ONCE, then cheap
-    affine permutations) which beats 128 separate string hashes per shingle.
-    """
-    arr = _col(shingles)
-
-    def _minhash(seed: int) -> Column:
-        # NB: the lambda must stay single-parameter — PySpark treats a second
-        # (even defaulted) parameter as the array-index lambda variable.
-        return F.array_min(F.transform(arr, lambda s: F.xxhash64(s, F.lit(seed))))
-
-    return [_minhash(i).alias(f"mh_{i}") for i in range(num_hashes)]
-
-
 def minhash_hash_array(shingles: ColumnOrName) -> Column:
     """``xxhash64`` each shingle string once into a long array (mod p)."""
     return F.transform(_col(shingles), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
@@ -276,7 +245,8 @@ def minhash_signature_affine(
     arr = _col(hash_array)
 
     def _perm(a: int, b: int):
-        # closure, NOT defaulted lambda params (see minhash_signature note)
+        # closure, NOT defaulted lambda params: PySpark treats a second (even
+        # defaulted) lambda parameter as the array-index variable
         return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE31))
 
     return [
@@ -457,10 +427,9 @@ def minhash_pairs_from_artifact(
     # consumers re-evaluates this subtree (no caching here by design), and
     # the broadcast semi-join at the scan means every evaluation shuffles
     # only candidate documents, never the whole corpus (guide §2.3)
-    _docs_scan = docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
     sh = _spread(
-        _docs_scan.join(F.broadcast(cand_docs), "__id", "left_semi"),
-        gate=_docs_scan,
+        docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+        .join(F.broadcast(cand_docs), "__id", "left_semi"),
         by="__id",
     ).select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
     verified = _jaccard_from_shingles(sh, min_jaccard, persist=False)
@@ -534,10 +503,9 @@ def minhash_lsh_pairs(
     # payloads instead of the whole corpus (guide §2.3 — filter before the
     # exchange); `base` above still spreads the full corpus because the
     # signature pass genuinely reads every document
-    _docs_scan = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
     sh = _spread(
-        _docs_scan.join(F.broadcast(cand_docs), "__id", "left_semi"),
-        gate=_docs_scan,
+        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+        .join(F.broadcast(cand_docs), "__id", "left_semi"),
         by="__id",
     ).select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
     verified = _jaccard_from_shingles(sh, min_jaccard)
@@ -683,15 +651,8 @@ def minhash_lsh_pairs_incremental(
     base = _spread(tagged, by="__id")
     exploded = base.select("__id", "__is_new", F.explode(word_shingles("__t", n)).alias("__s"))
     sig = minhash_signatures_agg(exploded, num_hashes=num_hashes, carry_cols=("__is_new",))
-    band_cols = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.xxhash64(*[F.col(f"mh_{band * r + j}") for j in range(r)]).alias("sig"),
-        )
-        for band in range(bands)
-    ]
     buckets = (
-        sig.select("__id", "__is_new", F.explode(F.array(*band_cols)).alias("__b"))
+        sig.select("__id", "__is_new", F.explode(_band_bucket_array(bands, r)).alias("__b"))
         .select("__id", "__is_new", F.col("__b.band").alias("__band"), F.col("__b.sig").alias("__sig"))
         .persist()  # two filtered consumers below; see minhash_lsh_pairs
     )
@@ -736,7 +697,8 @@ def simhash64(text: ColumnOrName, *, use_bits: int = 63) -> Column:
     total = F.size(hashes)
 
     def _ones(bit: int) -> Column:
-        # single-parameter lambda only (see minhash_signature note)
+        # single-parameter lambda only: a second (even defaulted) parameter
+        # would become the array-index variable
         return F.size(F.filter(hashes, lambda h: F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1))
 
     out = F.lit(0).cast("long")

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import free_local_checkpoint
+from . import rank
 
 
 def _closed_wedges(e0: DataFrame, deg: DataFrame) -> DataFrame:
@@ -546,8 +547,6 @@ def propagate_labels(
     driver-side convergence check, unlike ``connected_components``).
     Returns (id, label, round) with round 0 for seeds.
     """
-    from pyspark.sql import Window
-
     sym = edges.select(
         F.col(u_col).alias("src"), F.col(v_col).alias("dst")
     ).unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
@@ -566,16 +565,9 @@ def propagate_labels(
         votes = unlabeled_votes.groupBy("src", "label").agg(
             F.count("*").alias("__n")
         )
-        w = Window.partitionBy("src").orderBy(
-            F.col("__n").desc(), F.col("label").asc()
-        )
-        pick = (
-            votes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                F.col("src").alias("id"), "label", F.lit(r).alias("round")
-            )
-        )
+        pick = rank.top_n_per_group(
+            votes, ("src",), "__n", n=1, tiebreak=("label",), rank_col="__rn"
+        ).select(F.col("src").alias("id"), "label", F.lit(r).alias("round"))
         labels = labels.unionAll(pick)
     return labels
 

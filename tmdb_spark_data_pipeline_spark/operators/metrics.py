@@ -43,9 +43,3 @@ def with_ratio(
     if min_den is not None:
         ratio = F.when(F.col(den) >= min_den, ratio).otherwise(F.lit(None))
     return df.withColumn(alias, ratio)
-
-
-def with_derived(df: DataFrame, derived: dict[str, Column]) -> DataFrame:
-    """Attach a dict of derived columns in one projection (keeps the plan a
-    single Project node instead of a withColumn chain)."""
-    return df.select("*", *[e.alias(a) for a, e in derived.items()])

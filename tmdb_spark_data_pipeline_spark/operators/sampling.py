@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import ColumnOrName, _col
+from . import rank
 
 #: Hash-space size for split assignment: fractions are resolved to integer
 #: bucket ranges out of this many buckets (1e-4 granularity).
@@ -118,14 +119,9 @@ def rebalance_quota(
     Same physical shape as grouped top-n (§2.7): one shuffle on the group
     key, per-partition sort, early row_number cutoff.
     """
-    order = Window.partitionBy(group_col).orderBy(
-        F.col(score_col).desc_nulls_last(), F.col(key_col).asc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(order))
-        .filter(F.col("__rn") <= quota)
-        .drop("__rn")
-    )
+    return rank.top_n_per_group(
+        df, (group_col,), score_col, n=quota, tiebreak=(key_col,), rank_col="__rn"
+    ).drop("__rn")
 
 
 def negative_pairs(

@@ -17,10 +17,11 @@ prunes files.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ColumnOrName, _col, gateway_memo
+from . import rank
 
 
 def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -77,12 +78,9 @@ def cosine_topk_bruteforce(
     scored = pairs.select(
         "query_id", "neighbor_id", (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc_nulls_last(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return rank.top_n_per_group(
+        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
+    ).drop("__rn")
 
 
 def seeded_planes(num_planes: int = 6, dim: int = 64, seed: int = 42) -> list[list[float]]:
@@ -168,12 +166,9 @@ def cosine_topk_lsh(
     scored = pairs.select(
         "query_id", "neighbor_id", (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc_nulls_last(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return rank.top_n_per_group(
+        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
+    ).drop("__rn")
 
 
 def write_lsh_partitioned_corpus(
@@ -249,12 +244,9 @@ def cosine_topk_lsh_probe(
         F.col(id_col).alias("neighbor_id"),
         (dot("__qv", vec_col) / (F.col("__qn") * F.col("norm"))).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc_nulls_last(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return rank.top_n_per_group(
+        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
+    ).drop("__rn")
 
 
 def embedding_neardup_pairs(
@@ -419,16 +411,12 @@ def _ivf_probe_topk(
         F.col(vec_col).alias("__qv"),
         l2_norm(vec_col).alias("__qn"),
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__pcos").desc_nulls_last(), F.col("__cent_id").asc()
-    )
-    probes = (
-        q.join(F.broadcast(c), F.lit(True))
-        .withColumn("__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))
-        .withColumn("__rn", F.row_number().over(probe_w))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"))
-    )
+    probes = rank.top_n_per_group(
+        q.join(F.broadcast(c), F.lit(True)).withColumn(
+            "__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))
+        ),
+        ("query_id",), "__pcos", n=nprobe, tiebreak=("__cent_id",), rank_col="__rn",
+    ).select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"))
 
     cand = assigned.select(
         F.col(id_col).alias("neighbor_id"),
@@ -443,14 +431,9 @@ def _ivf_probe_topk(
         "neighbor_id",
         (dot("__qv", "__cvv") / (F.col("__qn") * F.col("__cnn"))).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc_nulls_last(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return rank.top_n_per_group(
+        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
+    ).drop("__rn")
 
 
 def ivf_recall_curve(
@@ -505,16 +488,12 @@ def ivf_recall_curve(
         F.col(vec_col).alias("__qv"),
         l2_norm(vec_col).alias("__qn"),
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__pcos").desc_nulls_last(), F.col("__cent_id").asc()
-    )
-    probes = (
-        q.join(F.broadcast(c), F.lit(True))
-        .withColumn("__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))
-        .withColumn("__pr", F.row_number().over(probe_w))
-        .filter(F.col("__pr") <= max_nprobe)
-        .select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"), "__pr")
-    )
+    probes = rank.top_n_per_group(
+        q.join(F.broadcast(c), F.lit(True)).withColumn(
+            "__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))
+        ),
+        ("query_id",), "__pcos", n=max_nprobe, tiebreak=("__cent_id",), rank_col="__pr",
+    ).select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"), "__pr")
     cand = (
         assigned.select(
             F.col(id_col).alias("neighbor_id"),
@@ -542,14 +521,9 @@ def ivf_recall_curve(
         F.explode(F.sequence(F.col("__pr"), F.lit(max_nprobe))).alias("nprobe"),
     ).localCheckpoint()
     cand_per = lev.groupBy("nprobe").agg(F.count("*").alias("__n_cand"))
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("cos").desc_nulls_last(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        lev.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("nprobe", "query_id", "neighbor_id")
-    )
+    topk = rank.top_n_per_group(
+        lev, ("nprobe", "query_id"), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
+    ).select("nprobe", "query_id", "neighbor_id")
     exact = cosine_topk_bruteforce(
         queries, corpus, id_col=id_col, vec_col=vec_col, k=k
     ).select("query_id", "neighbor_id")
@@ -981,14 +955,9 @@ def cosine_topk_pandas(
     )
     if not include_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc_nulls_last(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return rank.top_n_per_group(
+        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
+    ).drop("__rn")
 
 
 def label_dispersion(
@@ -1378,20 +1347,14 @@ def _ivf_candidate_pairs(
         F.col(vec_col).alias("__cv"),
         l2_norm(vec_col).alias("__cn"),
     )
-    probe_w = Window.partitionBy("__id").orderBy(
-        F.col("__pcos").desc_nulls_last(), F.col("__cent_id").asc()
-    )
-    probes = (
-        base.join(F.broadcast(c), F.lit(True))
-        .select(
+    probes = rank.top_n_per_group(
+        base.join(F.broadcast(c), F.lit(True)).select(
             "__id",
             "__cent_id",
             (dot("__v", "__cv") / (F.col("__n") * F.col("__cn"))).alias("__pcos"),
-        )
-        .withColumn("__rn", F.row_number().over(probe_w))
-        .filter(F.col("__rn") <= nprobe)
-        .select("__id", F.col("__cent_id").alias("__cell"))
-    )
+        ),
+        ("__id",), "__pcos", n=nprobe, tiebreak=("__cent_id",), rank_col="__rn",
+    ).select("__id", F.col("__cent_id").alias("__cell"))
     pa = probes.select(F.col("__id").alias("qa"), "__cell")
     pb = probes.select(F.col("__id").alias("qb"), "__cell")
     return (
@@ -1795,16 +1758,15 @@ def pq_adc_recall_audit(
     adc = pq_adc_scores(
         queries, codes, cb, id_col=id_col, vec_col=vec_col, m=m, dim=dim
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dec").asc(), F.col("neighbor_id").asc()
-    )
     # ONE ADC scan + ranking pass: the top-k and the refine shortlist are
     # both slices of the same ranked list (k ≤ refine), so materialize the
     # |queries|·refine-row shortlist once (query-stratum-bounded) instead of
     # executing the ADC scan+window once per consumer
     shortlist = (
-        adc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= refine)
+        rank.top_n_per_group(
+            adc, ("query_id",), "adc_dec", order="asc", n=refine,
+            tiebreak=("neighbor_id",), rank_col="__rn",
+        )
         .select("query_id", "neighbor_id", "__rn")
         .localCheckpoint()
     )
@@ -1812,26 +1774,20 @@ def pq_adc_recall_audit(
     refine_cand = shortlist.select("query_id", "neighbor_id")
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("__td").asc(), F.col("neighbor_id").asc()
-    )
-    refined = (
+    def l2_topk(pairs: DataFrame) -> DataFrame:
+        return rank.top_n_per_group(
+            pairs.select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
+            ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="__rn",
+        ).select("query_id", "neighbor_id")
+
+    refined = l2_topk(
         nv.join(F.broadcast(refine_cand.join(F.broadcast(qv), "query_id")), "neighbor_id")
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td"))
-        .withColumn("__rn", F.row_number().over(rw))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id")
     )
     # the exact leg grades BOTH the ADC and refined sets — |queries|·k rows,
     # checkpointed so the bounded all-pairs baseline runs once, not twice
-    exact = (
+    exact = l2_topk(
         nv.join(F.broadcast(qv), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td"))
-        .withColumn("__rn", F.row_number().over(rw))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
+    ).localCheckpoint()
     ha = (
         adc_topk.join(exact, ["query_id", "neighbor_id"])
         .groupBy("query_id")
@@ -1889,16 +1845,11 @@ def _ivfpq_serve(
     earlier candidate-set formulation had exactly that flaw). Every
     broadcast side — probes, the per-query LUT, the ADC shortlist — is
     query-bounded."""
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("__pd").asc(), F.col("cid").asc()
-    )
-    probes = (
+    probes = rank.top_n_per_group(
         qd.join(F.broadcast(coarse), F.lit(True))
-        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd"))
-        .withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", F.col("cid").alias("__cell"))
-    )
+        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd")),
+        ("query_id",), "__pd", order="asc", n=nprobe, tiebreak=("cid",), rank_col="__pr",
+    ).select("query_id", F.col("cid").alias("__cell"))
     lut = qsv.join(F.broadcast(cb), "sub").select(
         F.col("query_id"),
         "sub",
@@ -1912,22 +1863,14 @@ def _ivfpq_serve(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__ld").alias("__adc"))
     )
-    aw = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        adc.withColumn("__rn", F.row_number().over(aw))
-        .filter(F.col("__rn") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("__td").asc(), F.col("neighbor_id").asc()
-    )
-    return (
+    shortlist = rank.top_n_per_group(
+        adc, ("query_id",), "__adc", order="asc", n=refine,
+        tiebreak=("neighbor_id",), rank_col="__rn",
+    ).select("query_id", "neighbor_id")
+    return rank.top_n_per_group(
         nv.join(F.broadcast(shortlist.join(F.broadcast(qd), "query_id")), "neighbor_id")
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td"))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
+        ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="rank",
     )
 
 
@@ -1937,15 +1880,11 @@ def _ivfpq_hit_tail(
     """Grade the served top-k against the exact L2 top-k (the declared
     bounded all-pairs audit leg) and shape the declared output:
     (query_id, rank, neighbor_id, d2, hit)."""
-    exact = (
+    exact = rank.top_n_per_group(
         nv.join(F.broadcast(qd), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__ed"))
-        .withColumn("__rn", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("__ed").asc(), F.col("neighbor_id").asc())))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
-    )
+        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__ed")),
+        ("query_id",), "__ed", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="__rn",
+    ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
     return (
         refined.join(exact, ["query_id", "neighbor_id"], "left")
         .select(
@@ -2260,16 +2199,11 @@ def ivfpq_residual_topk_audit(
         F.col(id_col).alias("neighbor_id"), "sub", "cid"
     ).join(cells, "neighbor_id")
     qd = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("__pd").asc(), F.col("cid").asc()
-    )
-    probes = (
+    probes = rank.top_n_per_group(
         qd.join(F.broadcast(coarse), F.lit(True))
-        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd"))
-        .withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", F.col("cid").alias("__cell"))
-    )
+        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd")),
+        ("query_id",), "__pd", order="asc", n=nprobe, tiebreak=("cid",), rank_col="__pr",
+    ).select("query_id", F.col("cid").alias("__cell"))
     dsub = dim // m
     qres = (
         probes.join(F.broadcast(qd), "query_id")
@@ -2309,22 +2243,14 @@ def ivfpq_residual_topk_audit(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__ld").alias("__adc"))
     )
-    aw = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        adc.withColumn("__rn", F.row_number().over(aw))
-        .filter(F.col("__rn") <= refine)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = rank.top_n_per_group(
+        adc, ("query_id",), "__adc", order="asc", n=refine,
+        tiebreak=("neighbor_id",), rank_col="__rn",
+    ).select("query_id", "neighbor_id")
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("__td").asc(), F.col("neighbor_id").asc()
-    )
-    refined = (
+    refined = rank.top_n_per_group(
         nv.join(F.broadcast(shortlist.join(F.broadcast(qd), "query_id")), "neighbor_id")
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td"))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
+        ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="rank",
     )
     return _ivfpq_hit_tail(refined, qd, nv, k=k)

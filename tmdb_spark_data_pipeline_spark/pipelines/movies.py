@@ -32,18 +32,8 @@ from .. import schemas
 from ..operators import cleaning, flatten, metrics, rank, search
 from .config import (
     DEFAULT_CONFIG,
-    DEFAULT_DROP,
-    DEFAULT_KPI_SPECS,
-    DEFAULT_NUMERIC_CASTS,
     MoviePipelineConfig,
 )
-
-# Backwards-compatible module-level aliases (values live in pipelines/config.py)
-NUMERIC_CASTS = DEFAULT_NUMERIC_CASTS
-KPI_SPECS = DEFAULT_KPI_SPECS
-MIN_BUDGET_FOR_ROI = DEFAULT_CONFIG.min_budget_for_roi
-MIN_VOTES_FOR_RATING = DEFAULT_CONFIG.min_votes_for_rating
-DEFAULT_TOP_N = DEFAULT_CONFIG.default_top_n
 
 #: Silver projection order — the reference's ``final_columns``
 #: (``clean_transform.py:161-171``) with the documented naming deviation.

@@ -8,7 +8,10 @@ Determinism rules (SURVEY.md §7 "hard parts") applied throughout:
 
 - every money-ish double aggregate goes through ``decimal(30,4)`` before the
   sum so partial-agg order can't flip a rounded digit (both engines),
-- every top-k has ``NULLS LAST`` + a total-order tie-breaker,
+- every top-k has ``NULLS LAST`` + a total-order tie-breaker: fixed-n
+  top-k goes through ``rank.top_k`` (global) or ``rank.top_n_per_group``
+  (per group, or ``group_cols=()`` for a numbered global top-n), which
+  own that rule,
 - timestamps/dates in outputs are formatted to strings (engine-neutral),
 - ratios are rounded at a fixed scale in both implementations.
 """
@@ -3440,8 +3443,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     skewed shuffle key risk) is combined map-side. The doc count joins in
     as a broadcast 1-row aggregate, and the final top-10 is a grouped
     window over |lang|×|vocab| rows — the raw corpus is long gone."""
-    from pyspark.sql import Window
-
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -3463,8 +3464,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy("lang").orderBy(F.col("tfidf").desc(), F.col("term").asc())
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 10)
+    return rank.top_n_per_group(scored, ("lang",), "tfidf", n=10, tiebreak=("term",))
 
 
 @query(
@@ -3517,8 +3517,6 @@ def top_supplier_by_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the rank-1 filter, so only |quarters| rows reach the join. The
     decimal revenue is kept exact through the rank (order ties can't flip
     on float rounding) and surfaced as double only in the projection."""
-    from pyspark.sql import Window
-
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     rev = li.groupBy(
@@ -3526,8 +3524,7 @@ def top_supplier_by_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(30,4)")).alias("rev")
     )
-    w = Window.partitionBy("q").orderBy(F.col("rev").desc(), F.col("l_suppkey").asc())
-    top = rev.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") == 1)
+    top = rank.top_n_per_group(rev, ("q",), "rev", n=1, tiebreak=("l_suppkey",))
     return top.join(F.broadcast(s), top.l_suppkey == s.s_suppkey).select(
         F.date_format("q", "yyyy-MM-dd").alias("quarter"),
         "s_name",
@@ -9865,12 +9862,9 @@ def _minhash_cluster_stream(
         # reads it three times (sizes + both self-join sides) and the
         # survivor fold a fourth; freed below once every consumer has
         # materialized
-        _docs_scan = docs.select(
-            F.col("doc_id").alias("__id"), F.col("text").alias("__t")
-        )
         served = _spread(
-            _docs_scan.join(F.broadcast(cand_docs), "__id", "left_semi"),
-            gate=_docs_scan,
+            docs.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t"))
+            .join(F.broadcast(cand_docs), "__id", "left_semi"),
             by="__id",
         ).localCheckpoint()
         sh = served.select("__id", F.explode(word_shingles("__t", 3)).alias("__s"))
@@ -10359,14 +10353,9 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum"),
         F.sum("wt").over(whole).alias("total"),
     ).filter(F.col("cum") >= F.col("total") / 2)
-    pick = Window.partitionBy("l_returnflag").orderBy(
-        F.col("cum").asc(), F.col("price").asc()
-    )
-    return (
-        c.withColumn("__rn", F.row_number().over(pick))
-        .filter(F.col("__rn") == 1)
-        .select("l_returnflag", F.round("price", 2).alias("weighted_median_price"))
-    )
+    return rank.top_n_per_group(
+        c, ("l_returnflag",), "cum", order="asc", n=1, tiebreak=("price",), rank_col="__rn"
+    ).select("l_returnflag", F.round("price", 2).alias("weighted_median_price"))
 
 
 @query(
@@ -12948,8 +12937,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("__cv"),
         F.col("__n").alias("__cn"),
     )
-    from pyspark.sql import Window
-
     pairs = c.join(
         F.broadcast(p),
         (F.col("neg_id") != F.col("probe_id"))
@@ -12963,12 +12950,10 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__cos"
         ),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("__cos").desc(), F.col("neg_id").asc()
-    )
     return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        rank.top_n_per_group(
+            pairs, ("probe_id",), "__cos", n=1, tiebreak=("neg_id",), rank_col="__rn"
+        )
         .select(
             "probe_id",
             "probe_label",
@@ -13199,17 +13184,10 @@ def cm_sketch_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("token") != ""
     )
     cm = sketch.cm_sketch(toks, "token", width=256, depth=4)
-    from pyspark.sql import Window
-
     cnt = toks.groupBy("token").agg(F.count("*").alias("n"))
-    top = (
-        cnt.withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.col("n").desc(), F.col("token").asc())),
-        )
-        .filter(F.col("rk") <= 20)
-        .select("token", "n")
-    )
+    top = rank.top_n_per_group(
+        cnt, (), "n", n=20, tiebreak=("token",), rank_col="rk"
+    ).select("token", "n")
     est = sketch.cm_estimate(cm, top, "token", width=256, depth=4)
     return est.select(
         "token",
@@ -13263,15 +13241,7 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("token") != ""
     )
     cnt = toks.groupBy("token").agg(F.count("*").alias("n"))
-    from pyspark.sql import Window
-
-    top = (
-        cnt.withColumn(
-            "r",
-            F.row_number().over(Window.orderBy(F.col("n").desc(), F.col("token").asc())),
-        )
-        .filter(F.col("r") <= 1000)
-    )
+    top = rank.top_n_per_group(cnt, (), "n", n=1000, tiebreak=("token",), rank_col="r")
     dec = "decimal(30,12)"
     t = top.select(
         F.round(F.log(F.col("r")), 12).cast(dec).alias("x"),
@@ -13443,16 +13413,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     b = _bm25_scores(spark, sf_dir)
-    r1 = (
-        b.withColumn(
-            "rank1",
-            F.row_number().over(
-                Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rank1") <= 50)
-        .select("doc_id", "rank1")
-    )
+    r1 = rank.top_n_per_group(
+        b, (), "bm25", n=50, tiebreak=("doc_id",), rank_col="rank1"
+    ).select("doc_id", "rank1")
     emb = _t(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 0)
     nn = similarity.cosine_topk_bruteforce(
@@ -14015,8 +13978,6 @@ def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     this synthetic name space (observed: one 150-member component). Same
     scale shape as the dedup applies: pair list is tiny, the windowed
     pick runs per cluster, and the member join is key-partitioned."""
-    from pyspark.sql import Window
-
     c = (
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 10 == 0)
@@ -14041,12 +14002,9 @@ def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"), "dist")
     )
-    wb = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-    best = (
-        sym.withColumn("__rn", F.row_number().over(wb))
-        .filter(F.col("__rn") == 1)
-        .select("src", "dst")
-    )
+    best = rank.top_n_per_group(
+        sym, ("src",), "dist", order="asc", n=1, tiebreak=("dst",), rank_col="__rn"
+    ).select("src", "dst")
     mutual = (
         best.alias("b1")
         .join(
@@ -14061,14 +14019,9 @@ def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = comp.join(
         c.select(F.col("c_custkey").alias("id"), "c_acctbal"), "id"
     )
-    w = Window.partitionBy("comp").orderBy(
-        F.col("c_acctbal").desc(), F.col("id").asc()
-    )
-    golden = (
-        members.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(F.col("comp"), F.col("id").alias("__golden"))
-    )
+    golden = rank.top_n_per_group(
+        members, ("comp",), "c_acctbal", n=1, tiebreak=("id",), rank_col="__rn"
+    ).select(F.col("comp"), F.col("id").alias("__golden"))
     csize = members.groupBy("comp").agg(F.count("*").alias("__n"))
     mapping = (
         members.join(golden, "comp")
@@ -14433,19 +14386,10 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact double both engines share, rounded into a decimal sum; the
     ideal DCG uses the full 20 slots (|relevant| = 20 by construction).
     Tiny joins over two ≤20-row rankings after the two scoring passes."""
-    from pyspark.sql import Window
-
     b = _bm25_scores(spark, sf_dir)
-    r1 = (
-        b.withColumn(
-            "rank1",
-            F.row_number().over(
-                Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rank1") <= 20)
-        .select("doc_id", "rank1")
-    )
+    r1 = rank.top_n_per_group(
+        b, (), "bm25", n=20, tiebreak=("doc_id",), rank_col="rank1"
+    ).select("doc_id", "rank1")
     emb = _t(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 0)
     rel = (
@@ -14509,8 +14453,6 @@ def _truncation_top20(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     """The cosine top-20 of probe vec_id 0 over the other embeddings, at full
     dimension (doc_id, rank1) and truncated to the first 32 dims
     (doc_id, rank2); doc_id breaks ties."""
-    from pyspark.sql import Window
-
     emb = _t(spark, sf_dir, "embeddings")
     half = F.slice(F.col("embedding"), 1, 32)
     b = emb.select(
@@ -14531,26 +14473,12 @@ def _truncation_top20(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
         (similarity.dot("__qf", "embedding") / (F.col("__qnf") * F.col("nf"))).alias("cf"),
         (similarity.dot("__qh", "__hv") / (F.col("__qnh") * F.col("nh"))).alias("ch"),
     )
-    r1 = (
-        cos.withColumn(
-            "rank1",
-            F.row_number().over(
-                Window.orderBy(F.col("cf").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rank1") <= 20)
-        .select("doc_id", "rank1")
-    )
-    r2 = (
-        cos.withColumn(
-            "rank2",
-            F.row_number().over(
-                Window.orderBy(F.col("ch").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rank2") <= 20)
-        .select("doc_id", "rank2")
-    )
+    r1 = rank.top_n_per_group(
+        cos, (), "cf", n=20, tiebreak=("doc_id",), rank_col="rank1"
+    ).select("doc_id", "rank1")
+    r2 = rank.top_n_per_group(
+        cos, (), "ch", n=20, tiebreak=("doc_id",), rank_col="rank2"
+    ).select("doc_id", "rank2")
     return r1, r2
 
 
@@ -15720,16 +15648,9 @@ def daily_revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = c.crossJoin(F.broadcast(t)).withColumn(
         "cusum", F.col("cum") - F.col("i") * F.col("mu")
     )
-    pick = (
-        s.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.orderBy(F.abs(F.col("cusum")).desc(), F.col("day").asc())
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("day", "i", "n", "cusum")
-    )
+    pick = rank.top_n_per_group(
+        s, (), F.abs(F.col("cusum")), n=1, tiebreak=("day",), rank_col="__rn"
+    ).select("day", "i", "n", "cusum")
     sums = d.crossJoin(F.broadcast(pick.select(F.col("day").alias("__cp")))).agg(
         F.sum(F.when(F.col("day") <= F.col("__cp"), F.col("rev")))
         .cast("double")

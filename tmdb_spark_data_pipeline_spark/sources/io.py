@@ -183,10 +183,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> None:
     """Register every table as a temp view so the surface is SQL-queryable."""
     for n in names:
