@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from tmdb_spark_data_pipeline_spark.operators import graph
+import pytest
+
+from tmdb_spark_data_pipeline_spark.operators import dedup, graph
 
 
 def _stats(spark, edges):
@@ -453,3 +455,74 @@ def test_deep_peel_bounds_live_checkpoints(spark):
     assert dedup.connected_components(path).count() == 61
     cc = live() - seen
     assert len(cc) <= 3, f"connected_components left {len(cc)} live checkpoints"
+
+
+def test_rank_and_bfs_loops_bound_live_checkpoints(spark):
+    """The PageRank and BFS loops cut through ``session.Rounds`` too: a
+    superseded round's checkpoint is freed when the next cut exists, and
+    the symmetrized edge list (plus the static degree and teleport tables)
+    when the loop exits. What stays is what the returned plan reads: the
+    final rank table, or BFS's node list and final settled table — not one
+    copy per round (9 rounds left 7-8 live checkpoints per PageRank and 11
+    for BFS before). Same ``getPersistentRDDs`` probe as above."""
+
+    def live() -> set[int]:
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {k for k in m.keySet().toArray()}
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(24)], "u long, v long")
+    wpath = spark.createDataFrame([(i, i + 1, 1) for i in range(24)], "u long, v long, w long")
+    seeds = spark.createDataFrame([(0,)], "id long")
+    runs = {
+        "pagerank_fixed": (lambda: graph.pagerank_fixed(path, iters=9), 1),
+        "pagerank_weighted_fixed": (lambda: graph.pagerank_weighted_fixed(wpath, iters=9), 1),
+        "personalized_pagerank_fixed": (
+            lambda: graph.personalized_pagerank_fixed(path, seeds, iters=9), 1
+        ),
+        "multi_source_bfs": (lambda: graph.multi_source_bfs(path, seeds, max_hops=8), 2),
+    }
+    for name, (run, bound) in runs.items():
+        seen = live()
+        assert run().count() == 25
+        left = live() - seen
+        assert len(left) <= bound, f"{name} left {len(left)} live checkpoints"
+
+
+#: Each loop's result on the 1-edge graph (1, 2) with weight 3 and seed 1.
+_ONE_EDGE = {
+    "connected_components": (
+        lambda e, s: dedup.connected_components(e, "u", "v"), [(1, 1), (2, 1)]
+    ),
+    "kcore": (lambda e, s: graph.kcore(e, 1), [(1, 1), (2, 1)]),
+    "s_core": (lambda e, s: graph.s_core(e, 1), [(1, 1, 3), (2, 1, 3)]),
+    "ktruss": (lambda e, s: graph.ktruss(e, 2), [(1, 2, 0)]),
+    "pagerank_fixed": (
+        lambda e, s: graph.pagerank_fixed(e), [(1, 500000000000), (2, 500000000000)]
+    ),
+    "pagerank_weighted_fixed": (
+        lambda e, s: graph.pagerank_weighted_fixed(e),
+        [(1, 500000000000), (2, 500000000000)],
+    ),
+    "personalized_pagerank_fixed": (
+        lambda e, s: graph.personalized_pagerank_fixed(e, s),
+        [(1, 336675937500), (2, 663324062500)],
+    ),
+    "multi_source_bfs": (lambda e, s: graph.multi_source_bfs(e, s), [(1, 0), (2, 1)]),
+}
+
+
+@pytest.mark.parametrize("n_edges", [0, 1])
+@pytest.mark.parametrize("op", sorted(_ONE_EDGE))
+def test_iterative_loops_on_zero_and_one_edge(spark, op, n_edges):
+    """Edge sizes: no edges gives an empty result (personalized PageRank
+    raises: no seed can be in an empty graph); one edge gives the pinned
+    rows."""
+    run, one = _ONE_EDGE[op]
+    edges = spark.createDataFrame([(1, 2, 3)][:n_edges], "u long, v long, w long")
+    seeds = spark.createDataFrame([(1,)], "id long")
+    if op == "personalized_pagerank_fixed" and n_edges == 0:
+        with pytest.raises(ValueError, match="no seed is present"):
+            run(edges, seeds)
+        return
+    got = sorted(tuple(r) for r in run(edges, seeds).collect())
+    assert got == (one if n_edges else [])

@@ -1,5 +1,6 @@
-"""Session factory config handling, the per-gateway Column memo, and the
-engine session staying active after the oracle suite's driver session."""
+"""Session factory config handling, the per-gateway Column memo, the
+iterative-loop checkpoint owner, and the engine session staying active
+after the oracle suite's driver session."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from tmdb_spark_data_pipeline_spark.functions import gateway_memo
-from tmdb_spark_data_pipeline_spark.session import _env_conf_pairs, get_spark
+from tmdb_spark_data_pipeline_spark.session import Rounds, _env_conf_pairs, get_spark
 
 
 @pytest.mark.parametrize("bad", ["spark.ui.showConsoleProgress", "=false"])
@@ -54,3 +55,44 @@ def test_engine_session_active_with_ansi_off(spark):
     assert jcls.getDefaultSession().get().equals(spark._jsparkSession)
     assert SparkSession.getActiveSession() is spark
     assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+
+
+def test_rounds_keeps_one_cut_and_one_laundering_pin(spark):
+    """``Rounds`` frees every superseded cut and consumed side checkpoint
+    at the next cut, keeps at most one laundering pin, and on exit (by a
+    raise too) drops that pin's cache and the held inputs, leaving only the
+    newest cut, which stays readable."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def live() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    def step(df):
+        return df.select((F.col("id") + 1).alias("id"))
+
+    spark.catalog.clearCache()
+    seen = live()
+    with Rounds(launder_every=3) as rounds:
+        held = rounds.hold(spark.range(10))
+        df = held
+        for n in range(1, 8):
+            side = step(df).localCheckpoint()
+            df = rounds.cut(step(side), side)
+            pinned = n >= 3  # cuts 3 and 6 launder; cut 6 supersedes 3
+            # held + newest cut; a pin that a later cut has read adds its
+            # checkpoint and its cache's buffers
+            assert len(live() - seen) == 2 + 2 * (pinned and n % 3 != 0)
+            assert cm.isEmpty() != pinned
+    assert cm.isEmpty()
+    assert len(live() - seen) == 1
+    assert [r.id for r in df.orderBy("id").collect()] == list(range(14, 24))
+
+    seen = live()
+    with pytest.raises(RuntimeError, match="boom"):
+        with Rounds(launder_every=2) as rounds:
+            df = rounds.hold(spark.range(5))
+            for _ in range(3):
+                df = rounds.cut(step(df))
+            raise RuntimeError("boom")
+    assert cm.isEmpty()
+    assert len(live() - seen) == 1

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ColumnOrName, _col, gateway_memo
+from ..session import Rounds
 
 
 def _spread(df: DataFrame, by: str | None = None) -> DataFrame:
@@ -855,20 +856,13 @@ def connected_components(
     round with better skew behavior on giant components; swap in if one
     component ever spans a meaningful fraction of the corpus.
 
-    Checkpoint hygiene (round 12): each superseded round's localCheckpoint
-    and the edges table are freed DETERMINISTICALLY (``free_local_
-    checkpoint``) the moment the next round's checkpoint is materialized —
-    previously they waited for Py4J + ContextCleaner GC, which a per-epoch
-    caller (the streaming maintenance family) cannot rely on: block-manager
-    storage carried O(rounds) label-table copies per epoch until some
-    nondeterministic later GC. Laundering rounds (1 in 6) keep their
-    checkpoint RDD until GC — their DataFrame cache is the stats pin, and
-    unpersisting the RDD under a live cache entry risks a recompute of a
-    lineage-truncated plan. The RETURNED frame stays backed by its own
-    localCheckpoint; callers that hold state across epochs free it
-    themselves when superseded.
+    Checkpoints follow ``session.Rounds``: each round is one cut, every 6th
+    launders Catalyst's size estimate (the pointer jump SELF-JOINS the
+    evolving table, so the inherited estimate squares every round), and
+    superseded rounds and the edge list are freed deterministically. The
+    RETURNED frame stays backed by the final round's checkpoint; callers
+    that hold state across epochs free it themselves when superseded.
     """
-    from ..session import free_local_checkpoint
     edges = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d")).union(
         pairs.select(F.col(dst).alias("s"), F.col(src).alias("d"))
     )
@@ -878,108 +872,66 @@ def connected_components(
         # distinct and normalized (src < dst) can skip this exchange —
         # the two symmetrized directions cannot collide (dedup_edges=False)
         edges = edges.distinct()
-    edges = edges.localCheckpoint()
     comp = None
-    prev = None
-    comp_ckpt = None  # the checkpointed frame backing `comp` (freed per round)
-    comp_pinned = False  # True when comp is a laundering round's persist()
-    for i in range(max_iter):
-        # min label among neighbors (one hop through edges); the node's own
-        # previous label rides through the round as `old`, so the convergence
-        # test below is a scan of this round's checkpoint instead of a join
-        # back against the previous table (guide §2.4 — the per-round
-        # convergence join was two extra exchanges). A fused
-        # union-then-one-groupBy form of this step was tried and reverted:
-        # it shuffles |neighbor contribs| + |nodes| rows where this shape's
-        # grouped min partial-aggs the join output and the left join stays
-        # on the small label table — floors read ~1.5-2 s worse per query
-        # on the CC-heavy family.
-        if comp is None:
-            # round 1 fused (guide §2.4): with the identity labeling
-            # comp₀(id) = id, the neighbor min is just min(d) per s — the
-            # materialized identity table (a distinct + localCheckpoint per
-            # CC call) and round 1's join against it collapse into one
-            # grouped min over the edge list. Labels are identical: every
-            # node appears as `s` (edges are symmetric by construction), so
-            # least(s, min(d)) == least(comp₀, coalesce(nbr_min, comp₀)).
-            stepped = (
-                edges.groupBy("s")
-                .agg(F.min("d").alias("nbr_comp"))
-                .select(
-                    F.col("s").alias("id"),
-                    F.col("s").alias("old"),
-                    F.least("s", "nbr_comp").alias("comp"),
+    with Rounds(launder_every=6) as rounds:
+        edges = rounds.hold(edges)
+        for _ in range(max_iter):
+            # min label among neighbors (one hop through edges); the node's
+            # own previous label rides through the round as `old`, so the
+            # convergence test below is a scan of this round's checkpoint
+            # instead of a join back against the previous table (guide
+            # §2.4 — the per-round convergence join was two extra
+            # exchanges). A fused union-then-one-groupBy form of this step
+            # was tried and reverted: it shuffles |neighbor contribs| +
+            # |nodes| rows where this shape's grouped min partial-aggs the
+            # join output and the left join stays on the small label table
+            # — floors read ~1.5-2 s worse per query on the CC-heavy family.
+            if comp is None:
+                # round 1 fused (guide §2.4): with the identity labeling
+                # comp₀(id) = id, the neighbor min is just min(d) per s — the
+                # materialized identity table (a distinct + localCheckpoint
+                # per CC call) and round 1's join against it collapse into
+                # one grouped min over the edge list. Labels are identical:
+                # every node appears as `s` (edges are symmetric by
+                # construction), so least(s, min(d)) == least(comp₀,
+                # coalesce(nbr_min, comp₀)).
+                stepped = (
+                    edges.groupBy("s")
+                    .agg(F.min("d").alias("nbr_comp"))
+                    .select(
+                        F.col("s").alias("id"),
+                        F.col("s").alias("old"),
+                        F.least("s", "nbr_comp").alias("comp"),
+                    )
                 )
+            else:
+                nbr = (
+                    edges.join(comp.select(F.col("id").alias("d"), "comp"), "d")
+                    .groupBy("s")
+                    .agg(F.min("comp").alias("nbr_comp"))
+                    .select(F.col("s").alias("id"), "nbr_comp")
+                )
+                stepped = comp.join(nbr, "id", "left").select(
+                    "id",
+                    F.col("comp").alias("old"),
+                    F.least("comp", F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
+                )
+            # pointer jump: comp <- comp(comp), halving chain lengths
+            jumped = rounds.cut(
+                stepped.join(
+                    stepped.select(F.col("id").alias("comp"), F.col("comp").alias("comp2")),
+                    "comp",
+                ).select("id", "old", F.least("comp", "comp2").alias("comp"))
             )
-        else:
-            nbr = (
-                edges.join(comp.select(F.col("id").alias("d"), "comp"), "d")
-                .groupBy("s")
-                .agg(F.min("comp").alias("nbr_comp"))
-                .select(F.col("s").alias("id"), "nbr_comp")
-            )
-            stepped = comp.join(nbr, "id", "left").select(
-                "id",
-                F.col("comp").alias("old"),
-                F.least("comp", F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
-        # pointer jump: comp <- comp(comp), halving chain lengths.
-        # localCheckpoint truncates LINEAGE but INHERITS the source plan's
-        # size ESTIMATE — and because this round SELF-JOINS the evolving
-        # table, the inherited sizeInBytes squares every round: the digit
-        # count of Catalyst's BigInt estimate doubles per iteration, and on
-        # a slow-converging graph (long chains need ~20+ rounds) the size
-        # arithmetic alone grows to ~50 s/round and OOMs a default-sized
-        # driver (measured on the (u+v)%3 co-purchase subgraph). Every 6th
-        # round, persist() on top of the checkpoint re-derives stats from
-        # the ACTUAL materialized bytes (InMemoryRelation.computeStats
-        # after the convergence count below), resetting the estimate —
-        # digits between launderings stay ≤ ~40·2⁶, trivially cheap, and
-        # the near-dup clique graphs that converge in 2-4 rounds pay no
-        # second materialization at all. Superseded caches are unpersisted.
-        jumped = stepped.join(
-            stepped.select(F.col("id").alias("comp"), F.col("comp").alias("comp2")),
-            "comp",
-        ).select("id", "old", F.least("comp", "comp2").alias("comp")).localCheckpoint()
-        if i % 6 == 5:
-            jumped = jumped.persist()
-        # convergence: label != previous label, read straight off the
-        # just-materialized checkpoint — no join, no shuffle
-        changed = jumped.filter(F.col("comp") != F.col("old")).count()
-        if i % 6 == 5:
-            if prev is not None:
-                prev.unpersist()
-                free_local_checkpoint(prev)  # 6 rounds stale, fully consumed
-            prev = jumped
-        # jumped is materialized and the convergence count has read it —
-        # the superseded round's checkpoint blocks are dead; free them now
-        # instead of waiting for Py4J + ContextCleaner GC (laundering-round
-        # tables are exempt: their DF cache is the stats pin)
-        if not comp_pinned and comp_ckpt is not None:
-            free_local_checkpoint(comp_ckpt)
-        comp_ckpt = jumped
-        comp = jumped.select("id", "comp")
-        comp_pinned = i % 6 == 5
-        if changed == 0:
-            # Drop the loop's laundering cache before returning — a caller
-            # that invokes this per epoch (stream_cc_maintenance's
-            # foreachBatch) would otherwise accumulate one cached label
-            # table per invocation for the life of the application. When
-            # convergence lands ON a laundering round (prev is comp), the
-            # returned DataFrame is still backed by its localCheckpoint RDD,
-            # so unpersisting only drops the stats-pinning cache — reads
-            # stay correct and cheap (the label table is tiny). The RETURN
-            # is an (id, comp) projection of the final round's checkpoint
-            # (the `old` column stays internal); free_local_checkpoint
-            # descends through projections, so per-epoch callers free it
-            # exactly as before.
-            if prev is not None:
-                prev.unpersist()
-            free_local_checkpoint(edges)
-            return comp
-    if prev is not None:
-        prev.unpersist()
-    free_local_checkpoint(edges)
+            # convergence: label != previous label, read straight off the
+            # just-materialized checkpoint — no join, no shuffle
+            changed = jumped.filter(F.col("comp") != F.col("old")).count()
+            # the (id, comp) projection keeps `old` internal; freeing a
+            # checkpoint descends through projections, so per-epoch
+            # callers free the returned frame directly
+            comp = jumped.select("id", "comp")
+            if changed == 0:
+                return comp
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 

@@ -13,10 +13,13 @@ counts every triangle exactly once.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import free_local_checkpoint
+from ..session import Rounds
 from . import rank
 
 
@@ -129,6 +132,13 @@ def local_clustering(
     )
 
 
+def _symmetric(edges: DataFrame, u: str, v: str, *carry: Column) -> DataFrame:
+    """Both directions of every edge ``(u, v)`` as ``(src, dst, *carry)``."""
+    return edges.select(F.col(u).alias("src"), F.col(v).alias("dst"), *carry).unionAll(
+        edges.select(F.col(v).alias("src"), F.col(u).alias("dst"), *carry)
+    )
+
+
 def _peel(
     sym: DataFrame,
     strength: Column,
@@ -138,65 +148,33 @@ def _peel(
     max_iter: int,
 ) -> DataFrame:
     """The peel loop of ``kcore`` and ``s_core`` over a symmetric edge list
-    ``sym`` (src, dst, ...): each round drops every node whose ``strength``
-    aggregate over its ``src`` rows is below ``floor``, until none is.
-    Raises ``RuntimeError`` naming ``name`` and ``measure`` if ``max_iter``
-    rounds leave such nodes."""
+    ``sym`` (src, dst, ...), a checkpoint the loop consumes: each round
+    drops every node whose ``strength`` aggregate over its ``src`` rows is
+    below ``floor``, until none is. Odd rounds cut the surviving edge list
+    (each cut materializes the whole list, and halving them saves ~1/3 of
+    the loop wall — the pagerank_fixed measurement); every 3rd cut
+    launders the size estimate each anti-join round multiplies
+    (``session.Rounds``). Raises ``RuntimeError`` naming ``name`` and
+    ``measure`` if ``max_iter`` rounds leave such nodes."""
     converged = False
-    prev_cached = None
-    prev_sym = sym
-    prev_pinned = False
-    pending_dead: list[DataFrame] = []
-    for i in range(max_iter):
-        deg = sym.groupBy("src").agg(strength.alias("__d"))
-        # three consumers of the tiny dead list (probe + both anti-join
-        # sides) — materialize once, not three degree aggregates per round
-        dead = deg.filter(F.col("__d") < floor).select("src").localCheckpoint()
-        if dead.isEmpty():
-            free_local_checkpoint(dead)  # empty probe list, consumed by nothing
-            converged = True
-            break
-        pending_dead.append(dead)
-        sym = sym.join(dead, "src", "left_anti").join(
-            dead.select(F.col("src").alias("dst")), "dst", "left_anti"
-        )
-        # every-other-round truncation: each eager localCheckpoint
-        # materializes the whole surviving edge list, and halving them saves
-        # ~1/3 of the loop wall (the pagerank_fixed measurement). Every
-        # 6th round the persist() on top launders Catalyst's size estimate:
-        # localCheckpoint INHERITS it, each anti-join round multiplies it,
-        # and on a deep peel cascade the BigInt size arithmetic would
-        # dominate planning long before data does (the connected_components
-        # lesson, dedup.py) — InMemoryRelation re-derives stats from real
-        # materialized bytes. Shallow peels (the normal case) never pay the
-        # second materialization.
-        if i % 2 == 1:
-            sym = sym.localCheckpoint()
-            # the new checkpoint materialized every pending anti-join — the
-            # superseded edge-list checkpoint and the consumed dead lists
-            # are dead blocks; free them deterministically instead of
-            # leaving O(peel-depth) copies to Py4J+ContextCleaner GC (the
-            # round-12 connected_components hygiene discipline). Laundering
-            # rounds are exempt while live — their DF cache is the stats
-            # pin — and are freed when the NEXT laundering supersedes them.
-            if not prev_pinned:
-                free_local_checkpoint(prev_sym)
-            for d in pending_dead:
-                free_local_checkpoint(d)
-            pending_dead.clear()
-            prev_sym = sym
-            prev_pinned = i % 6 == 5
-            if i % 6 == 5:
-                if prev_cached is not None:
-                    prev_cached.unpersist()
-                    free_local_checkpoint(prev_cached)  # 6 rounds stale
-                sym = sym.persist()
-                prev_cached = sym
-    if prev_cached is not None:
-        # drop the last laundering cache before returning (ADVICE r10) —
-        # sym stays backed by its localCheckpoint RDD; pinned by
-        # test_deep_peel_leaves_no_cache_entries.
-        prev_cached.unpersist()
+    consumed = [sym]  # read for the last time by the next cut
+    with Rounds(launder_every=3) as rounds:
+        for i in range(max_iter):
+            deg = sym.groupBy("src").agg(strength.alias("__d"))
+            # three consumers of the tiny dead list (probe + both anti-join
+            # sides) — materialize once, not three degree aggregates per round
+            dead = deg.filter(F.col("__d") < floor).select("src").localCheckpoint()
+            if dead.isEmpty():
+                rounds.drop(dead)  # empty probe list, consumed by nothing
+                converged = True
+                break
+            consumed.append(dead)
+            sym = sym.join(dead, "src", "left_anti").join(
+                dead.select(F.col("src").alias("dst")), "dst", "left_anti"
+            )
+            if i % 2 == 1:
+                sym = rounds.cut(sym, *consumed)
+                consumed = []
     if not converged and not (
         sym.groupBy("src").agg(strength.alias("__d"))
         .filter(F.col("__d") < floor)
@@ -237,11 +215,7 @@ def kcore(
     the function raises rather than silently returning a non-core with
     degree-<k nodes still present (ADVICE r6) — callers on pathological
     graphs raise ``max_iter``; the result is always a true k-core."""
-    sym = (
-        edges.select(F.col(u_col).alias("src"), F.col(v_col).alias("dst"))
-        .unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
-        .localCheckpoint()
-    )
+    sym = _symmetric(edges, u_col, v_col).localCheckpoint()
     sym = _peel(sym, F.count("*"), k, "kcore", "degree", max_iter)
     return sym.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("core_deg")
@@ -273,22 +247,78 @@ def s_core(
     lineage truncation, a convergence scalar per round, and a raise if
     ``max_iter`` rounds exhaust with light nodes remaining (silent
     non-cores never escape)."""
-    sym = (
-        edges.select(
-            F.col(u_col).alias("src"), F.col(v_col).alias("dst"), F.col(w_col).alias("w")
-        )
-        .unionAll(
-            edges.select(
-                F.col(v_col).alias("src"), F.col(u_col).alias("dst"), F.col(w_col).alias("w")
-            )
-        )
-        .localCheckpoint()
-    )
+    sym = _symmetric(edges, u_col, v_col, F.col(w_col).alias("w")).localCheckpoint()
     sym = _peel(sym, F.sum("w"), s, "s_core", "strength", max_iter)
     return sym.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("core_deg"),
         F.sum("w").cast("long").alias("core_weight"),
     )
+
+
+def _pagerank_rounds(
+    edges: DataFrame,
+    u_col: str,
+    v_col: str,
+    iters: int,
+    degree: Column,
+    share: str,
+    start: Callable,
+    *carry: Column,
+) -> DataFrame:
+    """The round loop of the fixed-iteration PageRanks over the symmetrized
+    ``edges`` (``carry`` columns ride along). ``degree`` is the aliased
+    per-node aggregate over its out-edges; it is static across rounds, so
+    it is attached to the edge list ONCE and each round needs a single
+    (node, rank)⋈edges join, not two. ``share`` is the SQL for one edge's
+    contribution from ``rank`` and that degree. ``start(deg, rounds)``
+    returns the initial ``(node, rank)`` frame and the teleport step that
+    turns the per-``dst`` contribution sums ``__s`` into the next one.
+
+    Per round: one key-partitioned join + one grouped sum — shuffles carry
+    longs, never payloads. Every OTHER round (and the last) is cut: two
+    rounds of join+agg lineage is shallow, and each cut costs a full
+    materialization — halving them saves ~1/3 of the loop wall. Output:
+    (node, rank_micro)."""
+    with Rounds() as rounds:
+        sym = rounds.hold(_symmetric(edges, u_col, v_col, *carry))
+        deg = sym.groupBy("src").agg(degree)
+        ranks, teleport = start(deg, rounds)
+        sym_deg = rounds.hold(
+            sym.join(deg, "src").select(
+                F.col("src").alias("node"), *sym.columns[1:], *deg.columns[1:]
+            )
+        )
+        for i in range(iters):
+            contrib = ranks.join(sym_deg, "node").select(
+                "dst", F.expr(share).alias("__c")
+            )
+            ranks = teleport(contrib.groupBy("dst").agg(F.sum("__c").alias("__s")))
+            if i % 2 == 1 or i == iters - 1:
+                ranks = rounds.cut(ranks)
+        if not iters:
+            ranks = rounds.cut(ranks)  # the start frame reads the held inputs
+        return ranks.select("node", F.col("rank").alias("rank_micro"))
+
+
+def _uniform_start(scale: int, deg: DataFrame, _rounds: Rounds):
+    """``_pagerank_rounds`` start for global PageRank: ``scale DIV n`` on
+    every node, and a uniform teleport ``(15·(scale DIV n)) DIV 100``."""
+    n = deg.agg(F.count("*").alias("__nn"))
+    ranks = deg.crossJoin(F.broadcast(n)).select(
+        F.col("src").alias("node"),
+        F.expr(f"CAST({scale} DIV __nn AS BIGINT)").alias("rank"),
+    )
+
+    def teleport(summed: DataFrame) -> DataFrame:
+        return summed.crossJoin(F.broadcast(n)).select(
+            F.col("dst").alias("node"),
+            F.expr(
+                f"CAST((15 * ({scale} DIV __nn)) DIV 100"
+                " + (85 * __s) DIV 100 AS BIGINT)"
+            ).alias("rank"),
+        )
+
+    return ranks, teleport
 
 
 def pagerank_fixed(
@@ -311,50 +341,14 @@ def pagerank_fixed(
     Symmetric graphs have no dangling nodes (every node has out-edges and
     in-edges), so no dangling-mass term is needed.
 
-    Iteration shape: per round one key-partitioned join of (node, rank)
-    against the out-edge list and one grouped sum — shuffles carry (long,
-    long) pairs, never payloads; ``localCheckpoint`` truncates the
-    iterative lineage. Output: (node, rank_micro)."""
-    sym = (
-        edges.select(F.col(u_col).alias("src"), F.col(v_col).alias("dst"))
-        .unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
-        .localCheckpoint()
+    Iteration shape: ``_pagerank_rounds`` — per round one key-partitioned
+    join of (node, rank) against the out-edge list and one grouped sum;
+    shuffles carry (long, long) pairs, never payloads. Output: (node,
+    rank_micro)."""
+    return _pagerank_rounds(
+        edges, u_col, v_col, iters, F.count("*").alias("outdeg"),
+        "rank DIV outdeg", partial(_uniform_start, scale),
     )
-    deg = sym.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # out-degree is static across rounds — attach it to the edge list ONCE
-    # so each round needs a single (node, rank)⋈edges join, not two
-    sym_deg = (
-        sym.join(deg, "src")
-        .select(F.col("src").alias("node"), "dst", "outdeg")
-        .localCheckpoint()
-    )
-    n = deg.agg(F.count("*").alias("__nn"))
-    ranks = deg.crossJoin(F.broadcast(n)).select(
-        F.col("src").alias("node"),
-        F.expr(f"CAST({scale} DIV __nn AS BIGINT)").alias("rank"),
-    )
-    for i in range(iters):
-        contrib = ranks.join(sym_deg, "node").select(
-            "dst", F.expr("rank DIV outdeg").alias("__c")
-        )
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(F.sum("__c").alias("__s"))
-            .crossJoin(F.broadcast(n))
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"CAST((15 * ({scale} DIV __nn)) DIV 100"
-                    " + (85 * __s) DIV 100 AS BIGINT)"
-                ).alias("rank"),
-            )
-        )
-        # truncate every OTHER round: two rounds of join+agg lineage is
-        # shallow, and each eager localCheckpoint costs a full
-        # materialization — halving them saves ~1/3 of the loop wall
-        if i % 2 == 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("node", F.col("rank").alias("rank_micro"))
 
 
 def pagerank_weighted_fixed(
@@ -380,52 +374,12 @@ def pagerank_weighted_fixed(
 
     Same per-round shape and replayability as the unweighted form: one
     (node, rank) join against the weighted out-edge list + one grouped
-    sum, (long, long, long) shuffles, localCheckpoint every other round;
-    an external engine replays every floor division bit-for-bit."""
-    sym = (
-        edges.select(
-            F.col(u_col).alias("src"), F.col(v_col).alias("dst"), F.col(w_col).alias("w")
-        )
-        .unionAll(
-            edges.select(
-                F.col(v_col).alias("src"), F.col(u_col).alias("dst"), F.col(w_col).alias("w")
-            )
-        )
-        .localCheckpoint()
+    sum, (long, long, long) shuffles; an external engine replays every
+    floor division bit-for-bit."""
+    return _pagerank_rounds(
+        edges, u_col, v_col, iters, F.sum("w").alias("wdeg"),
+        "(rank * w) DIV wdeg", partial(_uniform_start, scale), F.col(w_col).alias("w"),
     )
-    deg = sym.groupBy("src").agg(F.sum("w").alias("wdeg"))
-    # static weighted degree attached to the edge list once (see
-    # pagerank_fixed) — one join per round instead of two
-    sym_deg = (
-        sym.join(deg, "src")
-        .select(F.col("src").alias("node"), "dst", "w", "wdeg")
-        .localCheckpoint()
-    )
-    n = deg.agg(F.count("*").alias("__nn"))
-    ranks = deg.crossJoin(F.broadcast(n)).select(
-        F.col("src").alias("node"),
-        F.expr(f"CAST({scale} DIV __nn AS BIGINT)").alias("rank"),
-    )
-    for i in range(iters):
-        contrib = ranks.join(sym_deg, "node").select(
-            "dst", F.expr("(rank * w) DIV wdeg").alias("__c")
-        )
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(F.sum("__c").alias("__s"))
-            .crossJoin(F.broadcast(n))
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"CAST((15 * ({scale} DIV __nn)) DIV 100"
-                    " + (85 * __s) DIV 100 AS BIGINT)"
-                ).alias("rank"),
-            )
-        )
-        # every-other-round truncation — see pagerank_fixed
-        if i % 2 == 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("node", F.col("rank").alias("rank_micro"))
 
 
 def personalized_pagerank_fixed(
@@ -450,77 +404,64 @@ def personalized_pagerank_fixed(
     ``scale DIV 0`` would otherwise yield silent NULL ranks for every
     node (ADVICE r6). Same per-round shape as the global variant: one
     (node, rank) join against out-edges + one grouped sum, (long, long)
-    shuffles, localCheckpoint truncation."""
-    sym = (
-        edges.select(F.col(u_col).alias("src"), F.col(v_col).alias("dst"))
-        .unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
-        .localCheckpoint()
-    )
-    deg = sym.groupBy("src").agg(F.count("*").alias("outdeg"))
-    seed_nodes = (
-        deg.select("src")
-        .join(seeds.select(F.col(seed_col).alias("src")).distinct(), "src", "left_semi")
-        .select(F.col("src").alias("node"))
-    )
-    if seed_nodes.isEmpty():
-        raise ValueError(
-            "personalized_pagerank_fixed: no seed is present in the graph "
-            "(empty effective seed set) — the restart distribution is "
-            "undefined; check the seed ids against the edge list"
+    shuffles."""
+
+    def start(deg: DataFrame, rounds: Rounds):
+        seed_nodes = (
+            deg.select("src")
+            .join(seeds.select(F.col(seed_col).alias("src")).distinct(), "src", "left_semi")
+            .select(F.col("src").alias("node"))
         )
-    ns = seed_nodes.agg(F.count("*").alias("__ns"))
-    base = seed_nodes.crossJoin(F.broadcast(ns)).select(
-        "node", F.expr(f"CAST((15 * ({scale} DIV __ns)) DIV 100 AS BIGINT)").alias("__base")
-    )
-    # initial distribution: all mass on the seeds
-    ranks = (
-        deg.select(F.col("src").alias("node"))
-        .join(
-            seed_nodes.crossJoin(F.broadcast(ns)).select(
-                "node", F.expr(f"CAST({scale} DIV __ns AS BIGINT)").alias("rank")
-            ),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("rank", F.lit(0).cast("bigint")).alias("rank"))
-    )
-    # static out-degree attached once (see pagerank_fixed), and the static
-    # per-node teleport base folded onto the node list once — each round is
-    # then ONE edge join + ONE grouped sum + ONE node-list left join
-    sym_deg = (
-        sym.join(deg, "src")
-        .select(F.col("src").alias("node"), "dst", "outdeg")
-        .localCheckpoint()
-    )
-    node_base = (
-        deg.select(F.col("src").alias("node"))
-        .join(base, "node", "left")
-        .select(
-            "node", F.coalesce("__base", F.lit(0).cast("bigint")).alias("__base")
-        )
-        .localCheckpoint()
-    )
-    for i in range(iters):
-        contrib = ranks.join(sym_deg, "node").select(
-            "dst", F.expr("rank DIV outdeg").alias("__c")
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("__c").alias("__s"))
-        ranks = (
-            node_base.join(
-                summed.select(F.col("dst").alias("node"), "__s"), "node", "left"
+        if seed_nodes.isEmpty():
+            raise ValueError(
+                "personalized_pagerank_fixed: no seed is present in the graph "
+                "(empty effective seed set) — the restart distribution is "
+                "undefined; check the seed ids against the edge list"
             )
+        ns = seed_nodes.agg(F.count("*").alias("__ns"))
+        base = seed_nodes.crossJoin(F.broadcast(ns)).select(
+            "node", F.expr(f"CAST((15 * ({scale} DIV __ns)) DIV 100 AS BIGINT)").alias("__base")
+        )
+        # initial distribution: all mass on the seeds
+        ranks = (
+            deg.select(F.col("src").alias("node"))
+            .join(
+                seed_nodes.crossJoin(F.broadcast(ns)).select(
+                    "node", F.expr(f"CAST({scale} DIV __ns AS BIGINT)").alias("rank")
+                ),
+                "node",
+                "left",
+            )
+            .select("node", F.coalesce("rank", F.lit(0).cast("bigint")).alias("rank"))
+        )
+        # the static per-node teleport base folded onto the node list once —
+        # each round is then ONE edge join + ONE grouped sum + ONE node-list
+        # left join
+        node_base = rounds.hold(
+            deg.select(F.col("src").alias("node"))
+            .join(base, "node", "left")
             .select(
+                "node", F.coalesce("__base", F.lit(0).cast("bigint")).alias("__base")
+            )
+        )
+
+        def teleport(summed: DataFrame) -> DataFrame:
+            return node_base.join(
+                summed.select(F.col("dst").alias("node"), "__s"), "node", "left"
+            ).select(
                 "node",
                 (
                     F.col("__base")
                     + F.expr("CAST((85 * coalesce(__s, 0)) DIV 100 AS BIGINT)")
                 ).alias("rank"),
             )
-        )
-        # every-other-round truncation — see pagerank_fixed
-        if i % 2 == 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("node", F.col("rank").alias("rank_micro"))
+
+        return ranks, teleport
+
+    return _pagerank_rounds(
+        edges, u_col, v_col, iters, F.count("*").alias("outdeg"),
+        "rank DIV outdeg", start,
+    )
 
 
 def propagate_labels(
@@ -547,9 +488,7 @@ def propagate_labels(
     driver-side convergence check, unlike ``connected_components``).
     Returns (id, label, round) with round 0 for seeds.
     """
-    sym = edges.select(
-        F.col(u_col).alias("src"), F.col(v_col).alias("dst")
-    ).unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
+    sym = _symmetric(edges, u_col, v_col)
     labels = seeds.select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
@@ -596,40 +535,36 @@ def multi_source_bfs(
     on the frontier node) + a distinct + a left-anti against the settled
     set — work proportional to the frontier's edge boundary, never the
     whole graph; the settled table carries (id, hops) only. The loop is a
-    static ``max_hops`` unroll with a ``localCheckpoint`` per round (plan
-    stays linear; a cluster job uses reliable checkpoint). Early-exit on
+    static ``max_hops`` unroll with a ``session.Rounds`` cut per round
+    (plan stays linear; superseded rounds are freed). Early-exit on
     an empty frontier is deliberately NOT driver-checked — at a bounded
     hop count the empty rounds cost one no-op join each, cheaper than a
     per-round count() action on a 100 TB graph.
 
     Returns (id, hops) for ALL graph nodes, hops ∈ {0..max_hops, −1}.
     """
-    sym = (
-        edges.select(F.col(u_col).alias("src"), F.col(v_col).alias("dst"))
-        .unionAll(edges.select(F.col(v_col).alias("src"), F.col(u_col).alias("dst")))
+    with Rounds() as rounds:
         # every frontier round joins this — materialize once or the edge
         # DERIVATION (often an order-basket self-join) re-executes per hop
-        .localCheckpoint()
-    )
-    nodes = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    settled = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .join(nodes, "id")
-        .select("id", F.lit(0).alias("hops"))
-        .localCheckpoint()
-    )
-    frontier = settled
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(sym, frontier["id"] == sym["src"])
-            .select(F.col("dst").alias("id"))
+        sym = rounds.hold(_symmetric(edges, u_col, v_col))
+        nodes = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
+        settled = rounds.cut(
+            seeds.select(F.col(id_col).alias("id"))
             .distinct()
-            .join(settled, "id", "left_anti")
-            .select("id", F.lit(h).alias("hops"))
+            .join(nodes, "id")
+            .select("id", F.lit(0).alias("hops"))
         )
-        settled = settled.unionByName(nxt).localCheckpoint()
-        frontier = settled.filter(F.col("hops") == h)
+        frontier = settled
+        for h in range(1, max_hops + 1):
+            nxt = (
+                frontier.join(sym, frontier["id"] == sym["src"])
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(settled, "id", "left_anti")
+                .select("id", F.lit(h).alias("hops"))
+            )
+            settled = rounds.cut(settled.unionByName(nxt))
+            frontier = settled.filter(F.col("hops") == h)
     return nodes.join(settled, "id", "left").select(
         "id", F.coalesce("hops", F.lit(-1)).cast("int").alias("hops")
     )
@@ -683,8 +618,10 @@ def ktruss(
 
     Peel discipline mirrors ``kcore``: per round one support computation
     (the m^1.5 wedge join — the round's only superlinear term), one
-    left-join + filter carrying (u, v) longs, ``localCheckpoint`` lineage
-    truncation, one convergence scalar per round (the documented
+    left-join + filter carrying (u, v) longs, a ``session.Rounds`` cut
+    (every 3rd launders the size estimate, which the support pass's three
+    references to the evolving edge set would otherwise cube per round),
+    one convergence scalar per round (the documented
     one-scalar exception to the no-driver-collect rule). Rounds are
     bounded by the peel depth; raises rather than returning a non-truss
     if ``max_iter`` is exceeded. Returns ``(u, v, support)`` — the
@@ -693,45 +630,21 @@ def ktruss(
     e = edges.select(F.col(u_col).alias("u"), F.col(v_col).alias("v")).localCheckpoint()
     n = e.count()
     converged = False
-    prev_cached = None
-    prev_e = e
-    prev_pinned = False
-    for _r in range(max_iter):
-        sup = _edge_support(e)
-        # every 3rd round, persist() over the checkpoint launders the
-        # inherited size estimate — the support pass references the
-        # evolving edge set three times, so the estimate would otherwise
-        # cube per peel round (the connected_components lesson, dedup.py);
-        # the typical 2-round peel never pays the second materialization
-        e = (
-            e.join(sup, ["u", "v"], "left")
-            .filter(F.coalesce("__s", F.lit(0)) >= k - 2)
-            .select("u", "v")
-            .localCheckpoint()
-        )
-        # the new checkpoint materialized the support pass — free the
-        # superseded round's edge checkpoint deterministically (round-12
-        # hygiene — see kcore); laundering rounds exempt while live,
-        # freed when the next laundering supersedes them
-        if not prev_pinned:
-            free_local_checkpoint(prev_e)
-        prev_e = e
-        prev_pinned = _r % 3 == 2
-        if _r % 3 == 2:
-            if prev_cached is not None:
-                prev_cached.unpersist()
-                free_local_checkpoint(prev_cached)  # 3 rounds stale
-            e = e.persist()
-            prev_cached = e
-        n2 = e.count()
-        if n2 == n:
-            converged = True
-            break
-        n = n2
-    if prev_cached is not None:
-        # drop the last laundering cache before returning (ADVICE r10) —
-        # e stays backed by its localCheckpoint RDD.
-        prev_cached.unpersist()
+    with Rounds(launder_every=3) as rounds:
+        for _ in range(max_iter):
+            sup = _edge_support(e)
+            # the cut consumes the previous edge set (the input, first round)
+            e = rounds.cut(
+                e.join(sup, ["u", "v"], "left")
+                .filter(F.coalesce("__s", F.lit(0)) >= k - 2)
+                .select("u", "v"),
+                e,
+            )
+            n2 = e.count()
+            if n2 == n:
+                converged = True
+                break
+            n = n2
     if not converged:
         raise RuntimeError(
             f"ktruss did not converge within max_iter={max_iter} rounds "

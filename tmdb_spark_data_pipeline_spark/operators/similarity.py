@@ -1620,13 +1620,7 @@ def pq_train_codebooks(
     # (sub, cid) re-group paid a second exchange per iteration to reassemble
     # the array. Same decimal(30,12) accumulation per position, same
     # division, same array order — bit-identical codebooks.
-    mean_aggs = [
-        (
-            F.sum(F.element_at("subvec", j + 1).cast("decimal(30,12)")).cast("double")
-            / F.count("*")
-        ).alias(f"__m{j}")
-        for j in range(dsub)
-    ]
+    mean_aggs = _mean_agg_exprs(dsub, "subvec")
     for _ in range(iters):
         assigned = _pq_assign(sv, cents, id_col=id_col).select(id_col, "sub", "cid")
         cents = (
@@ -2204,7 +2198,6 @@ def ivfpq_residual_topk_audit(
         .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd")),
         ("query_id",), "__pd", order="asc", n=nprobe, tiebreak=("cid",), rank_col="__pr",
     ).select("query_id", F.col("cid").alias("__cell"))
-    dsub = dim // m
     qres = (
         probes.join(F.broadcast(qd), "query_id")
         .join(F.broadcast(cc), "__cell")
@@ -2216,15 +2209,7 @@ def ivfpq_residual_topk_audit(
             ).alias("__qrv"),
         )
     )
-    parts = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(F.col("__qrv"), s * dsub + 1, dsub).alias("subvec"),
-            )
-            for s in range(m)
-        ]
-    )
+    parts = _subvector_array(m, dim, "__qrv")
     qrsv = qres.select("query_id", "__cell", F.explode(parts).alias("__p")).select(
         "query_id", "__cell", F.col("__p.sub").alias("sub"),
         F.col("__p.subvec").alias("subvec"),
