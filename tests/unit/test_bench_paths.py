@@ -5,8 +5,8 @@ the canonical per-round artifact and it had to be reconstructed from stderr
 logs. bench._output_path is the single chokepoint the runner writes through
 (``bench.py <names>`` and ``--floors`` runs go to BENCH_SUBSET.json, and
 BENCH_FULL_PATH redirects any run); these tests pin its routing, the
-``--floors`` merge into BENCH_FLOORS.json, the ``--trace`` record and the
-normalized ``--plans-dir`` text.
+``--floors`` merge into BENCH_FLOORS.json, the ``--trace`` record, the
+headline's run context and the normalized ``--plans-dir`` text.
 """
 
 import importlib.util
@@ -79,12 +79,30 @@ def test_floors_merge_keeps_the_other_entries(bench_mod, tmp_path):
 
 def test_trace_record_counts_jobs_and_stages_with_the_ui_off(bench_mod, spark, sf_smoke):
     assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
-    rec = bench_mod._trace(spark, "scan_filter_project", sf_smoke, 0.1, 0.0)
+    name = "scan_filter_project"
+    bench_mod.REGISTRY[name].fn(spark, sf_smoke).write.mode("overwrite").format("noop").save()
+    rec = bench_mod._trace(spark, name, sf_smoke, 0.1, 0.0)
     assert rec["metrics"]["spark.jobs"] >= 1
     assert rec["metrics"]["spark.stages"] == len(rec["stages"]) >= 1
     for stage_id, tasks, run_s, read_mb, write_mb in rec["stages"]:
         assert tasks >= 1 and run_s >= 0 and read_mb >= 0 and write_mb >= 0
+    # the untraced run just compiled every class the traced run needs
+    assert rec["codegen_classes"] == 0 and rec["codegen_compile_ms"] == 0
     json.dumps(rec)
+
+
+def test_headline_carries_master_and_cpus_within_its_byte_budget(bench_mod, spark, capsys):
+    context = bench_mod._run_context(spark)
+    assert context == {"master": "local[4]", "cpus": 4}
+    timings = {f"query_number_{i:03d}": 1.0 + i / 1000 for i in range(304)}
+    bench_mod._print_headline(timings, 1234.567, 0.1, 0.42, [20.1, 20.3], context)
+    line = capsys.readouterr().out
+    assert line.endswith("\n") and line.count("\n") == 1
+    assert len(line.rstrip("\n").encode()) <= bench_mod.LINE_BYTES
+    head = json.loads(line)
+    assert head["master"] == "local[4]" and head["cpus"] == 4
+    assert head["n_queries"] == 304 and 0 < len(head["queries"]) < 304
+    assert max(head["queries"].values()) == max(timings.values())
 
 
 def test_plans_dir_writes_the_same_text_for_two_builds(bench_mod, spark, sf_smoke, tmp_path):

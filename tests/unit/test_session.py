@@ -11,7 +11,9 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from perfbench.workloads import CURATION_WRITE, OLAP_MIX
 from tmdb_spark_data_pipeline_spark.functions import gateway_memo
+from tmdb_spark_data_pipeline_spark.plans.queries import REGISTRY
 from tmdb_spark_data_pipeline_spark.session import Rounds, _env_conf_pairs, get_spark
 
 
@@ -32,6 +34,22 @@ def test_well_formed_extra_conf_applies_and_logs(spark, monkeypatch, caplog):
     with caplog.at_level(logging.INFO, logger="tmdb_spark_data_pipeline_spark.session"):
         assert get_spark(app_name="tests", master="local[4]", shuffle_partitions=4) is spark
     assert "('spark.sql.shuffle.partitions', '4')" in caplog.text
+
+
+def test_second_pass_compiles_no_code(spark, sf_smoke):
+    """A warm pass over the benchmark's queries reuses every class the first
+    pass compiled. At Spark's default codegen cache of 100 entries in 4 LRU
+    segments, each later pass recompiled about 60 of them."""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE()
+
+    def one_pass():
+        for name in OLAP_MIX + CURATION_WRITE:
+            REGISTRY[name].fn(spark, sf_smoke).write.mode("overwrite").format("noop").save()
+
+    one_pass()
+    before = compiled.getCount()
+    one_pass()
+    assert compiled.getCount() - before == 0
 
 
 def test_gateway_memo_rebuilds_after_gateway_change(spark, monkeypatch):
