@@ -1,6 +1,7 @@
 """Session factory config handling, the per-gateway Column memo, the
-iterative-loop checkpoint owner, and the engine session staying active
-after the oracle suite's driver session."""
+iterative-loop checkpoint owner, the engine session staying active
+after the oracle suite's driver session, and the two debugging aids the
+engine session turns off (call-site capture, stage ids in class names)."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import logging
 
 import pytest
 from pyspark import SparkContext
+from pyspark.errors import ArithmeticException
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +53,57 @@ def test_second_pass_compiles_no_code(spark, sf_smoke):
     before = compiled.getCount()
     one_pass()
     assert compiled.getCount() - before == 0
+
+
+@pytest.mark.parametrize("name", ["bigram_kneser_ney_heldout", "bm25_ndcg_eval"])
+def test_rerun_compiles_no_code(spark, sf_smoke, name):
+    """A second run of one query reuses every class the first run compiled.
+    With the whole-stage stage id in the class name, AQE's run-to-run stage
+    numbering made these two recompile 14-26 classes on every run."""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE()
+
+    def run():
+        REGISTRY[name].fn(spark, sf_smoke).write.mode("overwrite").format("noop").save()
+
+    run()
+    before = compiled.getCount()
+    run()
+    assert compiled.getCount() - before == 0
+
+
+def test_column_building_skips_call_site_capture(spark):
+    """The engine session builds Columns without pyspark's call-site capture,
+    which sends about 10 extra Py4J commands per Column call (24 commands
+    for the expression below with it on)."""
+    assert not is_debugging_enabled()
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(args)
+        return orig(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        F.col("a") + 1
+    finally:
+        client.__dict__.pop("send_command", None)
+    assert len(sent) <= 4
+
+
+def test_ansi_error_keeps_its_class_without_call_site(spark):
+    """Without call-site capture an ANSI error keeps its error class, message
+    and DataFrame query context; only the Python ``file:line`` goes."""
+    ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    with pytest.raises(ArithmeticException) as err:
+        ansi.range(1).select(F.col("id") / 0).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    assert str(err.value).startswith("[DIVIDE_BY_ZERO] Division by zero.")
+    (ctx,) = err.value.getQueryContext()
+    assert ".py:" not in ctx.callSite()
+    assert SparkSession.getActiveSession() is spark
 
 
 def test_gateway_memo_rebuilds_after_gateway_change(spark, monkeypatch):

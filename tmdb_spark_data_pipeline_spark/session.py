@@ -31,6 +31,28 @@ correctness parity with a DuckDB oracle:
   code of their hot methods lives in the code cache that
   ``-XX:ReservedCodeCacheSize=1g`` reserves below. A class evicted here is
   unloaded at a later GC, and its machine code is flushed with it.
+- Generated class names without the whole-stage stage id
+  (``spark.sql.codegen.useIdInClassName=false``). The id is the only part
+  of a class's source that varies between runs of one plan (AQE numbers
+  each re-plan's stages in the order query stages finish), and the class
+  cache is keyed by that source, so with it a re-run recompiled classes it
+  already held.
+- No DataFrame call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With PySpark 4's
+  default of on, every Column and DataFrame call walks the Python stack,
+  tries ``import IPython`` and sends about 10 extra Py4J commands to record
+  its ``file:line``: ``F.col("a")`` sends 13 commands where 3 do the work,
+  and building the plans of one ``olap-mix`` pass 3,609 where 1,269 do
+  (``perfbench/run.py --trace 1``, ``plans.build_py4j_calls``). What it
+  gives up is the Python ``file:line`` in an error's DataFrame query
+  context; the error class, message and every JVM plan stay the same. The
+  flag cannot be changed at runtime, and pyspark reads it ONCE per Python
+  process (``pyspark.errors.utils._enable_debugging_cache``), from
+  whichever session is active when the first Column is built. To turn the
+  capture back on, pass
+  ``spark.python.sql.dataFrameDebugging.enabled=true`` through
+  ``extra_conf``/``SPARK_GRAFT_EXTRA_CONF`` to the call that starts the JVM,
+  before any Column is built.
 """
 
 from __future__ import annotations
@@ -47,9 +69,10 @@ DEFAULT_APP_NAME = "tmdb-spark-data-pipeline-spark"
 #: ``spark.sql.codegen.cache.maxEntries``, the entries of the JVM-wide
 #: compiled-class cache (see the module docstring). An ``olap-mix`` pass
 #: compiles 109 distinct classes; a pass over all 304 declared queries
-#: 5,047 (sf0.001), and each later pass about 300 more whose whole-stage
-#: stage id moved between runs. 8192 holds the whole surface, with headroom
-#: for one of the 4 LRU segments filling faster than the others.
+#: 5,047 (sf0.001), and a second run of each about 40 more, in the few
+#: queries whose plan varies between runs. 8192 holds the whole surface,
+#: with headroom for one of the 4 LRU segments filling faster than the
+#: others.
 CODEGEN_CACHE_ENTRIES = 8192
 
 _log = logging.getLogger(__name__)
@@ -80,8 +103,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster the caller leaves it unset and spark-submit provides it. The
-    JVM options and the codegen cache size take effect only in the call
-    that starts the JVM (see the module docstring).
+    JVM options, the codegen cache size and the call-site capture flag take
+    effect only in the call that starts the JVM (see the module docstring).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -114,6 +137,13 @@ def get_spark(
             ),
         )
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Keep the whole-stage stage id out of generated class names, so a
+        # re-run whose AQE stage ids shifted hits the class cache instead of
+        # recompiling source that differs only in the name.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # No Python call-site capture per Column/DataFrame call: it costs
+        # ~10 Py4J round trips each (see the module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

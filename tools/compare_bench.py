@@ -7,6 +7,10 @@ Prints per-query deltas sorted by absolute regression, with each file's
 host-steal and speed-canary readings so a "regression" caused by a noisy
 window (canary inflated) isn't mistaken for an engine change. Queries only
 in one file are listed separately (added/removed).
+
+When both files carry per-query ``layers`` (``bench.py --trace``), it also
+prints, for each of ``LAYER_KEYS``, every traced query's value before ->
+after, largest change first, so a speed claim shows the layer it moved.
 """
 
 from __future__ import annotations
@@ -15,14 +19,51 @@ import json
 import sys
 
 
+#: Layer counts and times diffed per query: plan-building Py4J commands and
+#: seconds, Spark jobs, and classes Janino compiled in the traced run.
+LAYER_KEYS = ("plans.build_py4j_calls", "plans.build_s", "spark.jobs", "codegen_classes")
+
+
 def load(path: str) -> dict:
     with open(path) as f:
         d = json.load(f)
     return d
 
 
-def main() -> None:
-    argv = sys.argv[1:]
+def _layer_value(rec: dict, key: str) -> float:
+    """``key`` from one query's ``layers`` record: a ``metrics`` entry, or a
+    field of the record itself (``codegen_classes``). Absent is 0, as
+    perfbench reports a layer that did no work."""
+    return rec.get("metrics", {}).get(key, rec.get(key, 0))
+
+
+def _num(v: float, sign: str = "") -> str:
+    return f"{v:{sign}.0f}" if v == int(v) else f"{v:{sign}.4g}"
+
+
+def print_layer_diff(old: dict, new: dict, top: int) -> None:
+    ol, nl = old.get("layers", {}), new.get("layers", {})
+    shared = [n for n in nl if n in ol]
+    if not shared:
+        return
+    for key in LAYER_KEYS:
+        rows = [(n, _layer_value(ol[n], key), _layer_value(nl[n], key)) for n in shared]
+        rows.sort(key=lambda r: (-abs(r[2] - r[1]), r[0]))
+        moved = sum(a != b for _, a, b in rows)
+        before, after = [r[1] for r in rows], [r[2] for r in rows]
+        print(
+            f"\n{key} over {len(rows)} traced queries: "
+            f"{_num(sum(before))} -> {_num(sum(after))}, nonzero in "
+            f"{sum(v > 0 for v in before)} -> {sum(v > 0 for v in after)}, changed in {moved}"
+        )
+        for n, a, b in rows[:top]:
+            if a == b:
+                break
+            print(f"  {n}: {_num(a)} -> {_num(b)} ({_num(b - a, '+')})")
+
+
+def main(argv: list[str] | None = None) -> None:
+    argv = list(sys.argv[1:] if argv is None else argv)
     top = 20
     if "--top" in argv:
         i = argv.index("--top")
@@ -71,6 +112,7 @@ def main() -> None:
         print(f"\nadded ({len(added)}): {', '.join(added)}")
     if removed:
         print(f"removed ({len(removed)}): {', '.join(removed)}")
+    print_layer_diff(old, new, top)
 
 
 if __name__ == "__main__":
