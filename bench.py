@@ -166,13 +166,15 @@ def _merge_floors(path: str, run: dict, reps: int) -> None:
 
 #: Tokens of a formatted plan that differ from one build or process to the
 #: next: expression ids, HOF lambda variables (``x_9``), exchange plan ids,
-#: checkpointed RDD ids and the application id in ``spark_graft_<appId>_*``
-#: scratch paths.
+#: checkpointed RDD ids and call sites (``at localCheckpoint at
+#: NativeMethodAccessorImpl.java:0`` in one build, ``<unknown>:0`` in the
+#: next) and the application id in ``spark_graft_<appId>_*`` scratch paths.
 _PLAN_NOISE = (
     (re.compile(r"#\d+"), "#<n>"),
     (re.compile(r"\b([xyz])_\d+\b"), r"\1_<n>"),
     (re.compile(r"plan_id=\d+"), "plan_id=<n>"),
     (re.compile(r"RDD\[\d+\]"), "RDD[<n>]"),
+    (re.compile(r"(RDD\[<n>\] at \w+) at [^\s,]+:\d+"), r"\1 at <site>"),
     (re.compile(r"spark_graft_[^_\s/]+_"), "spark_graft_<app>_"),
 )
 

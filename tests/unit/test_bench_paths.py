@@ -105,12 +105,23 @@ def test_headline_carries_master_and_cpus_within_its_byte_budget(bench_mod, spar
     assert max(head["queries"].values()) == max(timings.values())
 
 
-def test_plans_dir_writes_the_same_text_for_two_builds(bench_mod, spark, sf_smoke, tmp_path):
-    # expression ids, lambda variables (x_9 vs x_21) and exchange plan ids
-    # differ between two builds in one process; the written plan must not
+@pytest.mark.parametrize(
+    "name, token",
+    [
+        ("similarity_topk", "x_<n>"),
+        ("embedding_mutual_reach_hierarchy_ann", "at localCheckpoint at <site>"),
+    ],
+    ids=["similarity_topk", "embedding_mutual_reach_hierarchy_ann"],
+)
+def test_plans_dir_writes_the_same_text_for_two_builds(
+    bench_mod, spark, sf_smoke, tmp_path, name, token
+):
+    # expression ids, lambda variables (x_9 vs x_21), exchange plan ids and
+    # a checkpointed RDD's id and call site differ between two builds in one
+    # process; the written plan must not
     for run in ("a", "b"):
-        bench_mod._write_plan(spark, "similarity_topk", sf_smoke, str(tmp_path / run))
-    first = (tmp_path / "a" / "similarity_topk.txt").read_text()
-    assert first == (tmp_path / "b" / "similarity_topk.txt").read_text()
-    assert "#<n>" in first and "x_<n>" in first
-    assert not re.search(r"#\d|\b[xyz]_\d|plan_id=\d", first)
+        bench_mod._write_plan(spark, name, sf_smoke, str(tmp_path / run))
+    first = (tmp_path / "a" / f"{name}.txt").read_text()
+    assert first == (tmp_path / "b" / f"{name}.txt").read_text()
+    assert "#<n>" in first and token in first
+    assert not re.search(r"#\d|\b[xyz]_\d|plan_id=\d|RDD\[\d|\.java:\d|<unknown>:\d", first)

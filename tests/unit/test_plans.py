@@ -422,6 +422,15 @@ def test_chunk_dedup_single_corpus_scan(spark, sf_smoke):
     assert "chunk_text" not in plan.split("Exchange")[-1]
 
 
+def test_kll_gate_single_events_scan(spark, sf_smoke):
+    # the merged half-sketches, the count and the exact median share one
+    # grouping of one events scan; two aggregates joined on month read
+    # events twice
+    plan = _plan(queries.kll_quantile_sketch_gate(spark, sf_smoke))
+    assert plan.count("Location: InMemoryFileIndex") == 1
+    assert "events" in plan and "Join" not in plan
+
+
 def test_weighted_sample_plan_is_take_ordered(spark, sf_smoke):
     """A-ES weighted sampling must compile to TakeOrderedAndProject
     (per-partition top-k heaps), never a global Sort."""

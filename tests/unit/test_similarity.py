@@ -129,6 +129,42 @@ def test_ivf_full_probe_equals_bruteforce(emb):
     assert canon(ivf) == canon(bf)
 
 
+@pytest.mark.parametrize("include_self", [False, True])
+def test_full_candidate_paths_answer_row_for_row_like_bruteforce(
+    spark, vectors, tmp_path, include_self
+):
+    """Every cosine top-k entry point ends in one rule (self pair dropped
+    unless asked for, cos descending, ties to the lower neighbor id). With
+    a candidate set that covers the corpus — one LSH bucket, every IVF cell
+    probed, in memory or from the artifact — each must return the
+    brute-force rows exactly, doubles included. Ids 30-32 copy vector 1,
+    so query 1 has a four-way tie at cos 1 that k=2 cuts through."""
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vectors)]
+    rows += [(i, rows[1][1]) for i in (30, 31, 32)]
+    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    q = corpus.filter("vec_id < 3")
+    cells = corpus.filter(F.col("vec_id") % 25 == 0).count()
+    path = str(tmp_path / "ivf")
+    similarity.write_ivf_artifact(corpus, path)
+    kw = dict(k=2, include_self=include_self)
+    bf = similarity.cosine_topk_bruteforce(q, corpus, **kw)
+    paths = {
+        "lsh": similarity.cosine_topk_lsh(q, corpus, planes=[], **kw),
+        "ivf": similarity.cosine_topk_ivf(q, corpus, nprobe=cells, **kw),
+        "artifact": similarity.cosine_topk_ivf_from_artifact(
+            spark, path, q, nprobe=cells, **kw
+        ),
+    }
+    rows_of = lambda df: sorted(
+        (r.query_id, r.neighbor_id, r.cos) for r in df.collect()
+    )
+    expect = rows_of(bf)
+    tied = [n for qid, n, _ in expect if qid == 1]
+    assert tied == ([1, 30] if include_self else [30, 31])
+    for name, df in paths.items():
+        assert rows_of(df) == expect, name
+
+
 def test_ivf_partial_probe_subset_of_bruteforce_candidates(emb):
     """With nprobe=1, every returned neighbor must live in the probed cell —
     i.e. IVF returns a subset of the brute-force candidate space and at most
@@ -649,6 +685,22 @@ def test_mutual_reach_hierarchy_ann_audit_full_coverage(spark):
         assert r.n_points == 12
         assert r.label_agreement == 1.0
         assert r.clusters_ann == r.clusters_exact
+
+
+def test_mutual_reach_hierarchy_ann_audit_plans_no_expand(spark):
+    """The audit counts each leg's clusters without a distinct aggregate:
+    two of them plan an Expand whose group order changed from one build
+    of the same query to the next, so its plan text was not stable."""
+    rows = [(i, [1.0, 0.01 * i]) for i in range(6)] + [
+        (25 + i, [0.01 * i, 1.0]) for i in range(6)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = similarity.mutual_reach_hierarchy_ann_audit(
+        df, k=2, eps_levels=(0.05, 1.1), nprobe=2
+    )
+    assert "Expand" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert dict(out.dtypes)["clusters_exact"] == "bigint"
+    assert dict(out.dtypes)["clusters_ann"] == "bigint"
 
 
 def test_ivf_trained_centroids_recall_certificate(spark):

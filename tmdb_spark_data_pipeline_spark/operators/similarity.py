@@ -12,6 +12,25 @@ broadcast queries) but is O(N) per query; LSH probing reduces per-query cost
 to the bucket size at a recall price. For real workloads the corpus side
 should be stored with the bucket id as a partition/bucketing key so a probe
 prunes files.
+
+Each vector-search step has one private owner; the public entry points
+compose them:
+
+- ``_pair_cos`` scores query × candidate pairs; ``_top_cos`` drops the self
+  pair and keeps the cosine top-k (brute force, LSH, LSH probe, IVF, the
+  pandas twin).
+- ``_ivf_centroids`` picks the IVF centroids, ``_cos_probes`` ranks each
+  row's nearest cells, ``_ivf_candidates`` joins the probed cells' members
+  (IVF top-k, its artifact twin, the recall curve; ``_ivf_candidate_pairs``
+  probes with the same step).
+- ``_l2_probes`` (coarse cells by squared L2), ``_adc_lut`` (the decimal
+  ADC table) and ``_adc_refine`` (ADC scan → shortlist → exact re-rank
+  through ``_l2_topk``) serve flat and residual IVF-PQ alike.
+- ``_pair_dist`` computes cosine distance over pairs, all of them
+  (``_all_pairs_cosine_dist``: DBSCAN and the exact mutual-reach family)
+  or IVF candidates (``mutual_reachability_clusters_ann``).
+- ``_level_components`` labels the eps slices of one or more
+  mutual-reachability lists in one connected-components loop.
 """
 
 from __future__ import annotations
@@ -73,11 +92,38 @@ def cosine_topk_bruteforce(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), l2_norm(vec_col).alias("__cn")
     )
     pairs = c.join(F.broadcast(q), F.lit(True))
-    if not include_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id", "neighbor_id", (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias("cos")
+    return _top_cos(_pair_cos(pairs), k=k, include_self=include_self)
+
+
+def _pair_cos(
+    pairs: DataFrame,
+    cv: str = "__cv",
+    cn: str = "__cn",
+    nid: str = "neighbor_id",
+    *,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(query_id, neighbor_id, *keep, cos)`` of a query × candidate pair
+    frame whose query side carries ``__qv``/``__qn`` (vector, norm) and
+    whose candidate side carries ``nid``/``cv``/``cn`` (id, vector, norm).
+    Both norms come from per-row projections below the pair join, so each
+    pair costs one dot product."""
+    return pairs.select(
+        "query_id",
+        F.col(nid).alias("neighbor_id"),
+        *keep,
+        (dot("__qv", cv) / (F.col("__qn") * F.col(cn))).alias("cos"),
     )
+
+
+def _top_cos(scored: DataFrame, *, k: int, include_self: bool) -> DataFrame:
+    """The ``k`` best ``(query_id, neighbor_id, cos)`` rows per query, the
+    self pair dropped unless ``include_self``: cos descending with NULLs
+    last, ties to the lower neighbor id. Every cosine top-k entry point
+    answers through this rule, so their results agree row for row wherever
+    their candidate sets do."""
+    if not include_self:
+        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     return rank.top_n_per_group(
         scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
     ).drop("__rn")
@@ -161,14 +207,7 @@ def cosine_topk_lsh(
         hyperplane_bucket(vec_col, planes).alias("__bucket"),
     )
     pairs = c.join(F.broadcast(q), "__bucket")
-    if not include_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id", "neighbor_id", (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias("cos")
-    )
-    return rank.top_n_per_group(
-        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
-    ).drop("__rn")
+    return _top_cos(_pair_cos(pairs), k=k, include_self=include_self)
 
 
 def write_lsh_partitioned_corpus(
@@ -237,16 +276,9 @@ def cosine_topk_lsh_probe(
         hyperplane_bucket(vec_col, planes).alias("bucket"),
     )
     pairs = corpus.join(F.broadcast(q), "bucket")
-    if not include_self:
-        pairs = pairs.filter(F.col("query_id") != F.col(id_col))
-    scored = pairs.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        (dot("__qv", vec_col) / (F.col("__qn") * F.col("norm"))).alias("cos"),
+    return _top_cos(
+        _pair_cos(pairs, vec_col, "norm", id_col), k=k, include_self=include_self
     )
-    return rank.top_n_per_group(
-        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
-    ).drop("__rn")
 
 
 def embedding_neardup_pairs(
@@ -365,75 +397,84 @@ def cosine_topk_ivf(
     bucketing (``cosine_topk_lsh_probe``), and the one that keeps recall
     controllable via nprobe instead of plane count.
     """
-    if centroids is not None:
-        cents = centroids.select(id_col, vec_col)
-    else:
-        if centroid_filter is None:
-            centroid_filter = F.col(id_col) % 25 == 0
-        cents = corpus.filter(centroid_filter).select(id_col, vec_col)
+    cents = _ivf_centroids(corpus, id_col, vec_col, centroid_filter, centroids)
     assigned = assign_ivf_cells(corpus, cents, id_col=id_col, vec_col=vec_col)
-    return _ivf_probe_topk(
-        assigned,
-        cents,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        nprobe=nprobe,
-        include_self=include_self,
+    cand = _ivf_candidates(
+        assigned, cents, queries, id_col=id_col, vec_col=vec_col, nprobe=nprobe
+    )
+    return _top_cos(_pair_cos(cand, "__cvv", "__cnn"), k=k, include_self=include_self)
+
+
+def _ivf_centroids(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroid_filter: Column | None = None,
+    centroids: DataFrame | None = None,
+) -> DataFrame:
+    """The IVF centroid table ``(id_col, vec_col)``: ``centroids`` when
+    given (e.g. trained ``kmeans_centroids`` output), else the corpus rows
+    ``centroid_filter`` picks, by default ``id % 25 == 0`` — a
+    deterministic sample, so an external oracle reproduces every cell."""
+    if centroids is not None:
+        return centroids.select(id_col, vec_col)
+    if centroid_filter is None:
+        centroid_filter = F.col(id_col) % 25 == 0
+    return corpus.filter(centroid_filter).select(id_col, vec_col)
+
+
+def _cos_probes(
+    df: DataFrame, cents: DataFrame, *, key: str, id_col: str, vec_col: str, n: int
+) -> DataFrame:
+    """The IVF probe step: each row of ``df`` against the broadcast
+    centroids ``cents``, keeping its top-``n`` cells by cosine (ties to the
+    lower centroid id). Returns ``(key, __qv, __qn)`` — the row's id, vector
+    and norm — plus ``__cent_id`` and the probe rank ``__rn`` (1 = nearest
+    cell)."""
+    q = df.select(
+        F.col(id_col).alias(key),
+        F.col(vec_col).alias("__qv"),
+        l2_norm(vec_col).alias("__qn"),
+    )
+    c = cents.select(
+        F.col(id_col).alias("__cent_id"),
+        F.col(vec_col).alias("__cv"),
+        l2_norm(vec_col).alias("__cn"),
+    )
+    return rank.top_n_per_group(
+        q.join(F.broadcast(c), F.lit(True)).withColumn(
+            "__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))
+        ),
+        (key,), "__pcos", n=n, tiebreak=("__cent_id",), rank_col="__rn",
     )
 
 
-def _ivf_probe_topk(
+def _ivf_candidates(
     assigned: DataFrame,
     cents: DataFrame,
     queries: DataFrame,
     *,
     id_col: str,
     vec_col: str,
-    k: int,
     nprobe: int,
-    include_self: bool,
 ) -> DataFrame:
     """The IVF SEARCH side, decoupled from the build side so it runs
-    identically over a freshly-assigned corpus (``cosine_topk_ivf``) or a
-    PERSISTED cell-partitioned artifact (``cosine_topk_ivf_from_artifact``):
-    broadcast centroids → per-query top-``nprobe`` probe cells → join the
-    (cell-keyed) corpus on ``cell_id`` → exact cosine within probed cells →
-    per-query top-k window."""
-    c = cents.select(
-        F.col(id_col).alias("__cent_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(vec_col).alias("__cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(vec_col).alias("__qn"),
-    )
-    probes = rank.top_n_per_group(
-        q.join(F.broadcast(c), F.lit(True)).withColumn(
-            "__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))
-        ),
-        ("query_id",), "__pcos", n=nprobe, tiebreak=("__cent_id",), rank_col="__rn",
-    ).select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"))
-
-    cand = assigned.select(
+    identically over a freshly-assigned corpus (``cosine_topk_ivf``,
+    ``ivf_recall_curve``) or a PERSISTED cell-partitioned artifact
+    (``cosine_topk_ivf_from_artifact``): per-query top-``nprobe`` probe
+    cells (``_cos_probes``) → join the (cell-keyed) corpus on ``cell_id``.
+    Returns every (query, candidate) pair, self pairs included, ready for
+    ``_pair_cos(cand, "__cvv", "__cnn")``, with the probe rank ``__rn`` of
+    the cell it was found through."""
+    probes = _cos_probes(
+        queries, cents, key="query_id", id_col=id_col, vec_col=vec_col, n=nprobe
+    ).select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"), "__rn")
+    return assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvv"),
         l2_norm(vec_col).alias("__cnn"),
         "cell_id",
     ).join(F.broadcast(probes), "cell_id")
-    if not include_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        (dot("__qv", "__cvv") / (F.col("__qn") * F.col("__cnn"))).alias("cos"),
-    )
-    return rank.top_n_per_group(
-        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
-    ).drop("__rn")
 
 
 def ivf_recall_curve(
@@ -469,46 +510,15 @@ def ivf_recall_curve(
     ``centroids`` (an explicit ``(id_col, vec_col)`` table, e.g. trained
     ``kmeans_centroids``) overrides ``centroid_filter`` — the certificate
     then grades the TRAINED serving path (``ivf_recall_trained``)."""
-    if centroids is not None:
-        cents = centroids.select(id_col, vec_col)
-    else:
-        if centroid_filter is None:
-            centroid_filter = F.col(id_col) % 25 == 0
-        cents = corpus.filter(centroid_filter).select(id_col, vec_col)
+    cents = _ivf_centroids(corpus, id_col, vec_col, centroid_filter, centroids)
     assigned = assign_ivf_cells(
         corpus.select(id_col, vec_col), cents, id_col=id_col, vec_col=vec_col
     )
-    c = cents.select(
-        F.col(id_col).alias("__cent_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(vec_col).alias("__cn"),
+    cand = _ivf_candidates(
+        assigned, cents, queries, id_col=id_col, vec_col=vec_col, nprobe=max_nprobe
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(vec_col).alias("__qn"),
-    )
-    probes = rank.top_n_per_group(
-        q.join(F.broadcast(c), F.lit(True)).withColumn(
-            "__pcos", dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))
-        ),
-        ("query_id",), "__pcos", n=max_nprobe, tiebreak=("__cent_id",), rank_col="__pr",
-    ).select("query_id", "__qv", "__qn", F.col("__cent_id").alias("cell_id"), "__pr")
-    cand = (
-        assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cvv"),
-            l2_norm(vec_col).alias("__cnn"),
-            "cell_id",
-        )
-        .join(F.broadcast(probes), "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        "__pr",
-        (dot("__qv", "__cvv") / (F.col("__qn") * F.col("__cnn"))).alias("cos"),
+    scored = _pair_cos(cand, "__cvv", "__cnn", keep=("__rn",)).filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
     # two consumers (workload counts + the per-level top-k) and no exchange
     # reuse between them — materialize the level-replicated candidate list
@@ -518,7 +528,7 @@ def ivf_recall_curve(
         "query_id",
         "neighbor_id",
         "cos",
-        F.explode(F.sequence(F.col("__pr"), F.lit(max_nprobe))).alias("nprobe"),
+        F.explode(F.sequence(F.col("__rn"), F.lit(max_nprobe))).alias("nprobe"),
     ).localCheckpoint()
     cand_per = lev.groupBy("nprobe").agg(F.count("*").alias("__n_cand"))
     topk = rank.top_n_per_group(
@@ -615,16 +625,11 @@ def write_ivf_artifact(
         assigned = assign_ivf_cells(corpus, cents, id_col=id_col, vec_col=vec_col)
         assigned.write.mode("append").partitionBy("cell_id").parquet(f"{path}/cells")
         return
-    if centroids is not None:
-        cents = centroids.select(id_col, vec_col)
-    else:
-        if centroid_filter is None:
-            centroid_filter = F.col(id_col) % 25 == 0
+    cents = _ivf_centroids(corpus, id_col, vec_col, centroid_filter, centroids)
+    if centroids is None:
         # checkpointed: the cell assignment and the centroid sink below
         # both read it, concurrently, and would each recompute it
-        cents = (
-            corpus.filter(centroid_filter).select(id_col, vec_col).localCheckpoint()
-        )
+        cents = cents.localCheckpoint()
     assigned = assign_ivf_cells(corpus, cents, id_col=id_col, vec_col=vec_col)
     _parallel_writes(
         lambda: assigned.write.mode(mode)
@@ -654,16 +659,10 @@ def cosine_topk_ivf_from_artifact(
     afterwards costs O(nprobe·N/cells) reads."""
     assigned = spark.read.parquet(f"{path}/cells")
     cents = spark.read.parquet(f"{path}/centroids")
-    return _ivf_probe_topk(
-        assigned,
-        cents,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        nprobe=nprobe,
-        include_self=include_self,
+    cand = _ivf_candidates(
+        assigned, cents, queries, id_col=id_col, vec_col=vec_col, nprobe=nprobe
     )
+    return _top_cos(_pair_cos(cand, "__cvv", "__cnn"), k=k, include_self=include_self)
 
 
 def sq_l2(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -953,11 +952,7 @@ def cosine_topk_pandas(
             "cos",
         )
     )
-    if not include_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return rank.top_n_per_group(
-        scored, ("query_id",), "cos", n=k, tiebreak=("neighbor_id",), rank_col="__rn"
-    ).drop("__rn")
+    return _top_cos(scored, k=k, include_self=include_self)
 
 
 def label_dispersion(
@@ -1042,39 +1037,24 @@ def dbscan_cosine(
     the input, which is what lets an external engine replay it. Noise
     gets cluster −1. Output: (id, cluster, role ∈ core|border|noise).
 
-    The all-pairs distance pass is the declared exactness baseline (run
-    on a bounded subset / sample, same contract as
-    ``cosine_topk_bruteforce``); at 100 TB the eps-neighbor pairs come
-    from the LSH/IVF candidate paths (``embedding_neardup_pairs``) and
-    everything downstream — degree count, component labels, border
-    attach — is key-partitioned joins over the near-pair list.
+    The all-pairs distance pass (``_all_pairs_cosine_dist``: the qa < qb
+    half, mirrored) is the declared exactness baseline (run on a bounded
+    subset / sample, same contract as ``cosine_topk_bruteforce``); at
+    100 TB the eps-neighbor pairs come from the LSH/IVF candidate paths
+    (``embedding_neardup_pairs``) and everything downstream — degree
+    count, component labels, border attach — is key-partitioned joins
+    over the near-pair list.
     """
     from . import dedup
 
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        l2_norm(vec_col).alias("__n"),
-    )
-    a = base.select(
-        F.col("__id").alias("qa"), F.col("__v").alias("__va"), F.col("__n").alias("__na")
-    )
-    b = base.select(
-        F.col("__id").alias("qb"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb")
-    )
+    base, dist = _all_pairs_cosine_dist(df, id_col, vec_col)
     near = (
-        a.join(b, F.col("qa") != F.col("qb"))
-        .select(
-            "qa",
-            "qb",
-            (1.0 - dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))).alias("__d"),
-        )
-        .filter(F.col("__d") <= eps)
+        dist.filter(F.col("__d") <= eps)
         .select("qa", "qb")
         # three consumers (degree count, core-core edges, border attach)
-        # would each re-run the all-pairs distance pass — materialize the
-        # small near-pair list once (localCheckpoint: ContextCleaner frees
-        # the blocks on GC, no CacheManager entry to leak)
+        # would each re-filter the mirrored all-pairs list — materialize
+        # the small near-pair list once (localCheckpoint: ContextCleaner
+        # frees the blocks on GC, no CacheManager entry to leak)
         .localCheckpoint()
     )
     deg = base.select(F.col("__id").alias("qa")).join(
@@ -1160,6 +1140,22 @@ def _all_pairs_cosine_dist(
     order), so only the qa < qb HALF is computed and checkpointed; the
     mirrored direction is a projection of the materialized half — the
     dominant cost (|N|²·dim dot products) halves with identical doubles."""
+    base, half = _pair_dist(
+        df, id_col, vec_col, lambda a, b: a.join(b, F.col("qa") < F.col("qb"))
+    )
+    half = half.localCheckpoint()
+    dist = half.unionAll(
+        half.select(F.col("qb").alias("qa"), F.col("qa").alias("qb"), "__d")
+    )
+    return base, dist
+
+
+def _pair_dist(df: DataFrame, id_col: str, vec_col: str, pairs_of) -> tuple:
+    """(base, dist): the id universe ``base`` = (__id, __v, __n) and the
+    cosine distance ``__d`` = 1 − cos of the pairs ``pairs_of(a, b)`` joins
+    out of two renamed copies of it, ``a`` = (qa, __va, __na) and ``b`` =
+    (qb, __vb, __nb): (qa, qb, __d). Norms are per-row projections, so each
+    pair costs one dot product."""
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
@@ -1171,17 +1167,10 @@ def _all_pairs_cosine_dist(
     b = base.select(
         F.col("__id").alias("qb"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb")
     )
-    half = (
-        a.join(b, F.col("qa") < F.col("qb"))
-        .select(
-            "qa",
-            "qb",
-            (1.0 - dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))).alias("__d"),
-        )
-        .localCheckpoint()
-    )
-    dist = half.unionAll(
-        half.select(F.col("qb").alias("qa"), F.col("qa").alias("qb"), "__d")
+    dist = pairs_of(a, b).select(
+        "qa",
+        "qb",
+        (1.0 - dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))).alias("__d"),
     )
     return base, dist
 
@@ -1283,42 +1272,52 @@ def mutual_reach_hierarchy(
     off ANN candidate pairs (``mutual_reachability_clusters_ann``'s feed)
     and the one CC loop stays on the sparse union of eps-edges.
     """
-    from . import dedup
-
-    enc = F.lit(1 << 32).cast("long")
     base, dist = _all_pairs_cosine_dist(df, id_col, vec_col)
     _core, mr = _mutual_reach_mre(dist, k=k)
-    # L slice consumers + the CC loop read this — materialize once
-    mr = mr.localCheckpoint()
-    levels = [(i, float(eps)) for i, eps in enumerate(eps_levels)]
-    lvl_edges = None
-    for i, eps in levels:
-        e = mr.filter(F.col("__mr") <= eps).select(
-            (F.lit(i) * enc + F.col("qa")).alias("id_a"),
-            (F.lit(i) * enc + F.col("qb")).alias("id_b"),
-        )
-        lvl_edges = e if lvl_edges is None else lvl_edges.unionByName(e)
-    comp = dedup.connected_components(lvl_edges)
-    lvl_df = df.sparkSession.createDataFrame(levels, ["__lvl", "eps"])
-    universe = base.select(F.col("__id").alias("id")).crossJoin(
-        F.broadcast(lvl_df)
-    )
+    universe, comp = _level_components(base, [mr], eps_levels)
     return (
-        universe.join(
-            comp.select(
-                (F.col("id") % enc).alias("id"),
-                (F.col("id") / enc).cast("long").alias("__lvl"),
-                (F.col("comp") % enc).alias("__cluster"),
-            ),
-            ["id", "__lvl"],
-            "left",
-        )
+        universe.join(comp, ["id", "__lvl"], "left")
         .select(
             "id",
             "eps",
             F.coalesce("__cluster", F.lit(-1)).cast("long").alias("cluster"),
         )
     )
+
+
+def _level_components(base: DataFrame, mres: list, eps_levels: tuple) -> tuple:
+    """(universe, comp): the ``eps_levels`` slices of every
+    mutual-reachability list in ``mres`` (``_mutual_reach_mre`` output),
+    labeled by ONE connected-components loop. Nodes are composite-encoded
+    ``lvl·2³² + id`` with ``lvl = leg·L + level`` (leg = position in
+    ``mres``, L = number of levels), so the slices stay disjoint inside one
+    union; rounds are bounded by the largest slice's diameter, which the
+    union does not increase. ``universe`` is every (id, __lvl, eps) of the
+    first leg's levels, ``comp`` the decoded (id, __lvl, __cluster) of every
+    clustered node, its cluster the minimum member id. Each list is
+    checkpointed first: its L slices and the loop all read it."""
+    from . import dedup
+
+    enc = F.lit(1 << 32).cast("long")
+    levels = [(i, float(eps)) for i, eps in enumerate(eps_levels)]
+    lvl_edges = None
+    for leg, mre in enumerate(mres):
+        mre = mre.localCheckpoint()
+        for i, eps in levels:
+            code = leg * len(levels) + i
+            e = mre.filter(F.col("__mr") <= eps).select(
+                (F.lit(code) * enc + F.col("qa")).alias("id_a"),
+                (F.lit(code) * enc + F.col("qb")).alias("id_b"),
+            )
+            lvl_edges = e if lvl_edges is None else lvl_edges.unionByName(e)
+    comp = dedup.connected_components(lvl_edges).select(
+        (F.col("id") % enc).alias("id"),
+        (F.col("id") / enc).cast("long").alias("__lvl"),
+        (F.col("comp") % enc).alias("__cluster"),
+    )
+    lvl_df = base.sparkSession.createDataFrame(levels, ["__lvl", "eps"])
+    universe = base.select(F.col("__id").alias("id")).crossJoin(F.broadcast(lvl_df))
+    return universe, comp
 
 
 def _ivf_candidate_pairs(
@@ -1335,25 +1334,9 @@ def _ivf_candidate_pairs(
     ``id % 25 == 0`` — the ``cosine_topk_ivf`` contract) and candidates
     are co-members of a probed cell. Centroids broadcast; the self-join
     shuffles on cell id with bucket sizes ~nprobe·N/cells."""
-    if centroid_filter is None:
-        centroid_filter = F.col(id_col) % 25 == 0
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        l2_norm(vec_col).alias("__n"),
-    )
-    c = df.filter(centroid_filter).select(
-        F.col(id_col).alias("__cent_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(vec_col).alias("__cn"),
-    )
-    probes = rank.top_n_per_group(
-        base.join(F.broadcast(c), F.lit(True)).select(
-            "__id",
-            "__cent_id",
-            (dot("__v", "__cv") / (F.col("__n") * F.col("__cn"))).alias("__pcos"),
-        ),
-        ("__id",), "__pcos", n=nprobe, tiebreak=("__cent_id",), rank_col="__rn",
+    cents = _ivf_centroids(df, id_col, vec_col, centroid_filter)
+    probes = _cos_probes(
+        df, cents, key="__id", id_col=id_col, vec_col=vec_col, n=nprobe
     ).select("__id", F.col("__cent_id").alias("__cell"))
     pa = probes.select(F.col("__id").alias("qa"), "__cell")
     pb = probes.select(F.col("__id").alias("qb"), "__cell")
@@ -1403,39 +1386,16 @@ def mutual_reachability_clusters_ann(
     forfeits the no-|N|²-stage property, which the audit's exact leg
     forfeited already.
     """
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        l2_norm(vec_col).alias("__n"),
-    )
     cand = _ivf_candidate_pairs(
         df, id_col, vec_col, centroid_filter=centroid_filter, nprobe=nprobe
+    )
+    base, dist = _pair_dist(
+        df, id_col, vec_col, lambda a, b: cand.join(a, "qa").join(b, "qb")
     )
     if precomputed_dist is not None:
         dist = cand.join(precomputed_dist, ["qa", "qb"])
     else:
-        a = base.select(
-            F.col("__id").alias("qa"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        )
-        b = base.select(
-            F.col("__id").alias("qb"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        )
-        dist = (
-            cand.join(a, "qa")
-            .join(b, "qb")
-            .select(
-                "qa",
-                "qb",
-                (1.0 - dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))).alias(
-                    "__d"
-                ),
-            )
-            .localCheckpoint()
-        )
+        dist = dist.localCheckpoint()
     return _mutual_reach_tail(base, dist, k=k, eps=eps)
 
 
@@ -1468,39 +1428,17 @@ def mutual_reach_hierarchy_ann_audit(
     both sides. At 100 TB only the ANN leg survives (no |N|² stage in it);
     the exact leg is the declared bounded-audit baseline.
     """
-    from . import dedup
-
     L = len(eps_levels)
-    enc = F.lit(1 << 32).cast("long")
     base, dist = _all_pairs_cosine_dist(df, id_col, vec_col)
     cand = _ivf_candidate_pairs(df, id_col, vec_col, nprobe=nprobe)
     _core_e, mre_e = _mutual_reach_mre(dist, k=k)
     _core_a, mre_a = _mutual_reach_mre(cand.join(dist, ["qa", "qb"]), k=k)
-    mre_e = mre_e.localCheckpoint()
-    mre_a = mre_a.localCheckpoint()
-    levels = [(i, float(eps)) for i, eps in enumerate(eps_levels)]
-    lvl_edges = None
-    for leg, mre in ((0, mre_e), (1, mre_a)):
-        for i, eps in levels:
-            code = leg * L + i
-            e = mre.filter(F.col("__mr") <= eps).select(
-                (F.lit(code) * enc + F.col("qa")).alias("id_a"),
-                (F.lit(code) * enc + F.col("qb")).alias("id_b"),
-            )
-            lvl_edges = e if lvl_edges is None else lvl_edges.unionByName(e)
-    comp = dedup.connected_components(lvl_edges)
-    lvl_df = df.sparkSession.createDataFrame(levels, ["__lvl", "eps"])
-    universe = base.select(F.col("__id").alias("id")).crossJoin(F.broadcast(lvl_df))
-    decoded = comp.select(
-        (F.col("id") % enc).alias("id"),
-        (F.col("id") / enc).cast("long").alias("__code"),
-        (F.col("comp") % enc).alias("__cluster"),
+    universe, comp = _level_components(base, [mre_e, mre_a], eps_levels)
+    ex = comp.filter(F.col("__lvl") < L).select(
+        "id", "__lvl", F.col("__cluster").alias("__ce")
     )
-    ex = decoded.filter(F.col("__code") < L).select(
-        "id", F.col("__code").alias("__lvl"), F.col("__cluster").alias("__ce")
-    )
-    an = decoded.filter(F.col("__code") >= L).select(
-        "id", (F.col("__code") - L).alias("__lvl"), F.col("__cluster").alias("__ca")
+    an = comp.filter(F.col("__lvl") >= L).select(
+        "id", (F.col("__lvl") - L).alias("__lvl"), F.col("__cluster").alias("__ca")
     )
     per = (
         universe.join(ex, ["id", "__lvl"], "left")
@@ -1519,12 +1457,14 @@ def mutual_reach_hierarchy_ann_audit(
             / F.count("*"),
             6,
         ).alias("label_agreement"),
-        F.count_distinct(F.when(F.col("ce") != -1, F.col("ce"))).alias(
-            "clusters_exact"
-        ),
-        F.count_distinct(F.when(F.col("ca") != -1, F.col("ca"))).alias(
-            "clusters_ann"
-        ),
+        # collect_set, not count_distinct: two distinct aggregates plan an
+        # Expand whose group order varies from one build to the next
+        F.size(F.collect_set(F.when(F.col("ce") != -1, F.col("ce"))))
+        .cast("long")
+        .alias("clusters_exact"),
+        F.size(F.collect_set(F.when(F.col("ca") != -1, F.col("ca"))))
+        .cast("long")
+        .alias("clusters_ann"),
     )
 
 
@@ -1705,18 +1645,39 @@ def pq_adc_scores(
     excluded).
     """
     qsv = pq_subvectors(queries, id_col=id_col, vec_col=vec_col, m=m, dim=dim)
-    lut = qsv.join(F.broadcast(codebooks), "sub").select(
-        F.col(id_col).alias("query_id"),
-        "sub",
-        "cid",
-        F.round(sq_l2("subvec", "cvec"), 12).cast("decimal(30,12)").alias("__ld"),
-    )
+    lut = _adc_lut(qsv, codebooks, F.col(id_col).alias("query_id"))
     return (
         codes.select(F.col(id_col).alias("neighbor_id"), "sub", "cid")
         .join(F.broadcast(lut), ["sub", "cid"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__ld").alias("adc_dec"))
+    )
+
+
+def _adc_lut(qsv: DataFrame, codebooks: DataFrame, *keys: ColumnOrName) -> DataFrame:
+    """The ADC lookup table of stacked query subvectors ``qsv`` (``sub``,
+    ``subvec`` plus the ``keys`` naming the query): ``(*keys, sub, cid,
+    __ld)`` with ``__ld`` = ‖subvec − cvec‖² per codeword, rounded at 12
+    and held as decimal(30,12) so every later sum of LUT entries is exact
+    and order-independent."""
+    return qsv.join(F.broadcast(codebooks), "sub").select(
+        *keys,
+        "sub",
+        "cid",
+        F.round(sq_l2("subvec", "cvec"), 12).cast("decimal(30,12)").alias("__ld"),
+    )
+
+
+def _l2_topk(pairs: DataFrame, *, k: int, rank_col: str = "__rn") -> DataFrame:
+    """The ``k`` nearest neighbors per query by exact squared L2 over a pair
+    frame carrying ``query_id``/``__qv`` and ``neighbor_id``/``__nv``:
+    ``(query_id, neighbor_id, __td, rank_col)``, ties to the lower neighbor
+    id."""
+    return rank.top_n_per_group(
+        pairs.select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
+        ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",),
+        rank_col=rank_col,
     )
 
 
@@ -1768,20 +1729,17 @@ def pq_adc_recall_audit(
     refine_cand = shortlist.select("query_id", "neighbor_id")
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    def l2_topk(pairs: DataFrame) -> DataFrame:
-        return rank.top_n_per_group(
-            pairs.select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
-            ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="__rn",
-        ).select("query_id", "neighbor_id")
-
-    refined = l2_topk(
-        nv.join(F.broadcast(refine_cand.join(F.broadcast(qv), "query_id")), "neighbor_id")
-    )
+    refined = _l2_topk(
+        nv.join(F.broadcast(refine_cand.join(F.broadcast(qv), "query_id")), "neighbor_id"),
+        k=k,
+    ).select("query_id", "neighbor_id")
     # the exact leg grades BOTH the ADC and refined sets — |queries|·k rows,
     # checkpointed so the bounded all-pairs baseline runs once, not twice
-    exact = l2_topk(
-        nv.join(F.broadcast(qv), F.col("query_id") != F.col("neighbor_id"))
-    ).localCheckpoint()
+    exact = (
+        _l2_topk(nv.join(F.broadcast(qv), F.col("query_id") != F.col("neighbor_id")), k=k)
+        .select("query_id", "neighbor_id")
+        .localCheckpoint()
+    )
     ha = (
         adc_topk.join(exact, ["query_id", "neighbor_id"])
         .groupBy("query_id")
@@ -1811,26 +1769,36 @@ def pq_adc_recall_audit(
     )
 
 
-def _ivfpq_serve(
-    qd: DataFrame,
-    qsv: DataFrame,
-    coarse: DataFrame,
+def _l2_probes(qd: DataFrame, coarse: DataFrame, *, nprobe: int) -> DataFrame:
+    """``(query_id, __cell)``: each query's ``nprobe`` nearest coarse cells
+    by squared L2, ties to the lowest cid (``assign_nearest``'s contract).
+    ``qd`` = (query_id, __qv), ``coarse`` = (cid, cvec), broadcast."""
+    return rank.top_n_per_group(
+        qd.join(F.broadcast(coarse), F.lit(True))
+        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd")),
+        ("query_id",), "__pd", order="asc", n=nprobe, tiebreak=("cid",), rank_col="__pr",
+    ).select("query_id", F.col("cid").alias("__cell"))
+
+
+def _adc_refine(
     codes: DataFrame,
-    cb: DataFrame,
+    probes: DataFrame,
+    lut: DataFrame,
+    qd: DataFrame,
     nv: DataFrame,
     *,
-    nprobe: int,
     refine: int,
     k: int,
 ) -> DataFrame:
-    """The IVF-PQ serve tail shared by ``ivfpq_topk_audit`` (in-memory) and
-    ``ivfpq_topk_from_artifact`` (persisted index): probe ranking, the
-    cell-blocked ADC scan, and the exact re-rank of the ADC shortlist.
-    Inputs are pre-shaped: ``qd`` = (query_id, __qv), ``qsv`` = stacked
-    query subvectors, ``codes`` = stacked (neighbor_id, __cell, sub, cid)
-    carrying each vector's coarse cell, ``nv`` = (neighbor_id, __nv)
-    refine vectors. Returns the refined top-k with true squared distance:
-    (query_id, neighbor_id, rank, __td).
+    """The IVF-PQ serve tail of ``ivfpq_topk_audit``, its artifact twin
+    ``ivfpq_topk_from_artifact`` and ``ivfpq_residual_topk_audit``: the
+    cell-blocked ADC scan of ``codes`` = (neighbor_id, __cell, sub, cid)
+    over the ``probes`` cells (``_l2_probes``), each code looked up in
+    ``lut`` (an ``_adc_lut``, joined on all its key columns — ``query_id,
+    sub, cid``, plus ``__cell`` when the LUT is per probed cell), the ADC
+    top-``refine`` shortlist, then its exact squared-L2 top-k over the
+    refine vectors ``nv`` = (neighbor_id, __nv) and queries ``qd`` =
+    (query_id, __qv): (query_id, neighbor_id, __td, rank).
 
     Scale shape of the scan: the ONLY corpus-sized table here (codes) is
     scanned once and joined to the broadcast of ``probes`` (|queries| ×
@@ -1839,21 +1807,10 @@ def _ivfpq_serve(
     earlier candidate-set formulation had exactly that flaw). Every
     broadcast side — probes, the per-query LUT, the ADC shortlist — is
     query-bounded."""
-    probes = rank.top_n_per_group(
-        qd.join(F.broadcast(coarse), F.lit(True))
-        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd")),
-        ("query_id",), "__pd", order="asc", n=nprobe, tiebreak=("cid",), rank_col="__pr",
-    ).select("query_id", F.col("cid").alias("__cell"))
-    lut = qsv.join(F.broadcast(cb), "sub").select(
-        F.col("query_id"),
-        "sub",
-        "cid",
-        F.round(sq_l2("subvec", "cvec"), 12).cast("decimal(30,12)").alias("__ld"),
-    )
     adc = (
         codes.join(F.broadcast(probes), "__cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "sub", "cid"])
+        .join(F.broadcast(lut), [c for c in lut.columns if c != "__ld"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("__ld").alias("__adc"))
     )
@@ -1861,10 +1818,10 @@ def _ivfpq_serve(
         adc, ("query_id",), "__adc", order="asc", n=refine,
         tiebreak=("neighbor_id",), rank_col="__rn",
     ).select("query_id", "neighbor_id")
-    return rank.top_n_per_group(
-        nv.join(F.broadcast(shortlist.join(F.broadcast(qd), "query_id")), "neighbor_id")
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
-        ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="rank",
+    return _l2_topk(
+        nv.join(F.broadcast(shortlist.join(F.broadcast(qd), "query_id")), "neighbor_id"),
+        k=k,
+        rank_col="rank",
     )
 
 
@@ -1874,10 +1831,8 @@ def _ivfpq_hit_tail(
     """Grade the served top-k against the exact L2 top-k (the declared
     bounded all-pairs audit leg) and shape the declared output:
     (query_id, rank, neighbor_id, d2, hit)."""
-    exact = rank.top_n_per_group(
-        nv.join(F.broadcast(qd), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__ed")),
-        ("query_id",), "__ed", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="__rn",
+    exact = _l2_topk(
+        nv.join(F.broadcast(qd), F.col("query_id") != F.col("neighbor_id")), k=k
     ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
     return (
         refined.join(exact, ["query_id", "neighbor_id"], "left")
@@ -1949,9 +1904,9 @@ def ivfpq_topk_audit(
         F.col(id_col).alias("query_id"), "sub", "subvec"
     )
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    refined = _ivfpq_serve(
-        qd, qsv, coarse, codes, cb, nv, nprobe=nprobe, refine=refine, k=k
-    )
+    probes = _l2_probes(qd, coarse, nprobe=nprobe)
+    lut = _adc_lut(qsv, cb, "query_id")
+    refined = _adc_refine(codes, probes, lut, qd, nv, refine=refine, k=k)
     return _ivfpq_hit_tail(refined, qd, nv, k=k)
 
 
@@ -2120,9 +2075,9 @@ def ivfpq_topk_from_artifact(
     nv = vectors.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv")
     )
-    return _ivfpq_serve(
-        qd, qsv, coarse, codes, cb, nv, nprobe=nprobe, refine=refine, k=k
-    )
+    probes = _l2_probes(qd, coarse, nprobe=nprobe)
+    lut = _adc_lut(qsv, cb, "query_id")
+    return _adc_refine(codes, probes, lut, qd, nv, refine=refine, k=k)
 
 
 def ivfpq_residual_topk_audit(
@@ -2187,17 +2142,12 @@ def ivfpq_residual_topk_audit(
     )
     cells = cellsraw.select(F.col(id_col).alias("neighbor_id"), "__cell")
     # codes carry their coarse cell (one co-partitioned id join at build),
-    # so the serve's ADC scan is a broadcast-probe cell-blocked scan — same
-    # scale posture as _ivfpq_serve
+    # so _adc_refine's ADC scan is cell-blocked, as in the flat serve
     codes = pq_encode(res, cb, id_col=id_col, vec_col="__rv", m=m, dim=dim).select(
         F.col(id_col).alias("neighbor_id"), "sub", "cid"
     ).join(cells, "neighbor_id")
     qd = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    probes = rank.top_n_per_group(
-        qd.join(F.broadcast(coarse), F.lit(True))
-        .select("query_id", "cid", sq_l2("__qv", "cvec").alias("__pd")),
-        ("query_id",), "__pd", order="asc", n=nprobe, tiebreak=("cid",), rank_col="__pr",
-    ).select("query_id", F.col("cid").alias("__cell"))
+    probes = _l2_probes(qd, coarse, nprobe=nprobe)
     qres = (
         probes.join(F.broadcast(qd), "query_id")
         .join(F.broadcast(cc), "__cell")
@@ -2214,28 +2164,7 @@ def ivfpq_residual_topk_audit(
         "query_id", "__cell", F.col("__p.sub").alias("sub"),
         F.col("__p.subvec").alias("subvec"),
     )
-    lut = qrsv.join(F.broadcast(cb), "sub").select(
-        "query_id",
-        "__cell",
-        "sub",
-        "cid",
-        F.round(sq_l2("subvec", "cvec"), 12).cast("decimal(30,12)").alias("__ld"),
-    )
-    adc = (
-        codes.join(F.broadcast(probes), "__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "__cell", "sub", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("__ld").alias("__adc"))
-    )
-    shortlist = rank.top_n_per_group(
-        adc, ("query_id",), "__adc", order="asc", n=refine,
-        tiebreak=("neighbor_id",), rank_col="__rn",
-    ).select("query_id", "neighbor_id")
+    lut = _adc_lut(qrsv, cb, "query_id", "__cell")
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    refined = rank.top_n_per_group(
-        nv.join(F.broadcast(shortlist.join(F.broadcast(qd), "query_id")), "neighbor_id")
-        .select("query_id", "neighbor_id", sq_l2("__qv", "__nv").alias("__td")),
-        ("query_id",), "__td", order="asc", n=k, tiebreak=("neighbor_id",), rank_col="rank",
-    )
+    refined = _adc_refine(codes, probes, lut, qd, nv, refine=refine, k=k)
     return _ivfpq_hit_tail(refined, qd, nv, k=k)

@@ -14731,25 +14731,18 @@ def kll_quantile_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofmonth("ts").alias("dom"),
         "value",
     )
-    halves = ev.groupBy("month").agg(
-        F.expr("kll_sketch_agg_double(CASE WHEN dom <= 15 THEN value END)").alias(
-            "sk1"
-        ),
-        F.expr("kll_sketch_agg_double(CASE WHEN dom > 15 THEN value END)").alias(
-            "sk2"
-        ),
-    )
-    merged = halves.select(
-        "month",
-        F.expr(
-            "kll_sketch_get_quantile_double(kll_sketch_merge_double(sk1, sk2), 0.5)"
-        ).alias("p50_sketch"),
-    )
-    exact = ev.groupBy("month").agg(
+    # one grouping of one scan: the two half-sketches merge inside the
+    # aggregate's result expression, next to the exact count and median
+    per_month = ev.groupBy("month").agg(
         F.count("*").alias("n_events"),
         F.round(F.expr("percentile(value, 0.5D)"), 6).alias("p50_exact"),
+        F.expr(
+            "kll_sketch_get_quantile_double(kll_sketch_merge_double("
+            "kll_sketch_agg_double(CASE WHEN dom <= 15 THEN value END),"
+            " kll_sketch_agg_double(CASE WHEN dom > 15 THEN value END)), 0.5)"
+        ).alias("p50_sketch"),
     )
-    return exact.join(merged, "month").select(
+    return per_month.select(
         "month",
         "n_events",
         "p50_exact",
