@@ -26,36 +26,6 @@ from tmdb_spark_data_pipeline_spark.sources.io import TPCH_TABLES
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
 
-def _make_active(session: SparkSession) -> None:
-    """Make ``session`` the JVM's active and default session (and pyspark's).
-    The Python data sources resolve their provider through the JVM's active
-    session: without this, ``jsonl_py`` registered on the driver session is
-    DATA_SOURCE_NOT_FOUND."""
-    jcls = SparkSession._get_j_spark_session_class(session._jvm)
-    jcls.setActiveSession(session._jsparkSession)
-    jcls.setDefaultSession(session._jsparkSession)
-    SparkSession._activeSession = SparkSession._instantiatedSession = session
-
-
-@pytest.fixture(scope="module")
-def driver_spark(spark):
-    """A session with the driver's config on the engine's JVM: a new session
-    of the engine session, with every runtime ``spark.sql.*`` conf that
-    ``get_spark`` pins unset back to Spark's default. pyspark sets
-    ``spark.sql.artifact.isolation.enabled`` in every session, the driver's
-    included, so it stays. The engine session is active again afterwards."""
-    drv = spark.newSession()
-    for key in drv.conf.getAll:
-        if (
-            key.startswith("spark.sql.")
-            and key != "spark.sql.artifact.isolation.enabled"
-            and drv.conf.isModifiable(key)
-        ):
-            drv.conf.unset(key)
-    _make_active(drv)
-    yield drv
-    _make_active(spark)
-
 
 @pytest.fixture(scope="module")
 def duck():

@@ -49,18 +49,6 @@ def test_minhash_lsh_agrees_with_exact_jaccard(corpus):
     assert e == l  # verified candidates carry the exact jaccard
 
 
-def test_minhash_affine_signatures_equal_agg_form(spark, corpus):
-    from pyspark.sql import functions as F2
-
-    base = corpus.select(F2.col("doc_id").alias("__id"), F2.col("text").alias("__t"))
-    exploded = base.select("__id", F2.explode(dedup.word_shingles("__t", 3)).alias("__s"))
-    agg_form = dedup.minhash_signatures_agg(exploded, num_hashes=16)
-    hashed = base.select("__id", dedup.minhash_hash_array(dedup.word_shingles("__t", 3)).alias("__h"))
-    arr_form = hashed.select("__id", *dedup.minhash_signature_affine("__h", 16))
-    assert agg_form.exceptAll(arr_form).count() == 0
-    assert arr_form.exceptAll(agg_form).count() == 0
-
-
 def test_minhash_bands_must_divide(corpus):
     with pytest.raises(ValueError):
         dedup.minhash_lsh_pairs(corpus, "text", "doc_id", num_hashes=100, bands=32)
@@ -87,32 +75,6 @@ def test_simhash_neardup_pairs_finds_identical_docs(corpus):
 def test_simhash_neardup_pigeonhole_guard(corpus):
     with pytest.raises(ValueError):
         dedup.simhash_neardup_pairs(corpus, "text", "doc_id", max_hamming=4, bands=4)
-
-
-_EDGE_INPUTS = {
-    "no_rows": [],
-    "one_row": [(1, DOC_A)],
-    "all_null_text": [(1, None), (2, None)],
-}
-_EDGE_OPS = {
-    "simhash_fingerprints": dedup.simhash_fingerprints,
-    "simhash_neardup_pairs": dedup.simhash_neardup_pairs,
-    "minhash_lsh_pairs": dedup.minhash_lsh_pairs,
-    "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
-}
-
-
-@pytest.mark.parametrize("op", list(_EDGE_OPS))
-@pytest.mark.parametrize("rows", list(_EDGE_INPUTS))
-def test_edge_size_inputs_yield_no_pairs(spark, rows, op):
-    """0 rows, 1 row and all-NULL text run without raising: no pairs, and a
-    fingerprint only for a non-NULL text."""
-    df = spark.createDataFrame(_EDGE_INPUTS[rows], "doc_id long, text string")
-    out = _EDGE_OPS[op](df, "text", "doc_id").collect()
-    if op == "simhash_fingerprints":
-        assert [r.doc_id for r in out] == ([1] if rows == "one_row" else [])
-    else:
-        assert out == []
 
 
 def test_content_hash_matches_sha256(spark):
@@ -846,10 +808,12 @@ def test_connected_components_long_chain_and_star_merge(spark):
 
 def test_incremental_minhash_cluster_fold_equals_batch(spark, tmp_path):
     """The stream_minhash_cluster_maintenance epoch body, driver-free: per
-    batch (1) append signatures to the band artifact, (2) incremental
-    candidates = new-batch buckets x whole artifact (new-x-old + new-x-new
-    only — old-x-old pairs were emitted in their own epochs), (3) exact
-    verify, (4) star-fold into CC state. Final labels must equal batch CC
+    batch ``dedup._minhash_epoch_pairs`` (the step the stream runs) (1)
+    lands signatures in the batch's ``__epoch`` partition of the band
+    artifact, (2) takes incremental candidates = the epoch's buckets x
+    whole artifact (new-x-old + new-x-new only — old-x-old pairs were
+    emitted in their own epochs), (3) exact-verifies them; then (4) the
+    verified pairs star-fold into CC state. Final labels must equal batch CC
     over the full exact-Jaccard pair set, and the per-epoch candidate
     restriction must never lose a pair (the later-endpoint-epoch
     completeness argument)."""
@@ -877,39 +841,7 @@ def test_incremental_minhash_cluster_fold_equals_batch(spark, tmp_path):
     labels = None
     for b in range(3):
         bdf = docs.filter(F.col("doc_id") % 3 == b)
-        dedup.write_minhash_artifact(
-            bdf, "text", "doc_id", art, mode="overwrite" if b == 0 else "append"
-        )
-        buckets = spark.read.parquet(art)
-        new_ids = bdf.select(F.col("doc_id").alias("__id"))
-        nb = buckets.join(F.broadcast(new_ids), "__id", "left_semi")
-        cand = (
-            nb.alias("a")
-            .join(
-                buckets.alias("b"),
-                (F.col("a.__band") == F.col("b.__band"))
-                & (F.col("a.__sig") == F.col("b.__sig"))
-                & (F.col("a.__id") != F.col("b.__id")),
-            )
-            .select(
-                F.least("a.__id", "b.__id").alias("id_a"),
-                F.greatest("a.__id", "b.__id").alias("id_b"),
-            )
-            .distinct()
-        )
-        cand_docs = (
-            cand.select(F.col("id_a").alias("__id"))
-            .union(cand.select(F.col("id_b").alias("__id")))
-            .distinct()
-        )
-        sh = (
-            docs.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t"))
-            .join(F.broadcast(cand_docs), "__id", "left_semi")
-            .select("__id", F.explode(dedup.word_shingles("__t", 3)).alias("__s"))
-        )
-        verified = dedup._jaccard_from_shingles(sh, 0.5, persist=False).join(
-            cand, ["id_a", "id_b"], "left_semi"
-        )
+        _, _, verified = dedup._minhash_epoch_pairs(bdf, docs, "text", "doc_id", b, art)
         fold = [(r.id_a, r.id_b) for r in verified.collect()]
         if labels is not None:
             fold += [(i, c) for i, c in labels.items() if i != c]
@@ -950,37 +882,8 @@ def test_incremental_keepone_survivor_fold(spark, tmp_path):
     surv_history = []
     for b in range(3):
         bdf = docs.filter(F.col("doc_id") % 3 == b)
-        dedup.write_minhash_artifact(
-            bdf, "text", "doc_id", art, mode="overwrite" if b == 0 else "append"
-        )
-        buckets = spark.read.parquet(art)
-        new_ids = bdf.select(F.col("doc_id").alias("__id"))
-        nb = buckets.join(F.broadcast(new_ids), "__id", "left_semi")
-        cand = (
-            nb.alias("a")
-            .join(
-                buckets.alias("b"),
-                (F.col("a.__band") == F.col("b.__band"))
-                & (F.col("a.__sig") == F.col("b.__sig"))
-                & (F.col("a.__id") != F.col("b.__id")),
-            )
-            .select(
-                F.least("a.__id", "b.__id").alias("id_a"),
-                F.greatest("a.__id", "b.__id").alias("id_b"),
-            )
-            .distinct()
-        )
-        cand_docs = (
-            cand.select(F.col("id_a").alias("__id"))
-            .union(cand.select(F.col("id_b").alias("__id")))
-            .distinct()
-        )
-        served = docs.select(
-            F.col("doc_id").alias("__id"), F.col("text").alias("__t")
-        ).join(F.broadcast(cand_docs), "__id", "left_semi")
-        sh = served.select("__id", F.explode(dedup.word_shingles("__t", 3)).alias("__s"))
-        verified = dedup._jaccard_from_shingles(sh, 0.5, persist=False).join(
-            cand, ["id_a", "id_b"], "left_semi"
+        _, served, verified = dedup._minhash_epoch_pairs(
+            bdf, docs, "text", "doc_id", b, art
         )
         fold = [(r.id_a, r.id_b) for r in verified.collect()]
         if labels is not None:
@@ -1085,3 +988,84 @@ def test_connected_components_dedup_edges_off_same_labels(spark):
     assert {(r.id, r.comp) for r in a} == {
         (1, 1), (2, 1), (3, 1), (5, 5), (6, 5)
     }
+
+
+_EDGE_INPUTS = {
+    "no_rows": [],
+    "one_row": [(1, DOC_A)],
+    "all_null_text": [(1, None), (2, None)],
+}
+#: per-document operators: one row per document with text
+_EDGE_DOC_OPS = ("simhash_fingerprints", "boilerplate_shingle_stats")
+#: the span family: one row per document, NULL text included
+_EDGE_SPAN_OPS = (
+    "duplicate_chunk_stats",
+    "duplicated_span_extents",
+    "remove_duplicated_spans",
+    "cross_doc_substring_spans",
+    "cross_doc_substring_apply",
+    "cross_doc_substring_keep_one",
+)
+
+
+def _artifact_pairs(df, text_col, id_col, *, where):
+    path = str(where / "art")
+    dedup.write_minhash_artifact(df, text_col, id_col, path)
+    return dedup.minhash_pairs_from_artifact(df, text_col, id_col, path)
+
+
+def _incremental_new_side(df, text_col, id_col, *, where):
+    old = df.sparkSession.createDataFrame([(9, DOC_B)], "doc_id long, text string")
+    return dedup.minhash_lsh_pairs_incremental(old, df, text_col, id_col)
+
+
+_EDGE_OPS = {
+    name: getattr(dedup, name)
+    for name in (
+        "simhash_neardup_pairs",
+        "minhash_lsh_pairs",
+        "ngram_jaccard_pairs",
+        "minhash_band_pairs_portable",
+        "shingle_containment_pairs",
+        *_EDGE_DOC_OPS,
+        *_EDGE_SPAN_OPS,
+    )
+}
+#: operators that need a scratch directory or a second frame
+_EDGE_TMP_OPS = {
+    "minhash_pairs_from_artifact": _artifact_pairs,
+    "minhash_lsh_pairs_incremental": _incremental_new_side,
+}
+
+
+@pytest.mark.parametrize("op", [*_EDGE_OPS, *_EDGE_TMP_OPS])
+@pytest.mark.parametrize("rows", list(_EDGE_INPUTS))
+def test_edge_size_inputs_yield_no_pairs(spark, driver_spark, tmp_path, rows, op):
+    """0 rows, 1 row and all-NULL text run without raising, with the same
+    rows in the engine's session and the driver's (ANSI on): no pairs, a
+    fingerprint or shingle rollup only for a document with text, and a span
+    row per document with a token count ``>= 0`` and nothing duplicated.
+    Last in the module: ``driver_spark`` stays the active session until the
+    module ends."""
+    outs = []
+    for i, session in enumerate((spark, driver_spark)):
+        df = session.createDataFrame(_EDGE_INPUTS[rows], "doc_id long, text string")
+        if op in _EDGE_TMP_OPS:
+            out = _EDGE_TMP_OPS[op](df, "text", "doc_id", where=tmp_path / str(i))
+        else:
+            out = _EDGE_OPS[op](df, "text", "doc_id")
+        outs.append(sorted(out.collect()))
+    out = outs[0]
+    assert outs[1] == out
+    ids = [r[0] for r in out]
+    if op in _EDGE_DOC_OPS:
+        assert ids == ([1] if rows == "one_row" else [])
+    elif op in _EDGE_SPAN_OPS:
+        assert ids == [r[0] for r in _EDGE_INPUTS[rows]]
+        for r in (row.asDict() for row in out):
+            n = r.get("n_tokens", r.get("total_tokens"))
+            assert n >= 0
+            assert r.get("dup_tokens", 0) == 0
+            assert r.get("kept_tokens", n) == n
+    else:
+        assert out == []

@@ -14,11 +14,32 @@ discriminative (trigrams here), quadratic in the worst case. MinHash+LSH is
 the scale path: signature size is constant per doc (128 longs), banding makes
 candidate generation O(near-dup pairs), and each stage is a plain shuffle
 Catalyst can size with AQE.
+
+Each near-dup step has one private owner; the public entry points compose
+them:
+
+- ``_jaccard`` computes exact Jaccard from ``_sizes`` and ``_shared``
+  (shared-shingle counts, which ``shingle_containment_pairs`` also uses);
+  ``_jaccard_from_shingles`` is its self-join form (id_a < id_b).
+- ``_band_buckets`` checks the band split and explodes signatures into
+  (band, sig) buckets; ``_collisions`` joins two bucket tables on the
+  bucket (``_self_collisions``: one table with itself, id_a < id_b) for
+  the batch, portable, artifact, incremental and stream candidates.
+- ``_endpoints`` lists a candidate list's documents, ``_serve`` fetches
+  their text and ``_verify`` exact-verifies the candidates over it
+  (``minhash_lsh_pairs``, ``minhash_pairs_from_artifact`` and the stream
+  epoch step ``_minhash_epoch_pairs``, which lands the epoch's buckets
+  through ``_write_epoch_buckets``).
+- ``_token_base`` tokenizes for the span family (``_span_tokens``: NULL
+  and blank text are empty), ``_window_digests`` digests its rolling
+  windows, ``_merge_islands`` merges intervals into maximal extents,
+  ``_span_audit`` rolls extents up per document and ``_scrub`` drops the
+  covered tokens (stride-1 spans and cross-document substrings alike).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import ColumnOrName, _col, gateway_memo
@@ -48,6 +69,14 @@ def _spread(df: DataFrame, by: str | None = None) -> DataFrame:
     if by is not None:
         return df.repartition(target, F.col(by))
     return df.repartition(target)
+
+
+def _docs_by_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``df``'s documents as ``(__id, __t)`` rows, ``_spread`` by id: the
+    base of every per-document shingle or signature pass keyed on id."""
+    return _spread(
+        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")), by="__id"
+    )
 
 
 def content_hash(c: ColumnOrName, bits: int = 256) -> Column:
@@ -122,12 +151,8 @@ def ngram_jaccard_pairs(
     role is the exact-baseline oracle twin; a Zipfian corpus at scale sets
     ``max_df`` (or routes to the MinHash path).
     """
-    sh = _spread(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")),
-        by="__id",
-    ).select(
-        "__id",
-        F.explode(word_shingles("__t", n)).alias("__s"),
+    sh = _docs_by_id(df, text_col, id_col).select(
+        "__id", F.explode(word_shingles("__t", n)).alias("__s")
     )
     return _jaccard_from_shingles(sh, min_jaccard, persist=persist_shingles, max_df=max_df)
 
@@ -170,6 +195,54 @@ def _max_df_filter(sh: DataFrame, max_df: int) -> DataFrame:
     )
 
 
+def _sizes(sh: DataFrame) -> DataFrame:
+    """Shingle-set size per document: ``(__id, __sz)``."""
+    return sh.groupBy("__id").agg(F.count("*").alias("__sz"))
+
+
+def _shared(
+    a: DataFrame, b: DataFrame, ids: tuple[str, str], where: Column | None = None
+) -> DataFrame:
+    """Shared-shingle counts: the (__id, __s) tables ``a`` and ``b`` (aliased
+    ``a``/``b``) equi-joined on the shingle, ``where`` narrowing the pair →
+    ``(ids[0], ids[1], __shared)``. Only pairs sharing ≥ 1 shingle ever
+    meet, so the join IS the blocking step."""
+    on = F.col("a.__s") == F.col("b.__s")
+    if where is not None:
+        on = on & where
+    return (
+        a.alias("a")
+        .join(b.alias("b"), on)
+        .groupBy(F.col("a.__id").alias(ids[0]), F.col("b.__id").alias(ids[1]))
+        .agg(F.count("*").alias("__shared"))
+    )
+
+
+def _jaccard(
+    a: DataFrame,
+    b: DataFrame,
+    min_jaccard: float,
+    ids: tuple[str, str],
+    where: Column | None = None,
+) -> DataFrame:
+    """Exact Jaccard ``|A∩B| / (|A|+|B|-|A∩B|)`` between the shingle sets of
+    the (__id, __s) tables ``a`` and ``b`` → ``(ids[0], ids[1], jaccard ≥
+    min_jaccard)``; ``where`` narrows the pair as in ``_shared``."""
+    sa = _sizes(a).select(F.col("__id").alias(ids[0]), F.col("__sz").alias("__sza"))
+    sb = _sizes(b).select(F.col("__id").alias(ids[1]), F.col("__sz").alias("__szb"))
+    return (
+        _shared(a, b, ids, where)
+        .join(sa, ids[0])
+        .join(sb, ids[1])
+        .withColumn(
+            "jaccard",
+            F.col("__shared") / (F.col("__sza") + F.col("__szb") - F.col("__shared")),
+        )
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select(*ids, "jaccard")
+    )
+
+
 def _jaccard_from_shingles(
     sh: DataFrame,
     min_jaccard: float,
@@ -197,63 +270,7 @@ def _jaccard_from_shingles(
         sh = _max_df_filter(sh, max_df)
     if persist:
         sh = sh.persist()
-    sizes = sh.groupBy("__id").agg(F.count("*").alias("__sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        a.join(b, (F.col("a.__s") == F.col("b.__s")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count("*").alias("__shared"))
-    )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__sz").alias("__sza"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__sz").alias("__szb"))
-    return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__shared") / (F.col("__sza") + F.col("__szb") - F.col("__shared")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_hash_array(shingles: ColumnOrName) -> Column:
-    """``xxhash64`` each shingle string once into a long array (mod p)."""
-    return F.transform(_col(shingles), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
-
-
-def minhash_signature_affine(
-    hash_array: ColumnOrName, num_hashes: int = 128, seed: int = 7
-) -> list[Column]:
-    """MinHash signature as a pure projection over a pre-hashed long array
-    (``minhash_hash_array``): k affine permutations ``(a·h + b) mod p``
-    folded with ``array_min``.
-
-    No explode, no shuffle — the whole signature is computed row-local, which
-    both beats the exploded-aggregate form at sf0.1 (~2×) and scales
-    embarrassingly (signature cost is O(shingles × k) per row regardless of
-    cluster size). Identical values to ``minhash_signatures_agg`` (same hash,
-    same permutation parameters).
-
-    CRITICAL STAGING: the hash array must be materialized as its OWN
-    projection (a named column the k signature expressions reference).
-    Inlining shingle+hash into each of the 128 columns makes Catalyst
-    evaluate the shingle pipeline 128× per row — measured 266 s vs 1 s at
-    sf0.1. ``CollapseProject`` keeps the stage separate exactly because the
-    expensive alias is referenced many times.
-    """
-    arr = _col(hash_array)
-
-    def _perm(a: int, b: int):
-        # closure, NOT defaulted lambda params: PySpark treats a second (even
-        # defaulted) lambda parameter as the array-index variable
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE31))
-
-    return [
-        F.array_min(F.transform(arr, _perm(a, b))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_permutation_params(num_hashes, seed))
-    ]
+    return _jaccard(sh, sh, min_jaccard, ("id_a", "id_b"), F.col("a.__id") < F.col("b.__id"))
 
 
 #: Mersenne prime 2^31 - 1: permutation arithmetic stays < 2^62, so it never
@@ -301,6 +318,85 @@ def _band_bucket_array(bands: int, r: int, fold: str = "xxhash64") -> Column:
     return F.expr(f"array({', '.join(_one(b) for b in range(bands))})")
 
 
+def _band_buckets(
+    sig: DataFrame, num_hashes: int, bands: int, *carry: str, fold: str = "xxhash64"
+) -> DataFrame:
+    """Signature rows (``__id``, ``carry``, mh_0..mh_{k-1}) → LSH band-bucket
+    rows ``(__id, *carry, __band, __sig)``: each signature explodes into
+    ``bands`` rows whose ``__sig`` folds the band's r = num_hashes / bands
+    minhashes (``_band_bucket_array``)."""
+    if num_hashes % bands:
+        raise ValueError("num_hashes must be divisible by bands")
+    r = num_hashes // bands
+    return sig.select(
+        "__id", *carry, F.explode(_band_bucket_array(bands, r, fold)).alias("__b")
+    ).select(
+        "__id", *carry, F.col("__b.band").alias("__band"), F.col("__b.sig").alias("__sig")
+    )
+
+
+def _collisions(
+    a: DataFrame, b: DataFrame, *ids: Column, where: Column | None = None
+) -> DataFrame:
+    """MinHash candidate pairs: rows of the band-bucket tables ``a`` and
+    ``b`` (aliased ``a``/``b``) in the same (band, sig) bucket, ``where``
+    narrowing the pair → the ``ids`` projection. NOT distinct'd: a pair
+    colliding in k bands appears k times."""
+    on = (F.col("a.__band") == F.col("b.__band")) & (F.col("a.__sig") == F.col("b.__sig"))
+    if where is not None:
+        on = on & where
+    return a.alias("a").join(b.alias("b"), on).select(*ids)
+
+
+def _self_collisions(buckets: DataFrame) -> DataFrame:
+    """``_collisions`` of one band-bucket table with itself: ``(id_a,
+    id_b)`` with id_a < id_b, once per shared band."""
+    return _collisions(
+        buckets,
+        buckets,
+        F.col("a.__id").alias("id_a"),
+        F.col("b.__id").alias("id_b"),
+        where=F.col("a.__id") < F.col("b.__id"),
+    )
+
+
+def _endpoints(cand: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:
+    """The distinct documents named by a candidate pair list: ``(__id)``."""
+    return (
+        cand.select(F.col(a).alias("__id"))
+        .union(cand.select(F.col(b).alias("__id")))
+        .distinct()
+    )
+
+
+def _serve(docs: DataFrame, text_col: str, id_col: str, cand_docs: DataFrame) -> DataFrame:
+    """The candidate documents' text ``(__id, __t)``, spread by id. The
+    broadcast semi-join runs BEFORE the parallelism repartition, at the
+    scan, so the exchange carries only candidate documents' payloads,
+    never the whole corpus (guide §2.3 — filter before the exchange)."""
+    return _spread(
+        docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+        .join(F.broadcast(cand_docs), "__id", "left_semi"),
+        by="__id",
+    )
+
+
+def _verify(
+    served: DataFrame, cand: DataFrame, *, n: int, min_jaccard: float, persist: bool
+) -> DataFrame:
+    """Exact-Jaccard verification of MinHash candidates ``cand`` (id_a,
+    id_b) over their endpoints' text ``served`` (``_serve``): shingle, the
+    blocked exact Jaccard, then a semi-join back to the candidates →
+    ``(id_a, id_b, jaccard)``. Band collisions never reach the output
+    unverified, and exact pairs the banding missed never enter it. The
+    shingle equi-join touches only matches; joining the two full shingle
+    LISTS per pair would materialize |A|×|B| rows per candidate."""
+    sh = served.select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
+    return _jaccard_from_shingles(sh, min_jaccard, persist=persist).join(
+        cand, ["id_a", "id_b"], "left_semi"
+    )
+
+
 def minhash_signatures_agg(
     exploded: DataFrame,
     *,
@@ -337,20 +433,12 @@ def minhash_band_buckets(
     """(__id, __t) rows → LSH band-bucket rows ``(__id, __band, __sig)``.
 
     Exploded-aggregate signatures (map-side partial agg reduces each doc to
-    one signature row before the shuffle; the projection-only alternative
-    ``minhash_signature_affine`` measures the same warmed and compiles
-    slower cold), then each signature explodes into ``bands`` rows whose
-    ``sig`` hashes the band's r minhashes. This bucket table — ~3 longs ×
-    bands per doc — IS the dedup service's persistent artifact (see
-    ``write_minhash_artifact``)."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
+    one signature row before the shuffle), then ``_band_buckets``. This
+    bucket table — ~3 longs × bands per doc — IS the dedup service's
+    persistent artifact (see ``write_minhash_artifact``)."""
     exploded = base.select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
     with_sig = minhash_signatures_agg(exploded, num_hashes=num_hashes)
-    return with_sig.select(
-        "__id", F.explode(_band_bucket_array(bands, r)).alias("__b")
-    ).select("__id", F.col("__b.band").alias("__band"), F.col("__b.sig").alias("__sig"))
+    return _band_buckets(with_sig, num_hashes, bands)
 
 
 def write_minhash_artifact(
@@ -370,12 +458,59 @@ def write_minhash_artifact(
     documents again. ``mode="append"`` is the incremental maintenance path
     (new batch → new bucket rows); signatures are pure functions of the
     text, so appends never invalidate existing rows."""
-    base = _spread(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")), by="__id"
+    buckets = minhash_band_buckets(
+        _docs_by_id(df, text_col, id_col), n=n, num_hashes=num_hashes, bands=bands
     )
-    minhash_band_buckets(base, n=n, num_hashes=num_hashes, bands=bands).write.mode(
-        mode
-    ).parquet(path)
+    buckets.write.mode(mode).parquet(path)
+
+
+def _write_epoch_buckets(
+    batch: DataFrame, text_col: str, id_col: str, epoch_id: int, path: str
+) -> None:
+    """One stream epoch's band-bucket rows → the artifact's ``__epoch=<id>``
+    partition (``write_epoch_overwrite``: a replayed epoch rewrites its own
+    partition instead of appending its rows twice)."""
+    from ..streaming.sinks import write_epoch_overwrite
+
+    buckets = minhash_band_buckets(_docs_by_id(batch, text_col, id_col))
+    write_epoch_overwrite(buckets, epoch_id, path)
+
+
+def _minhash_epoch_pairs(
+    batch: DataFrame,
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    epoch_id: int,
+    path: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The candidate-and-verify step of one streaming MinHash epoch: land
+    ``batch``'s buckets (``_write_epoch_buckets``), join the epoch's own
+    bucket PARTITION (a partition-pruned scan) against the whole artifact
+    — new×old and new×new pairs only, never a full-history re-pair — and
+    exact-verify those candidates over ``docs`` (3-shingles, Jaccard ≥
+    0.5). Every pair is emitted in its LATER endpoint's epoch.
+
+    Returns ``(cand, served, verified)``: the candidate pairs and the
+    endpoints' text ``(__id, __t)`` are localCheckpoints, so the band join
+    against the whole artifact and the serve run once per epoch whatever
+    reads them (the caller frees both once every consumer has
+    materialized); ``verified`` is (id_a, id_b, jaccard). The candidate
+    list keeps band-collision duplicates: both of its consumers (the
+    endpoint serve and the verify semi-join) are duplicate-insensitive.
+    ``docs`` only serves text for ids already streamed: candidates come
+    from artifact buckets."""
+    _write_epoch_buckets(batch, text_col, id_col, epoch_id, path)
+    buckets = docs.sparkSession.read.parquet(path)
+    cand = _collisions(
+        buckets.filter(F.col("__epoch") == int(epoch_id)),
+        buckets,
+        F.least("a.__id", "b.__id").alias("id_a"),
+        F.greatest("a.__id", "b.__id").alias("id_b"),
+        where=F.col("a.__id") != F.col("b.__id"),
+    ).localCheckpoint()
+    served = _serve(docs, text_col, id_col, _endpoints(cand)).localCheckpoint()
+    return cand, served, _verify(served, cand, n=3, min_jaccard=0.5, persist=False)
 
 
 def minhash_pairs_from_artifact(
@@ -408,13 +543,7 @@ def minhash_pairs_from_artifact(
     (``test_dedup.py::test_artifact_pairs_leave_no_cached_blocks``)."""
     spark = docs.sparkSession
     buckets = spark.read.parquet(artifact_path)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = a.join(
-        b,
-        (F.col("a.__band") == F.col("b.__band"))
-        & (F.col("a.__sig") == F.col("b.__sig"))
-        & (F.col("a.__id") < F.col("b.__id")),
-    ).select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+    candidates = _self_collisions(buckets)
     crowded = (
         buckets.groupBy("__band", "__sig")
         .agg(F.count("*").alias("__n"))
@@ -424,17 +553,11 @@ def minhash_pairs_from_artifact(
     cand_docs = (
         buckets.join(crowded, ["__band", "__sig"], "left_semi").select("__id").distinct()
     )
-    # semi-join BEFORE the parallelism repartition: each of the verify leg's
-    # consumers re-evaluates this subtree (no caching here by design), and
-    # the broadcast semi-join at the scan means every evaluation shuffles
-    # only candidate documents, never the whole corpus (guide §2.3)
-    sh = _spread(
-        docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .join(F.broadcast(cand_docs), "__id", "left_semi"),
-        by="__id",
-    ).select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
-    verified = _jaccard_from_shingles(sh, min_jaccard, persist=False)
-    return verified.join(candidates, ["id_a", "id_b"], "left_semi")
+    # each of the verify leg's consumers re-evaluates the serve (no caching
+    # here by design); its broadcast semi-join keeps every evaluation to the
+    # candidate documents
+    served = _serve(docs, text_col, id_col, cand_docs)
+    return _verify(served, candidates, n=n, min_jaccard=min_jaccard, persist=False)
 
 
 def minhash_lsh_pairs(
@@ -455,11 +578,9 @@ def minhash_lsh_pairs(
     one Jaccard evaluation and never reach the output.
 
     Pipeline: shingle → 128-col signature → explode to (band_id, band_hash)
-    → groupBy bucket → pairs within bucket → distinct → exact verify.
+    → pairs within bucket → exact verify.
     """
-    base = _spread(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")), by="__id"
-    )
+    base = _docs_by_id(df, text_col, id_col)
     buckets = minhash_band_buckets(base, n=n, num_hashes=num_hashes, bands=bands)
 
     # The self-join below consumes `buckets` twice, and Spark does NOT reuse
@@ -473,44 +594,16 @@ def minhash_lsh_pairs(
     # these entries when the Python objects go away.
     buckets = buckets.persist()
 
-    a, b = buckets.alias("a"), buckets.alias("b")
-    # NOT distinct'd: a pair colliding in k bands appears k times, but both
-    # downstream uses tolerate duplicates (cand_docs distincts itself; the
-    # final left_semi is set-semantics) — dropping distinct saves a shuffle.
-    candidates = a.join(
-        b,
-        (F.col("a.__band") == F.col("b.__band"))
-        & (F.col("a.__sig") == F.col("b.__sig"))
-        & (F.col("a.__id") < F.col("b.__id")),
-    ).select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-    # Two consumers read `candidates` (cand_docs below and the final
+    # Two consumers read `candidates` (the endpoint serve and the final
     # semi-join): without a persist the whole LSH stage — scan → shingle →
     # signatures → band self-join — is evaluated twice. The pair list is tiny
-    # (near-dup suspects only), so caching it is safe at any scale.
-    candidates = candidates.persist()
-
-    # Exact-Jaccard verification, restricted to LSH candidates: semi-join the
-    # shingle table down to candidate docs first (cheap — candidates are the
-    # few near-dup suspects), then an equi-join on the shingle value. Joining
-    # the two full shingle *lists* per pair would materialize |A|×|B| rows
-    # per candidate; the equi-join touches only matches.
-    cand_docs = (
-        candidates.select(F.col("id_a").alias("__id"))
-        .union(candidates.select(F.col("id_b").alias("__id")))
-        .distinct()
-    )
-    # semi-join BEFORE the parallelism repartition: the broadcast semi-join
-    # applies at the scan, so the exchange carries only candidate documents'
-    # payloads instead of the whole corpus (guide §2.3 — filter before the
-    # exchange); `base` above still spreads the full corpus because the
-    # signature pass genuinely reads every document
-    sh = _spread(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .join(F.broadcast(cand_docs), "__id", "left_semi"),
-        by="__id",
-    ).select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
-    verified = _jaccard_from_shingles(sh, min_jaccard)
-    return verified.join(candidates, ["id_a", "id_b"], "left_semi")
+    # (near-dup suspects only), so caching it is safe at any scale. Both
+    # consumers tolerate band-collision duplicates, so no distinct.
+    candidates = _self_collisions(buckets).persist()
+    # `base` above spreads the full corpus because the signature pass
+    # genuinely reads every document; the verify leg serves candidates only
+    served = _serve(df, text_col, id_col, _endpoints(candidates))
+    return _verify(served, candidates, n=n, min_jaccard=min_jaccard, persist=True)
 
 
 def minhash_band_pairs_portable(
@@ -549,62 +642,17 @@ def minhash_band_pairs_portable(
     feeding them through the exact verifier is precisely what the audit
     measures the need for.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-    base = _spread(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")), by="__id"
-    )
+    base = _docs_by_id(df, text_col, id_col)
     exploded = base.select("__id", F.explode(word_shingles("__t", n)).alias("__s"))
     ex = exploded.withColumn(
         "__h", F.pmod(_token_hash(F.col("__s"), "md5_60"), F.lit(_MERSENNE31))
     )
     sig = ex.groupBy("__id").agg(*_sig_agg_exprs(num_hashes, seed))
-    buckets = (
-        sig.select("__id", F.explode(_band_bucket_array(bands, r, "concat_ws")).alias("__b"))
-        .select("__id", F.col("__b.band").alias("__band"), F.col("__b.sig").alias("__sig"))
-        # two join sides read this; localCheckpoint (not persist) so the
-        # blocks are ContextCleaner-owned — no CacheManager entry for the
-        # caller to leak (ADVICE_r08: the only caller never unpersisted)
-        .localCheckpoint()
-    )
-    pa = buckets.select(
-        F.col("__id").alias("id_a"), F.col("__band").alias("__band"), "__sig"
-    )
-    pb = buckets.select(
-        F.col("__id").alias("id_b"), F.col("__band").alias("__band"), "__sig"
-    )
-    return (
-        pa.join(pb, ["__band", "__sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def _jaccard_between(sh_new: DataFrame, sh_old: DataFrame, min_jaccard: float) -> DataFrame:
-    """Two-sided exact Jaccard: (id, shingle) tables → (new_id, old_id,
-    jaccard ≥ threshold). Same shape as ``_jaccard_from_shingles`` but across
-    disjoint corpora, so no ``id <`` ordering is involved."""
-    sh_new, sh_old = _hash_shingles(sh_new), _hash_shingles(sh_old)
-    sza = sh_new.groupBy("__id").agg(F.count("*").alias("__sz"))
-    szb = sh_old.groupBy("__id").agg(F.count("*").alias("__sz"))
-    shared = (
-        sh_new.alias("a")
-        .join(sh_old.alias("b"), F.col("a.__s") == F.col("b.__s"))
-        .groupBy(F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"))
-        .agg(F.count("*").alias("__shared"))
-    )
-    return (
-        shared.join(sza.select(F.col("__id").alias("new_id"), F.col("__sz").alias("__sza")), "new_id")
-        .join(szb.select(F.col("__id").alias("old_id"), F.col("__sz").alias("__szb")), "old_id")
-        .withColumn(
-            "jaccard",
-            F.col("__shared") / (F.col("__sza") + F.col("__szb") - F.col("__shared")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("new_id", "old_id", "jaccard")
-    )
+    # two join sides read this; localCheckpoint (not persist) so the blocks
+    # are ContextCleaner-owned — no CacheManager entry for the caller to
+    # leak (ADVICE_r08: the only caller never unpersisted)
+    buckets = _band_buckets(sig, num_hashes, bands, fold="concat_ws").localCheckpoint()
+    return _self_collisions(buckets).distinct()
 
 
 def minhash_lsh_pairs_incremental(
@@ -632,10 +680,6 @@ def minhash_lsh_pairs_incremental(
     self-contained. Candidates are exact-Jaccard verified (same contract as
     ``minhash_lsh_pairs``). Output: (new_id, old_id, jaccard).
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-
     # One signature pass over the UNION with a side tag (carried through the
     # signature groupBy): separate old/new pipelines would scan, shingle and
     # aggregate twice for the same total rows — measured ~2× the wall of the
@@ -652,35 +696,29 @@ def minhash_lsh_pairs_incremental(
     base = _spread(tagged, by="__id")
     exploded = base.select("__id", "__is_new", F.explode(word_shingles("__t", n)).alias("__s"))
     sig = minhash_signatures_agg(exploded, num_hashes=num_hashes, carry_cols=("__is_new",))
-    buckets = (
-        sig.select("__id", "__is_new", F.explode(_band_bucket_array(bands, r)).alias("__b"))
-        .select("__id", "__is_new", F.col("__b.band").alias("__band"), F.col("__b.sig").alias("__sig"))
-        .persist()  # two filtered consumers below; see minhash_lsh_pairs
-    )
+    # two filtered consumers below; see minhash_lsh_pairs
+    buckets = _band_buckets(sig, num_hashes, bands, "__is_new").persist()
     candidates = (
-        buckets.filter(F.col("__is_new")).alias("a")
-        .join(
-            buckets.filter(~F.col("__is_new")).alias("b"),
-            (F.col("a.__band") == F.col("b.__band")) & (F.col("a.__sig") == F.col("b.__sig")),
+        _collisions(
+            buckets.filter(F.col("__is_new")),
+            buckets.filter(~F.col("__is_new")),
+            F.col("a.__id").alias("new_id"),
+            F.col("b.__id").alias("old_id"),
         )
-        .select(F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"))
         .distinct()
         .persist()
     )
-    cand_ids = (
-        candidates.select(F.col("new_id").alias("__id"))
-        .union(candidates.select(F.col("old_id").alias("__id")))
-        .distinct()
-    )
+    # the two sides are disjoint corpora: a two-sided Jaccard, no id ordering
     sh = (
-        base.join(F.broadcast(cand_ids), "__id", "left_semi")
+        base.join(F.broadcast(_endpoints(candidates, "new_id", "old_id")), "__id", "left_semi")
         .select("__id", "__is_new", F.explode(word_shingles("__t", n)).alias("__s"))
         .persist()
     )
-    verified = _jaccard_between(
-        sh.filter(F.col("__is_new")).select("__id", "__s"),
-        sh.filter(~F.col("__is_new")).select("__id", "__s"),
+    verified = _jaccard(
+        _hash_shingles(sh.filter(F.col("__is_new"))),
+        _hash_shingles(sh.filter(~F.col("__is_new"))),
         min_jaccard,
+        ("new_id", "old_id"),
     )
     return verified.join(candidates, ["new_id", "old_id"], "left_semi")
 
@@ -962,8 +1000,6 @@ def boilerplate_shingle_stats(
     docs should pre-aggregate with the groupBy+join shape plus AQE skew-join
     instead — that variant is one ``persist`` of ``sh`` away.
     """
-    from pyspark.sql import Window
-
     sh = _spread(df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))).select(
         "__id", F.explode(word_shingles("__t", n)).alias("__s")
     )
@@ -1015,8 +1051,6 @@ def duplicate_chunk_stats(
     repeated across billions of docs streams through the count-only frame
     (no per-row state), same skew posture as boilerplate stats.
     """
-    from pyspark.sql import Window
-
     from .packing import chunk_by_tokens
 
     chunks = chunk_by_tokens(
@@ -1054,12 +1088,121 @@ def duplicate_chunk_stats(
     )
 
 
-def _span_tokens(text_col: str) -> Column:
-    """The repo-wide tokenization convention (trim, empty → [], else split
-    on runs of whitespace) — shared by the span-dedup audit and apply."""
-    t = F.trim(_col(text_col))
+def _span_tokens(text: ColumnOrName) -> Column:
+    """The repo-wide tokenization convention (trim, NULL or empty → [], else
+    split on runs of whitespace) — shared by the span family and
+    ``packing.chunk_by_tokens``.
+    NULL tokenizes as ``""`` does: ``size(NULL)`` is -1 with ANSI off and
+    NULL with ANSI on, so a NULL token array would make every count
+    session-dependent."""
+    t = F.coalesce(F.trim(_col(text)), F.lit(""))
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
         F.split(t, r"\s+")
+    )
+
+
+def _token_base(df: DataFrame, text: Column, id_col: str) -> DataFrame:
+    """Every document's tokens (``_span_tokens``): ``(__id, __n, __tok)``."""
+    return df.select(
+        F.col(id_col).alias("__id"), _span_tokens(text).alias("__tok")
+    ).select("__id", F.size("__tok").alias("__n"), "__tok")
+
+
+def _window_digests(base: DataFrame, L: int, digest) -> DataFrame:
+    """Rolling digests of every stride-1 ``L``-token window of ``base``
+    (``_token_base``): ``(__id, __p, __h)`` with ``__h`` = ``digest`` of the
+    window's space-joined tokens, built doc-side (the digest crosses the
+    shuffle, the window text never does)."""
+    return base.filter(F.col("__n") >= L).select(
+        "__id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.col("__n") - L),
+                lambda i: digest(F.concat_ws(" ", F.slice("__tok", i + 1, L))),
+            )
+        ).alias("__p", "__h"),
+    )
+
+
+def _merge_islands(spans: DataFrame) -> DataFrame:
+    """Gaps-and-islands merge of overlapping or adjacent token intervals
+    ``(__sid, __ss, __se)`` per document ``__sid`` into the maximal extents
+    (0-based inclusive positions): running ``max(end)`` over preceding rows
+    → new-island flag → cumulative sum → per-island min/max. The (ss, se)
+    order makes the running max deterministic under tied starts."""
+    w = Window.partitionBy("__sid").orderBy("__ss", "__se")
+    prev_end = F.max("__se").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    return (
+        spans.withColumn(
+            "__new",
+            F.when(F.col("__ss") > F.coalesce(prev_end, F.lit(-2)) + 1, 1).otherwise(0),
+        )
+        .withColumn("__isl", F.sum("__new").over(w))
+        .groupBy("__sid", "__isl")
+        .agg(F.min("__ss").alias("__ss"), F.max("__se").alias("__se"))
+        .select("__sid", "__ss", "__se")
+    )
+
+
+def _span_audit(base: DataFrame, spans: DataFrame, id_col: str) -> DataFrame:
+    """Per-document rollup of merged extents ``spans`` over every document of
+    ``base`` → ``(id, n_tokens, n_dup_spans, dup_tokens, max_span_tokens,
+    dup_ratio)``; a document without extents reads 0 (ratio NULL when it
+    has no tokens)."""
+    meta = base.select("__id", "__n")
+    per = spans.groupBy("__sid").agg(
+        F.count("*").cast("long").alias("n_dup_spans"),
+        F.sum(F.col("__se") - F.col("__ss") + 1).cast("long").alias("dup_tokens"),
+        F.max(F.col("__se") - F.col("__ss") + 1).cast("long").alias("max_span_tokens"),
+    )
+    return meta.join(per, meta["__id"] == per["__sid"], "left").select(
+        F.col("__id").alias(id_col),
+        F.col("__n").cast("long").alias("n_tokens"),
+        F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
+        F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
+        F.coalesce("max_span_tokens", F.lit(0)).cast("long").alias("max_span_tokens"),
+        F.when(
+            F.col("__n") > 0,
+            F.round(
+                F.coalesce("dup_tokens", F.lit(0)).cast("double") / F.col("__n"), 6
+            ),
+        ).alias("dup_ratio"),
+    )
+
+
+def _scrub(base: DataFrame, spans: DataFrame, id_col: str, *carry: str) -> DataFrame:
+    """Cover-and-scrub: drop every token of ``base`` (``__id, __n, __tok``
+    and the ``carry`` columns) covered by an extent of ``spans`` (``__sid,
+    __ss, __se``) → ``(id, n_tokens, kept_tokens, *carry, cleaned_text)``.
+    The extents join back per doc as a collected interval list (bounded by
+    doc length), and a single nested HOF pass — ``filter`` with the index
+    lambda over the token array, ``exists`` over the interval list — keeps
+    exactly the uncovered tokens; the apply join moves only ``(id, ss,
+    se)`` intervals to the data."""
+    cover = spans.groupBy("__sid").agg(
+        F.collect_list(F.struct("__ss", "__se")).alias("__cover")
+    )
+    joined = base.join(cover, base["__id"] == cover["__sid"], "left").select(
+        "__id",
+        "__n",
+        "__tok",
+        *carry,
+        F.coalesce(
+            "__cover", F.array().cast("array<struct<__ss:int,__se:int>>")
+        ).alias("__cover"),
+    )
+    kept = F.filter(
+        "__tok",
+        lambda tok, i: ~F.exists(
+            "__cover", lambda s: (i >= s["__ss"]) & (i <= s["__se"])
+        ),
+    )
+    return joined.select(
+        F.col("__id").alias(id_col),
+        F.col("__n").cast("long").alias("n_tokens"),
+        F.size(kept).cast("long").alias("kept_tokens"),
+        *carry,
+        F.array_join(kept, " ").alias("cleaned_text"),
     )
 
 
@@ -1073,52 +1216,23 @@ def _duplicated_token_spans(
 ) -> tuple[DataFrame, DataFrame]:
     """Shared core of the span-dedup family: stride-1 rolling
     ``window_tokens``-token window digests → corpus-wide occurrence count →
-    per-doc gaps-and-islands merge. Returns ``(meta, spans)`` where meta is
-    ``(__id, __n)`` for every document and spans is the MAXIMAL merged
-    duplicated extents ``(__id, __ss, __se)`` (0-based inclusive token
-    positions). See ``duplicated_span_extents`` for the scale analysis."""
+    per-doc gaps-and-islands merge. Returns ``(base, spans)``: base =
+    ``_token_base`` for every document, spans = the MAXIMAL merged
+    duplicated extents ``(__sid, __ss, __se)``. See
+    ``duplicated_span_extents`` for the scale analysis."""
     if window_tokens < 2:
         raise ValueError(f"need window_tokens >= 2, got {window_tokens}")
-    from pyspark.sql import Window
-
     L = window_tokens
-    base = df.select(
-        F.col(id_col).alias("__id"), _span_tokens(text_col).alias("__tok")
-    ).select("__id", F.size("__tok").alias("__n"), "__tok")
-    meta = base.select("__id", "__n")
-    # all stride-1 window digests, built doc-side (digest crosses the
-    # shuffle, the window text never does)
-    grams = (
-        base.filter(F.col("__n") >= L)
-        .select(
-            "__id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("__n") - L),
-                    lambda i: F.sha2(
-                        F.concat_ws(" ", F.slice("__tok", i + 1, L)), 256
-                    ),
-                )
-            ).alias("__s", "__dig"),
-        )
-    )
-    occ = grams.withColumn(
-        "__occ", F.count("*").over(Window.partitionBy("__dig"))
+    base = _token_base(df, _col(text_col), id_col)
+    occ = _window_digests(base, L, lambda s: F.sha2(s, 256)).withColumn(
+        "__occ", F.count("*").over(Window.partitionBy("__h"))
     )
     dup = occ.filter(F.col("__occ") > max_occurrences).select(
-        "__id", "__s", (F.col("__s") + (L - 1)).alias("__e")
+        F.col("__id").alias("__sid"),
+        F.col("__p").alias("__ss"),
+        (F.col("__p") + (L - 1)).alias("__se"),
     )
-    # gaps-and-islands: merge overlapping/adjacent duplicated windows
-    w = Window.partitionBy("__id").orderBy("__s")
-    prev_end = F.max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    flagged = dup.withColumn(
-        "__new",
-        F.when(F.col("__s") > F.coalesce(prev_end, F.lit(-2)) + 1, 1).otherwise(0),
-    ).withColumn("__isl", F.sum("__new").over(w))
-    spans = flagged.groupBy("__id", "__isl").agg(
-        F.min("__s").alias("__ss"), F.max("__e").alias("__se")
-    )
-    return meta, spans.select("__id", "__ss", "__se")
+    return base, _merge_islands(dup)
 
 
 def duplicated_span_extents(
@@ -1159,28 +1273,11 @@ def duplicated_span_extents(
     AQE-sizeable hash shuffle; the per-doc island windows touch only each
     document's own duplicated windows (bounded by doc length).
     """
-    meta, spans = _duplicated_token_spans(
+    base, spans = _duplicated_token_spans(
         df, text_col, id_col,
         window_tokens=window_tokens, max_occurrences=max_occurrences,
     )
-    per_doc = spans.groupBy("__id").agg(
-        F.count("*").cast("long").alias("n_dup_spans"),
-        F.sum(F.col("__se") - F.col("__ss") + 1).cast("long").alias("dup_tokens"),
-        F.max(F.col("__se") - F.col("__ss") + 1).cast("long").alias("max_span_tokens"),
-    )
-    return meta.join(per_doc, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.col("__n").cast("long").alias("n_tokens"),
-        F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
-        F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
-        F.coalesce("max_span_tokens", F.lit(0)).cast("long").alias("max_span_tokens"),
-        F.when(
-            F.col("__n") > 0,
-            F.round(
-                F.coalesce("dup_tokens", F.lit(0)).cast("double") / F.col("__n"), 6
-            ),
-        ).alias("dup_ratio"),
-    )
+    return _span_audit(base, spans, id_col)
 
 
 def remove_duplicated_spans(
@@ -1197,43 +1294,13 @@ def remove_duplicated_spans(
     DROP-ALL — every occurrence of a duplicated span goes, the stricter
     variant of Lee et al.'s keep-one (keep-one needs a global occurrence
     ordering; drop-all is order-free and what boilerplate scrubbing
-    actually wants).
-
-    The extents join back per doc as a collected interval list (bounded by
-    doc length), and a single nested HOF pass — ``filter`` with the index
-    lambda over the token array, ``exists`` over the interval list — keeps
-    exactly the uncovered tokens; the document body never shuffles (the
-    digest pipeline shuffles digests, the apply join moves only
-    ``(id, ss, se)`` intervals to the data)."""
-    meta_spans = _duplicated_token_spans(
+    actually wants). The scrub is ``_scrub``; the document body never
+    shuffles (the digest pipeline shuffles digests)."""
+    base, spans = _duplicated_token_spans(
         df, text_col, id_col,
         window_tokens=window_tokens, max_occurrences=max_occurrences,
-    )[1]
-    cover = meta_spans.groupBy("__id").agg(
-        F.collect_list(F.struct("__ss", "__se")).alias("__cover")
     )
-    base = df.select(
-        F.col(id_col).alias("__id"), _span_tokens(text_col).alias("__tok")
-    )
-    joined = base.join(cover, "__id", "left").select(
-        "__id",
-        "__tok",
-        F.coalesce(
-            "__cover", F.array().cast("array<struct<__ss:int,__se:int>>")
-        ).alias("__cover"),
-    )
-    kept = F.filter(
-        "__tok",
-        lambda tok, i: ~F.exists(
-            "__cover", lambda s: (i >= s["__ss"]) & (i <= s["__se"])
-        ),
-    )
-    return joined.select(
-        F.col("__id").alias(id_col),
-        F.size("__tok").cast("long").alias("n_tokens"),
-        F.size(kept).cast("long").alias("kept_tokens"),
-        F.array_join(kept, " ").alias("cleaned_text"),
-    )
+    return _scrub(base, spans, id_col)
 
 
 def shingle_containment_pairs(
@@ -1269,14 +1336,10 @@ def shingle_containment_pairs(
     )
     if max_df is not None:
         sh = _max_df_filter(sh, max_df)
-    sizes = sh.groupBy("__id").agg(F.count("*").alias("__sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        a.join(b, (F.col("a.__s") == F.col("b.__s")) & (F.col("a.__id") != F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("contained_id"), F.col("b.__id").alias("container_id"))
-        .agg(F.count("*").alias("__shared"))
+    shared = _shared(
+        sh, sh, ("contained_id", "container_id"), F.col("a.__id") != F.col("b.__id")
     )
-    sa = sizes.select(F.col("__id").alias("contained_id"), F.col("__sz").alias("__sza"))
+    sa = _sizes(sh).select(F.col("__id").alias("contained_id"), F.col("__sz").alias("__sza"))
     return (
         shared.join(sa, "contained_id")
         .withColumn("containment", F.col("__shared") / F.col("__sza"))
@@ -1492,26 +1555,11 @@ def _cross_doc_extents(
             f"min_len must be >= window + k - 1 = {window + k - 1} (the winnowing "
             f"detection guarantee), got {min_len}"
         )
-    from pyspark.sql import Window
-
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        _span_tokens(F.lower(_col(text_col))).alias("__tok"),
-    ).select("__id", F.size("__tok").alias("__n"), "__tok")
+    base = _token_base(df, F.lower(_col(text_col)), id_col)
 
     # 1. per-position k-gram hashes (only (id, pos, hash) crosses — the
     #    token arrays stay behind until the sparse anchor join)
-    grams = base.filter(F.col("__n") >= k).select(
-        "__id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("__n") - k),
-                lambda i: F.substring(
-                    F.md5(F.concat_ws(" ", F.slice("__tok", i + 1, k))), 1, 16
-                ),
-            )
-        ).alias("__p", "__h"),
-    )
+    grams = _window_digests(base, k, lambda g: F.substring(F.md5(g), 1, 16))
     ww = Window.partitionBy("__id").orderBy("__p").rowsBetween(-(window - 1), 0)
     anchors = (
         grams.select(
@@ -1606,20 +1654,7 @@ def _cross_doc_extents(
         )
         .distinct()
     )
-    # gaps-and-islands merge (same discipline as _duplicated_token_spans;
-    # (ss, se) order makes the running max deterministic under tied starts)
-    wi = Window.partitionBy("__sid").orderBy("__ss", "__se")
-    prev_end = F.max("__se").over(wi.rowsBetween(Window.unboundedPreceding, -1))
-    merged = (
-        spans.withColumn(
-            "__new",
-            F.when(F.col("__ss") > F.coalesce(prev_end, F.lit(-2)) + 1, 1).otherwise(0),
-        )
-        .withColumn("__isl", F.sum("__new").over(wi))
-        .groupBy("__sid", "__isl")
-        .agg(F.min("__ss").alias("__ss"), F.max("__se").alias("__se"))
-    )
-    return base, merged.select("__sid", "__ss", "__se")
+    return base, _merge_islands(spans)
 
 
 def cross_doc_substring_spans(
@@ -1682,26 +1717,7 @@ def cross_doc_substring_spans(
     base, merged = _cross_doc_extents(
         df, text_col, id_col, k=k, window=window, context=context, min_len=min_len
     )
-    meta = base.select("__id", "__n")
-    per = merged.groupBy("__sid").agg(
-        F.count("*").cast("long").alias("n_dup_spans"),
-        F.sum(F.col("__se") - F.col("__ss") + 1).cast("long").alias("dup_tokens"),
-        F.max(F.col("__se") - F.col("__ss") + 1).cast("long").alias("max_span_tokens"),
-    )
-    return meta.join(per, meta["__id"] == per["__sid"], "left").select(
-        F.col("__id").alias(id_col),
-        F.col("__n").cast("long").alias("n_tokens"),
-        F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
-        F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
-        F.coalesce("max_span_tokens", F.lit(0)).cast("long").alias("max_span_tokens"),
-        F.when(
-            F.col("__n") > 0,
-            F.round(
-                F.coalesce("dup_tokens", F.lit(0)).cast("double") / F.col("__n"), 6
-            ),
-        ).alias("dup_ratio"),
-    )
-
+    return _span_audit(base, merged, id_col)
 
 
 def cross_doc_substring_apply(
@@ -1729,29 +1745,7 @@ def cross_doc_substring_apply(
     base, merged = _cross_doc_extents(
         df, text_col, id_col, k=k, window=window, context=context, min_len=min_len
     )
-    cover = merged.groupBy("__sid").agg(
-        F.collect_list(F.struct("__ss", "__se")).alias("__cover")
-    )
-    joined = base.join(cover, base["__id"] == cover["__sid"], "left").select(
-        "__id",
-        "__n",
-        "__tok",
-        F.coalesce(
-            "__cover", F.array().cast("array<struct<__ss:int,__se:int>>")
-        ).alias("__cover"),
-    )
-    kept = F.filter(
-        "__tok",
-        lambda tok, i: ~F.exists(
-            "__cover", lambda s: (i >= s["__ss"]) & (i <= s["__se"])
-        ),
-    )
-    return joined.select(
-        F.col("__id").alias(id_col),
-        F.col("__n").cast("long").alias("n_tokens"),
-        F.size(kept).cast("long").alias("kept_tokens"),
-        F.array_join(kept, " ").alias("cleaned_text"),
-    )
+    return _scrub(base, merged, id_col)
 
 
 def cross_doc_substring_keep_one(
@@ -1822,40 +1816,12 @@ def cross_doc_substring_keep_one(
             (F.col("__sid") == F.col("__w.i")) & (F.col("__ss") == F.col("__w.s"))
         ).alias("__keep"),
     )
-    cover = (
-        tagged.filter(~F.col("__keep"))
-        .groupBy("__sid")
-        .agg(F.collect_list(F.struct("__ss", "__se")).alias("__cover"))
-    )
     kept_copies = (
         tagged.filter(F.col("__keep"))
         .groupBy("__sid")
         .agg(F.count("*").cast("long").alias("__kc"))
     )
-    joined = (
-        base.join(cover, base["__id"] == cover["__sid"], "left")
-        .drop("__sid")
-        .join(kept_copies, base["__id"] == kept_copies["__sid"], "left")
-        .select(
-            "__id",
-            "__n",
-            "__tok",
-            F.coalesce(
-                "__cover", F.array().cast("array<struct<__ss:int,__se:int>>")
-            ).alias("__cover"),
-            F.coalesce("__kc", F.lit(0)).alias("__kc"),
-        )
+    counted = base.join(kept_copies, base["__id"] == kept_copies["__sid"], "left").select(
+        "__id", "__n", "__tok", F.coalesce("__kc", F.lit(0)).alias("kept_copies")
     )
-    kept = F.filter(
-        "__tok",
-        lambda tok, i: ~F.exists(
-            "__cover", lambda s: (i >= s["__ss"]) & (i <= s["__se"])
-        ),
-    )
-    return joined.select(
-        F.col("__id").alias(id_col),
-        F.col("__n").cast("long").alias("n_tokens"),
-        F.size(kept).cast("long").alias("kept_tokens"),
-        F.col("__kc").alias("kept_copies"),
-        F.array_join(kept, " ").alias("cleaned_text"),
-    )
+    return _scrub(counted, tagged.filter(~F.col("__keep")), id_col, "kept_copies")

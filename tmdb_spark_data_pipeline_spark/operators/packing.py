@@ -56,12 +56,10 @@ def chunk_by_tokens(
     """
     if not 0 <= overlap < max_tokens:
         raise ValueError(f"need 0 <= overlap < max_tokens, got {overlap}/{max_tokens}")
+    from .dedup import _span_tokens
+
     stride = max_tokens - overlap
-    t = F.trim(_col(text_col))
-    tok = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
-    base = df.select(F.col(id_col), tok.alias("__tok"))
+    base = df.select(F.col(id_col), _span_tokens(text_col).alias("__tok"))
     n = F.size("__tok")
     n_chunks = (
         F.when(n <= max_tokens, F.lit(1))

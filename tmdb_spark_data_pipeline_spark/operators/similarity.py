@@ -23,9 +23,12 @@ compose them:
   row's nearest cells, ``_ivf_candidates`` joins the probed cells' members
   (IVF top-k, its artifact twin, the recall curve; ``_ivf_candidate_pairs``
   probes with the same step).
-- ``_l2_probes`` (coarse cells by squared L2), ``_adc_lut`` (the decimal
-  ADC table) and ``_adc_refine`` (ADC scan → shortlist → exact re-rank
-  through ``_l2_topk``) serve flat and residual IVF-PQ alike.
+- ``_adc_lut`` builds the decimal ADC table, ``_adc_scan`` scores codes
+  against it (whole table or probed cells only), ``_adc_shortlist`` keeps
+  each query's ADC top-``refine`` and ``_adc_rerank`` re-ranks a shortlist
+  by exact squared L2 through ``_l2_topk``: flat PQ (``pq_adc_scores``,
+  ``pq_adc_recall_audit``) and flat and residual IVF-PQ (``_adc_refine``
+  over the ``_l2_probes`` cells) alike.
 - ``_pair_dist`` computes cosine distance over pairs, all of them
   (``_all_pairs_cosine_dist``: DBSCAN and the exact mutual-reach family)
   or IVF candidates (``mutual_reachability_clusters_ann``).
@@ -1646,13 +1649,7 @@ def pq_adc_scores(
     """
     qsv = pq_subvectors(queries, id_col=id_col, vec_col=vec_col, m=m, dim=dim)
     lut = _adc_lut(qsv, codebooks, F.col(id_col).alias("query_id"))
-    return (
-        codes.select(F.col(id_col).alias("neighbor_id"), "sub", "cid")
-        .join(F.broadcast(lut), ["sub", "cid"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("__ld").alias("adc_dec"))
-    )
+    return _adc_scan(codes.select(F.col(id_col).alias("neighbor_id"), "sub", "cid"), lut)
 
 
 def _adc_lut(qsv: DataFrame, codebooks: DataFrame, *keys: ColumnOrName) -> DataFrame:
@@ -1667,6 +1664,34 @@ def _adc_lut(qsv: DataFrame, codebooks: DataFrame, *keys: ColumnOrName) -> DataF
         "cid",
         F.round(sq_l2("subvec", "cvec"), 12).cast("decimal(30,12)").alias("__ld"),
     )
+
+
+def _adc_scan(codes: DataFrame, lut: DataFrame, probes: DataFrame | None = None) -> DataFrame:
+    """The ADC scan: each row of ``codes`` (neighbor_id, sub, cid, plus
+    __cell when blocked) looked up in the broadcast ``lut`` (an
+    ``_adc_lut``, joined on every key column the codes carry), self pairs
+    dropped, and the m terms summed per (query, neighbor) → ``(query_id,
+    neighbor_id, adc_dec)``, an exact decimal. With ``probes`` (query_id,
+    __cell) the scan is cell-blocked: each query meets only its probed
+    cells' codes, through a broadcast of the query-bounded probe list, so
+    the corpus-sized code table is never shuffled or broadcast."""
+    if probes is not None:
+        codes = codes.join(F.broadcast(probes), "__cell")
+    return (
+        codes.join(F.broadcast(lut), [c for c in lut.columns if c in codes.columns])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("__ld").alias("adc_dec"))
+    )
+
+
+def _adc_shortlist(adc: DataFrame, *, refine: int) -> DataFrame:
+    """The ADC top-``refine`` of each query in an ``_adc_scan``, ties to the
+    lower neighbor id: ``(query_id, neighbor_id, __rn)``."""
+    return rank.top_n_per_group(
+        adc, ("query_id",), "adc_dec", order="asc", n=refine,
+        tiebreak=("neighbor_id",), rank_col="__rn",
+    ).select("query_id", "neighbor_id", "__rn")
 
 
 def _l2_topk(pairs: DataFrame, *, k: int, rank_col: str = "__rn") -> DataFrame:
@@ -1717,22 +1742,11 @@ def pq_adc_recall_audit(
     # both slices of the same ranked list (k ≤ refine), so materialize the
     # |queries|·refine-row shortlist once (query-stratum-bounded) instead of
     # executing the ADC scan+window once per consumer
-    shortlist = (
-        rank.top_n_per_group(
-            adc, ("query_id",), "adc_dec", order="asc", n=refine,
-            tiebreak=("neighbor_id",), rank_col="__rn",
-        )
-        .select("query_id", "neighbor_id", "__rn")
-        .localCheckpoint()
-    )
+    shortlist = _adc_shortlist(adc, refine=refine).localCheckpoint()
     adc_topk = shortlist.filter(F.col("__rn") <= k).select("query_id", "neighbor_id")
-    refine_cand = shortlist.select("query_id", "neighbor_id")
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    refined = _l2_topk(
-        nv.join(F.broadcast(refine_cand.join(F.broadcast(qv), "query_id")), "neighbor_id"),
-        k=k,
-    ).select("query_id", "neighbor_id")
+    refined = _adc_rerank(shortlist, qv, nv, k=k).select("query_id", "neighbor_id")
     # the exact leg grades BOTH the ADC and refined sets — |queries|·k rows,
     # checkpointed so the bounded all-pairs baseline runs once, not twice
     exact = (
@@ -1807,22 +1821,20 @@ def _adc_refine(
     earlier candidate-set formulation had exactly that flaw). Every
     broadcast side — probes, the per-query LUT, the ADC shortlist — is
     query-bounded."""
-    adc = (
-        codes.join(F.broadcast(probes), "__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(lut), [c for c in lut.columns if c != "__ld"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("__ld").alias("__adc"))
-    )
-    shortlist = rank.top_n_per_group(
-        adc, ("query_id",), "__adc", order="asc", n=refine,
-        tiebreak=("neighbor_id",), rank_col="__rn",
-    ).select("query_id", "neighbor_id")
-    return _l2_topk(
-        nv.join(F.broadcast(shortlist.join(F.broadcast(qd), "query_id")), "neighbor_id"),
-        k=k,
-        rank_col="rank",
-    )
+    shortlist = _adc_shortlist(_adc_scan(codes, lut, probes), refine=refine)
+    return _adc_rerank(shortlist, qd, nv, k=k, rank_col="rank")
+
+
+def _adc_rerank(
+    shortlist: DataFrame, qd: DataFrame, nv: DataFrame, *, k: int, rank_col: str = "__rn"
+) -> DataFrame:
+    """Exact re-rank of an ADC ``shortlist`` (``_adc_shortlist``): its
+    squared-L2 top-k over the queries ``qd`` = (query_id, __qv) and the
+    refine vectors ``nv`` = (neighbor_id, __nv), both reached through
+    broadcasts of the query-bounded shortlist → ``(query_id, neighbor_id,
+    __td, rank_col)``."""
+    pairs = shortlist.select("query_id", "neighbor_id").join(F.broadcast(qd), "query_id")
+    return _l2_topk(nv.join(F.broadcast(pairs), "neighbor_id"), k=k, rank_col=rank_col)
 
 
 def _ivfpq_hit_tail(

@@ -9695,8 +9695,6 @@ def stream_minhash_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
 
     from pyspark.sql import types as T
 
-    from ..operators.dedup import _spread as _dspread
-    from ..streaming.sinks import write_epoch_overwrite
     from ..streaming.windows import stream_from_parquet_dir
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -9714,16 +9712,10 @@ def stream_minhash_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     def _on_batch(bdf: DataFrame, epoch_id: int) -> None:
         if bdf.isEmpty():
             return
-        # idempotent epoch write (ADVICE r11): the batch's bucket rows land
-        # via the exactly-once sink's dynamic partition overwrite of
-        # `__epoch=<id>` — a foreachBatch replay after a transient failure
-        # rewrites the same partition instead of appending its rows twice;
-        # no driver-local initialized flag to get out of sync
-        base = _dspread(
-            bdf.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t")),
-            by="__id",
-        )
-        write_epoch_overwrite(dedup.minhash_band_buckets(base), epoch_id, art)
+        # idempotent epoch write (ADVICE r11): a foreachBatch replay after a
+        # transient failure rewrites the same partition instead of appending
+        # its rows twice; no driver-local initialized flag to get out of sync
+        dedup._write_epoch_buckets(bdf, "text", "doc_id", epoch_id, art)
 
     q = (
         stream_from_parquet_dir(spark, src, schema, max_files_per_trigger=1)
@@ -9798,9 +9790,7 @@ def _minhash_cluster_stream(
 
     from pyspark.sql import types as T
 
-    from ..operators.dedup import _jaccard_from_shingles, _spread, word_shingles
     from ..session import free_local_checkpoint
-    from ..streaming.sinks import write_epoch_overwrite
     from ..streaming.windows import stream_from_parquet_dir
 
     src = _run_tmp(spark, f"{tag}_stream", sf_dir)
@@ -9818,58 +9808,13 @@ def _minhash_cluster_stream(
     def _on_batch(bdf: DataFrame, epoch_id: int) -> None:
         if bdf.isEmpty():
             return
-        nb_base = _spread(
-            bdf.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t")),
-            by="__id",
-        )
-        write_epoch_overwrite(dedup.minhash_band_buckets(nb_base), epoch_id, art)
-        buckets = read_parquet(spark, art)
-        nb = buckets.filter(F.col("__epoch") == int(epoch_id))
-        # the candidate pair list has TWO consumers (endpoint serve + the
-        # verify semi-join) — materialize the tiny list once so the band-
-        # bucket join against the whole artifact runs once per epoch, not
-        # once per consumer; freed below alongside the fold. Band-collision
-        # duplicates stay in the list (no distinct): both consumers are
-        # duplicate-insensitive (a left_semi probe side and a distinct over
-        # the endpoints), so the dedup exchange bought nothing (guide §2.4
-        # — "a distinct on data whose consumers don't need it")
-        cand = (
-            nb.alias("a")
-            .join(
-                buckets.alias("b"),
-                (F.col("a.__band") == F.col("b.__band"))
-                & (F.col("a.__sig") == F.col("b.__sig"))
-                & (F.col("a.__id") != F.col("b.__id")),
-            )
-            .select(
-                F.least("a.__id", "b.__id").alias("id_a"),
-                F.greatest("a.__id", "b.__id").alias("id_b"),
-            )
-            .localCheckpoint()
-        )
-        # exact verification restricted to candidate endpoints (the static
-        # docs table only serves text for ids that have ALREADY streamed —
-        # candidates come from artifact buckets, which hold arrived docs)
-        cand_docs = (
-            cand.select(F.col("id_a").alias("__id"))
-            .union(cand.select(F.col("id_b").alias("__id")))
-            .distinct()
-        )
-        # the bounded candidate-endpoint text serve: semi-join at the SCAN
-        # (broadcast), so only candidate documents' payloads ever reach the
-        # parallelism repartition (guide §2.3 — the earlier shape shuffled
-        # the FULL corpus), then materialize once — the shingle verify leg
-        # reads it three times (sizes + both self-join sides) and the
-        # survivor fold a fourth; freed below once every consumer has
-        # materialized
-        served = _spread(
-            docs.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t"))
-            .join(F.broadcast(cand_docs), "__id", "left_semi"),
-            by="__id",
-        ).localCheckpoint()
-        sh = served.select("__id", F.explode(word_shingles("__t", 3)).alias("__s"))
-        verified = _jaccard_from_shingles(sh, 0.5, persist=False).join(
-            cand, ["id_a", "id_b"], "left_semi"
+        # candidates + exact verify (``dedup._minhash_epoch_pairs``); the
+        # candidate list and the endpoint text serve are localCheckpoints —
+        # the shingle verify leg reads the serve three times (sizes + both
+        # self-join sides) and the survivor fold a fourth — freed below once
+        # every consumer has materialized
+        cand, served, verified = dedup._minhash_epoch_pairs(
+            bdf, docs, "text", "doc_id", epoch_id, art
         )
         fold = verified.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         if state["labels"] is not None:
